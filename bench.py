@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Benchmark harness: runs the headline workload queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] (default: every core of the host) and prints
+ONE JSON line:
 
     {"metric": "workload_wall_sec", "value": N, "unit": "sec",
      "queries": {name: sec, ...}, "sf": 0.1}
@@ -27,7 +28,7 @@ measured > 1.5x frozen AND measured above the 1-second noise floor
 BASELINE.md — so sub-second rows can't gate at a ratio). Queries new
 since the freeze are reported informationally, never failed.
 
-Would-be regressions get one ISOLATION RETRY (best of two, in a FRESH
+Would-be regressions get one ISOLATION RETRY (best of three, in a FRESH
 JVM at the end of the suite) before the gate fails: multi-second
 queries on local[32] spike 2-4x from scheduler/GC luck alone — three
 consecutive full-suite runs of identical code flagged three disjoint
@@ -91,7 +92,34 @@ def _warm_python_workers(spark, n_workers: int) -> None:
     df.mapInPandas(gen, df.schema).count()
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
+
+
+def _session(app_name: str):
+    """A local[CPUS] session warmed before anything is timed: the
+    JVM/codegen once on the smallest SF, so per-query numbers measure
+    the plan, not first-run JIT, then the Python worker pool, so the
+    first Arrow query doesn't absorb the one-time spawn cost."""
+    spark = create_spark_session(
+        app_name=app_name,
+        master=f"local[{CPUS}]",
+        shuffle_partitions=int(CPUS),
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    _force(workload.QUERIES["q1_pricing_summary"](spark, "/root/testdata/sf0.001"))
+    _warm_python_workers(spark, int(CPUS))
+    return spark
+
+
+def _best_of(spark, name: str, runs: int, sf_dir: str) -> float:
+    best = None
+    for _ in range(runs):
+        start = time.perf_counter()
+        _force(workload.QUERIES[name](spark, sf_dir))
+        elapsed = time.perf_counter() - start
+        best = elapsed if best is None else min(best, elapsed)
+    return best
+
 
 # Headline queries: one per operator family (relational aggs, joins,
 # windowed streaming semantics, top-k, CDC, trends, dedup/similarity/text
@@ -226,62 +254,28 @@ def find_regressions(
     return regressions, new, drift
 
 
-_RETRY_SNIPPET = r"""
-import json, sys, time
-from pyspark.sql import functions as F
-from cdc_pipeline_spark.session import create_spark_session
-from cdc_pipeline_spark import workload
-
-names = json.loads(sys.argv[1])
-sf_dir = sys.argv[2]
-cpus = int(sys.argv[3])
-spark = create_spark_session(
-    app_name="cdc-pipeline-spark-bench-retry",
-    master=f"local[{cpus}]",
-    shuffle_partitions=cpus,
-)
-spark.sparkContext.setLogLevel("ERROR")
-
-def _force(df):
-    df.agg(F.bit_xor(F.xxhash64(F.struct(*df.columns)))).collect()
-
-_force(workload.QUERIES["q1_pricing_summary"](spark, "/root/testdata/sf0.001"))
-
-def _gen(batches):
-    import numpy, pandas  # noqa: F401
-    yield from batches
-
-warm_df = spark.range(cpus, numPartitions=cpus)
-warm_df.mapInPandas(_gen, warm_df.schema).count()
-
-out = {}
-for name in names:
-    # best of THREE, not two: the first run pays plan analysis/codegen
-    # (measured 1.7-2.3s vs 0.8-1.0s steady for HOF-heavy queries), so
-    # best-of-2 leaves a single steady draw and its jitter false-flags
-    # sub-2s rows; two steady draws make the min a real steady-state
-    # reading. Cost is one extra run, only for flagged queries.
-    best = None
-    for _ in range(3):
-        start = time.perf_counter()
-        _force(workload.QUERIES[name](spark, sf_dir))
-        elapsed = time.perf_counter() - start
-        best = elapsed if best is None else min(best, elapsed)
-    out[name] = best
-print(json.dumps(out))
-"""
+def _retry(names: list[str], sf_dir: str) -> None:
+    """Isolation-retry body, run by :func:`_subprocess_retry` in a fresh
+    process: prints {name: best_sec} as one JSON line. Best of THREE,
+    not two: the first run pays plan analysis/codegen (measured
+    1.7-2.3s vs 0.8-1.0s steady for HOF-heavy queries), so best-of-2
+    leaves a single steady draw and its jitter false-flags sub-2s rows;
+    two steady draws make the min a real steady-state reading. Cost is
+    one extra run, only for flagged queries."""
+    spark = _session("cdc-pipeline-spark-bench-retry")
+    print(json.dumps({name: _best_of(spark, name, 3, sf_dir) for name in names}))
 
 
 def _subprocess_retry(names: list[str]) -> dict[str, float]:
-    """Best-of-two re-measurement of flagged queries in a brand-new
-    Python process (hence a brand-new py4j gateway JVM), warmed the
-    same way the suite is. Returns {} on any failure — the gate then
-    judges the in-suite numbers, never silently passes."""
+    """Best-of-three re-measurement of flagged queries at ``SF_DIR`` in
+    a brand-new Python process (hence a brand-new py4j gateway JVM),
+    warmed the same way the suite is. Returns {} on any failure — the
+    gate then judges the in-suite numbers, never silently passes."""
     import subprocess
 
     try:
         proc = subprocess.run(
-            [sys.executable, "-c", _RETRY_SNIPPET, json.dumps(names), SF_DIR, str(CPUS)],
+            [sys.executable, "-c", f"import bench; bench._retry({names!r}, {SF_DIR!r})"],
             capture_output=True,
             text=True,
             timeout=1800,
@@ -332,22 +326,9 @@ def main() -> None:
         loadavg_start: tuple[float, ...] | None = os.getloadavg()
     except OSError:
         loadavg_start = None
-    spark = create_spark_session(
-        app_name="cdc-pipeline-spark-bench",
-        master=f"local[{CPUS}]",
-        shuffle_partitions=int(CPUS),
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
     names = [n for n in HEADLINE if n in workload.QUERIES]
     names += [n for n in sorted(workload.QUERIES) if n not in names]
-
-    # warm the JVM/codegen once on the smallest SF so per-query numbers
-    # measure the plan, not first-run JIT — and the Python worker pool,
-    # so the first Arrow query doesn't absorb the one-time spawn cost
-    warm = workload.QUERIES["q1_pricing_summary"]
-    _force(warm(spark, "/root/testdata/sf0.001"))
-    _warm_python_workers(spark, int(CPUS))
+    spark = _session("cdc-pipeline-spark-bench")
 
     timings: dict[str, float] = {}
     total = 0.0
@@ -355,13 +336,7 @@ def main() -> None:
         # best of two runs: the first run pays plan compilation/codegen,
         # the second measures the steady-state plan — which is what a
         # resident engine re-executing a query shape actually costs
-        best = None
-        for _ in range(2):
-            start = time.perf_counter()
-            _force(workload.QUERIES[name](spark, SF_DIR))
-            elapsed = time.perf_counter() - start
-            best = elapsed if best is None else min(best, elapsed)
-        timings[name] = round(best, 3)
+        timings[name] = round(_best_of(spark, name, 2, SF_DIR), 3)
         total += timings[name]
         print(f"# {name}: {timings[name]:.3f}s", file=sys.stderr)
 

@@ -21,7 +21,7 @@ from cdc_pipeline_spark.operators import aggregates
 from cdc_pipeline_spark.session import create_spark_session
 from cdc_pipeline_spark.streaming.sinks import InMemoryKV, latest_row_hash_writer
 
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
 RATE = int(os.environ.get("SPARK_GRAFT_STREAM_RATE", "200000"))  # rows/s offered
 DURATION = int(os.environ.get("SPARK_GRAFT_STREAM_SECS", "30"))
 

@@ -20,7 +20,6 @@ bit_count) — no Python in the hot path.
 from __future__ import annotations
 
 import logging
-from functools import lru_cache
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -30,6 +29,7 @@ _LOG = logging.getLogger(__name__)
 from cdc_pipeline_spark.operators.rounding import round_half_up
 
 from cdc_pipeline_spark.operators.partitioning import ensure_parallelism as _spread
+from cdc_pipeline_spark.operators.templates import template
 from cdc_pipeline_spark.operators.text import fingerprint, tokens, word_shingles
 
 # Deterministic affine MinHash parameters: h_i(x) = (A_i * x + B_i) mod P.
@@ -595,60 +595,49 @@ def minhash_signatures(
     # slower on the signature stage).
     base = F.pmod(F.xxhash64("shingle"), F.lit(_MERSENNE_P))
     hashed = posting.select("doc_id", base.alias("__h"))
-    sig = hashed.groupBy("doc_id").agg(*_min_sig_exprs(num_perm))
-    return sig.select("doc_id", _sig_array(num_perm).alias("signature"))
+    aggs, signature = _minhash_t(num_perm)
+    sig = hashed.groupBy("doc_id").agg(*aggs)
+    return sig.select("doc_id", signature.alias("signature"))
 
 
-@lru_cache(maxsize=None)
-def _min_sig_exprs(num_perm: int) -> tuple:
-    """The num_perm affine-permutation min-agg expressions, built once
-    per process (r12): ~500 py4j round-trips per construction and the
-    tree is a pure unresolved template over the fixed ``__h`` alias —
-    the same prepared-statement caching as the weblinks/robots
-    batteries. Every minhash consumer (the LSH pairs query, the
-    incremental near-dup probe, the streaming index twin's batch side)
-    reuses one template per num_perm."""
-    return tuple(
+@template
+def _minhash_t(num_perm: int) -> tuple:
+    """The num_perm affine-permutation min-aggregates over ``__h``
+    (~500 py4j round-trips to build) and the array packing them into
+    one signature."""
+    aggs = tuple(
         F.min(F.pmod(F.lit(a) * F.col("__h") + F.lit(b), F.lit(_MERSENNE_P))).alias(f"h{i}")
         for i, (a, b) in enumerate(_perm_params(num_perm))
     )
-
-
-@lru_cache(maxsize=None)
-def _sig_array(num_perm: int):
-    return F.array(*[f"h{i}" for i in range(num_perm)])
+    return aggs, F.array(*[f"h{i}" for i in range(num_perm)])
 
 
 def band_posting(sig: DataFrame, num_perm: int, bands: int) -> DataFrame:
     """(doc_id, band, bucket) posting from a signature frame: the LSH
     index rows. Band hash = xxhash64 of the band's row slice; docs share
     a bucket iff every permutation in that band agrees."""
-    banded = sig.select("doc_id", *_band_hash_exprs(num_perm, bands))
-    return banded.select("doc_id", _band_explode(bands)).select(
-        "doc_id", "bb.band", "bb.bucket"
-    )
+    hashes, explode = _band_t(num_perm, bands)
+    banded = sig.select("doc_id", *hashes)
+    return banded.select("doc_id", explode).select("doc_id", "bb.band", "bb.bucket")
 
 
-@lru_cache(maxsize=None)
-def _band_hash_exprs(num_perm: int, bands: int) -> tuple:
-    """Per-band slice hashes — cached expression templates (see
-    ``_min_sig_exprs``)."""
+@template
+def _band_t(num_perm: int, bands: int) -> tuple:
+    """Per-band slice hashes of ``signature`` and the explode of them
+    into (band, bucket) rows."""
     rows = num_perm // bands
-    return tuple(
+    hashes = tuple(
         F.xxhash64(
             F.concat_ws(",", *[F.col("signature")[b * rows + r].cast("string") for r in range(rows)])
         ).alias(f"band{b}")
         for b in range(bands)
     )
-
-
-@lru_cache(maxsize=None)
-def _band_explode(bands: int):
-    return F.explode(
+    explode = F.explode(
         F.array(
             *[F.struct(F.lit(b).alias("band"), F.col(f"band{b}").alias("bucket")) for b in range(bands)]
         )
     ).alias("bb")
+    return hashes, explode
 
 
 def minhash_lsh_pairs(
@@ -813,28 +802,22 @@ def simhash_signatures(
         # contract tfidf_cosine_pairs documents)
         F.col("token") != ""
     )
-    summed = posting.groupBy("doc_id").agg(*_simhash_sum_exprs(bits, token_hash))
-    return summed.select("doc_id", _simhash_pack_expr(bits).alias("simhash"))
+    sums, packed = _simhash_t(bits, token_hash)
+    summed = posting.groupBy("doc_id").agg(*sums)
+    return summed.select("doc_id", packed.alias("simhash"))
 
 
-@lru_cache(maxsize=64)
-def _simhash_sum_exprs(bits: int, token_hash=None) -> tuple:
-    """Per-bit ±1 sum aggregates — cached expression templates (see
-    ``_min_sig_exprs``). ``token_hash`` keys the cache by function
-    identity: the module-level ``portable_token_hash`` and the default
-    each get one stable entry, while an ad-hoc per-call lambda both
-    misses AND is retained by the cache — hence the bounded maxsize,
-    which evicts dead lambda keys instead of growing a long-lived
-    driver forever. Pass module-level functions for cache hits."""
+@template
+def _simhash_t(bits: int, token_hash) -> tuple:
+    """Per-bit ±1 sum aggregates of the token hash and the expression
+    packing their signs into one long. ``token_hash`` is part of the
+    key, so pass a module-level function (``portable_token_hash``) or
+    None for cache hits."""
     h = token_hash(F.col("token")) if token_hash is not None else F.xxhash64("token")
-    return tuple(
+    sums = tuple(
         F.sum(F.when(F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)).alias(f"b{j}")
         for j in range(bits)
     )
-
-
-@lru_cache(maxsize=None)
-def _simhash_pack_expr(bits: int):
     packed = None
     for j in range(bits):
         # bit 63 is the long's sign bit: 1 << 63 overflows a jlong
@@ -844,7 +827,7 @@ def _simhash_pack_expr(bits: int):
         weight = F.lit(-(1 << 63)) if j == 63 else F.lit(1 << j)
         term = F.when(F.col(f"b{j}") > 0, weight).otherwise(F.lit(0))
         packed = term if packed is None else packed + term
-    return packed.cast("long")
+    return sums, packed.cast("long")
 
 
 # Default per-(band, chunk) bucket cap for simhash_pairs: the value the

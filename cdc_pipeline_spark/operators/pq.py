@@ -38,25 +38,23 @@ Spark-first shapes:
 
 from __future__ import annotations
 
-from functools import lru_cache
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from cdc_pipeline_spark.operators.rounding import round_half_up
+from cdc_pipeline_spark.operators.templates import template
 
 
 def _subspace_rows(df: DataFrame, id_alias: str, id_col: str, vec_col: str, m: int, d_sub: int) -> DataFrame:
     """Explode (id, vector) into (id, subspace, sub) — m rows per vector,
-    each carrying one d_sub-length double subvector. The explode array
-    is a cached expression template (construction only; r12)."""
+    each carrying one d_sub-length double subvector."""
     return df.select(
         F.col(id_col).alias(id_alias), F.explode(_subs_expr(vec_col, m, d_sub)).alias("s")
     ).select(id_alias, "s.subspace", "s.sub")
 
 
-@lru_cache(maxsize=None)
+@template
 def _subs_expr(vec_col: str, m: int, d_sub: int) -> Column:
     return F.array(
         *[

@@ -69,10 +69,10 @@ the URL corpus: the 100 TB shape is one corpus scan plus one broadcast.
 
 from __future__ import annotations
 
-from functools import lru_cache
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from cdc_pipeline_spark.operators.templates import template
 
 _RULES_TYPE = (
     "array<struct<allow:boolean, prefix:string, pattern:string, spec:int>>"
@@ -408,22 +408,17 @@ def robots_policy(
     # multiplied tree takes seconds per query (review r10 — measured
     # 13.5 s -> sub-second). CollapseProject leaves the split alone
     # because the alias is referenced many times and is not cheap.
-    # The stage expressions themselves are cached templates (r12):
-    # building this battery is ~4k py4j round-trips (~1.3 s of driver
-    # latency per QUERY BUILD, cProfile-measured), and the trees are
-    # pure unresolved expressions over fixed internal aliases — no
-    # data, no session state; every robots consumer (policy / agent /
-    # wildcard / sitemap-frontier / both crawl queries) reuses them.
+    keyed, selv, wstarts, group = _parse_t(robots_text_col, agent)
     parsed = (
         robots.select(
             F.col(robots_domain_col).alias("__r_domain"),
-            _keyed_lines_t(robots_text_col).alias("__keyed"),
+            keyed.alias("__keyed"),
         )
-        .withColumn("__selv", _selected_value_t(agent))
-        .withColumn("__wstarts", _winner_starts_t())
+        .withColumn("__selv", selv)
+        .withColumn("__wstarts", wstarts)
         .select(
             "__r_domain",
-            _group_struct_t().alias("__g"),
+            group.alias("__g"),
         )
     )
     side = [F.col("__r_domain"), F.col("__g.rules").alias("__r_rules")]
@@ -433,9 +428,9 @@ def robots_policy(
             F.col("__g.sitemaps").alias("sitemaps"),
         ]
     rules = F.broadcast(parsed.select(*side))
-    domain_expr, path_expr = _url_parts_t()
+    pct_expr, domain_expr, path_expr = _url_t(url_col)
     tagged = (
-        urls.withColumn("__url_pct", _pct_url_t(url_col))
+        urls.withColumn("__url_pct", pct_expr)
         .withColumn("domain", domain_expr)
         .withColumn("path", path_expr)
         .drop("__url_pct")
@@ -447,43 +442,34 @@ def robots_policy(
     )
 
 
-@lru_cache(maxsize=None)
-def _keyed_lines_t(robots_text_col: str) -> Column:
-    return _keyed_lines(robots_text_col)
+@template
+def _parse_t(robots_text_col: str, agent: str | None) -> tuple[Column, Column, Column, Column]:
+    """The parse battery (~4k py4j round-trips to build) as four
+    stages, each over the previous stage's fixed alias: the keyed
+    lines (``__keyed``), the selected group value (``__selv``), the
+    winning group starts (``__wstarts``) and the group struct."""
+    keyed, selv, wstarts = F.col("__keyed"), F.col("__selv"), F.col("__wstarts")
+    return (
+        _keyed_lines(robots_text_col),
+        _selected_value(keyed, agent),
+        _winner_starts(keyed, selv),
+        _group_struct(keyed, wstarts),
+    )
 
 
-@lru_cache(maxsize=None)
-def _selected_value_t(agent: str | None) -> Column:
-    return _selected_value(F.col("__keyed"), agent)
-
-
-@lru_cache(maxsize=None)
-def _winner_starts_t() -> Column:
-    return _winner_starts(F.col("__keyed"), F.col("__selv"))
-
-
-@lru_cache(maxsize=None)
-def _group_struct_t() -> Column:
-    return _group_struct(F.col("__keyed"), F.col("__wstarts"))
-
-
-@lru_cache(maxsize=None)
+@template
 def _allowed_t() -> Column:
     return robots_allowed("path", "__r_rules")
 
 
-@lru_cache(maxsize=None)
-def _pct_url_t(url_col: str) -> Column:
-    from cdc_pipeline_spark.operators.urls import percent_normalize
-
-    return percent_normalize(url_col)
-
-
-@lru_cache(maxsize=None)
-def _url_parts_t() -> tuple[Column, Column]:
+@template
+def _url_t(url_col: str) -> tuple[Column, Column, Column]:
+    """The percent-normalized URL (``__url_pct``), and its registered
+    domain and robots path read from that alias."""
     from cdc_pipeline_spark.operators.urls import (
         _authority_parts,
         _host_pre_normalized,
+        percent_normalize,
         registered_domain,
     )
 
@@ -499,4 +485,4 @@ def _url_parts_t() -> tuple[Column, Column]:
         .when(tail.startswith("?"), F.concat(F.lit("/"), tail))
         .otherwise(tail)
     )
-    return registered_domain(_host_pre_normalized(u)), path
+    return percent_normalize(url_col), registered_domain(_host_pre_normalized(u)), path

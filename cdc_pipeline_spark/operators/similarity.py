@@ -26,12 +26,11 @@ Physical notes (measured on local[32]):
 
 from __future__ import annotations
 
-from functools import lru_cache
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cdc_pipeline_spark.operators.rounding import round_half_up
+from cdc_pipeline_spark.operators.templates import template
 
 from cdc_pipeline_spark.operators.partitioning import ensure_parallelism as _spread
 from cdc_pipeline_spark.operators.topk import grouped_top_k
@@ -118,6 +117,12 @@ def grouped_vector_means(
     DuckDB oracles. This is the ONE shared implementation behind both
     ``ivf_centroids`` and ``clustering._update`` — the persisted
     replay contract means the two must never drift.
+
+    PRECONDITION: ``id_col`` is unique within each group. The fold
+    sorts by (id, whole vector); two rows sharing an id with different
+    vectors fold in vector order, which need not be the per-dimension
+    order the oracle replays, so low-order bits can drift. Every
+    current caller keys rows by a unique vector id.
 
     Shape (r12): ONE shuffle — ``collect_list(struct(id, vec))`` per
     group, sorted by id, vectors folded element-wise in id order.
@@ -284,15 +289,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 11) -> list[list[float]]:
     return planes
 
 
-def rp_lsh_bucket(vec_col: Column, dim: int, n_planes: int = 12, seed: int = 11) -> Column:
-    """Sign-bit bucket id: bit j = [vec · plane_j ≥ 0]."""
-    bucket = F.lit(0).cast("long")
-    for j, plane in enumerate(_hyperplanes(dim, n_planes, seed)):
-        proj = dot(vec_col, F.array(*[F.lit(x) for x in plane]))
-        bucket = bucket + F.when(proj >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-    return bucket
-
-
 def _with_bucket(
     df: DataFrame, vec_col: str, out_col: str, dim: int, n_planes: int, seed: int = 11
 ) -> DataFrame:
@@ -306,14 +302,12 @@ def _with_bucket(
     constant-size plan, but every bucket attachment re-paid the
     BroadcastExchange build + BroadcastNestedLoopJoin machinery
     (~0.45 s/use at bench scale, measured on the kmeans twin of this
-    pattern) plus a createDataFrame py4j conversion. The parsed-literal
-    expression is also a cached template, so repeat constructions are
-    free; semantics and bucket values are bit-identical (same doubles,
-    same fold)."""
+    pattern) plus a createDataFrame py4j conversion. Semantics and
+    bucket values are bit-identical (same doubles, same fold)."""
     return df.withColumn(out_col, _bucket_expr(vec_col, dim, n_planes, seed))
 
 
-@lru_cache(maxsize=None)
+@template
 def _bucket_expr(vec_col: str, dim: int, n_planes: int, seed: int) -> Column:
     planes = _hyperplanes(dim, n_planes, seed)
     mat = F.expr(

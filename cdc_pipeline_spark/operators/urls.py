@@ -33,12 +33,12 @@ suffixes) — pass the published PSL file's lines for complete coverage.
 from __future__ import annotations
 
 import os as _os
-from functools import lru_cache
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cdc_pipeline_spark.operators.sampling import _bucket
+from cdc_pipeline_spark.operators.templates import template
 
 # Curated high-traffic multi-label public suffixes (two-label ccTLD
 # registrations from the public suffix list; the full PSL is ~10k
@@ -471,15 +471,13 @@ def url_host(url: Column | str) -> Column:
     the FIRST ``://`` — same embedded-URL rationale as
     :func:`canonicalize_url` — and percent-normalizes first so an
     encoded host (``ex%41mple.com``) keys identically to its decoded
-    form. String-named columns reuse a cached expression template
-    (construction cost only; the tree is a pure unresolved
-    expression)."""
+    form."""
     if isinstance(url, str):
         return _url_host_t(url)
     return _host_pre_normalized(percent_normalize(url))
 
 
-@lru_cache(maxsize=None)
+@template
 def _url_host_t(url: str) -> Column:
     return _host_pre_normalized(percent_normalize(F.col(url)))
 

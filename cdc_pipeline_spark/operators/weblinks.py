@@ -51,11 +51,10 @@ Scope (documented, not silent):
 
 from __future__ import annotations
 
-from functools import lru_cache
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from cdc_pipeline_spark.operators.templates import template
 from cdc_pipeline_spark.operators.urls import _authority_parts
 
 __all__ = [
@@ -327,23 +326,11 @@ def http_links(
     return F.filter(resolved, lambda u: u.rlike(r"(?i)^https?://"))
 
 
-@lru_cache(maxsize=None)
+@template
 def _capture_events_expr():
     """The capture-events explode expression over the fixed
-    `warc_records` column names, built ONCE per process (r12): the
-    extraction + RFC 3986 resolution battery is ~3k py4j round-trips
-    to construct (~0.8 s of driver latency per query build — measured
-    with cProfile, `send_command` dominated), while the tree itself is
-    a pure unresolved-expression TEMPLATE: no data, no session state.
-    Alias/lambda-variable ids are fixed at CONSTRUCTION and therefore
-    shared by every plan that embeds the template — safe here because
-    separate queries resolve independent plan instances and every
-    consumer projects the template's one output away immediately; a
-    consumer that exposed the same cached alias on BOTH sides of a
-    self-join would have to re-alias first. Caching the template is
-    the prepared-statement move; every consumer (doc_link_frontier,
-    doc_fetch_schedule, the streaming frontier twin's batch side)
-    reuses it."""
+    `warc_records` column names: the extraction + RFC 3986 resolution
+    battery, ~3k py4j round-trips to build."""
     ev_t = "array<struct<url:string,kind:string>>"
     return F.explode(
         F.concat(
@@ -392,8 +379,7 @@ def capture_link_events(records):
     response with a NULL payload (non-``application/http``
     Content-Type) still emits its captured event — the outlink array
     coalesces to empty instead of null-propagating through the concat
-    (review r11).  The event expression is a cached template
-    (`_capture_events_expr`) — construction, not semantics."""
+    (review r11)."""
     resp = records.filter(F.col("valid") & (F.col("warc_type") == "response"))
     resp = resp.withColumn("__bp", base_parts(F.col("target_uri")))
     return resp.select(_capture_events_expr()).select("e.url", "e.kind")

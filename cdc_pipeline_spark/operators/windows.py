@@ -23,10 +23,6 @@ def window_col(time_col: str, duration: str, slide: str | None = None) -> Column
     return F.window(F.col(time_col), duration)
 
 
-def with_window(df: DataFrame, time_col: str, duration: str, slide: str | None = None, alias: str = "window") -> DataFrame:
-    return df.withColumn(alias, window_col(time_col, duration, slide))
-
-
 def window_bounds_epoch(window_alias: str = "window") -> list[Column]:
     """Project window struct to epoch-second longs (stable across engines,
     used by every pipeline's output contract; reference emits epoch-ms,

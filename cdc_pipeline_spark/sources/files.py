@@ -89,15 +89,6 @@ def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None 
     return {name: load_table(spark, sf_dir, name) for name in names}
 
 
-def read_csv(spark: SparkSession, path: str, schema: StructType, **options) -> DataFrame:
-    """Batch CSV scan with declared schema (no inference pass).
-    ``header`` defaults to true but stays overridable through
-    ``**options`` (a literal keyword would raise TypeError on the one
-    option a headerless file must override)."""
-    options.setdefault("header", "true")
-    return spark.read.options(**options).schema(schema).csv(path)
-
-
 def read_json(spark: SparkSession, path: str, schema: StructType, **options) -> DataFrame:
     """Batch JSON-lines scan with declared schema."""
     return spark.read.options(**options).schema(schema).json(path)

@@ -206,18 +206,6 @@ def read_cdc_stream(
     return normalize_cdc(decoded, timestamp_columns or [])
 
 
-def read_direct_stream(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    avro_schema_json: str,
-    **kafka_opts,
-) -> DataFrame:
-    """S6: direct (non-CDC) Avro topic — same chain minus the op filter."""
-    raw = read_kafka_stream(spark, bootstrap_servers, topic, **kafka_opts)
-    return decode_avro_auto(raw, avro_schema_json)
-
-
 def read_json_stream(
     spark: SparkSession,
     bootstrap_servers: str,

@@ -194,10 +194,11 @@ def start_geo_pipeline(
 
 
 # ---------------------------------------------------------------------------
-# Composite entry points mirroring the reference's three job binaries
-# (SURVEY §3: transaction_analytics, infrastructure_analytics,
-# derived_analytics). Each takes pre-built source DataFrames (Kafka in
-# production, files in tests) and returns the started queries.
+# Composite entry points mirroring the reference's job binaries (SURVEY
+# §3: transaction_analytics, infrastructure_analytics). Each takes
+# pre-built source DataFrames (Kafka in production, files in tests) and
+# returns the started queries. Reference job 3 (derived_analytics.py:
+# 9-17) is one query, started by `start_platform_pipeline` directly.
 # ---------------------------------------------------------------------------
 
 
@@ -234,17 +235,4 @@ def start_infrastructure_job(
         start_traffic_pipeline(traffic_source, kv, f"{checkpoint_base}/traffic", trigger=trigger),
         start_health_pipeline(health_source, kv, f"{checkpoint_base}/health", trigger=trigger),
         start_geo_pipeline(geo_source, kv, f"{checkpoint_base}/geo", trigger=trigger),
-    ]
-
-
-def start_derived_job(
-    sessions_source: DataFrame,
-    kv,
-    checkpoint_base: str,
-    trigger: dict | None = None,
-    platform_col: str = "platform",
-) -> list[StreamingQuery]:
-    """Reference job 3 (derived_analytics.py:9-17): platform breakdown."""
-    return [
-        start_platform_pipeline(sessions_source, kv, f"{checkpoint_base}/platform", trigger=trigger, platform_col=platform_col)
     ]

@@ -18,7 +18,6 @@ query's progress reporting).
 
 from __future__ import annotations
 
-import json
 from typing import Any
 
 try:  # pyspark >= 3.4 exposes the Python listener API
@@ -134,7 +133,3 @@ def read_stream_metrics(kv: Any, prefix: str = DIRECTORY_KEY) -> dict[str, dict[
     return {
         name: kv.read_hash(f"{prefix}:{name}") for name in kv.read_hash(prefix)
     }
-
-
-def metrics_json(kv: Any, prefix: str = DIRECTORY_KEY) -> str:
-    return json.dumps(read_stream_metrics(kv, prefix), sort_keys=True)

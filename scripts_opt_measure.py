@@ -1,10 +1,10 @@
 #!/usr/bin/env python
-"""Round-11 optimization measurement harness.
+"""Optimization measurement harness.
 
-Times selected queries (bench methodology: best-of-N of the
-``agg(bit_xor(xxhash64(struct(*))))`` force) and captures
-``explain("formatted")`` text, in ONE warmed session — the same
-conditions a mid-suite bench reading sees, minus neighbors.
+Times selected queries (bench methodology: best-of-N of ``bench._force``)
+and captures ``explain("formatted")`` text, in ONE session warmed the
+way ``bench.py`` warms it — the same conditions a mid-suite bench
+reading sees, minus neighbors. The plans under ``plans/`` come from it.
 
 Usage:
     python scripts_opt_measure.py [--sf DIR] [--n N] [--plans OUTDIR] \
@@ -21,19 +21,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
-from pyspark.sql import functions as F
-
-from cdc_pipeline_spark.session import create_spark_session
+from bench import _best_of, _session
 from cdc_pipeline_spark import workload
 
 SF_DIR = "/root/testdata/sf0.1"
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-
-def _force(df) -> None:
-    df.agg(F.bit_xor(F.xxhash64(F.struct(*df.columns)))).collect()
 
 
 def _explain_formatted(df) -> str:
@@ -72,33 +64,12 @@ def main() -> None:
         names += [k for k, _ in sorted(base.items(), key=lambda kv: -kv[1])[:top_k]
                   if k not in names]
 
-    spark = create_spark_session(
-        app_name="opt-measure",
-        master=f"local[{CPUS}]",
-        shuffle_partitions=int(CPUS),
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # same warm-up as bench.py: JVM/codegen + the Python worker pool
-    _force(workload.QUERIES["q1_pricing_summary"](spark, "/root/testdata/sf0.001"))
-
-    def _gen(batches):
-        import numpy, pandas  # noqa: F401
-        yield from batches
-
-    wdf = spark.range(int(CPUS), numPartitions=int(CPUS))
-    wdf.mapInPandas(_gen, wdf.schema).count()
+    spark = _session("opt-measure")
 
     timings: dict[str, float] = {}
     for name in names:
         spark.sparkContext.setJobDescription(f"opt-measure: {name}")
-        best = None
-        for _ in range(n_runs):
-            t0 = time.perf_counter()
-            _force(workload.QUERIES[name](spark, SF_DIR))
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        timings[name] = round(best, 3)
+        timings[name] = round(_best_of(spark, name, n_runs, SF_DIR), 3)
         print(f"# {name}: {timings[name]:.3f}s", file=sys.stderr, flush=True)
         if plans_dir:
             os.makedirs(plans_dir, exist_ok=True)

@@ -408,6 +408,18 @@ def test_find_regressions_cancels_uniform_host_drift():
     assert set(regressions) == {"q5"}
 
 
+def test_isolation_retry_subprocess_returns_timings(monkeypatch):
+    """The fresh-process isolation retry must measure: a broken retry
+    returns {} and the gate would silently judge only in-suite numbers."""
+    import bench
+    from conftest import SF_SMOKE
+
+    monkeypatch.setattr(bench, "SF_DIR", SF_SMOKE)
+    got = bench._subprocess_retry(["q1_pricing_summary"])
+    assert list(got) == ["q1_pricing_summary"]
+    assert got["q1_pricing_summary"] > 0
+
+
 def test_load_baseline_json_and_md_agree():
     import bench
 
