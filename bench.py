@@ -72,24 +72,21 @@ def _warm_python_workers(spark, n_workers: int) -> None:
     """Spawn the Python/Arrow worker pool BEFORE timing anything.
 
     A fresh JVM has no Python workers; the first mapInPandas/mapInArrow
-    query pays one worker spawn + numpy/pandas/pyarrow import per core
-    (~4 s wall at local[32] — measured round 8: cold 6.5 s vs warm
-    2.4 s for embedding_principal_component, identical code). Without
-    this warm-up the cost lands on whichever ARROW query happens to run
-    first — which is how that query "drifted" 1.50 → 2.69 s across
-    rounds as registry reordering moved it around the suite, and why
-    isolation retries of Arrow queries read systematically high. One
-    row per core guarantees every worker in the pool starts and caches
-    the heavy imports."""
-
-    def gen(batches):
-        import numpy  # noqa: F401 — the import IS the warm-up
-        import pandas  # noqa: F401
-
-        yield from batches
-
+    query pays the daemon start and one worker fork per core. On
+    local[4] (4-core VM) this warm-up takes 5.0-6.1 s wall cold against
+    0.55-0.65 s warm, with either daemon. The factory's preloaded daemon
+    (``cdc_pipeline_spark.worker_daemon``) moves the pandas/pyarrow
+    import out of the workers: per-worker CPU 0.72-1.01 s with the
+    stock ``pyspark.daemon``, 0.36-0.49 s with it; daemon CPU
+    0.9-1.35 s → 1.6-1.75 s; daemon plus workers 4.2-5.1 s → 3.45-3.5 s
+    (three cold pools each, alternating). Without this warm-up the cost
+    lands on whichever ARROW query happens to run first — which is how
+    that query "drifted" 1.50 → 2.69 s across rounds as registry
+    reordering moved it around the suite, and why isolation retries of
+    Arrow queries read systematically high. One row per core guarantees
+    every worker in the pool is forked."""
     df = spark.range(n_workers, numPartitions=n_workers)
-    df.mapInPandas(gen, df.schema).count()
+    df.mapInPandas(lambda batches: batches, df.schema).count()
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))

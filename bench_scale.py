@@ -22,7 +22,8 @@ Embeddings likewise: replica r offsets vec_id and adds a deterministic
 index sees 10x rows in the same cell geometry and per-query cost must
 scale with rows-per-probed-cell, not corpus size.
 
-Run: ``python bench_scale.py`` (~3-5 min on local[32]).
+Run: ``python bench_scale.py`` (~3-5 min on 32 cores); the master is the
+factory default, ``local[$SPARK_GRAFT_CPUS]``, else every core of the host.
 """
 
 from __future__ import annotations
@@ -101,7 +102,7 @@ def timed(fn):
 
 def main() -> None:
     spark = create_spark_session(
-        app_name="bench-scale", master="local[32]", shuffle_partitions=32
+        app_name="bench-scale", shuffle_partitions=32
     )
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -12,7 +12,7 @@ guards against the unguarded baselines, printing ONE JSON line:
     guard, `operators/dedup.py::prune_hot_buckets`).
   * hot aggregation keys — events with 90% of rows on one key.
     Measured: the max reduce-partition row count (the straggler's
-    workload — deterministic, unlike local[32] wall clock) for a plain
+    workload — deterministic, unlike wall clock) for a plain
     groupBy vs `operators/skew.py::salted_agg` with 16 salts, plus
     both wall times.
 
@@ -32,7 +32,8 @@ from pyspark.sql import functions as F
 from cdc_pipeline_spark.session import create_spark_session
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# Fixed, not host-sized, so plan shapes and skew metrics compare across hosts.
+SHUFFLE_PARTITIONS = 32
 BOILERPLATE_FRACTION = 0.3
 MAX_BUCKET = 100
 N_SALTS = 16
@@ -165,8 +166,7 @@ def measure_anti(spark, hist, inc, bloom: bool):
 def main() -> None:
     spark = create_spark_session(
         app_name="cdc-pipeline-spark-bench-skew",
-        master=f"local[{CPUS}]",
-        shuffle_partitions=int(CPUS),
+        shuffle_partitions=SHUFFLE_PARTITIONS,
     )
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -176,7 +176,7 @@ def main() -> None:
     uncapped_pairs, uncapped_sec = measure_lsh(spark, docs, None)
 
     ev = hot_key_events(spark)
-    shuffle_n = int(CPUS)
+    shuffle_n = SHUFFLE_PARTITIONS
     plain_skew = reduce_partition_skew(ev, ["k"], shuffle_n)
     salted_skew = reduce_partition_skew(
         ev.withColumn("__salt", F.pmod(F.xxhash64("event_id"), F.lit(N_SALTS))),
@@ -189,7 +189,7 @@ def main() -> None:
 
     # incremental-ingest anti join: how many history rows survive the
     # bloom prune (the join's right-side input — THE deterministic
-    # metric; wall clock on local[32] is the secondary one)
+    # metric; wall clock is the secondary one)
     from cdc_pipeline_spark.operators.bloom import bloom_filter_words, bloom_might_contain
 
     hist, inc = ingest_frames(spark)

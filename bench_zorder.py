@@ -22,7 +22,8 @@ Prints ONE JSON line; asserts the Z-ordered layout skips >50% of files
 for the benchmark predicate while the natural layout skips ~0% on the
 non-sort column.
 
-Run: ``python bench_zorder.py`` (~1 min on local[32]).
+Run: ``python bench_zorder.py`` (~1 min on 32 cores); the master is the
+factory default, ``local[$SPARK_GRAFT_CPUS]``, else every core of the host.
 """
 
 from __future__ import annotations
@@ -106,7 +107,7 @@ def scan_metrics(df) -> dict:
 
 def main() -> None:
     spark = create_spark_session(
-        app_name="bench-zorder", master="local[32]", shuffle_partitions=32
+        app_name="bench-zorder", shuffle_partitions=32
     )
     spark.sparkContext.setLogLevel("ERROR")
     # AQE's plan wrapper hides the scan node's metrics from the Py4J

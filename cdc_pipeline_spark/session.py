@@ -5,6 +5,17 @@ Reference equivalent: ``src/streaming/spark_session.py:10-21`` (fixed
 the knobs explicit and enables AQE so the shuffle partition count adapts at
 runtime — at 100 TB a fixed small shuffle count is the first bottleneck,
 and AQE coalescing + skew-join splitting replace hand tuning.
+
+Factory sessions fork their Python workers from
+``cdc_pipeline_spark.worker_daemon`` rather than the stock
+``pyspark.daemon``: it imports pandas, pyarrow and PySpark's Arrow
+serializers once and freezes that heap before forking, so each worker of
+a new SparkContext starts with the Arrow stack already loaded instead of
+importing it on its first ``mapInPandas``/``applyInPandas`` task. The
+package's parent directory is prepended to the executors' ``PYTHONPATH``
+so the daemon module resolves whatever the driver's working directory is.
+Sessions built elsewhere (e.g. a bare ``SparkSession.builder``) keep the
+stock daemon; plans are identical either way.
 """
 
 from __future__ import annotations
@@ -14,11 +25,11 @@ from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
-# Defaults target the test harness (local[32], 128 GiB). On a real cluster
-# master/shuffle come from spark-submit / cluster conf and these are only
-# fallbacks.
+# On a real cluster master/shuffle come from spark-submit / cluster conf
+# and these are only fallbacks.
 DEFAULT_MASTER = os.environ.get("SPARK_MASTER_URL", f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]")
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_SQL_SHUFFLE_PARTITIONS", "32")
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _default_driver_memory() -> str:
@@ -84,7 +95,12 @@ def create_spark_session(
         .config("spark.sql.streaming.stateStore.stateSchemaCheck", "true")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI_ENABLED", "false"))
     )
-    for key, value in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    conf.setdefault("spark.python.daemon.module", "cdc_pipeline_spark.worker_daemon")
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p for p in (_PACKAGE_PARENT, conf.get("spark.executorEnv.PYTHONPATH")) if p
+    )
+    for key, value in conf.items():
         builder = builder.config(key, value)
     return builder.getOrCreate()
 

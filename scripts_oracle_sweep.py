@@ -20,7 +20,7 @@ SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 FIRST_N = int(sys.argv[2]) if len(sys.argv) > 2 else 0
 
 def main() -> int:
-    spark = create_spark_session(app_name="oracle-sweep", master="local[32]", shuffle_partitions=32)
+    spark = create_spark_session(app_name="oracle-sweep", shuffle_partitions=32)
     spark.sparkContext.setLogLevel("ERROR")
     names = list(workload.QUERIES)
     if FIRST_N:

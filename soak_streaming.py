@@ -119,7 +119,7 @@ def dir_bytes(root: str) -> int:
 
 def main() -> None:
     spark = create_spark_session(
-        app_name="soak-streaming", master="local[32]", shuffle_partitions=32
+        app_name="soak-streaming", shuffle_partitions=32
     )
     spark.sparkContext.setLogLevel("ERROR")
 
