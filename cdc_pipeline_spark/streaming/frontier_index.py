@@ -5,8 +5,8 @@ A live crawl discovers URLs continuously (WAT outlinks, redirect
 targets) while simultaneously shrinking the frontier (each fetch turns
 a discovered URL into a captured one).  This module maintains that
 state over a capture stream (`sources/warc.py:stream_warc_records` →
-`weblinks.capture_link_events`) with the rollup-table layering
-(`streaming/rollup.py`): each micro-batch writes its PER-URL PARTIAL
+`weblinks.capture_link_events`) with the state-table protocol
+(`streaming/state_table.py`): each micro-batch writes its PER-URL PARTIAL
 aggregate — ``(url, __cap, __n_out, __n_red)``, max/sum re-foldable —
 into its own ``batch_id=<n>`` partition with dynamic-partition
 overwrite, so an at-least-once foreachBatch replay rewrites exactly its
@@ -22,7 +22,7 @@ A ``captured`` event is terminal for its URL (``__cap`` is a max), so
 increments can only move a URL frontier→captured, never back — exactly
 the crawl-history semantics.  Compaction folds all partials into one
 ``batch_id=-1`` partition under the shared marker/lock protocol
-(`rollup._swap_compacted`), bounding the per-read file listing on
+(`state_table.compact`), bounding the per-read file listing on
 long-running crawls.
 
 At 100 TB: partials are keyed on url, so bucketing ``partials/`` by
@@ -35,7 +35,6 @@ from __future__ import annotations
 
 import os
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,16 +43,11 @@ from cdc_pipeline_spark.operators.weblinks import (
     frontier_partial,
     frontier_rows,
 )
-from cdc_pipeline_spark.streaming.rollup import (
-    _replay_folded,
-    _swap_compacted,
-    _table_lock,
-    _write_partials,
-)
+from cdc_pipeline_spark.streaming.state_table import compact, read_table, write_batch
 
 _PARTIALS = "partials"
 
-_PARTIAL_SCHEMA = "url string, __cap int, __n_out bigint, __n_red bigint, batch_id long"
+_PARTIAL_SCHEMA = "url string, __cap int, __n_out bigint, __n_red bigint, batch_id int"
 
 
 class FrontierIndexWriter:
@@ -68,29 +62,16 @@ class FrontierIndexWriter:
         self.path = path
         self.run_id = run_id
 
-    def _table(self) -> str:
-        return os.path.join(self.path, _PARTIALS)
-
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        partial = frontier_partial(capture_link_events(batch_df)).withColumn(
-            "batch_id", F.lit(int(batch_id))
-        )
-        with _table_lock(self._table()):
-            if _replay_folded(self._table(), self.run_id, batch_id):
-                return
-            _write_partials(partial, self._table())
+        partial = frontier_partial(capture_link_events(batch_df))
+        write_batch(os.path.join(self.path, _PARTIALS), batch_id, self.run_id, partial)
 
 
 def read_frontier(spark: SparkSession, path: str) -> DataFrame:
     """The current frontier: re-fold every batch partial and apply the
     shared `frontier_rows` projection — output schema identical to
     `weblinks.crawl_frontier` (url, link_kind, n_discoveries)."""
-    try:
-        partials = spark.read.parquet(os.path.join(path, _PARTIALS))
-    except AnalysisException:  # nothing ingested yet
-        return spark.createDataFrame(
-            [], "url string, link_kind string, n_discoveries long"
-        )
+    partials = read_table(spark, os.path.join(path, _PARTIALS), _PARTIAL_SCHEMA)
     return frontier_rows(_refold(partials))
 
 
@@ -108,13 +89,7 @@ def compact_frontier_index(
     """Fold all batch partials into one ``batch_id=-1`` partition.
     The fold IS the read-side re-fold (max/sum per url), so
     `read_frontier` results are unchanged by construction; the marker
-    written by `_swap_compacted` makes a replayed already-folded batch
+    written by the compaction makes a replayed already-folded batch
     a no-op under the writer's guard.  Returns the folded row count."""
     table = os.path.join(path, _PARTIALS)
-    with _table_lock(table, timeout=lock_timeout):
-        try:
-            partials = spark.read.parquet(table)
-        except AnalysisException:  # never written
-            return 0
-        folded = _refold(partials).withColumn("batch_id", F.lit(-1))
-        return _swap_compacted(spark, table, partials, folded, run_id)
+    return compact(spark, [(table, _refold, _PARTIAL_SCHEMA)], run_id, lock_timeout)[0]

@@ -14,13 +14,14 @@ micro-batch:
      sets, landing matches >= threshold;
   2. appends its own postings + shingle sets to the index.
 
-Storage layout mirrors `streaming/rollup.py`: three parquet tables
-under ``path`` (``postings/``, ``shingles/``, ``matches/``), each
-partitioned by ``batch_id`` with per-batch dynamic-partition
-overwrite — a replayed micro-batch rewrites exactly its own partition,
-and because the probe reads only ``batch_id < current``, the replay
-re-derives the SAME matches (its own postings are excluded), so the
-whole operator is replay-idempotent with no marker files.
+Storage follows the state-table protocol (`streaming/state_table.py`):
+three parquet tables under ``path`` (``postings/``, ``shingles/``,
+``matches/``), each partitioned by ``batch_id`` with per-batch
+dynamic-partition overwrite — a replayed micro-batch rewrites exactly
+its own partition, and because the probe reads only ``batch_id <
+current``, the replay re-derives the SAME matches (its own postings are
+excluded), so the whole operator is replay-idempotent. One postings
+lock and replay guard cover the probe and all three writes.
 
 At 100 TB: postings are (band, bucket, doc_id) — `bands` rows/doc —
 and the probe is a band-bucket equi-join, so bucketing ``postings/``
@@ -33,9 +34,9 @@ stream-maintained matches == the batch twin run per increment.
 
 from __future__ import annotations
 
+import functools
 import os
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,6 +47,88 @@ from cdc_pipeline_spark.operators.dedup import (
     prune_hot_buckets,
 )
 from cdc_pipeline_spark.operators.rounding import round_half_up
+from cdc_pipeline_spark.streaming.state_table import compact, read_table, write_batch
+
+_MATCH_SCHEMA = "doc_id long, match_id long, jaccard double, batch_id int"
+_PHASH_MATCH_SCHEMA = "doc_id long, match_id long, hamming int, batch_id int"
+
+
+def _distinct_postings(postings: DataFrame, key: tuple[str, str]) -> DataFrame:
+    """Postings fold: one (key..., doc_id) row per doc and bucket. The
+    candidate join ``.distinct()``s anyway, so the duplicates a doc
+    re-ingested across batches leaves never change probe results."""
+    return postings.select(*key, "doc_id").distinct()
+
+
+def _latest_shingles(shingles: DataFrame) -> DataFrame:
+    """Shingles fold: each doc's LATEST row (``max_by(batch_id)``), so a
+    re-ingested doc verifies once, like the batch twin's per-doc_id
+    grouping — and folded rows never tie at batch_id=-1."""
+    return shingles.groupBy("doc_id").agg(
+        F.max_by("shingles", "batch_id").alias("shingles")
+    )
+
+
+def _latest_hashes(hashes: DataFrame) -> DataFrame:
+    """Hashes fold: per doc, the latest DECODED row's hashes (the null
+    key of an undecodable row is skipped by max_by), so a doc whose
+    re-ingest was corrupt keeps its last good hash; ``decoded`` folds to
+    bool_or, so never-decoded docs stay excluded from the probe."""
+    latest_decoded = F.when(F.col("decoded"), F.col("batch_id"))
+    return hashes.groupBy("doc_id").agg(
+        F.max_by("ahash", latest_decoded).alias("ahash"),
+        F.max_by("dhash", latest_decoded).alias("dhash"),
+        F.max("decoded").alias("decoded"),
+    )
+
+
+def _history(spark: SparkSession, table: str, batch: DataFrame, batch_id: int) -> DataFrame:
+    """Rows of every STRICTLY EARLIER batch, read with the schema of
+    this batch's own rows (empty before the first write)."""
+    return read_table(spark, table, batch.schema).filter(F.col("batch_id") < batch_id)
+
+
+def _candidates(
+    incoming: DataFrame,
+    history: DataFrame,
+    key: tuple[str, str],
+    max_bucket: int | None,
+    what: str = "band bucket",
+) -> DataFrame:
+    """(doc_id, match_id) pairs of incoming x historical docs sharing a
+    band bucket — never history x history, so a probe costs O(batch).
+
+    ``max_bucket`` caps hot buckets over both sides together, like the
+    batch twin: the hazard is a hot HISTORICAL bucket multiplying every
+    probe. The cap counts DOCS per bucket, so history is folded to
+    distinct postings first; otherwise a re-ingested doc's duplicate
+    rows could flip a boundary bucket's fate when compaction dedupes
+    them. Without a cap the final distinct absorbs the duplicates."""
+    if max_bucket is not None:
+        history = _distinct_postings(history, key)
+    both = prune_hot_buckets(
+        incoming.select(*key, "doc_id", F.lit(True).alias("__inc")).unionByName(
+            history.select(*key, "doc_id", F.lit(False).alias("__inc"))
+        ),
+        list(key),
+        max_bucket,
+        what=what,
+    )
+    return (
+        both.filter(F.col("__inc"))
+        .select(*key, "doc_id")
+        .join(
+            both.filter(~F.col("__inc")).select(*key, F.col("doc_id").alias("match_id")),
+            list(key),
+        )
+        # a re-ingested id probing its OWN earlier postings is not a
+        # near-dup discovery — the batch twin structurally cannot emit
+        # (d, d) (one row per doc splits strictly into
+        # incoming/historical), so the stream must not either
+        .filter(F.col("doc_id") != F.col("match_id"))
+        .select("doc_id", "match_id")
+        .distinct()
+    )
 
 
 class NearDupIndexWriter:
@@ -84,7 +167,6 @@ class NearDupIndexWriter:
         return os.path.join(self.path, name)
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         # The index's tables mutate as one family under the POSTINGS
         # lock (writer here; compact_neardup_index takes the same one):
         # the compaction replay guard must be decided for the WHOLE
@@ -94,15 +176,14 @@ class NearDupIndexWriter:
         # spurious self-matches. Guard + probe + all three writes form
         # one critical section so a maintenance-cadence compaction can
         # never fold this batch between the check and the writes.
-        from cdc_pipeline_spark.streaming.rollup import _replay_folded, _table_lock
-
+        #
         # Pure derivation from batch_df — signatures, postings, shingle
         # sets — happens OUTSIDE the lock: it reads no index state, and
         # it is the expensive part of a large micro-batch. Holding the
         # postings lock across it would blow the lock's 600 s staleness
-        # horizon (_LOCK_STALE_SECONDS), letting a maintenance-cadence
-        # compaction "break" a live writer's lock and rename-aside the
-        # table mid-write. A folded replay wastes this compute once —
+        # horizon (state_table.LOCK_STALE_SECONDS), letting a
+        # maintenance-cadence compaction "break" a live writer's lock and
+        # rename-aside the table mid-write. A folded replay wastes this compute once —
         # correctness is unaffected (the guard still gates the writes).
         docs = batch_df.select(
             F.col(self.id_col).alias("doc_id"), F.col(self.text_col).alias("text")
@@ -111,7 +192,8 @@ class NearDupIndexWriter:
         sig = minhash_signatures(docs, "doc_id", "text", self.n, self.num_perm)
         # both are probed AND written, and the probe's hot-bucket cap
         # evaluates its input more than once — one O(batch)
-        # materialization each, never one of the full history
+        # materialization each, never one of the full history. They
+        # carry batch_id so the probe reads history with their schema.
         posting = (
             band_posting(sig, self.num_perm, self.bands)
             .withColumn("batch_id", F.lit(int(batch_id)))
@@ -124,10 +206,7 @@ class NearDupIndexWriter:
             .localCheckpoint()
         )
 
-        with _table_lock(self._sub("postings")):
-            if _replay_folded(self._sub("postings"), self.run_id, batch_id):
-                return
-            matches = self._probe(spark, posting, shingles, batch_id)
+        def probe_then_append() -> list[tuple[str, DataFrame]]:
             # probe BEFORE appending (and against batch_id < current only):
             # a replayed batch sees exactly the history it saw the first
             # time, so every table rewrite below is bit-identical.
@@ -137,73 +216,25 @@ class NearDupIndexWriter:
             # let a crash-after-postings + compaction make the guard
             # skip a batch whose shingle sets never hit the index
             # (silently unverifiable near-dups forever)
-            _write_batch_partition(matches, self._sub("matches"))
-            _write_batch_partition(shingles, self._sub("shingles"))
-            _write_batch_partition(posting, self._sub("postings"))
+            matches = self._probe(batch_df.sparkSession, posting, shingles, batch_id)
+            return [
+                (self._sub("matches"), matches),
+                (self._sub("shingles"), shingles),
+                (self._sub("postings"), posting),
+            ]
+
+        write_batch(self._sub("postings"), batch_id, self.run_id, probe_then_append)
 
     def _probe(
         self, spark: SparkSession, posting: DataFrame, shingles: DataFrame, batch_id: int
     ) -> DataFrame:
-        empty = spark.createDataFrame([], _MATCH_SCHEMA)
-        # existence is decided by the READ, not a driver-local
-        # os.path probe: the index path may be HDFS/S3 (the module's
-        # stated 100 TB layout), where os.path.isdir is always False
-        # and would silently disable detection forever
-        try:
-            hist_posting = spark.read.parquet(self._sub("postings")).filter(
-                F.col("batch_id") < batch_id
-            )
-            hist_shingles_raw = spark.read.parquet(self._sub("shingles")).filter(
-                F.col("batch_id") < batch_id
-            )
-        except AnalysisException:  # no index yet (first batch)
-            return empty
-        # a doc re-ingested in several batches has one shingle row per
-        # batch; keep one (latest) so each (doc, match) pair verifies
-        # once — matching the batch twin's per-doc_id signature grouping
-        hist_shingles = hist_shingles_raw.groupBy(
-            F.col("doc_id").alias("match_id")
-        ).agg(F.max_by("shingles", "batch_id").alias("__sb"))
-        hist_rows = hist_posting.select(
-            "band", "bucket", "doc_id", F.lit(False).alias("__inc")
-        )
-        if self.max_bucket is not None:
-            # a doc re-ingested across batches carries duplicate
-            # (band, bucket, doc_id) history rows; the cap must count
-            # DOCS per bucket (like the batch twin, which has one row
-            # per doc) or a boundary bucket's fate would flip when
-            # compaction dedupes postings to distinct. Only paid when a
-            # cap is set — without one, duplicate candidates are already
-            # absorbed by the candidate join's distinct.
-            hist_rows = hist_rows.dropDuplicates(["band", "bucket", "doc_id"])
-        # the cap counts both sides together, like the batch twin: the
-        # hazard is a hot HISTORICAL bucket multiplying every probe
-        both = prune_hot_buckets(
-            posting.select(
-                "band", "bucket", "doc_id", F.lit(True).alias("__inc")
-            ).unionByName(hist_rows),
-            ["band", "bucket"],
-            self.max_bucket,
-        )
-        cand = (
-            both.filter(F.col("__inc"))
-            .select("band", "bucket", "doc_id")
-            .join(
-                both.filter(~F.col("__inc")).select(
-                    "band", "bucket", F.col("doc_id").alias("match_id")
-                ),
-                ["band", "bucket"],
-            )
-            # a re-ingested id probing its OWN earlier postings is not a
-            # near-dup discovery — the batch twin structurally cannot
-            # emit (d, d) (one row per doc splits strictly into
-            # incoming/historical), so the stream must not either
-            .filter(F.col("doc_id") != F.col("match_id"))
-            .select("doc_id", "match_id")
-            .distinct()
-        )
+        hist_posting = _history(spark, self._sub("postings"), posting, batch_id)
+        hist_shingles = _history(spark, self._sub("shingles"), shingles, batch_id)
+        cand = _candidates(posting, hist_posting, ("band", "bucket"), self.max_bucket)
         a = shingles.select("doc_id", F.col("shingles").alias("__sa"))
-        b = hist_shingles
+        b = _latest_shingles(hist_shingles).select(
+            F.col("doc_id").alias("match_id"), F.col("shingles").alias("__sb")
+        )
         inter = F.size(F.array_intersect(F.col("__sa"), F.col("__sb")))
         jacc = inter / (F.size("__sa") + F.size("__sb") - inter)
         return (
@@ -216,21 +247,6 @@ class NearDupIndexWriter:
         )
 
 
-def _write_batch_partition(df: DataFrame, path: str) -> None:
-    """Overwrite exactly this batch's partition (same contract as
-    rollup._write_partials; per-write dynamic mode, never session conf)."""
-    (
-        df.coalesce(1)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(path)
-    )
-
-
-_MATCH_SCHEMA = "doc_id long, match_id long, jaccard double, batch_id int"
-
-
 def read_matches(spark: SparkSession, path: str) -> DataFrame:
     """All landed near-dup matches: (doc_id, match_id, jaccard, batch_id).
 
@@ -238,10 +254,7 @@ def read_matches(spark: SparkSession, path: str) -> DataFrame:
     batch, and schema inference over a file-less directory raises
     ``UNABLE_TO_INFER_SCHEMA`` — here it returns an empty typed frame.
     """
-    try:
-        return spark.read.schema(_MATCH_SCHEMA).parquet(os.path.join(path, "matches"))
-    except AnalysisException:  # directory never created (no batch ran)
-        return spark.createDataFrame([], _MATCH_SCHEMA)
+    return read_table(spark, os.path.join(path, "matches"), _MATCH_SCHEMA)
 
 
 def compact_neardup_index(
@@ -252,20 +265,11 @@ def compact_neardup_index(
     otherwise mean every per-batch probe pays a thousands-of-tiny-files
     listing + scan on its history side.
 
-    Fold semantics preserve probe results exactly (pinned by the golden
-    test):
-
-    * postings fold to DISTINCT (band, bucket, doc_id) — the candidate
-      join ``.distinct()``s anyway, so duplicate rows from a doc
-      re-ingested across batches never changed results; dropping them
-      here also shrinks the index.
-    * shingles fold keeps each doc's LATEST row (``max_by(batch_id)``)
-      — exactly the row the probe's per-doc latest-pick selects today;
-      folding without the dedup would instead tie every re-ingested
-      doc's rows at batch_id=-1 and make that pick nondeterministic.
-    * ``matches/`` is an OUTPUT LOG, not probed state: its batch_id
-      column is part of the result surface (which batch detected the
-      dup), so compaction leaves it untouched.
+    The folds are the probe's own (``_distinct_postings``,
+    ``_latest_shingles``), so probe results are unchanged (pinned by the
+    golden test). ``matches/`` is an OUTPUT LOG, not probed state: its
+    batch_id column is part of the result surface (which batch detected
+    the dup), so compaction leaves it untouched.
 
     Holds the same postings lock as the writer's critical section, so
     a fold can't interleave a live batch's probe-then-append. The
@@ -273,31 +277,17 @@ def compact_neardup_index(
     postings one) makes a replayed already-folded batch a no-op.
     Returns (posting_rows, shingle_rows) after compaction.
     """
-    from cdc_pipeline_spark.streaming.rollup import _swap_compacted, _table_lock
-
-    with _table_lock(os.path.join(path, "postings"), timeout=lock_timeout):
-        counts = []
-        for sub, fold in (
-            (
-                "postings",
-                lambda df: df.select("band", "bucket", "doc_id").distinct(),
-            ),
-            (
-                "shingles",
-                lambda df: df.groupBy("doc_id").agg(
-                    F.max_by("shingles", "batch_id").alias("shingles")
-                ),
-            ),
-        ):
-            table = os.path.join(path, sub)
-            try:
-                partials = spark.read.parquet(table)
-            except AnalysisException:  # index never written
-                counts.append(0)
-                continue
-            folded = fold(partials).withColumn("batch_id", F.lit(-1))
-            counts.append(_swap_compacted(spark, table, partials, folded, run_id))
-    return counts[0], counts[1]
+    postings = functools.partial(_distinct_postings, key=("band", "bucket"))
+    n_postings, n_shingles = compact(
+        spark,
+        [
+            (os.path.join(path, "postings"), postings, None),
+            (os.path.join(path, "shingles"), _latest_shingles, None),
+        ],
+        run_id,
+        lock_timeout,
+    )
+    return n_postings, n_shingles
 
 
 # ---------------------------------------------------------------------------
@@ -360,7 +350,6 @@ class PhashNearDupIndexWriter:
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         from cdc_pipeline_spark.operators.dedup import banded_chunks
         from cdc_pipeline_spark.operators.multimodal import image_phash
-        from cdc_pipeline_spark.streaming.rollup import _replay_folded, _table_lock
 
         # expensive derivation (Arrow decode) OUTSIDE the lock — same
         # staleness-horizon reasoning as NearDupIndexWriter.__call__
@@ -377,63 +366,29 @@ class PhashNearDupIndexWriter:
             .withColumn("batch_id", F.lit(int(batch_id)))
             .localCheckpoint()
         )
-        with _table_lock(self._sub("postings")):
-            if _replay_folded(self._sub("postings"), self.run_id, batch_id):
-                return
-            matches = self._probe(batch_df.sparkSession, posting, hashes, batch_id)
+        def probe_then_append() -> list[tuple[str, DataFrame]]:
             # postings LAST — the replay guard reads the postings
             # marker, so folded postings must imply landed matches+hashes
-            _write_batch_partition(matches, self._sub("matches"))
-            _write_batch_partition(hashes, self._sub("hashes"))
-            _write_batch_partition(posting, self._sub("postings"))
+            matches = self._probe(batch_df.sparkSession, posting, hashes, batch_id)
+            return [
+                (self._sub("matches"), matches),
+                (self._sub("hashes"), hashes),
+                (self._sub("postings"), posting),
+            ]
+
+        write_batch(self._sub("postings"), batch_id, self.run_id, probe_then_append)
 
     def _probe(
         self, spark: SparkSession, posting: DataFrame, hashes: DataFrame, batch_id: int
     ) -> DataFrame:
-        from cdc_pipeline_spark.operators.dedup import prune_hot_buckets
-
-        empty = spark.createDataFrame([], _PHASH_MATCH_SCHEMA)
-        try:  # existence decided by the READ (HDFS/S3-safe), as above
-            hist_posting = spark.read.parquet(self._sub("postings")).filter(
-                F.col("batch_id") < batch_id
-            )
-            hist_hashes_raw = spark.read.parquet(self._sub("hashes")).filter(
-                (F.col("batch_id") < batch_id) & F.col("decoded")
-            )
-        except AnalysisException:  # no index yet (first batch)
-            return empty
-        # re-ingested docs: latest hash row wins, like the shingle pick
-        hist_hashes = hist_hashes_raw.groupBy(
-            F.col("doc_id").alias("match_id")
-        ).agg(F.max_by("ahash", "batch_id").alias("__ha"))
-        hist_rows = hist_posting.select(
-            "band", "chunk", "doc_id", F.lit(False).alias("__inc")
+        hist_posting = _history(spark, self._sub("postings"), posting, batch_id)
+        hist_hashes = (
+            _latest_hashes(_history(spark, self._sub("hashes"), hashes, batch_id))
+            .filter("decoded")
+            .select(F.col("doc_id").alias("match_id"), F.col("ahash").alias("__ha"))
         )
-        if self.max_bucket is not None:
-            # cap counts DOCS per bucket across both sides (batch-twin
-            # semantics; duplicate history rows from re-ingestion must
-            # not flip a boundary bucket) — same shape as the MinHash
-            # writer's probe
-            hist_rows = hist_rows.dropDuplicates(["band", "chunk", "doc_id"])
-        both = prune_hot_buckets(
-            posting.select("band", "chunk", "doc_id", F.lit(True).alias("__inc"))
-            .unionByName(hist_rows),
-            ["band", "chunk"],
-            self.max_bucket,
-            what="phash index chunk",
-        )
-        cand = (
-            both.filter(F.col("__inc"))
-            .select("band", "chunk", "doc_id")
-            .join(
-                both.filter(~F.col("__inc")).select(
-                    "band", "chunk", F.col("doc_id").alias("match_id")
-                ),
-                ["band", "chunk"],
-            )
-            .filter(F.col("doc_id") != F.col("match_id"))  # no self-matches
-            .select("doc_id", "match_id")
-            .distinct()
+        cand = _candidates(
+            posting, hist_posting, ("band", "chunk"), self.max_bucket, "phash index chunk"
         )
         inc = hashes.filter("decoded").select(
             "doc_id", F.col("ahash").alias("__hi")
@@ -449,60 +404,29 @@ class PhashNearDupIndexWriter:
         )
 
 
-_PHASH_MATCH_SCHEMA = "doc_id long, match_id long, hamming int, batch_id int"
-
-
 def read_phash_matches(spark: SparkSession, path: str) -> DataFrame:
     """All landed image near-dup matches: (doc_id, match_id, hamming,
     batch_id) — explicit schema for the zero-match-files case, like
     :func:`read_matches`."""
-    try:
-        return spark.read.schema(_PHASH_MATCH_SCHEMA).parquet(
-            os.path.join(path, "matches")
-        )
-    except AnalysisException:
-        return spark.createDataFrame([], _PHASH_MATCH_SCHEMA)
+    return read_table(spark, os.path.join(path, "matches"), _PHASH_MATCH_SCHEMA)
 
 
 def compact_phash_index(
     spark: SparkSession, path: str, run_id: str = "", lock_timeout: float = 30.0
 ) -> tuple[int, int]:
     """Fold ``postings/`` (distinct (band, chunk, doc_id)) and
-    ``hashes/`` (latest decoded-flagged row per doc — max_by preserves
-    the probe's per-doc pick) into batch_id=-1, exactly the
-    :func:`compact_neardup_index` semantics under the same postings
-    lock. ``matches/`` is the output log and stays untouched."""
-    from cdc_pipeline_spark.streaming.rollup import _swap_compacted, _table_lock
-
-    with _table_lock(os.path.join(path, "postings"), timeout=lock_timeout):
-        counts = []
-        for sub, fold in (
-            ("postings", lambda df: df.select("band", "chunk", "doc_id").distinct()),
-            (
-                # per doc: latest DECODED row's hashes — exactly the
-                # probe's pick (filter decoded, max_by batch_id), so a
-                # doc whose re-ingest was corrupt keeps its last good
-                # hash; max_by's null-key skip excludes quarantined
-                # rows. decoded folds to bool_or: the probe's
-                # decoded-filter must keep excluding never-decoded docs
-                "hashes",
-                lambda df: df.groupBy("doc_id").agg(
-                    F.max_by(
-                        "ahash", F.when(F.col("decoded"), F.col("batch_id"))
-                    ).alias("ahash"),
-                    F.max_by(
-                        "dhash", F.when(F.col("decoded"), F.col("batch_id"))
-                    ).alias("dhash"),
-                    F.max("decoded").alias("decoded"),
-                ),
-            ),
-        ):
-            table = os.path.join(path, sub)
-            try:
-                partials = spark.read.parquet(table)
-            except AnalysisException:
-                counts.append(0)
-                continue
-            folded = fold(partials).withColumn("batch_id", F.lit(-1))
-            counts.append(_swap_compacted(spark, table, partials, folded, run_id))
-    return counts[0], counts[1]
+    ``hashes/`` (``_latest_hashes``, the probe's own per-doc pick) into
+    batch_id=-1, exactly the :func:`compact_neardup_index` semantics
+    under the same postings lock. ``matches/`` is the output log and
+    stays untouched."""
+    postings = functools.partial(_distinct_postings, key=("band", "chunk"))
+    n_postings, n_hashes = compact(
+        spark,
+        [
+            (os.path.join(path, "postings"), postings, None),
+            (os.path.join(path, "hashes"), _latest_hashes, None),
+        ],
+        run_id,
+        lock_timeout,
+    )
+    return n_postings, n_hashes

@@ -12,8 +12,8 @@ each micro-batch appends only its LOCAL, immutable facts:
 
 both partitioned by ``batch_id`` with per-batch dynamic-partition
 overwrite, so a replayed micro-batch rewrites exactly its own partition
-and the index is replay-idempotent with no marker files (same layout
-contract as ``streaming/neardup_index.py`` / ``streaming/rollup.py``).
+and the index is replay-idempotent (the state-table protocol of
+``streaming/state_table.py``, one lock and replay guard per table).
 Per-batch work is proportional to the batch; nothing re-reads history.
 At query time ``bm25_topk_over_index`` derives the corpus stats from
 the accumulated tables and ranks — bit-identical to running the batch
@@ -28,7 +28,6 @@ from __future__ import annotations
 import os
 from collections.abc import Sequence
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -39,12 +38,7 @@ from cdc_pipeline_spark.operators.retrieval import (
     doc_lengths,
     token_tf,
 )
-from cdc_pipeline_spark.streaming.neardup_index import _write_batch_partition
-from cdc_pipeline_spark.streaming.rollup import (
-    _replay_folded,
-    _swap_compacted,
-    _table_lock,
-)
+from cdc_pipeline_spark.streaming.state_table import compact, read_table, write_batch
 
 _TF_SCHEMA = "doc_id long, token string, tf long, batch_id int"
 _DL_SCHEMA = "doc_id long, dl long, batch_id int"
@@ -60,7 +54,7 @@ class Bm25IndexWriter:
     the original batch id instead.
 
     ``run_id`` scopes the compaction replay guard exactly as in
-    :class:`~cdc_pipeline_spark.streaming.rollup.RollupTableWriter`:
+    the other state tables (``streaming/state_table.py``):
     after :func:`compact_index` folds per-batch partitions into
     ``batch_id=-1``, a replayed (at-least-once) batch whose id the
     marker says is folded is skipped instead of re-creating its
@@ -83,19 +77,12 @@ class Bm25IndexWriter:
         docs = batch_df.select(
             F.col(self.id_col).alias("doc_id"), F.col(self.text_col).alias("text")
         ).localCheckpoint()  # tf and doclens both re-read the batch; cut lineage once
-        tf = token_tf(docs).withColumn("batch_id", F.lit(int(batch_id)))
-        dls = doc_lengths(docs, tf.drop("batch_id")).withColumn(
-            "batch_id", F.lit(int(batch_id))
-        )
+        tf = token_tf(docs)
         # per-table lock + guard: a crash between the two folds in
         # compact_index leaves tf folded / doclens not — per-table
         # skipping keeps BOTH consistent under a subsequent replay
-        for frame, sub in ((tf, "tf"), (dls, "doclens")):
-            table = os.path.join(self.path, sub)
-            with _table_lock(table):
-                if _replay_folded(table, self.run_id, batch_id):
-                    continue
-                _write_batch_partition(frame, table)
+        for frame, sub in ((tf, "tf"), (doc_lengths(docs, tf), "doclens")):
+            write_batch(os.path.join(self.path, sub), batch_id, self.run_id, frame)
 
 
 def compact_index(
@@ -110,53 +97,32 @@ def compact_index(
     Postings are immutable FACTS (not mergeable aggregates), so the
     fold rewrites rows unchanged — queries read identical data before
     and after (pinned by the golden test). Locking, crash safety
-    (tmp-write + rename-aside) and the replay marker are shared with
-    ``rollup.compact_partials``; run from the maintenance cadence.
-    Returns (tf_rows, doclens_rows) after compaction; a never-written
-    table counts 0.
+    (tmp-write + rename-aside) and the replay marker are
+    ``state_table.compact``'s, one lock per table; run from the
+    maintenance cadence. Returns (tf_rows, doclens_rows) after
+    compaction; a never-written table counts 0.
     """
-    counts = []
-    for sub in ("tf", "doclens"):
-        table = os.path.join(path, sub)
-        with _table_lock(table, timeout=lock_timeout):
-            try:
-                partials = spark.read.parquet(table)
-            except AnalysisException:  # index never written
-                counts.append(0)
-                continue
-            folded = partials.drop("batch_id").withColumn("batch_id", F.lit(-1))
-            counts.append(_swap_compacted(spark, table, partials, folded, run_id))
-    return counts[0], counts[1]
+    tf_rows, dl_rows = (
+        compact(spark, [(os.path.join(path, sub), _keep, schema)], run_id, lock_timeout)[0]
+        for sub, schema in (("tf", _TF_SCHEMA), ("doclens", _DL_SCHEMA))
+    )
+    return tf_rows, dl_rows
+
+
+def _keep(partials: DataFrame) -> DataFrame:
+    return partials  # facts, not aggregates: the fold keeps every row
 
 
 def read_index(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
     """The accumulated ``(tf, doclens)`` tables (explicit schemas — a
     never-started index or an empty-corpus batch leaves file-less
-    directories that schema inference cannot read).
-
-    "Unreadable" is NOT always "empty": a compaction that crashed
-    between its two renames leaves the complete table at ``<table>.old``
-    and nothing at ``<table>`` — treating that as an empty index would
-    silently serve zero results forever. Existence is decided by READS
-    (the path may be object storage), same principle as the near-dup
-    probe: if the table is unreadable but its ``.old`` sibling reads,
-    raise so the operator recovers by renaming it back."""
-
-    def _read(sub: str, schema: str) -> DataFrame:
-        table = os.path.join(path, sub)
-        try:
-            return spark.read.schema(schema).parquet(table)
-        except AnalysisException:
-            try:
-                spark.read.schema(schema).parquet(table + ".old").head(1)
-            except AnalysisException:
-                return spark.createDataFrame([], schema)  # genuinely never written
-            raise RuntimeError(
-                f"index table {table} is missing but {table}.old exists — a "
-                f"compaction crashed mid-swap; rename {table}.old back to recover"
-            ) from None
-
-    return _read("tf", _TF_SCHEMA), _read("doclens", _DL_SCHEMA)
+    directories that schema inference cannot read). A table left only at
+    ``<table>.old`` by a crashed compaction swap raises instead of
+    serving an empty index."""
+    return (
+        read_table(spark, os.path.join(path, "tf"), _TF_SCHEMA),
+        read_table(spark, os.path.join(path, "doclens"), _DL_SCHEMA),
+    )
 
 
 def bm25_topk_over_index(

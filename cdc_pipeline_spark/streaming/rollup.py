@@ -9,12 +9,14 @@ grain of exactly this pattern, but its state lives only in Redis
 snapshots; here the partials are a durable, mergeable table.
 
 Exactly-once without a transaction log: each micro-batch writes its
-partial rows under ``batch_id=<n>`` (one hive partition per batch), so
-an at-least-once foreachBatch replay overwrites ITS OWN partition and
-nothing else — idempotence by layout, the same trick as checkpoint
-file sinks. Readers merge partials with a mergeable aggregate (counts
-and DECIMAL sums — fold-order-free), so a half-written replay is at
-worst a torn read of one batch, never a double count after it lands.
+partial rows under ``batch_id=<n>`` through the shared state-table
+protocol (``streaming/state_table.py``: table lock, run-scoped replay
+guard, rename-aside compaction), so an at-least-once foreachBatch
+replay overwrites ITS OWN partition and nothing else. Readers merge
+partials with a mergeable aggregate (counts and DECIMAL sums —
+fold-order-free), so a half-written replay is at worst a torn read of
+one batch, never a double count after it lands. Each family's fold is
+declared once and serves both its reader and its compactor.
 
 Scale: per-batch write volume is |distinct 5-min buckets in the batch|
 rows — bounded by watermark span, independent of table size. Partial
@@ -24,11 +26,12 @@ files accumulate one dir per batch; fold them periodically with
 
 from __future__ import annotations
 
-import contextlib
-import os
+import functools
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from cdc_pipeline_spark.streaming.state_table import compact, read_table, write_batch
 
 __all__ = [
     "RollupTableWriter",
@@ -43,6 +46,28 @@ __all__ = [
 ]
 
 _GRAIN_SECONDS = {"5min": 300, "hour": 3600, "day": 86400}
+_ROLLUP_SCHEMA = "bucket_start long, n_events long, v decimal(28,2), batch_id int"
+_GRAM_SCHEMA = "i int, j int, v decimal(38,0), batch_id int"
+
+
+def _fold_buckets(partials: DataFrame, seconds: int | None = None) -> DataFrame:
+    """Merge time partials per bucket — re-bucketed to ``seconds`` when
+    given (a coarser read grain), else per stored bucket."""
+    bucket = F.col("bucket_start")
+    if seconds is not None:
+        bucket = (F.floor(bucket / seconds) * seconds).cast("long")
+    return partials.groupBy(bucket.alias("bucket_start")).agg(
+        F.sum("n_events").cast("long").alias("n_events"),
+        F.sum("v").cast("decimal(28,2)").alias("v"),
+    )
+
+
+def _fold_bins(partials: DataFrame, group_cols: tuple[str, ...] = ()) -> DataFrame:
+    return partials.groupBy(*group_cols, "bin").agg(F.sum("n").cast("long").alias("n"))
+
+
+def _fold_gram(partials: DataFrame) -> DataFrame:
+    return partials.groupBy("i", "j").agg(F.sum("v").alias("v"))
 
 
 class RollupTableWriter:
@@ -88,183 +113,18 @@ class RollupTableWriter:
                 .cast("decimal(28,2)")
                 .alias("v"),
             )
-            .withColumn("batch_id", F.lit(int(batch_id)))
         )
-        # overwrite THIS batch's partition only → replay-idempotent;
-        # the table lock keeps the write out of a compaction's dir swap
-        with _table_lock(self.path):
-            if _replay_folded(self.path, self.run_id, batch_id):
-                return
-            _write_partials(partials, self.path)
+        write_batch(self.path, batch_id, self.run_id, partials)
 
 
 def read_rollup(spark: SparkSession, path: str, grain: str = "5min") -> DataFrame:
     """Merge the partials up to the requested grain: (bucket_start,
     n_events, sum_value). Counts and decimal sums are mergeable, so the
     result is independent of how many batches contributed to a bucket."""
-    seconds = _GRAIN_SECONDS[grain]
-    partials = spark.read.parquet(path)
-    return (
-        partials.groupBy(
-            (F.floor(F.col("bucket_start") / seconds) * seconds).cast("long").alias("bucket_start")
-        )
-        .agg(
-            F.sum("n_events").cast("long").alias("n_events"),
-            F.sum("v").cast("decimal(28,2)").alias("sum_value"),
-        )
+    partials = read_table(spark, path, _ROLLUP_SCHEMA)
+    return _fold_buckets(partials, _GRAIN_SECONDS[grain]).withColumnRenamed(
+        "v", "sum_value"
     )
-
-
-_COMPACTION_MARKER = "_compaction.json"
-_LOCK_SUFFIX = ".compact.lock"
-_LOCK_STALE_SECONDS = 600.0
-
-
-def _replay_folded(path: str, run_id: str, batch_id: int) -> bool:
-    """foreachBatch is at-least-once: a batch replayed AFTER compaction
-    folded it into ``batch_id=-1`` would re-create its partition and
-    double-count on merge — skip ids the marker says are folded, but
-    only for THIS run's id sequence (batch ids restart at 0 when a
-    checkpoint is recreated). MUST be called while holding the table
-    lock: checking the marker before acquiring it races a concurrent
-    compaction (the fold lands and advances the marker between the
-    check and the write — the classic TOCTOU the lock exists to stop).
-    """
-    through, marker_run = _compaction_state(path)
-    return marker_run == run_id and int(batch_id) <= through
-
-
-def _write_partials(partials: DataFrame, path: str) -> None:
-    """Overwrite exactly this batch's ``batch_id=<n>`` partition.
-
-    The dynamic-overwrite mode rides on the WRITER (per-write option),
-    not the session conf: a session-level temp_conf here raced other
-    concurrent foreachBatch writers on the same SparkSession — one
-    writer's restore could downgrade another's in-flight overwrite to
-    static mode, which deletes every existing partition of that table.
-    """
-    (
-        partials.coalesce(1)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(path)
-    )
-
-
-@contextlib.contextmanager
-def _table_lock(path: str, timeout: float = 30.0):
-    """Cross-process mutual exclusion between the per-batch partial
-    writers and compaction, via an O_EXCL sidecar lock file.
-
-    Compaction rename-aside swaps the whole table directory; a partial
-    write landing mid-swap would vanish with the ``.old`` dir. The
-    writers hold this lock for one partition write (fast), compaction
-    for the fold+swap — so "run compaction from the maintenance
-    cadence, not per micro-batch" is now ENFORCED rather than advised:
-    a compaction that overlaps an active writer waits its turn, and two
-    concurrent compactions serialize (the loser folds an already-folded
-    table — a no-op by the marker guard).
-
-    A lock older than ``_LOCK_STALE_SECONDS`` is presumed left by a
-    crash and broken ATOMICALLY (rename-aside — two waiters cannot both
-    claim the same stale lock; the rename loser just re-polls). Holders
-    therefore must finish within the staleness horizon; both writer
-    partition writes and compaction folds are seconds, not minutes. On
-    timeout the caller gets a RuntimeError rather than a silent
-    corruption window. Release checks an owner token so a breaker's
-    fresh lock is never unlinked by the stale holder's cleanup.
-    """
-    import time
-    import uuid
-
-    lock = path.rstrip("/") + _LOCK_SUFFIX
-    parent = os.path.dirname(lock)
-    if parent:
-        # before the table's first write nothing has created the parent
-        # (Spark's writer does it lazily) — the lock must not be the
-        # thing that crashes the first micro-batch
-        os.makedirs(parent, exist_ok=True)
-    token = f"{os.getpid()}:{uuid.uuid4().hex}"
-    deadline = time.time() + timeout
-    while True:
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            os.write(fd, token.encode())
-            os.close(fd)
-            break
-        except FileExistsError:
-            # deadline is checked FIRST so every branch below (stale
-            # break failing persistently, stat races) still terminates
-            # in the promised RuntimeError instead of spinning forever
-            if time.time() > deadline:
-                raise RuntimeError(
-                    f"rollup table {path} is locked by another writer/compaction "
-                    f"({lock}); retry from the maintenance cadence"
-                )
-            try:
-                stale = time.time() - os.path.getmtime(lock) > _LOCK_STALE_SECONDS
-            except OSError:
-                time.sleep(0.05)  # holder released between check and stat
-                continue
-            if stale:
-                # atomic break: exactly one waiter wins the rename; the
-                # loser's rename raises and it simply re-polls
-                try:
-                    os.rename(lock, f"{lock}.broken.{token}")
-                    os.unlink(f"{lock}.broken.{token}")
-                except OSError:
-                    time.sleep(0.05)
-                continue
-            time.sleep(0.1)
-    # heartbeat: refresh the lock mtime while held so a write that
-    # legitimately outlives _LOCK_STALE_SECONDS (stalled executors,
-    # skewed micro-batch) is not declared stale and broken mid-write —
-    # the staleness horizon now only fires on genuinely dead holders
-    import threading
-
-    stop_beat = threading.Event()
-
-    def _beat() -> None:
-        while not stop_beat.wait(_LOCK_STALE_SECONDS / 10):
-            try:
-                os.utime(lock)
-            except OSError:
-                return  # lock gone (broken/released) — stop quietly
-
-    beater = threading.Thread(target=_beat, daemon=True)
-    beater.start()
-    try:
-        yield
-    finally:
-        stop_beat.set()
-        beater.join(timeout=1.0)
-        try:
-            # only release OUR lock: if a breaker replaced it after
-            # declaring us stale, the file now carries their token
-            with open(lock) as fh:
-                if fh.read() == token:
-                    os.unlink(lock)
-        except OSError:
-            pass
-
-
-def _compaction_state(path: str) -> tuple[int, str]:
-    """(highest folded batch_id, run_id it applies to) — (-1, "") when
-    never compacted. Stored in an underscore-prefixed sidecar file,
-    which Spark/Hadoop parquet listings ignore."""
-    import json
-
-    marker = os.path.join(path, _COMPACTION_MARKER)
-    try:
-        with open(marker) as fh:
-            data = json.load(fh)
-        return int(data["compacted_through"]), str(data.get("run_id", ""))
-    except (OSError, ValueError, KeyError, TypeError):
-        # TypeError: valid-JSON-but-not-a-dict marker (truncated or
-        # hand-edited) must degrade to "never compacted" like every
-        # other corruption shape, not crash the streaming query
-        return -1, ""
 
 
 def compact_partials(
@@ -272,65 +132,13 @@ def compact_partials(
 ) -> int:
     """Fold all per-batch partials into one ``batch_id=-1`` partition
     (merging by bucket), dropping the per-batch dirs. Returns the number
-    of partial rows after compaction. Run from the maintenance cadence —
-    readers are correct before and after, this only bounds file count.
-
-    Crash safety: the fold writes to a ``.compact.tmp`` sibling, then the
-    old table is renamed ASIDE before the tmp dir takes its place — a
-    crash at any point leaves a complete table at either ``path`` or
-    ``path.old`` (never neither, which a naive rmtree-then-rename risks).
-    Replay safety: the highest folded batch_id is recorded in a marker
-    the writer consults, so an at-least-once foreachBatch replay of an
-    already-folded batch cannot re-create its partition and double-count.
-    Concurrent readers mid-swap can transiently error on the rename (a
-    lakehouse table format turns this into an atomic metadata commit);
-    run it from the maintenance cadence, not per micro-batch."""
-    with _table_lock(path, timeout=lock_timeout):
-        partials = spark.read.parquet(path)
-        folded = (
-            partials.groupBy("bucket_start")
-            .agg(
-                F.sum("n_events").alias("n_events"),
-                F.sum("v").cast("decimal(28,2)").alias("v"),
-            )
-            .withColumn("batch_id", F.lit(-1))
-        )
-        return _swap_compacted(spark, path, partials, folded, run_id)
-
-
-def _swap_compacted(
-    spark: SparkSession, path: str, partials: DataFrame, folded: DataFrame, run_id: str
-) -> int:
-    """Shared compaction tail: write the fold to a tmp sibling, record
-    the replay-guard marker (highest folded batch_id, run-scoped), then
-    rename-aside swap. See compact_partials' docstring for the crash
-    and replay analysis."""
-    import json
-    import shutil
-
-    high = partials.agg(F.max("batch_id")).collect()[0][0]
-    high = int(high) if high is not None else -1
-    tmp = path.rstrip("/") + ".compact.tmp"
-    folded.coalesce(1).write.mode("overwrite").partitionBy("batch_id").parquet(tmp)
-    n = spark.read.parquet(tmp).count()
-    prev_through, prev_run = _compaction_state(path)
-    with open(os.path.join(tmp, _COMPACTION_MARKER), "w") as fh:
-        json.dump(
-            {
-                # the guard window only carries over within the same run's
-                # id sequence; a new run starts its own watermark
-                "compacted_through": max(high, prev_through) if prev_run == run_id else high,
-                "run_id": run_id,
-            },
-            fh,
-        )
-    old = path.rstrip("/") + ".old"
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    return n
+    of partial rows after compaction (0 for a never-written table). Run
+    from the maintenance cadence — readers are correct before and after,
+    this only bounds file count. Crash and replay safety are the
+    ``state_table.compact`` contract: rename-aside swap plus the
+    run-scoped marker the writer's replay guard consults (a lakehouse
+    table format turns the swap into an atomic metadata commit)."""
+    return compact(spark, [(path, _fold_buckets, _ROLLUP_SCHEMA)], run_id, lock_timeout)[0]
 
 
 class HistogramRollupWriter:
@@ -380,14 +188,8 @@ class HistogramRollupWriter:
                 ).alias("bin"),
             )
             .agg(F.count(F.lit(1)).alias("n"))
-            .withColumn("batch_id", F.lit(int(batch_id)))
         )
-        # same table lock as RollupTableWriter: a partial landing inside
-        # compaction's rename-aside swap would vanish with the .old dir
-        with _table_lock(self.path):
-            if _replay_folded(self.path, self.run_id, batch_id):
-                return
-            _write_partials(partials, self.path)
+        write_batch(self.path, batch_id, self.run_id, partials)
 
 
 def read_histogram_rollup(
@@ -395,11 +197,10 @@ def read_histogram_rollup(
 ) -> DataFrame:
     """Merge histogram partials to (group_cols..., bin, n) — exact
     regardless of batch layout (integer sums). Feed to
-    ``percentiles_from_bin_counts`` for serving."""
-    partials = spark.read.parquet(path)
-    return partials.groupBy(*group_cols, "bin").agg(
-        F.sum("n").cast("long").alias("n")
-    )
+    ``percentiles_from_bin_counts`` for serving. The group columns'
+    types come from the writer's input, so the read infers the schema
+    and a never-written table raises Spark's AnalysisException."""
+    return _fold_bins(read_table(spark, path), tuple(group_cols))
 
 
 def compact_histogram_partials(
@@ -414,14 +215,8 @@ def compact_histogram_partials(
     crash-safe rename-aside swap as :func:`compact_partials` — so an
     at-least-once replay of an already-folded batch id is skipped by
     the writer's guard instead of double-counting."""
-    with _table_lock(path, timeout=lock_timeout):
-        partials = spark.read.parquet(path)
-        folded = (
-            partials.groupBy(*group_cols, "bin")
-            .agg(F.sum("n").cast("long").alias("n"))
-            .withColumn("batch_id", F.lit(-1))
-        )
-        return _swap_compacted(spark, path, partials, folded, run_id)
+    fold = functools.partial(_fold_bins, group_cols=tuple(group_cols))
+    return compact(spark, [(path, fold, None)], run_id, lock_timeout)[0]
 
 
 class GramRollupWriter:
@@ -466,16 +261,10 @@ class GramRollupWriter:
                 | (F.abs(x.cast("double")) == F.lit(float("inf"))),
             )
         )
-        partials = (
+        partials = _fold_gram(
             gram_partial_rows(finite, vec_col=self.vec_col, scale=self.scale)
-            .groupBy("i", "j")
-            .agg(F.sum("v").alias("v"))
-            .withColumn("batch_id", F.lit(int(batch_id)))
         )
-        with _table_lock(self.path):
-            if _replay_folded(self.path, self.run_id, batch_id):
-                return
-            _write_partials(partials, self.path)
+        write_batch(self.path, batch_id, self.run_id, partials)
 
 
 def read_gram_rollup(spark: SparkSession, path: str) -> DataFrame:
@@ -485,12 +274,7 @@ def read_gram_rollup(spark: SparkSession, path: str) -> DataFrame:
     over the full history (golden-tested)."""
     from cdc_pipeline_spark.operators.linalg import assemble_centered_gram
 
-    sums = (
-        spark.read.parquet(path)
-        .groupBy("i", "j")
-        .agg(F.sum("v").alias("v"))
-    )
-    return assemble_centered_gram(sums)
+    return assemble_centered_gram(_fold_gram(read_table(spark, path, _GRAM_SCHEMA)))
 
 
 def compact_gram_partials(
@@ -502,11 +286,4 @@ def compact_gram_partials(
     """Fold Gram per-batch partials into one ``batch_id=-1`` partition
     (exact decimal merge), with the same replay marker and crash-safe
     rename-aside swap as the other compactors."""
-    with _table_lock(path, timeout=lock_timeout):
-        partials = spark.read.parquet(path)
-        folded = (
-            partials.groupBy("i", "j")
-            .agg(F.sum("v").alias("v"))
-            .withColumn("batch_id", F.lit(-1))
-        )
-        return _swap_compacted(spark, path, partials, folded, run_id)
+    return compact(spark, [(path, _fold_gram, _GRAM_SCHEMA)], run_id, lock_timeout)[0]

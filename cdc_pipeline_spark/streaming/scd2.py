@@ -35,8 +35,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cdc_pipeline_spark.session import temp_conf
-
 from cdc_pipeline_spark.operators.cdc import scd2_history
 
 __all__ = ["Scd2TableWriter", "read_scd2_table", "expire_history"]
@@ -45,6 +43,21 @@ __all__ = ["Scd2TableWriter", "read_scd2_table", "expire_history"]
 def _with_bucket(df: DataFrame, key_cols: list[str], n_buckets: int) -> DataFrame:
     return df.withColumn(
         "__kb", F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(n_buckets))
+    )
+
+
+def _overwrite_buckets(rows: DataFrame, path: str) -> None:
+    """Replace exactly the ``__kb`` buckets present in ``rows``. The
+    dynamic mode is a per-write option, never a session-conf flip: a
+    flip and restore races concurrent foreachBatch writers on the same
+    session, and a writer downgraded to static mode deletes every
+    partition of its table."""
+    (
+        rows.repartition("__kb")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("__kb")
+        .parquet(path)
     )
 
 
@@ -153,13 +166,7 @@ class Scd2TableWriter:
                 )
             )
             rebuilt = rebuilt.unionByName(untouched_hist)
-        with temp_conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
-            (
-                rebuilt.repartition("__kb")
-                .write.mode("overwrite")
-                .partitionBy("__kb")
-                .parquet(self.path)
-            )
+        _overwrite_buckets(rebuilt, self.path)
 
 
 def expire_history(
@@ -194,9 +201,8 @@ def expire_history(
     # bucket whose rows all expired writes nothing and would survive —
     # drop those directories explicitly
     kept_buckets = {r["__kb"] for r in kept.select("__kb").distinct().collect()}
-    with temp_conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
-        if kept_buckets:
-            kept.repartition("__kb").write.mode("overwrite").partitionBy("__kb").parquet(path)
+    if kept_buckets:
+        _overwrite_buckets(kept, path)
     import shutil
 
     for b in set(buckets) - kept_buckets:

@@ -288,7 +288,6 @@ def capped_list_writer(
     max_len: int,
     order_cols: list[str],
     channel: str | None = None,
-    newest_first: bool = False,
     dedupe_key: str | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """K4 pattern: push this batch's newest rows onto a ring buffer
@@ -334,9 +333,7 @@ def capped_list_writer(
             )[:max_len]
             kv.replace_list(key, ordered, channel=channel)
             return
-        if not newest_first:
-            rows = list(reversed(rows))
-        for row in rows:
+        for row in reversed(rows):
             kv.push_to_list(key, row.asDict(), max_len=max_len, channel=channel)
 
     return write

@@ -49,7 +49,7 @@ ALERT_STATE_SCHEMA = StructType(
 # STATE SCHEMA HISTORY: last_window was ADDED after the first release of
 # this schema. Stateful state schemas cannot evolve in place — a
 # checkpoint written with the 2-field schema replayed against the 3-field
-# declaration yields short state tuples, so both processors below unpack
+# declaration yields short state tuples, so the processor below unpacks
 # defensively (missing last_window defaults to 0, which only risks
 # double-counting one window's revisions right at the upgrade boundary).
 # For a clean cut, recreate the alert checkpoint on upgrade.
@@ -144,142 +144,4 @@ def consecutive_breach_alerts(
         stateStructType=ALERT_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Spark 4 transformWithStateInPandas variant — the successor stateful API
-# (explicit state variables + timers, RocksDB-backed). Same state machine
-# as consecutive_breach_alerts; kept alongside it because the older
-# applyInPandasWithState runs on any state store provider while this one
-# requires RocksDB (set by breach_alerts_tws on the session).
-# ---------------------------------------------------------------------------
-
-try:  # pragma: no cover - import surface differs across 4.x minors
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    _HAS_TWS = True
-except ImportError:  # pragma: no cover
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-    _HAS_TWS = False
-
-
-def tws_available() -> bool:
-    """True when transformWithStateInPandas can actually EXECUTE: the API
-    exists AND google.protobuf is importable (the TWS driver worker
-    speaks a protobuf protocol to the JVM; without it the streaming
-    runner crashes with STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE
-    at query start — plan construction alone does not need protobuf)."""
-    if not _HAS_TWS:
-        return False
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-class BreachProcessor(StatefulProcessor):
-    """Normal→Pending→Firing over per-rule status rows (same semantics as
-    ``consecutive_breach_alerts``) expressed as a StatefulProcessor: the
-    (count, status) pair lives in a named ValueState; rows are folded in
-    time order within each trigger."""
-
-    def __init__(self, n_breaches: int = 3, status_col: str = "status", time_col: str = "window_end"):
-        self._n = n_breaches
-        self._status_col = status_col
-        self._time_col = time_col
-
-    def init(self, handle: "StatefulProcessorHandle") -> None:
-        self._state = handle.getValueState("breach", ALERT_STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        (rule_id,) = key
-        if self._state.exists():
-            count, status, last_window = _unpack_alert_state(self._state.get())
-        else:
-            count, status, last_window = 0, "normal", 0
-        last_epoch = 0
-        chunks = list(rows)
-        if chunks:
-            count, status, last_window, last_epoch = _fold_breaches(
-                pd.concat(chunks, ignore_index=True),
-                self._status_col, self._time_col, count, status, last_window, self._n,
-            )
-        self._state.update((count, status, last_window))
-        yield pd.DataFrame(
-            {
-                "rule_id": [rule_id],
-                "consecutive_breaches": [count],
-                "status": [status],
-                "last_observed_epoch": [last_epoch],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def breach_alerts_tws(
-    evaluated: DataFrame,
-    n_breaches: int = 3,
-    rule_col: str = "rule_id",
-    status_col: str = "status",
-    time_col: str = "window_end",
-) -> DataFrame:
-    """transformWithStateInPandas wiring for BreachProcessor.
-
-    **EXPERIMENTAL — not runtime-verified in this build.** The
-    production breach operator is :func:`consecutive_breach_alerts`
-    (``applyInPandasWithState``), which executes in the test suite
-    including restart/golden coverage; prefer it unless you
-    specifically need TWS features (named state variables, timers,
-    RocksDB-only deployment). This wiring shares the exact state
-    machine (``_fold_breaches``) and is plan-build tested, but query
-    EXECUTION additionally needs ``google.protobuf`` on the driver
-    (the TWS Python runner speaks protobuf to the JVM; without it the
-    stream crashes with STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE
-    at start) — this container has no protobuf, so the execution test
-    is environment-skipped, not passed. Probe ``tws_available()``
-    before starting the stream.
-
-    Requires the RocksDB state store provider; this sets it on the
-    owning session (a per-session conf — existing checkpoints made
-    with the HDFS-backed provider are not readable through RocksDB, so
-    use fresh checkpoint dirs when switching APIs)."""
-    if not _HAS_TWS:  # pragma: no cover
-        raise NotImplementedError("transformWithStateInPandas requires pyspark >= 4.0")
-    spark = evaluated.sparkSession
-    rocksdb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    hdfs_default = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-    current = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    if current not in (None, "", rocksdb, hdfs_default):
-        # the provider conf is SESSION-wide: silently flipping it would
-        # break restarts of OTHER checkpointed queries in this session
-        # (their HDFS-provider state is unreadable through RocksDB).
-        # Refuse loudly; run TWS queries from a dedicated session.
-        raise RuntimeError(
-            f"session state-store provider is pinned to {current}; "
-            "transformWithStateInPandas needs RocksDB — use a separate "
-            "SparkSession (or clear the conf) rather than flipping it "
-            "under existing checkpoints"
-        )
-    if current != rocksdb:
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "setting session-wide state-store provider to RocksDB for "
-            "transformWithStateInPandas; other stateful queries started "
-            "from this session will use it too"
-        )
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", rocksdb)
-    return evaluated.groupBy(rule_col).transformWithStateInPandas(
-        statefulProcessor=BreachProcessor(n_breaches, status_col, time_col),
-        outputStructType=ALERT_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
     )

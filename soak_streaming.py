@@ -374,17 +374,17 @@ def main() -> None:
     # most ONE batch per index (the last started) can be partial. A
     # batch is complete iff its LAST-written table has the batch
     # partition — or the index's own fold marker says it was already
-    # folded (the same `_replay_folded` source of truth the writers
+    # folded (the same `replay_folded` source of truth the writers
     # consult). Partial leftovers are pruned exactly as a replay would
     # overwrite them, and the harness membership table drops the batch.
     import shutil as _shutil
 
-    from cdc_pipeline_spark.streaming.rollup import _replay_folded
+    from cdc_pipeline_spark.streaming.state_table import replay_folded
 
     def _batch_complete(table_of_last_write: str, batch_id: int) -> bool:
         return os.path.isdir(
             os.path.join(table_of_last_write, f"batch_id={batch_id}")
-        ) or _replay_folded(table_of_last_write, run_id, batch_id)
+        ) or replay_folded(table_of_last_write, run_id, batch_id)
 
     def _listed_batches(table: str) -> set[int]:
         try:

@@ -434,76 +434,6 @@ def test_stream_stream_join_with_watermarks(spark, stream_dir, checkpoint):
     assert all(r["amount"] == 9.99 for r in seen)
 
 
-def test_breach_state_machine_transform_with_state(spark, stream_dir, checkpoint):
-    """Same Normal→Pending→Firing sequence through the Spark 4
-    transformWithStateInPandas API (RocksDB state store)."""
-    from cdc_pipeline_spark.streaming.stateful import breach_alerts_tws, tws_available
-
-    schema = StructType(
-        [
-            StructField("rule_id", StringType()),
-            StructField("status", StringType()),
-            StructField("window_end", LongType()),
-        ]
-    )
-    batches = [
-        [("cpu", "firing", 10), ("cpu", "firing", 20)],
-        [("cpu", "firing", 30)],
-        [("cpu", "ok", 40), ("cpu", "firing", 50)],
-    ]
-    os.makedirs(stream_dir, exist_ok=True)
-    for i, rows in enumerate(batches):
-        df = spark.createDataFrame(rows, schema).coalesce(1)
-        part = os.path.join(stream_dir, f"b{i}")
-        df.write.mode("overwrite").parquet(part)
-        data_file = [f for f in os.listdir(part) if f.endswith(".parquet")][0]
-        os.rename(os.path.join(part, data_file), os.path.join(stream_dir, f"{i:04d}.parquet"))
-        now = time.time() + i
-        os.utime(os.path.join(stream_dir, f"{i:04d}.parquet"), (now, now))
-
-    prior_provider = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    source = stream_parquet(spark, stream_dir, schema, max_files_per_trigger=1)
-    out = breach_alerts_tws(source, n_breaches=3)
-    # Plan wiring is verified unconditionally; execution needs protobuf.
-    assert out.isStreaming
-    assert [f.name for f in out.schema.fields] == [
-        "rule_id",
-        "consecutive_breaches",
-        "status",
-        "last_observed_epoch",
-    ]
-    if not tws_available():
-        if prior_provider:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prior_provider)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        pytest.skip("TWS execution needs google.protobuf (not in container); plan checked")
-    seen = []
-
-    def capture(batch, _):
-        seen.extend(r.asDict() for r in batch.collect())
-
-    try:
-        q = (
-            out.writeStream.outputMode("update")
-            .option("checkpointLocation", checkpoint)
-            .foreachBatch(capture)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-    finally:
-        if prior_provider:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prior_provider)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-    per_batch = {(r["consecutive_breaches"], r["status"]) for r in seen}
-    assert (2, "pending") in per_batch
-    assert (3, "firing") in per_batch
-    assert (1, "pending") in per_batch
-
-
 def test_streaming_session_window_append(spark, stream_dir, checkpoint):
     """Session windows in streaming: watermarked gap-sessions close and
     emit (append mode) once the watermark passes their end; still-open
@@ -828,6 +758,39 @@ def test_scd2_writer_replay_is_idempotent(spark, tmp_path):
     writer(b1, 1)  # replay the same micro-batch
     replayed = sorted(tuple(r) for r in read_scd2_table(spark, table_path).collect())
     assert replayed == snapshot
+
+
+def test_scd2_writes_never_flip_session_overwrite_mode(spark, tmp_path, monkeypatch):
+    """The SCD2 writer and retention pass overwrite touched buckets with
+    a per-write dynamic option: flipping the session-wide
+    partitionOverwriteMode races other foreachBatch writers on the same
+    session, and a writer whose write lands in static mode deletes every
+    other bucket of its table."""
+    import datetime as dt
+
+    from pyspark.sql.conf import RuntimeConfig
+
+    from cdc_pipeline_spark.streaming.scd2 import Scd2TableWriter, expire_history, read_scd2_table
+
+    keys = []
+    real_set = RuntimeConfig.set
+    monkeypatch.setattr(
+        RuntimeConfig, "set", lambda self, key, value: keys.append(key) or real_set(self, key, value)
+    )
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [
+        (1, "new", t0),
+        (1, "paid", t0 + dt.timedelta(days=10)),
+        (1, "shipped", t0 + dt.timedelta(days=40)),
+        (2, "new", t0),
+    ]
+    path = str(tmp_path / "scd2_conf")
+    writer = Scd2TableWriter(path, key_cols=["id"], version_col="ts", attr_cols=["status"], n_buckets=4)
+    writer(spark.createDataFrame(rows, "id long, status string, ts timestamp"), 0)
+    assert expire_history(spark, path, older_than=t0 + dt.timedelta(days=30)) == 1
+    assert "spark.sql.sources.partitionOverwriteMode" not in keys
+    # dynamic semantics held: the untouched key's bucket survived
+    assert read_scd2_table(spark, path).count() == 3
 
 
 def test_progress_listener_writes_kv_metrics(spark, stream_dir, checkpoint):
@@ -1324,7 +1287,7 @@ def test_compaction_lock_serializes_with_writers(spark, tmp_path):
     """The table lock enforces 'compaction from the maintenance cadence':
     a held lock makes compaction fail loudly instead of swapping dirs
     under an active writer; a stale (crash-leftover) lock is broken."""
-    from cdc_pipeline_spark.streaming import rollup
+    from cdc_pipeline_spark.streaming import state_table
     from cdc_pipeline_spark.streaming.rollup import (
         RollupTableWriter,
         compact_partials,
@@ -1336,7 +1299,7 @@ def test_compaction_lock_serializes_with_writers(spark, tmp_path):
     writer(spark.createDataFrame(_rows([(0, "view", 1.0), (70, "view", 2.0)]), EVENT_SCHEMA), 0)
     before = {r.bucket_start: r.n_events for r in read_rollup(spark, table).collect()}
 
-    lock = table + rollup._LOCK_SUFFIX
+    lock = table + state_table.LOCK_SUFFIX
     with open(lock, "w") as fh:
         fh.write("held\n")
     with pytest.raises(RuntimeError, match="locked"):
@@ -1346,7 +1309,7 @@ def test_compaction_lock_serializes_with_writers(spark, tmp_path):
 
     # stale lock (older than the staleness horizon) is broken and
     # compaction proceeds; the lock is released afterwards
-    old = time.time() - rollup._LOCK_STALE_SECONDS - 5
+    old = time.time() - state_table.LOCK_STALE_SECONDS - 5
     os.utime(lock, (old, old))
     compact_partials(spark, table, lock_timeout=5)
     assert not os.path.exists(lock)
@@ -1440,15 +1403,15 @@ def test_compaction_marker_tolerates_non_dict_json(tmp_path):
     TypeError escaped the except and killed the streaming query)."""
     import os
 
-    from cdc_pipeline_spark.streaming.rollup import (
-        _COMPACTION_MARKER,
-        _compaction_state,
+    from cdc_pipeline_spark.streaming.state_table import (
+        COMPACTION_MARKER,
+        compaction_state,
     )
 
     table = tmp_path / "marker_tbl"
     table.mkdir()
-    (table / _COMPACTION_MARKER).write_text('["not", "a", "dict"]')
-    assert _compaction_state(str(table)) == (-1, "")
+    (table / COMPACTION_MARKER).write_text('["not", "a", "dict"]')
+    assert compaction_state(str(table)) == (-1, "")
 
 
 def test_gram_rollup_drops_non_finite_rows(spark, tmp_path):
@@ -1840,40 +1803,132 @@ def test_neardup_hot_bucket_cap_counts_docs_not_rows(spark, tmp_path):
     assert (11, 7) in compacted
 
 
-def test_bm25_read_index_detects_crashed_compaction_swap(spark, tmp_path):
-    """A compaction that crashed between its two renames leaves the
-    table only at <table>.old; read_index must raise (recoverable by
-    renaming back), NEVER return an empty index — an empty 200 from the
-    serving route would be indistinguishable from a real empty corpus."""
-    import os
+def _state_table_family(spark, family: str):
+    """(write(path, i), compact(path), state(path), swapped table under
+    path, state before/after batch 3) for one state-table family. Every
+    batch i adds rows; the near-dup batches 1 and 3 near-duplicate
+    batch 0, so batch 3 only matches if the probe reads history."""
+    if family == "rollup":
+        from cdc_pipeline_spark.streaming.rollup import (
+            RollupTableWriter,
+            compact_partials,
+            read_rollup,
+        )
 
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
+        def write(path, i):
+            rows = _rows([(60 * i, "view", 1.0), (60 * i + 1, "view", 2.0)])
+            RollupTableWriter(path, time_col="created_at", value_col="value")(
+                spark.createDataFrame(rows, EVENT_SCHEMA), i
+            )
 
+        def state(path):
+            return sum(r.n_events for r in read_rollup(spark, path).collect())
+
+        return write, lambda path: compact_partials(spark, path), state, "", (6, 8)
+    if family == "frontier":
+        from cdc_pipeline_spark.sources.warc import build_warc, warc_records
+        from cdc_pipeline_spark.streaming.frontier_index import (
+            FrontierIndexWriter,
+            compact_frontier_index,
+            read_frontier,
+        )
+
+        payloads = _frontier_batches() + [
+            build_warc([_frontier_capture("https://c.com/q", b'<a href="/n">n</a>')])
+        ]
+
+        def write(path, i):
+            records = spark.createDataFrame(
+                [(f"b{i}.warc", bytearray(payloads[i]))], "path string, content binary"
+            )
+            FrontierIndexWriter(path)(warc_records(records), i)
+
+        def state(path):
+            return read_frontier(spark, path).count()
+
+        def compact(path):
+            return compact_frontier_index(spark, path)
+
+        return write, compact, state, "partials", (2, 3)
+    if family == "neardup":
+        from cdc_pipeline_spark.streaming.neardup_index import (
+            NearDupIndexWriter,
+            compact_neardup_index,
+            read_matches,
+        )
+
+        base = "the quick brown fox jumps over the lazy dog again and again"
+        texts = [base, base, "unrelated text about spark engines", base + " tail"]
+
+        def write(path, i):
+            NearDupIndexWriter(path, threshold=0.4)(
+                spark.createDataFrame([(i + 1, texts[i])], "doc_id long, text string"), i
+            )
+
+        def state(path):
+            return read_matches(spark, path).count()
+
+        def compact(path):
+            return compact_neardup_index(spark, path)
+
+        return write, compact, state, "postings", (1, 3)
     from cdc_pipeline_spark.streaming.retrieval_index import (
         Bm25IndexWriter,
+        compact_index,
         read_index,
     )
 
-    schema = StructType(
-        [StructField("doc_id", LongType()), StructField("text", StringType())]
+    def write(path, i):
+        Bm25IndexWriter(path)(
+            spark.createDataFrame([(i + 1, f"apple w{i}")], "doc_id long, text string"), i
+        )
+
+    def state(path):
+        tf, dls = read_index(spark, path)
+        assert tf.count() == 2 * dls.count()
+        return tf.count()
+
+    return write, lambda path: compact_index(spark, path), state, "tf", (6, 8)
+
+
+@pytest.mark.parametrize("family", ["rollup", "frontier", "neardup", "bm25"])
+def test_crashed_compaction_swap_is_refused(spark, tmp_path, family):
+    """A compaction that crashed between its two renames leaves the
+    table only at <table>.old. Every write, compaction and read must
+    refuse that state with a RuntimeError naming the .old directory:
+    a write would start a fresh table that the next compaction's swap
+    replaces — deleting .old and the history in it — and a read would
+    serve an empty table (an empty 200 from a serving route looks like a
+    real empty corpus). Renaming .old back recovers every row."""
+    write, compact, state, sub, (n_before, n_after) = _state_table_family(spark, family)
+    path = str(tmp_path / family)
+    table = os.path.join(path, sub).rstrip("/")
+    for i in range(3):
+        write(path, i)
+    compact(path)
+    assert state(path) == n_before
+
+    os.rename(table, table + ".old")
+    refused = pytest.raises(
+        RuntimeError, match=r"compaction crashed mid-swap; rename .*\.old back"
     )
-    path = str(tmp_path / "bm25crash")
-    Bm25IndexWriter(path)(spark.createDataFrame([(1, "apple banana")], schema), 0)
+    if family != "neardup":  # its reader is the probe, inside the write
+        with refused:
+            state(path)
+    with refused:
+        write(path, 3)
+    with refused:
+        compact(path)
+    assert os.path.isdir(table + ".old") and not os.path.exists(table)
 
-    tf, dls = read_index(spark, path)  # healthy read first
-    assert tf.count() == 2 and dls.count() == 1
+    os.rename(table + ".old", table)
+    assert state(path) == n_before
+    write(path, 3)
+    compact(path)
+    assert state(path) == n_after
 
-    os.rename(os.path.join(path, "tf"), os.path.join(path, "tf") + ".old")
-    with pytest.raises(RuntimeError, match="compaction crashed mid-swap"):
-        read_index(spark, path)
-
-    os.rename(os.path.join(path, "tf") + ".old", os.path.join(path, "tf"))
-    tf, _ = read_index(spark, path)  # recovery restores reads
-    assert tf.count() == 2
-
-    # a never-written index still reads as empty typed frames
-    tf0, dls0 = read_index(spark, str(tmp_path / "nothing"))
-    assert tf0.count() == 0 and dls0.count() == 0
+    # a never-written table still reads as empty
+    assert state(str(tmp_path / "nothing")) == 0
 
 
 def _phash_png(light_positions):
