@@ -72,19 +72,21 @@ def _warm_python_workers(spark, n_workers: int) -> None:
     """Spawn the Python/Arrow worker pool BEFORE timing anything.
 
     A fresh JVM has no Python workers; the first mapInPandas/mapInArrow
-    query pays the daemon start and one worker fork per core. On
-    local[4] (4-core VM) this warm-up takes 5.0-6.1 s wall cold against
-    0.55-0.65 s warm, with either daemon. The factory's preloaded daemon
-    (``cdc_pipeline_spark.worker_daemon``) moves the pandas/pyarrow
-    import out of the workers: per-worker CPU 0.72-1.01 s with the
-    stock ``pyspark.daemon``, 0.36-0.49 s with it; daemon CPU
-    0.9-1.35 s → 1.6-1.75 s; daemon plus workers 4.2-5.1 s → 3.45-3.5 s
-    (three cold pools each, alternating). Without this warm-up the cost
-    lands on whichever ARROW query happens to run first — which is how
-    that query "drifted" 1.50 → 2.69 s across rounds as registry
-    reordering moved it around the suite, and why isolation retries of
-    Arrow queries read systematically high. One row per core guarantees
-    every worker in the pool is forked."""
+    query pays the daemon start and one worker fork per core. The
+    factory's daemon (``cdc_pipeline_spark.worker_daemon``) moves the
+    pandas/pyarrow import out of the workers and imports PySpark from
+    its installed, bytecode-cached copy rather than Spark's zip. On
+    local[4] (4-core VM, three fresh pools each, alternating) this
+    warm-up takes 4.7-5.8 s wall cold and 0.56-0.60 s warm with the
+    stock ``pyspark.daemon``, 3.4-4.5 s and 0.32-0.42 s with the
+    factory's; per-worker CPU 0.70-0.98 s → 0.17-0.22 s, daemon CPU
+    0.93-1.44 s → 0.51-0.74 s, daemon plus workers 4.2-5.0 s →
+    1.3-1.55 s. Without this warm-up the cost lands on whichever ARROW
+    query happens to run first — which is how that query "drifted"
+    1.50 → 2.69 s across rounds as registry reordering moved it around
+    the suite, and why isolation retries of Arrow queries read
+    systematically high. One row per core guarantees every worker in
+    the pool is forked."""
     df = spark.range(n_workers, numPartitions=n_workers)
     df.mapInPandas(lambda batches: batches, df.schema).count()
 

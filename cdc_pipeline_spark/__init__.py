@@ -22,5 +22,3 @@ built-ins genuinely cannot express the semantics.
 """
 
 __version__ = "0.1.0"
-
-from cdc_pipeline_spark.session import create_spark_session  # noqa: F401

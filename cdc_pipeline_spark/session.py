@@ -11,7 +11,11 @@ Factory sessions fork their Python workers from
 ``pyspark.daemon``: it imports pandas, pyarrow and PySpark's Arrow
 serializers once and freezes that heap before forking, so each worker of
 a new SparkContext starts with the Arrow stack already loaded instead of
-importing it on its first ``mapInPandas``/``applyInPandas`` task. The
+importing it on its first ``mapInPandas``/``applyInPandas`` task. It
+also imports PySpark and py4j from their installed, bytecode-cached
+directories when those are the same version as the ``$SPARK_HOME`` zips
+Spark puts first on the workers' path, which ``zipimport`` would compile
+from source in every new daemon. The
 package's parent directory is prepended to the executors' ``PYTHONPATH``
 so the daemon module resolves whatever the driver's working directory is.
 Sessions built elsewhere (e.g. a bare ``SparkSession.builder``) keep the
