@@ -14,11 +14,12 @@ that tail, and rounds 9-10 recorded "parsed": null when the full
 per-query line alone overflowed it. The complete map is always in
 BENCH_LOCAL_r{N}.json.
 
-Each query is forced with ``agg(sum(xxhash64(struct(*))))`` — a one-row
-collect that still evaluates EVERY output column. A bare ``count()``
-would let Catalyst prune unreferenced projections, so projection-heavy
-queries (text features, winnowing) would measure the scan instead of
-their expressions.
+Each query is forced with ``perfbench.common.forced``, i.e.
+``agg(bit_xor(xxhash64(struct(*))))`` — a one-row collect that still
+evaluates EVERY output column (bit_xor, not sum: summing 64-bit hashes
+overflows under ANSI mode). A bare ``count()`` would let Catalyst prune
+unreferenced projections, so projection-heavy queries (text features,
+winnowing) would measure the scan instead of their expressions.
 
 ``--check [BASELINE_QUERIES.json|BASELINE.md]`` (default
 BASELINE_QUERIES.json next to this file) additionally compares every
@@ -54,18 +55,9 @@ import os
 import sys
 import time
 
-from pyspark.sql import functions as F
-
 from cdc_pipeline_spark.session import create_spark_session
 from cdc_pipeline_spark import workload
-
-
-def _force(df) -> None:
-    """Evaluate the full result: hash every output column of every row
-    into one aggregated long. Defeats count()-style column pruning while
-    keeping driver-side transfer to a single row. bit_xor, not sum —
-    summing 64-bit hashes overflows under ANSI mode."""
-    df.agg(F.bit_xor(F.xxhash64(F.struct(*df.columns)))).collect()
+from perfbench.common import forced
 
 
 def _warm_python_workers(spark, n_workers: int) -> None:
@@ -105,7 +97,7 @@ def _session(app_name: str):
         shuffle_partitions=int(CPUS),
     )
     spark.sparkContext.setLogLevel("ERROR")
-    _force(workload.QUERIES["q1_pricing_summary"](spark, "/root/testdata/sf0.001"))
+    forced(workload.QUERIES["q1_pricing_summary"](spark, "/root/testdata/sf0.001")).collect()
     _warm_python_workers(spark, int(CPUS))
     return spark
 
@@ -114,7 +106,7 @@ def _best_of(spark, name: str, runs: int, sf_dir: str) -> float:
     best = None
     for _ in range(runs):
         start = time.perf_counter()
-        _force(workload.QUERIES[name](spark, sf_dir))
+        forced(workload.QUERIES[name](spark, sf_dir)).collect()
         elapsed = time.perf_counter() - start
         best = elapsed if best is None else min(best, elapsed)
     return best

@@ -18,21 +18,9 @@ from __future__ import annotations
 import json
 import queue as _queue
 
-from cdc_pipeline_spark.serving.service import CHANNEL_TO_EVENT, SnapshotService
+from cdc_pipeline_spark.serving.service import CHANNEL_TO_EVENT, CONTRACT, SnapshotService
 
 SSE_KEEPALIVE_SECONDS = 25.0
-
-SNAPSHOT_ROUTES = {
-    "metrics": "metrics",
-    "traffic": "traffic",
-    "activities": "activity",
-    "regions": "regions",
-    "flows": "flows",
-    "alerts": "alert",
-    "platform": "platform",
-    "health": "health",
-    "geo": "geo",
-}
 
 
 def encode_event(event: str, payload) -> str:
@@ -142,16 +130,10 @@ def create_app(
             ]
             return jsonify({"like": vec_id, "k": k, "n_probe": n_probe, "results": rows})
 
-    for route, event in SNAPSHOT_ROUTES.items():
-
-        def make_view(ev: str):
-            def view():
-                return jsonify(service.fetch(ev))
-
-            view.__name__ = f"snapshot_{ev}"
-            return view
-
-        app.add_url_rule(f"/api/snapshots/{route}", view_func=make_view(event))
+    for event, (route, _key, _channel, _cap) in CONTRACT.items():
+        app.add_url_rule(
+            f"/api/snapshots/{route}", f"snapshot_{event}", lambda ev=event: jsonify(service.fetch(ev))
+        )
 
     @app.route("/api/events")
     def events() -> Response:

@@ -2,10 +2,10 @@
 
 Mirrors the reference's RedisService payload contracts
 (``/root/reference/src/api/services/redis_service.py:57-163``; JSON
-shapes ``DESCRIPTION.md:380-626``): each getter reads one kv key
-(hash / JSON string / capped list), applies the documented empty-state
-default, and coerces field types — serving is dumb-read + shape, all
-computation happened in the streaming sinks.
+shapes ``DESCRIPTION.md:380-626``): ``fetch(event)`` reads the panel's
+kv key from ``CONTRACT`` (hash / JSON string / capped list), applies the
+documented empty-state default, and coerces field types — serving is
+dumb-read + shape, all computation happened in the streaming sinks.
 
 Works against any kv backend with ``read_hash`` / ``read_json`` /
 ``read_list`` (InMemoryKV here; a Redis client in production — the
@@ -17,20 +17,27 @@ from __future__ import annotations
 import json
 from typing import Any
 
-# engine kv channels (streaming/jobs.py) → SSE event names — the same
-# mapping role as the reference's CHANNEL_TO_EVENT (api/config.py:18-28),
-# keyed by this engine's channel names.
-CHANNEL_TO_EVENT = {
-    "nexus:kpi": "metrics",
-    "nexus:traffic": "traffic",
-    "nexus:activity": "activity",
-    "nexus:regions": "regions",
-    "nexus:flows": "flows",
-    "nexus:alerts": "alert",
-    "nexus:platform": "platform",
-    "nexus:health": "health",
-    "nexus:geo": "geo",
+# The serving contract, one row per dashboard panel: event name →
+# (REST route under /api/snapshots/, kv key, pub/sub channel, list cap).
+# The streaming jobs write through it (streaming/jobs.py); REST, SSE and
+# WS read through it, and its order is the WS snapshot-on-connect order.
+# The cap is a ring-buffer panel's length (None for hash and JSON
+# panels); the alert panel keeps ``<key>:rules`` and ``<key>:summary``.
+CONTRACT = {
+    "metrics": ("metrics", "nexus:kpi:current", "nexus:kpi", None),
+    "traffic": ("traffic", "nexus:traffic:timeseries", "nexus:traffic", 21),
+    "activity": ("activities", "nexus:activity:feed", "nexus:activity", 15),
+    "regions": ("regions", "nexus:regions:current", "nexus:regions", None),
+    "flows": ("flows", "nexus:flows:current", "nexus:flows", None),
+    "alert": ("alerts", "nexus:alert", "nexus:alerts", None),
+    "platform": ("platform", "nexus:platform:breakdown", "nexus:platform", None),
+    "health": ("health", "nexus:health:current", "nexus:health", None),
+    "geo": ("geo", "nexus:geo:header", "nexus:geo", None),
 }
+
+# kv channel → SSE event name: the role of the reference's
+# CHANNEL_TO_EVENT (api/config.py:18-28), keyed by this engine's channels.
+CHANNEL_TO_EVENT = {channel: event for event, (_route, _key, channel, _cap) in CONTRACT.items()}
 
 
 def _num(value: Any, default: int = 0) -> int:
@@ -49,12 +56,17 @@ class SnapshotService:
     def __init__(self, kv: Any) -> None:
         self.kv = kv
 
+    def fetch(self, event: str):
+        """The typed snapshot of one panel, read from its CONTRACT key."""
+        _route, key, _channel, cap = CONTRACT[event]
+        return getattr(self, f"_{event}")(key, cap)
+
     # -- hash snapshots ----------------------------------------------------
-    def get_metrics(self) -> dict[str, Any]:
+    def _metrics(self, key: str, _cap) -> dict[str, Any]:
         """KPI hash → typed payload (redis_service.py:57-85). The engine's
         column names ride through; trends come from the K5 read-back
         fields (`<col>_trend`, streaming/sinks.py::trend_hash_writer)."""
-        payload = self.kv.read_hash("nexus:kpi:current")
+        payload = self.kv.read_hash(key)
         if not payload:
             return {"updatedAt": 0}
         out: dict[str, Any] = {}
@@ -66,16 +78,16 @@ class SnapshotService:
         out["updatedAt"] = _num(payload.get("window_end"))
         return out
 
-    def get_health(self) -> dict[str, Any]:
-        payload = self.kv.read_hash("nexus:health:current")
+    def _health(self, key: str, _cap) -> dict[str, Any]:
+        payload = self.kv.read_hash(key)
         if not payload:
             return {"updatedAt": 0}
         return {k: (_flt(v) if k not in ("window_start", "window_end", "nodes") else _num(v)) for k, v in payload.items()} | {
             "updatedAt": _num(payload.get("window_end"))
         }
 
-    def get_geo(self) -> dict[str, Any]:
-        payload = self.kv.read_hash("nexus:geo:header")
+    def _geo(self, key: str, _cap) -> dict[str, Any]:
+        payload = self.kv.read_hash(key)
         if not payload:
             # same field names/units as populated payloads
             # (windowed_geo_header emits global_load "<n> TB/S")
@@ -88,28 +100,24 @@ class SnapshotService:
         return out
 
     # -- capped lists ------------------------------------------------------
-    def get_traffic(self) -> list[dict[str, Any]]:
+    def _traffic(self, key: str, cap: int) -> list[dict[str, Any]]:
         """Ring buffer newest-first in kv; serve oldest-first (reference
         reverses LRANGE, redis_service.py:87-91)."""
-        items = self.kv.read_list("nexus:traffic:timeseries", 0, 20)
+        items = self.kv.read_list(key, 0, cap - 1)
         return list(reversed([json.loads(i) for i in items]))
 
-    def get_activities(self) -> list[dict[str, Any]]:
-        return [json.loads(i) for i in self.kv.read_list("nexus:activity:feed", 0, 14)]
+    def _activity(self, key: str, cap: int) -> list[dict[str, Any]]:
+        return [json.loads(i) for i in self.kv.read_list(key, 0, cap - 1)]
 
     # -- JSON snapshots ----------------------------------------------------
-    def get_regions(self) -> list[dict[str, Any]]:
-        return self.kv.read_json("nexus:regions:current") or []
+    def _regions(self, key: str, _cap) -> list[dict[str, Any]]:
+        return self.kv.read_json(key) or []
 
-    def get_flows(self) -> list[dict[str, Any]]:
-        return self.kv.read_json("nexus:flows:current") or []
+    _flows = _platform = _regions
 
-    def get_platform(self) -> list[dict[str, Any]]:
-        return self.kv.read_json("nexus:platform:breakdown") or []
-
-    def get_alerts(self) -> dict[str, Any]:
-        rules = self.kv.read_json("nexus:alert:rules") or []
-        summary = self.kv.read_hash("nexus:alert:summary")
+    def _alert(self, key: str, _cap) -> dict[str, Any]:
+        rules = self.kv.read_json(f"{key}:rules") or []
+        summary = self.kv.read_hash(f"{key}:summary")
         shaped = (
             {
                 "criticalCount": _num(summary.get("criticalCount")),
@@ -121,17 +129,3 @@ class SnapshotService:
             else {"criticalCount": 0, "warningCount": 0, "healthyCount": 0, "updatedAt": 0}
         )
         return {"rules": rules, "summary": shaped}
-
-    # -- registry ----------------------------------------------------------
-    def fetch(self, event: str):
-        return {
-            "metrics": self.get_metrics,
-            "traffic": self.get_traffic,
-            "activity": self.get_activities,
-            "regions": self.get_regions,
-            "flows": self.get_flows,
-            "alert": self.get_alerts,
-            "platform": self.get_platform,
-            "health": self.get_health,
-            "geo": self.get_geo,
-        }[event]()

@@ -36,7 +36,7 @@ import struct
 import threading
 from typing import Any
 
-from cdc_pipeline_spark.serving.service import CHANNEL_TO_EVENT, SnapshotService
+from cdc_pipeline_spark.serving.service import CHANNEL_TO_EVENT, CONTRACT, SnapshotService
 
 __all__ = ["WSHub", "serve_ws", "encode_text_frame", "decode_frame", "accept_key"]
 
@@ -236,7 +236,7 @@ class WSHub:
         # one. _Client.send serializes frames under the client's lock.
         with self._lock:
             self._clients.add(client)
-        for event in _EVENT_ORDER:
+        for event in CONTRACT:
             client.send(self._frame(event))
         return client
 
@@ -328,19 +328,6 @@ class _WSRequestHandler(socketserver.BaseRequestHandler):
 class _ThreadingWSServer(socketserver.ThreadingTCPServer):
     allow_reuse_address = True
     daemon_threads = True
-
-
-_EVENT_ORDER = (
-    "metrics",
-    "traffic",
-    "activity",
-    "regions",
-    "flows",
-    "alert",
-    "platform",
-    "health",
-    "geo",
-)
 
 
 def serve_ws(kv: Any, host: str = "127.0.0.1", port: int = 0):

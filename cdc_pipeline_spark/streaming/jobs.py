@@ -12,7 +12,10 @@ reference's placement rule ("Redefining watermark is disallowed",
 kpi_aggregator.py:180, FLOW.md:101-103).
 
 Sources are injected as DataFrames so the same wiring runs against
-Kafka (production), files (tests), or rate sources.
+Kafka (production), files (tests), or rate sources. Each pipeline
+writes the kv key, channel and list cap of its panel in the serving
+contract (``serving.service.CONTRACT``), so writer and reader cannot
+drift apart.
 """
 
 from __future__ import annotations
@@ -23,9 +26,10 @@ from pyspark.sql.streaming import StreamingQuery
 
 from cdc_pipeline_spark.operators import aggregates
 from cdc_pipeline_spark.operators.activity import enrich_activity
+from cdc_pipeline_spark.serving.service import CONTRACT
 from cdc_pipeline_spark.streaming import sinks as sink_lib
 
-DEFAULT_WATERMARK = "10 minutes"
+WATERMARK = "10 minutes"
 
 
 def _start(df: DataFrame, writer, checkpoint: str, mode: str, trigger: dict | None) -> StreamingQuery:
@@ -40,23 +44,17 @@ def start_traffic_pipeline(
     kv,
     checkpoint: str,
     time_col: str = "created_at",
-    duration: str = "10 seconds",
-    key: str = "nexus:traffic:timeseries",
-    channel: str | None = "nexus:traffic",
-    max_len: int = 21,
-    watermark: str = DEFAULT_WATERMARK,
     trigger: dict | None = None,
 ) -> StreamingQuery:
     """A3: tumbling count → capped-list sink (traffic_builder.py:35-55),
     but watermark+update instead of complete mode."""
-    agg = aggregates.tumbling_traffic(
-        source.withWatermark(time_col, watermark), time_col=time_col, duration=duration
-    )
+    _route, key, channel, cap = CONTRACT["traffic"]
+    agg = aggregates.tumbling_traffic(source.withWatermark(time_col, WATERMARK), time_col=time_col)
     # update mode RE-EMITS a window per micro-batch as events accrue:
     # dedupe_key upserts the revised point instead of stacking stale
     # entries for the same window (which also evicted older windows)
     writer = sink_lib.capped_list_writer(
-        kv, key, max_len=max_len, order_cols=["window_end"], channel=channel,
+        kv, key, max_len=cap, order_cols=["window_end"], channel=channel,
         dedupe_key="window_end",
     )
     return _start(agg, writer, checkpoint, "update", trigger)
@@ -67,15 +65,13 @@ def start_kpi_pipeline(
     kv,
     checkpoint: str,
     time_col: str = "event_time",
-    key: str = "nexus:kpi:current",
-    channel: str | None = "nexus:kpi",
-    watermark: str = DEFAULT_WATERMARK,
     trigger: dict | None = None,
-    exact: bool = False,
     trend_period_seconds: int = 3600,
 ) -> StreamingQuery:
     """A1: the caller normalizes + unions the component streams
     (aggregates.fuse_streams); watermark goes here, after the union.
+    Sketch aggregates only (approx distinct users, approx median):
+    streaming rejects the exact distinct count of the batch oracle path.
 
     The published hash carries ``<metric>_trend`` period-over-period
     percentages computed by reading back the previous period's kv
@@ -84,7 +80,8 @@ def start_kpi_pipeline(
     kpi_aggregator.py:28-51,74-95). Set ``trend_period_seconds`` to the
     reference's 3600 for hourly buckets; tests shrink it to get
     multi-period coverage from seconds-apart micro-batches."""
-    agg = aggregates.windowed_kpi(fused.withWatermark(time_col, watermark), time_col=time_col, exact=exact)
+    _route, key, channel, _cap = CONTRACT["metrics"]
+    agg = aggregates.windowed_kpi(fused.withWatermark(time_col, WATERMARK), time_col=time_col)
     trend_cols = [c for c in agg.columns if c not in ("window_start", "window_end")]
     writer = sink_lib.trend_hash_writer(
         kv,
@@ -104,18 +101,25 @@ def start_region_pipeline(
     kv,
     checkpoint: str,
     time_col: str = "event_time",
-    key: str = "nexus:regions:current",
-    channel: str | None = "nexus:regions",
-    watermark: str = DEFAULT_WATERMARK,
     trigger: dict | None = None,
 ) -> StreamingQuery:
     """A2: per-(window, region) snapshot serialized as one JSON array of
     the latest window's regions (region_aggregator.py:32-47)."""
-    agg = aggregates.windowed_region(source.withWatermark(time_col, watermark), time_col=time_col)
+    _route, key, channel, _cap = CONTRACT["regions"]
+    agg = aggregates.windowed_region(source.withWatermark(time_col, WATERMARK), time_col=time_col)
 
     def latest_window_regions(rows: list[dict]):
-        latest = max(r["window_end"] for r in rows)
-        return [r for r in rows if r["window_end"] == latest]
+        # update mode emits only the (window, region) rows this trigger
+        # changed: merge them into the served window's regions, and
+        # leave the snapshot alone when every row is from an older
+        # window (a late-only batch must not roll the panel back)
+        served = kv.read_json(key) or []
+        latest = max(r["window_end"] for r in rows + served)
+        if all(r["window_end"] < latest for r in rows):
+            return None
+        merged = {r["region_name"]: r for r in served if r["window_end"] == latest}
+        merged.update((r["region_name"], r) for r in rows if r["window_end"] == latest)
+        return list(merged.values())
 
     writer = sink_lib.snapshot_json_writer(
         kv, key, shaper=latest_window_regions, channel=channel, order_cols=["window_end"]
@@ -128,16 +132,14 @@ def start_activity_pipeline(
     kv,
     checkpoint: str,
     time_col: str = "created_at",
-    key: str = "nexus:activity:feed",
-    channel: str | None = "nexus:activity",
-    max_len: int = 15,
     trigger: dict | None = None,
     **enrich_kwargs,
 ) -> StreamingQuery:
     """Activity feed: stateless projection → append mode → ring buffer
     (activity_enricher.py:29-61)."""
+    _route, key, channel, cap = CONTRACT["activity"]
     shaped = enrich_activity(source, time_col=time_col, **enrich_kwargs)
-    writer = sink_lib.capped_list_writer(kv, key, max_len=max_len, order_cols=["timestamp", "id"], channel=channel)
+    writer = sink_lib.capped_list_writer(kv, key, max_len=cap, order_cols=["timestamp", "id"], channel=channel)
     return _start(shaped, writer, checkpoint, "append", trigger)
 
 
@@ -146,15 +148,13 @@ def start_health_pipeline(
     kv,
     checkpoint: str,
     time_col: str = "recorded_at",
-    key: str = "nexus:health:current",
-    channel: str | None = "nexus:health",
-    watermark: str = DEFAULT_WATERMARK,
     trigger: dict | None = None,
     **health_kwargs,
 ) -> StreamingQuery:
     """A4: conditional means + node count → latest-window hash snapshot."""
+    _route, key, channel, _cap = CONTRACT["health"]
     agg = aggregates.windowed_health(
-        source.withWatermark(time_col, watermark), time_col=time_col, **health_kwargs
+        source.withWatermark(time_col, WATERMARK), time_col=time_col, **health_kwargs
     )
     writer = sink_lib.latest_row_hash_writer(kv, key, order_cols=["window_end"], channel=channel)
     return _start(agg, writer, checkpoint, "update", trigger)
@@ -165,13 +165,12 @@ def start_platform_pipeline(
     kv,
     checkpoint: str,
     platform_col: str = "platform",
-    key: str = "nexus:platform:breakdown",
-    channel: str | None = "nexus:platform",
     trigger: dict | None = None,
 ) -> StreamingQuery:
     """A5: global running group-count. This one is legitimately
     complete-mode (small, bounded cardinality = #platforms) — matching
     the reference (device_platform.py:50)."""
+    _route, key, channel, _cap = CONTRACT["platform"]
     agg = aggregates.platform_breakdown(source, platform_col=platform_col)
     writer = sink_lib.snapshot_json_writer(kv, key, order_cols=["count"], channel=channel)
     return _start(agg, writer, checkpoint, "complete", trigger)
@@ -182,13 +181,11 @@ def start_geo_pipeline(
     kv,
     checkpoint: str,
     time_col: str = "created_at",
-    key: str = "nexus:geo:header",
-    channel: str | None = "nexus:geo",
-    watermark: str = DEFAULT_WATERMARK,
     trigger: dict | None = None,
 ) -> StreamingQuery:
     """A6: 1m/30s windowed count + formatted load label → hash snapshot."""
-    agg = aggregates.windowed_geo_header(source.withWatermark(time_col, watermark), time_col=time_col)
+    _route, key, channel, _cap = CONTRACT["geo"]
+    agg = aggregates.windowed_geo_header(source.withWatermark(time_col, WATERMARK), time_col=time_col)
     writer = sink_lib.latest_row_hash_writer(kv, key, order_cols=["window_end"], channel=channel)
     return _start(agg, writer, checkpoint, "update", trigger)
 

@@ -31,17 +31,16 @@ DIRECTORY_KEY = "nexus:monitor:streams"
 
 
 class KvProgressListener(StreamingQueryListener):
-    """Writes each query's latest progress to ``{prefix}:{name}`` and
-    registers the query in the ``{prefix}`` directory hash.
+    """Writes each query's latest progress to ``DIRECTORY_KEY:{name}`` and
+    registers the query in the ``DIRECTORY_KEY`` directory hash.
 
     Usage::
 
         spark.streams.addListener(KvProgressListener(kv))
     """
 
-    def __init__(self, kv: Any, prefix: str = DIRECTORY_KEY) -> None:
+    def __init__(self, kv: Any) -> None:
         self.kv = kv
-        self.prefix = prefix
         # names already registered in the directory hash — lets
         # onQueryProgress skip the directory read-modify-rewrite on
         # every micro-batch (it only matters the FIRST time a name is
@@ -52,7 +51,7 @@ class KvProgressListener(StreamingQueryListener):
     def onQueryStarted(self, event) -> None:
         name = event.name or str(event.id)
         self.kv.write_hash(
-            f"{self.prefix}:{name}",
+            f"{DIRECTORY_KEY}:{name}",
             {"status": "started", "id": str(event.id)},
         )
         # register in the directory NOW, not at first progress: a query
@@ -65,10 +64,10 @@ class KvProgressListener(StreamingQueryListener):
         if name in self._registered:
             return
         self._registered.add(name)
-        directory = self.kv.read_hash(self.prefix)
+        directory = self.kv.read_hash(DIRECTORY_KEY)
         if name not in directory:
             directory[name] = "registered"
-            self.kv.write_hash(self.prefix, directory)
+            self.kv.write_hash(DIRECTORY_KEY, directory)
 
     def onQueryProgress(self, event) -> None:
         import math
@@ -93,7 +92,7 @@ class KvProgressListener(StreamingQueryListener):
             "trigger_duration_ms": (p.durationMs or {}).get("triggerExecution", 0),
             "state_rows": state_rows,
         }
-        self.kv.write_hash(f"{self.prefix}:{name}", payload)
+        self.kv.write_hash(f"{DIRECTORY_KEY}:{name}", payload)
         # first-seen-only directory registration (onQueryTerminated
         # iterates the directory KEYS to match ids; the old per-batch
         # read-modify-rewrite of the whole hash doubled driver-side kv
@@ -107,29 +106,29 @@ class KvProgressListener(StreamingQueryListener):
         # terminating query never touches its concurrent siblings' state.
         event_id = str(event.id)
         matched = False
-        for name in self.kv.read_hash(self.prefix):
-            existing = self.kv.read_hash(f"{self.prefix}:{name}")
+        for name in self.kv.read_hash(DIRECTORY_KEY):
+            existing = self.kv.read_hash(f"{DIRECTORY_KEY}:{name}")
             if existing and existing.get("id") == event_id:
                 matched = True
                 existing["status"] = "terminated"
                 if event.exception:
                     existing["exception"] = str(event.exception)
-                self.kv.write_hash(f"{self.prefix}:{name}", existing)
+                self.kv.write_hash(f"{DIRECTORY_KEY}:{name}", existing)
         if not matched:
-            existing = self.kv.read_hash(f"{self.prefix}:{event_id}")
+            existing = self.kv.read_hash(f"{DIRECTORY_KEY}:{event_id}")
             if existing:
                 existing["status"] = "terminated"
                 if event.exception:
                     existing["exception"] = str(event.exception)
-                self.kv.write_hash(f"{self.prefix}:{event_id}", existing)
+                self.kv.write_hash(f"{DIRECTORY_KEY}:{event_id}", existing)
 
     def onQueryIdle(self, event) -> None:  # pragma: no cover - timing-dependent
         pass
 
 
-def read_stream_metrics(kv: Any, prefix: str = DIRECTORY_KEY) -> dict[str, dict[str, str]]:
+def read_stream_metrics(kv: Any) -> dict[str, dict[str, str]]:
     """All registered streams' latest progress hashes, keyed by name —
     the payload behind a ``/api/monitor/streams`` serving route."""
     return {
-        name: kv.read_hash(f"{prefix}:{name}") for name in kv.read_hash(prefix)
+        name: kv.read_hash(f"{DIRECTORY_KEY}:{name}") for name in kv.read_hash(DIRECTORY_KEY)
     }

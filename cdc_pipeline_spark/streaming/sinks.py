@@ -20,6 +20,7 @@ bounded — the heavy lifting stayed distributed.
 
 from __future__ import annotations
 
+import datetime
 import json
 import threading
 import time
@@ -232,24 +233,44 @@ def make_redis_kv(url: str):  # pragma: no cover - requires redis package/server
 # ---------------------------------------------------------------------------
 
 
+def _epoch(value) -> float:
+    """An ordering value as epoch seconds: a number, a datetime, or the
+    kv string of either (``write_hash`` stores ``str(value)``)."""
+    if isinstance(value, str):
+        try:
+            return float(value)
+        except ValueError:
+            value = datetime.datetime.fromisoformat(value)
+    return value.timestamp() if hasattr(value, "timestamp") else float(value)
+
+
+def _behind(stored, value) -> bool:
+    """Whether a batch's newest ordering value precedes the one the kv
+    snapshot holds. In update mode a trigger whose rows all fall in an
+    older, not yet evicted window emits only that window; writing it
+    would roll the served snapshot back in time. An equal value is a
+    revision of the current window and still rewrites."""
+    return stored is not None and value is not None and _epoch(value) < _epoch(stored)
+
+
 def latest_row_hash_writer(
     kv,
     key: str,
     order_cols: list[str],
     channel: str | None = None,
-    ttl: int | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """K2 pattern: pick the most-recent row of the batch (reference picks
-    the most data-rich/latest window, kpi_aggregator.py:60-67) and HSET it."""
+    the most data-rich/latest window, kpi_aggregator.py:60-67) and HSET
+    it, unless the stored snapshot is already newer (``_behind``)."""
 
     def write(batch: DataFrame, _batch_id: int) -> None:
         rows = batch.orderBy(*[batch[c].desc() for c in order_cols]).limit(1).collect()
-        if rows:
+        if rows and not _behind(kv.read_hash(key).get(order_cols[0]), rows[0][order_cols[0]]):
             # drop NULL aggregates (e.g. a percentile over an all-null
             # window): Redis has no NULL, and a stringified 'None' field
             # would crash the serving layer's numeric coercion
             snapshot = {k: v for k, v in rows[0].asDict().items() if v is not None}
-            kv.write_hash(key, snapshot, channel=channel, ttl=ttl)
+            kv.write_hash(key, snapshot, channel=channel)
 
     return write
 
@@ -259,27 +280,27 @@ def snapshot_json_writer(
     key: str,
     shaper: Callable[[list[dict]], Any] | None = None,
     channel: str | None = None,
-    ttl: int | None = None,
     order_cols: list[str] | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """K3 pattern: serialize the whole (already aggregated) batch as one
-    JSON document (regions array, platform breakdown, flows)."""
+    JSON document (regions array, platform breakdown, flows). A shaper
+    that returns None or [] leaves the stored document and publishes
+    nothing."""
 
     def write(batch: DataFrame, _batch_id: int) -> None:
         b = batch
         if order_cols:
             b = b.orderBy(*[batch[c].desc() for c in order_cols])
         rows = [r.asDict() for r in b.collect()]
-        if rows:
-            kv.write_json(key, shaper(rows) if shaper else rows, channel=channel, ttl=ttl)
+        doc = shaper(rows) if shaper and rows else rows
+        if doc:
+            kv.write_json(key, doc, channel=channel)
 
     return write
 
 
 def self_read(kv, key: str) -> list:
-    import json as _json
-
-    return [_json.loads(i) for i in kv.read_list(key)]
+    return [json.loads(i) for i in kv.read_list(key)]
 
 
 def capped_list_writer(
@@ -358,6 +379,7 @@ def trend_hash_writer(
     where prev is the stored value for the previous period bucket (0.0
     when absent, matching kpi_aggregator.py:33-39). The current period's
     first-seen value is persisted once per bucket (TTL two periods).
+    A batch older than the stored snapshot writes nothing (``_behind``).
     """
 
     def write(batch: DataFrame, _batch_id: int) -> None:
@@ -371,9 +393,10 @@ def trend_hash_writer(
             # skip rather than KeyError the streaming query (the
             # None-filter above already dropped it from the snapshot)
             return
+        if _behind(kv.read_hash(key).get(order_cols[0]), raw_ts):
+            return
         # epoch seconds OR a real timestamp column both bucket correctly
-        now_epoch = int(raw_ts.timestamp()) if hasattr(raw_ts, "timestamp") else int(raw_ts)
-        bucket = now_epoch // period_seconds
+        bucket = int(_epoch(raw_ts)) // period_seconds
         prev_state = kv.read_hash(f"{state_key_prefix}:{bucket - 1}")
         for col in trend_cols:
             # a NULL aggregate (window with no non-null inputs) has no

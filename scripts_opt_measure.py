@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Optimization measurement harness.
 
-Times selected queries (bench methodology: best-of-N of ``bench._force``)
+Times selected queries (bench methodology: ``bench._best_of``, best-of-N)
 and captures ``explain("formatted")`` text, in ONE session warmed the
 way ``bench.py`` warms it — the same conditions a mid-suite bench
 reading sees, minus neighbors. The plans under ``plans/`` come from it.

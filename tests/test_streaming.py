@@ -138,10 +138,10 @@ def test_kpi_pipeline_latest_hash(spark, stream_dir, checkpoint):
         F.col("value").alias("latency_ms"),
     )
     kv = InMemoryKV()
-    # exact=False: streaming rejects exact distinct aggregations — the
-    # sketch mode (approx_count_distinct / percentile_approx) is the
-    # production path; exact mode exists for the batch oracle gate only.
-    q = jobs.start_kpi_pipeline(fused, kv, checkpoint, trigger={"availableNow": True}, exact=False)
+    # the pipeline aggregates with sketches (approx_count_distinct /
+    # percentile_approx): streaming rejects exact distinct aggregations,
+    # and exact mode exists for the batch oracle gate only.
+    q = jobs.start_kpi_pipeline(fused, kv, checkpoint, trigger={"availableNow": True})
     q.awaitTermination(120)
 
     snap = kv.read_hash("nexus:kpi:current")
@@ -188,7 +188,7 @@ def test_kpi_pipeline_trend_readback_across_batches(spark, stream_dir, checkpoin
 
     kv.write_hash = capture
     q = jobs.start_kpi_pipeline(
-        fused, kv, checkpoint, trigger={"availableNow": True}, exact=False,
+        fused, kv, checkpoint, trigger={"availableNow": True},
         trend_period_seconds=30,
     )
     q.awaitTermination(120)

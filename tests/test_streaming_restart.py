@@ -28,6 +28,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from cdc_pipeline_spark.serving.service import SnapshotService
 from cdc_pipeline_spark.sources.files import stream_parquet
 from cdc_pipeline_spark.streaming import jobs
 from cdc_pipeline_spark.streaming.sinks import InMemoryKV
@@ -127,7 +128,7 @@ _BATCHES = [
 def _start_kpi(spark, src_dir, kv, ckpt):
     source = stream_parquet(spark, src_dir, EVENT_SCHEMA, max_files_per_trigger=1)
     return jobs.start_kpi_pipeline(
-        _fuse_kpi(source), kv, ckpt, trigger={"availableNow": True}, exact=False
+        _fuse_kpi(source), kv, ckpt, trigger={"availableNow": True}
     )
 
 
@@ -203,23 +204,30 @@ def _state_geo(kv):
     return dict(kv.read_hash("nexus:geo:header"))
 
 
+# name → (starter, final sink state, the panel's serving event)
 PIPELINES = {
-    "kpi": (_start_kpi, _state_kpi),
-    "geo": (_start_geo, _state_geo),
-    "traffic": (_start_traffic, _state_traffic),
-    "region": (_start_region, _state_region),
-    "health": (_start_health, _state_health),
-    "platform": (_start_platform, _state_platform),
+    "kpi": (_start_kpi, _state_kpi, "metrics"),
+    "geo": (_start_geo, _state_geo, "geo"),
+    "traffic": (_start_traffic, _state_traffic, "traffic"),
+    "region": (_start_region, _state_region, "regions"),
+    "health": (_start_health, _state_health, "health"),
+    "platform": (_start_platform, _state_platform, "platform"),
 }
 
 
-def _run_uninterrupted(spark, tmp_path, starter, stater):
+def _run_uninterrupted(spark, tmp_path, starter, stater, event):
     src = str(tmp_path / f"src-full-{uuid.uuid4().hex[:6]}")
     ckpt = str(tmp_path / f"ckpt-full-{uuid.uuid4().hex[:6]}")
     _write_files(spark, src, _BATCHES)
     kv = InMemoryKV()
     q = starter(spark, src, kv, ckpt)
     q.awaitTermination(180)
+    # the serving layer reads what the pipeline wrote: the panel is not
+    # its empty-state default
+    served = SnapshotService(kv).fetch(event)
+    assert served != SnapshotService(InMemoryKV()).fetch(event), (
+        f"{event}: the serving layer reads an empty panel after the run"
+    )
     return stater(kv)
 
 
@@ -241,8 +249,8 @@ def _run_interrupted(spark, tmp_path, starter, stater):
 
 @pytest.mark.parametrize("name", sorted(PIPELINES))
 def test_restart_recovery_matches_uninterrupted_run(spark, tmp_path, name):
-    starter, stater = PIPELINES[name]
-    golden = _run_uninterrupted(spark, tmp_path, starter, stater)
+    starter, stater, event = PIPELINES[name]
+    golden = _run_uninterrupted(spark, tmp_path, starter, stater, event)
     recovered = _run_interrupted(spark, tmp_path, starter, stater)
     assert recovered == golden, (
         f"{name}: state after checkpoint restart diverges from the "
@@ -250,6 +258,88 @@ def test_restart_recovery_matches_uninterrupted_run(spark, tmp_path, name):
     )
     # the golden itself must be non-trivial, or the equality is vacuous
     assert golden, f"{name}: empty final sink state"
+
+
+def test_late_only_batch_keeps_the_newest_window(spark, tmp_path):
+    """A micro-batch whose rows all fall in an older, still-open window
+    (inside the watermark) emits only that window in update mode; the
+    served hash and regions panels must keep the newer window."""
+    batches = [
+        _rows([(300, "purchase", 10.0), (301, "purchase", 20.0)], 0),
+        _rows([(10, "purchase", 5.0)], 10),
+    ]
+    src = str(tmp_path / "late-src")
+    _write_files(spark, src, batches)
+    kv = InMemoryKV()
+    for starter in (_start_geo, _start_region):
+        q = starter(spark, src, kv, str(tmp_path / f"late-ckpt-{starter.__name__}"))
+        q.awaitTermination(180)
+        assert q.lastProgress["batchId"] == 1, "expected one micro-batch per file"
+    service = SnapshotService(kv)
+    geo = service.fetch("geo")
+    # 1 min / 30 s windows: events at +300 s and +301 s → newest window
+    # [+300, +360) holds both; the late event's window ends at +60 s
+    assert (geo["window_end"], geo["request_count"]) == (BASE_EPOCH + 360, 2)
+    # 30 s / 15 s windows → newest [+300, +330)
+    regions = service.fetch("regions")
+    assert [(r["window_end"], r["region_name"], r["sales"]) for r in regions] == [
+        (BASE_EPOCH + 330, "purchase", 30.0)
+    ]
+    # and the late batch published nothing: one frame per panel
+    channels = [channel for channel, _payload in kv.published]
+    assert (channels.count("nexus:geo"), channels.count("nexus:regions")) == (1, 1)
+
+
+def test_regions_panel_merges_regions_of_the_current_window(spark, tmp_path):
+    """Update mode emits only the (window, region) rows a trigger
+    changed: a batch revising one region of the served window must keep
+    the window's other regions."""
+    src = str(tmp_path / "merge-src")
+    _write_files(spark, src, [
+        _rows([(300, "purchase", 10.0), (302, "view", 1.0)], 0),
+        _rows([(305, "purchase", 20.0)], 10),
+    ])
+    kv = InMemoryKV()
+    q = _start_region(spark, src, kv, str(tmp_path / "merge-ckpt"))
+    q.awaitTermination(180)
+    regions = SnapshotService(kv).fetch("regions")
+    assert sorted((r["window_end"], r["region_name"], r["sales"]) for r in regions) == [
+        (BASE_EPOCH + 330, "purchase", 30.0),
+        (BASE_EPOCH + 330, "view", 1.0),
+    ]
+
+
+def test_late_batch_guard_keeps_newer_hash_and_rewrites_equal_window(spark):
+    """Writer level: an older batch writes nothing (no hash, no publish,
+    no trend baseline); a batch of the same window revises it."""
+    from cdc_pipeline_spark.streaming.sinks import latest_row_hash_writer, trend_hash_writer
+
+    def batch(window_end, value):
+        return spark.createDataFrame([(window_end, value)], "window_end long, value double")
+
+    kv = InMemoryKV()
+    hash_w = latest_row_hash_writer(kv, "h", order_cols=["window_end"], channel="c")
+    trend_w = trend_hash_writer(
+        kv, "t", order_cols=["window_end"], trend_cols=["value"],
+        state_key_prefix="t:snap", period_seconds=60, channel="c",
+    )
+    for write, key in ((hash_w, "h"), (trend_w, "t")):
+        write(batch(360, 2.0), 0)
+        published = len(kv.published)
+        write(batch(60, 1.0), 1)
+        assert kv.read_hash(key)["window_end"] == "360" and len(kv.published) == published
+        write(batch(360, 3.0), 2)
+        assert kv.read_hash(key)["value"] == "3.0"
+    assert not kv.read_hash("t:snap:1"), "a late batch must not seed a trend baseline"
+    # a timestamp order column is stored as its str() and compared as time
+    import datetime as dt
+
+    ts_w = trend_hash_writer(
+        kv, "ts", order_cols=["window_end"], trend_cols=["value"], state_key_prefix="ts:snap",
+    )
+    for window_end in (dt.datetime(2024, 1, 1, 1), dt.datetime(2024, 1, 1, 0, 30)):
+        ts_w(spark.createDataFrame([(window_end, 1.0)], "window_end timestamp, value double"), 0)
+    assert kv.read_hash("ts")["window_end"] == "2024-01-01 01:00:00"
 
 
 ALERT_SCHEMA = StructType(
