@@ -66,18 +66,19 @@ def _warm_python_workers(spark, n_workers: int) -> None:
     A fresh JVM has no Python workers; the first mapInPandas/mapInArrow
     query pays the daemon start and one worker fork per core. The
     factory's daemon (``cdc_pipeline_spark.worker_daemon``) moves the
-    pandas/pyarrow import out of the workers and imports PySpark from
-    its installed, bytecode-cached copy rather than Spark's zip. On
-    local[4] (4-core VM, three fresh pools each, alternating) this
-    warm-up takes 4.7-5.8 s wall cold and 0.56-0.60 s warm with the
-    stock ``pyspark.daemon``, 3.4-4.5 s and 0.32-0.42 s with the
-    factory's; per-worker CPU 0.70-0.98 s → 0.17-0.22 s, daemon CPU
-    0.93-1.44 s → 0.51-0.74 s, daemon plus workers 4.2-5.0 s →
-    1.3-1.55 s. Without this warm-up the cost lands on whichever ARROW
-    query happens to run first — which is how that query "drifted"
-    1.50 → 2.69 s across rounds as registry reordering moved it around
-    the suite, and why isolation retries of Arrow queries read
-    systematically high. One row per core guarantees every worker in
+    pandas/pyarrow import out of the workers, imports PySpark from its
+    installed, bytecode-cached copy rather than Spark's zip, and leaves
+    no zip importer for each task's ``invalidate_caches()`` to re-read.
+    On local[4] (4-core VM, three fresh pools each, alternating in one
+    driver) this warm-up takes 1.16-1.17 s wall cold (3.2 s as the
+    JVM's first job) and 0.21-0.29 s warm with the stock
+    ``pyspark.daemon``, 0.57-0.60 s and 0.14-0.18 s with the factory's;
+    per-worker CPU 0.44-0.50 s → 0.00-0.01 s, daemon CPU 0.62-0.66 s →
+    0.38 s, daemon plus workers 2.47-2.54 s → 0.41-0.42 s. Without this
+    warm-up the cost lands on whichever ARROW query happens to run
+    first — which is how that query "drifted" 1.50 → 2.69 s across
+    rounds as registry reordering moved it around the suite, and why
+    isolation retries of Arrow queries read systematically high. One row per core guarantees every worker in
     the pool is forked."""
     df = spark.range(n_workers, numPartitions=n_workers)
     df.mapInPandas(lambda batches: batches, df.schema).count()

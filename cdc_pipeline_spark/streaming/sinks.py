@@ -303,6 +303,16 @@ def self_read(kv, key: str) -> list:
     return [json.loads(i) for i in kv.read_list(key)]
 
 
+def _push_newest_last(kv, key: str, rows: list, max_len: int, channel: str | None) -> None:
+    """Push newest-first ``rows`` oldest first, so index 0 ends up the
+    newest, and publish once, with the newest: every publish makes each
+    WS and SSE client re-fetch and re-send the whole list."""
+    for row in reversed(rows[1:]):
+        kv.push_to_list(key, row.asDict(), max_len=max_len)
+    if rows:
+        kv.push_to_list(key, rows[0].asDict(), max_len=max_len, channel=channel)
+
+
 def capped_list_writer(
     kv,
     key: str,
@@ -354,8 +364,7 @@ def capped_list_writer(
             )[:max_len]
             kv.replace_list(key, ordered, channel=channel)
             return
-        for row in reversed(rows):
-            kv.push_to_list(key, row.asDict(), max_len=max_len, channel=channel)
+        _push_newest_last(kv, key, rows, max_len, channel)
 
     return write
 
@@ -448,8 +457,7 @@ def idempotent_capped_list_writer(
         ):
             return  # replayed micro-batch — already applied
         rows = batch.orderBy(*[batch[c].desc() for c in order_cols]).limit(max_len).collect()
-        for row in reversed(rows):
-            kv.push_to_list(key, row.asDict(), max_len=max_len, channel=channel)
+        _push_newest_last(kv, key, rows, max_len, channel)
         kv.write_hash(guard_key, {"batch_id": batch_id, "run_id": run_id})
 
     return write

@@ -4,7 +4,10 @@
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 
+import pytest
 from pyspark.sql import functions as F
 
 from cdc_pipeline_spark.operators import aggregates
@@ -12,6 +15,7 @@ from cdc_pipeline_spark.sources.files import load_table
 from cdc_pipeline_spark.streaming.batch_sink import with_date_partitions, write_partitioned_parquet
 
 SF_DIR = "/root/testdata/sf0.001"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_partitioned_parquet_roundtrip(spark, tmp_path):
@@ -206,3 +210,37 @@ def test_default_driver_memory_clamps():
         assert _default_driver_memory() == "3g"
     finally:
         del _os.environ["SPARK_GRAFT_DRIVER_MEM"]
+
+
+_DEBUGGING = """
+import sys
+sys.path.insert(0, {repo!r})
+from pyspark.errors.utils import is_debugging_enabled
+from pyspark.sql import functions as F
+from cdc_pipeline_spark.session import create_spark_session
+
+spark = create_spark_session(app_name="debugging", master="local[1]", shuffle_partitions=1, extra_conf={conf!r})
+spark.range(1).select((F.col("id") + 1).alias("next")).collect()
+print(is_debugging_enabled())
+spark.stop()
+"""
+
+
+@pytest.mark.parametrize(
+    "conf, enabled",
+    [({}, "False"), ({"spark.python.sql.dataFrameDebugging.enabled": "true"}, "True")],
+    ids=["factory-default", "caller-override"],
+)
+def test_factory_session_turns_off_dataframe_call_site_capture(conf, enabled):
+    """Factory sessions leave PySpark's call-site capture off (it walks
+    the stack and makes extra py4j calls on every Column method) unless
+    the caller's ``extra_conf`` turns it on. PySpark caches the flag once
+    per process, hence the subprocess."""
+    proc = subprocess.run(
+        [sys.executable, "-c", _DEBUGGING.format(repo=REPO, conf=conf)],
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert proc.stdout.strip().splitlines()[-1] == enabled

@@ -5,12 +5,14 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from cdc_pipeline_spark.operators.skew import salted_agg
 from cdc_pipeline_spark.sources.files import load_table
 from cdc_pipeline_spark.streaming.sinks import (
     InMemoryKV,
+    capped_list_writer,
     idempotent_capped_list_writer,
     trend_hash_writer,
 )
@@ -49,6 +51,22 @@ def test_idempotent_list_writer_skips_replayed_batch(spark):
     writer(spark.createDataFrame([(3, "c")], "ts long, v string"), 8)
     assert len(kv.lists["feed"]) == 3
     assert json.loads(kv.lists["feed"][0])["v"] == "c"
+
+
+@pytest.mark.parametrize("make_writer", [capped_list_writer, idempotent_capped_list_writer])
+def test_list_writer_publishes_once_per_batch(spark, make_writer):
+    """Appending a 5-row batch keeps the newest-first order and the cap
+    but publishes once, the newest row: each publish makes every WS and
+    SSE client re-fetch and re-send the list."""
+    kv = InMemoryKV()
+    writer = make_writer(kv, "feed", 6, ["ts"], "chan")
+    writer(spark.createDataFrame([(1, "a"), (2, "b")], "ts long, v string"), 0)
+    writer(spark.createDataFrame([(t, f"r{t}") for t in (5, 3, 7, 4, 6)], "ts long, v string"), 1)
+    assert [json.loads(i)["ts"] for i in kv.lists["feed"]] == [7, 6, 5, 4, 3, 2]
+    assert [(c, json.loads(p)) for c, p in kv.published] == [
+        ("chan", {"ts": 2, "v": "b"}),
+        ("chan", {"ts": 7, "v": "r7"}),
+    ]
 
 
 def test_salted_agg_matches_plain_agg(spark):

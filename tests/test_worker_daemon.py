@@ -3,9 +3,10 @@
 Factory sessions fork Python workers from a daemon that imported the
 Arrow/pandas stack and froze its heap; these tests pin that the workers
 really come from it, that they import PySpark from its installed copy
-rather than Spark's zip (and when the daemon may choose that copy),
-that it resolves from any working directory, and that a failed worker
-is replaced by another fork of it.
+rather than Spark's zip, that they hold no ``zipimporter`` for a task's
+``importlib.invalidate_caches()`` to re-read (and when the daemon may
+drop Spark's archives from the path), that it resolves from any working
+directory, and that a failed worker is replaced by another fork of it.
 """
 
 from __future__ import annotations
@@ -18,7 +19,7 @@ import zipfile
 
 import pytest
 
-from cdc_pipeline_spark.worker_daemon import prefer_installed_pyspark
+from cdc_pipeline_spark.worker_daemon import redundant_spark_archives
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -26,18 +27,22 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def _probe(spark):
     """Rows 0..7 over four tasks, each tagged with its worker's pid,
     frozen-object count, whether pyarrow was loaded when the task's
-    function was entered, the file ``pyspark`` was imported from and how
-    many loaded modules came out of a zip. (Nested, so cloudpickle ships
-    it by value: the workers cannot import this test module.)"""
+    function was entered, the file ``pyspark`` was imported from, how
+    many loaded modules came out of a zip, and (as JSON lists) the keys
+    of its cached ``zipimporter``s and its ``sys.path``. (Nested, so
+    cloudpickle ships it by value: the workers cannot import this test
+    module.)"""
 
     def probe(batches):
         import gc
+        import zipimport
 
         import pandas as pd
         import pyspark
 
         freeze, pyarrow = gc.get_freeze_count(), "pyarrow" in sys.modules
         zipped = sum(".zip" + os.sep in (getattr(m, "__file__", None) or "") for m in list(sys.modules.values()))
+        importers = [k for k, v in sys.path_importer_cache.items() if isinstance(v, zipimport.zipimporter)]
         for pdf in batches:
             yield pd.DataFrame(
                 {
@@ -47,11 +52,16 @@ def _probe(spark):
                     "pid": os.getpid(),
                     "pyspark_file": pyspark.__file__,
                     "zipped": zipped,
+                    "zipimporters": json.dumps(importers),
+                    "path": json.dumps(sys.path),
                 }
             )
 
     df = spark.range(8, numPartitions=4)
-    schema = "id long, freeze long, pyarrow boolean, pid long, pyspark_file string, zipped long"
+    schema = (
+        "id long, freeze long, pyarrow boolean, pid long, pyspark_file string, zipped long,"
+        " zipimporters string, path string"
+    )
     rows = df.mapInPandas(probe, schema).collect()
     assert sorted(r.id for r in rows) == list(range(8))
     return rows
@@ -59,55 +69,80 @@ def _probe(spark):
 
 def test_workers_fork_from_frozen_preloaded_heap(spark):
     """Workers inherit the daemon's frozen Arrow stack, and its PySpark:
-    Spark puts ``pyspark.zip`` first on their path, but the daemon
-    imports the driver's same-version installed copy, so no module is
-    compiled out of a zip."""
+    Spark puts ``pyspark.zip``, the py4j zip and its spark-core jar on
+    their path, but the daemon drops them for the driver's same-version
+    installed copy, so no module is compiled out of a zip, and forgets
+    their importers, so no task re-reads an archive directory."""
     import pyspark
 
+    home = os.path.realpath(os.environ["SPARK_HOME"])
     rows = _probe(spark)
     assert all(r.freeze > 0 for r in rows), rows
     assert all(r.pyarrow for r in rows), rows
     assert {r.pyspark_file for r in rows} == {pyspark.__file__}, rows
     assert all(r.zipped == 0 for r in rows), rows
+    assert all(json.loads(r.zipimporters) == [] for r in rows), rows
+    for r in rows:
+        spark_archives = [
+            p for p in json.loads(r.path) if p.endswith((".zip", ".jar")) and os.path.realpath(p).startswith(home + os.sep)
+        ]
+        assert spark_archives == [], r.path
 
 
 def _version_py(version):
     return f"__version__: str = {version!r}\n"
 
 
+_SAME_BUILD = {"pyspark/__init__.py": "", "pyspark/version.py": _version_py("4.1.2")}
+
+
 @pytest.mark.parametrize(
-    "installed, moved",
+    "installed, dropped",
     [
-        ({"__init__.py": "", "version.py": _version_py("4.1.2")}, True),
-        ({"__init__.py": "", "version.py": _version_py("4.0.1")}, False),
-        ({}, False),
-        ({"version.py": _version_py("4.1.2")}, False),
+        ({**_SAME_BUILD, "py4j/__init__.py": ""}, ["pyspark.zip", "py4j zip", "spark-core.jar"]),
+        ({"pyspark/__init__.py": "", "pyspark/version.py": _version_py("4.0.1"), "py4j/__init__.py": ""}, []),
+        ({"py4j/__init__.py": ""}, []),
+        ({"pyspark/version.py": _version_py("4.1.2"), "py4j/__init__.py": ""}, []),
+        (_SAME_BUILD, ["pyspark.zip", "spark-core.jar"]),
     ],
-    ids=["same-version", "other-version", "no-installed-copy", "namespace-dir"],
+    ids=["same-version", "other-version", "no-installed-copy", "namespace-dir", "same-version-no-installed-py4j"],
 )
-def test_spark_zips_move_behind_a_same_version_installed_copy(tmp_path, installed, moved):
-    """A fake ``$SPARK_HOME/python/lib`` holds ``pyspark.zip`` at 4.1.2,
-    a py4j zip and a jar; ``site`` holds the given ``pyspark/`` files."""
-    lib = tmp_path / "spark" / "python" / "lib"
+def test_spark_zips_move_behind_a_same_version_installed_copy(tmp_path, installed, dropped):
+    """A fake Spark install holds ``python/lib/pyspark.zip`` at 4.1.2, a
+    py4j zip and ``jars/spark-core.jar``, reached through a ``spark``
+    symlink as ``$SPARK_HOME`` while the path names the jar by its real
+    directory, as Spark does; ``site`` holds the given files and
+    ``app.jar`` lies outside ``$SPARK_HOME``. Only a same-version
+    installed PySpark lets the daemon drop Spark's archives, the py4j zip
+    only when py4j is installed too (as with ``PYTHONPATH=$SPARK_HOME/python``,
+    where only the zip holds py4j), and the outside jar always stays."""
+    real = tmp_path / "spark-4.1.2"
+    lib, jars = real / "python" / "lib", real / "jars"
     lib.mkdir(parents=True)
+    jars.mkdir()
+    (tmp_path / "spark").symlink_to(real)
     with zipfile.ZipFile(lib / "pyspark.zip", "w") as zf:
         zf.writestr("pyspark/version.py", _version_py("4.1.2"))
     with zipfile.ZipFile(lib / "py4j-0.10.9.9-src.zip", "w") as zf:
         zf.writestr("py4j/__init__.py", "")
-    (lib / "spark-core.jar").write_bytes(b"")
-    (tmp_path / "site").mkdir()
-    if installed:
-        (tmp_path / "site" / "pyspark").mkdir()
+    (jars / "spark-core.jar").write_bytes(b"")
+    (tmp_path / "app.jar").write_bytes(b"")
     for name, text in installed.items():
-        (tmp_path / "site" / "pyspark" / name).write_text(text)
+        (tmp_path / "site" / name).parent.mkdir(parents=True, exist_ok=True)
+        (tmp_path / "site" / name).write_text(text)
+    (tmp_path / "site").mkdir(exist_ok=True)
 
-    pyspark_zip, py4j_zip, jar, site = (
-        str(p) for p in (lib / "pyspark.zip", lib / "py4j-0.10.9.9-src.zip", lib / "spark-core.jar", tmp_path / "site")
-    )
-    path = [pyspark_zip, py4j_zip, jar, site]
-    reordered = prefer_installed_pyspark(path, str(tmp_path / "spark"))
-    assert reordered == ([jar, site, pyspark_zip, py4j_zip] if moved else path)
-    assert prefer_installed_pyspark(path, None) == path
+    home = tmp_path / "spark"
+    archives = {
+        "pyspark.zip": str(home / "python" / "lib" / "pyspark.zip"),
+        "py4j zip": str(home / "python" / "lib" / "py4j-0.10.9.9-src.zip"),
+        "spark-core.jar": str(jars / "spark-core.jar"),
+    }
+    path = [*archives.values(), str(tmp_path / "app.jar"), str(tmp_path / "site")]
+    expected = [archives[name] for name in dropped]
+    assert redundant_spark_archives(path, str(home)) == expected
+    assert redundant_spark_archives(path, str(real)) == expected
+    assert redundant_spark_archives(path, None) == []
 
 
 _FOREIGN_CWD = """
@@ -173,8 +208,9 @@ def test_failed_worker_is_replaced_by_a_preloaded_fork(spark, tmp_path):
 
 def test_package_import_leaves_pyspark_unloaded():
     """``python -m cdc_pipeline_spark.worker_daemon`` runs the package
-    ``__init__`` before the daemon can reorder ``sys.path``; an eager
-    PySpark import there would load it from Spark's zip again."""
+    ``__init__`` before the daemon can drop Spark's zips from
+    ``sys.path``; an eager PySpark import there would load it from
+    Spark's zip again."""
     snippet = "import sys, cdc_pipeline_spark; print(sorted(m for m in sys.modules if m.split('.')[0] in ('pyspark', 'py4j')))"
     proc = subprocess.run(
         [sys.executable, "-c", snippet],
