@@ -1,18 +1,19 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs the headline workload queries at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] (default: every core of the host) and prints
-ONE JSON line:
+"""Benchmark harness for the ``workload.QUERIES`` suite.
+
+Runs every registered query (or only the ones named on the command
+line, still in suite order) at $SPARK_GRAFT_SF_DIR (default: the sf0.1
+test data, see ``SF_DIR``) on local[$SPARK_GRAFT_CPUS] (default: every
+core of the host) and prints ONE JSON line to stdout:
 
     {"metric": "workload_wall_sec", "value": N, "unit": "sec",
-     "queries": {name: sec, ...}, "sf": 0.1}
+     "queries": {name: sec, ...}, "sf": 0.1, "calibration": {...}}
 
-followed by a compact LAST line (same keys, headline-query map only,
-plus n_queries / calibration / gate totals) sized to survive the
-driver's bounded stdout-tail capture — BENCH_r{N}.json is parsed from
-that tail, and rounds 9-10 recorded "parsed": null when the full
-per-query line alone overflowed it. The complete map is always in
-BENCH_LOCAL_r{N}.json.
+plus ``isolation_retried`` when a retry ran and ``gate`` under
+``--check``. Progress goes to stderr; nothing is written into the
+checkout.
+
+    python bench.py [--check [BASELINE_QUERIES.json]] [--plans DIR] [name ...]
 
 Each query is forced with ``perfbench.common.forced``, i.e.
 ``agg(bit_xor(xxhash64(struct(*))))`` — a one-row collect that still
@@ -21,35 +22,40 @@ overflows under ANSI mode). A bare ``count()`` would let Catalyst prune
 unreferenced projections, so projection-heavy queries (text features,
 winnowing) would measure the scan instead of their expressions.
 
-``--check [BASELINE_QUERIES.json|BASELINE.md]`` (default
-BASELINE_QUERIES.json next to this file) additionally compares every
-query against its frozen per-query baseline and exits 1 on regression:
-measured > 1.5x frozen AND measured above the 1-second noise floor
-(local[32] sub-second timings jitter ±30% from scheduling alone — see
-BASELINE.md — so sub-second rows can't gate at a ratio). Queries new
+``--check [PATH]`` (default BASELINE_QUERIES.json next to this file)
+additionally compares every query against its frozen per-query baseline
+and exits 1 on regression: measured > 1.5x frozen AND measured above
+the 1-second noise floor (sub-second timings jitter from scheduling
+alone, see BASELINE.md, so they can't gate at a ratio). Queries new
 since the freeze are reported informationally, never failed.
 
 Would-be regressions get one ISOLATION RETRY (best of three, in a FRESH
 JVM at the end of the suite) before the gate fails: multi-second
-queries on local[32] spike 2-4x from scheduler/GC luck alone — three
-consecutive full-suite runs of identical code flagged three disjoint
-sets — and a long bench session additionally degrades late queries
-2-5x from accumulated driver/codegen state, which an in-JVM retry
-inherits (measured: 4.0s retry vs 0.95s fresh, identical code). A
-genuine plan regression is exactly the thing that reproduces in the
-fresh session too. Retried names are recorded in the JSON
-(``isolation_retried``) so a pass never hides that a retry happened.
+queries spike from scheduler/GC luck alone — three consecutive
+full-suite runs of identical code flagged three disjoint sets — and a
+long bench session additionally degrades late queries from accumulated
+driver/codegen state, which an in-JVM retry inherits (measured: 4.0s
+retry vs 0.95s fresh, identical code). A genuine plan regression is
+exactly the thing that reproduces in the fresh session too. Retried
+names are recorded in the JSON (``isolation_retried``) so a pass never
+hides that a retry happened.
 
-The JSON line also carries a ``calibration`` block (host_drift vs the
+The record also carries a ``calibration`` block (host_drift vs the
 committed freeze, three control-query ratios, 1/5/15-min load averages
 around the run) so a reader can adjudicate host noise from the artifact
 alone: controls near 1.0x and load << cpus mean per-query ratios are
 believable; controls at 1.5-3x or load >> cpus mean the run measured
 the neighbors, not the code.
+
+``--plans DIR`` writes DIR/<name>.txt with each query's
+``explain("formatted")`` text once all timing (and the gate's retry) is
+done, so dumping plans moves no timing. Diffing two such directories
+(after masking expression ids) shows whether a refactor changed a plan.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -78,8 +84,8 @@ def _warm_python_workers(spark, n_workers: int) -> None:
     warm-up the cost lands on whichever ARROW query happens to run
     first — which is how that query "drifted" 1.50 → 2.69 s across
     rounds as registry reordering moved it around the suite, and why
-    isolation retries of Arrow queries read systematically high. One row per core guarantees every worker in
-    the pool is forked."""
+    isolation retries of Arrow queries read systematically high. One
+    row per core guarantees every worker in the pool is forked."""
     df = spark.range(n_workers, numPartitions=n_workers)
     df.mapInPandas(lambda batches: batches, df.schema).count()
 
@@ -113,11 +119,22 @@ def _best_of(spark, name: str, runs: int, sf_dir: str) -> float:
     return best
 
 
-# Headline queries: one per operator family (relational aggs, joins,
-# windowed streaming semantics, top-k, CDC, trends, dedup/similarity/text
-# once registered). Anything registered in the workload and not listed
-# here still runs — this list only fixes a stable ordering and which
-# per-query rows ride the compact tail line the driver parses.
+def _write_plans(spark, names: list[str], out_dir: str) -> None:
+    """DIR/<name>.txt: each query's ``explain("formatted")`` text."""
+    os.makedirs(out_dir, exist_ok=True)
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    for name in names:
+        df = workload.QUERIES[name](spark, SF_DIR)
+        with open(os.path.join(out_dir, f"{name}.txt"), "w") as fh:
+            fh.write(df._jdf.queryExecution().explainString(mode))
+
+
+# Suite order: these rows run first, in this order, then every other
+# registered query alphabetically. The order is not cosmetic: a long
+# session slows the queries that run late in it (late-suite aging), so
+# the per-query freeze in BASELINE_QUERIES.json holds only for the order
+# it was measured in. Editing this list moves queries within the suite;
+# re-freeze the rows it moves.
 HEADLINE = [
     "q1_pricing_summary",
     "q3_shipping_priority",
@@ -131,29 +148,10 @@ HEADLINE = [
     "cdc_latest_state",
     "grouped_topk_events",
     "hourly_value_trend",
-    # r12 (VERDICT r11 #2): the rows above are all sub-2 s at sf0.1 and
-    # overhead-bound (job scheduling + plan analysis), so an 8-core vs
-    # 32-core ratio over them reads ≈ 1 and the driver's scaling probe
-    # was uninformative. These three are the queries the r11 c8/c32
-    # runs showed genuinely compute-parallel (broadcast-join scoring /
-    # LSH verify over all cores: 2.7× / 1.6× / 1.7× at 8 cores), so
-    # the probe now measures parallel compute, not the scheduling
-    # floor. Additions only — no row removed or renamed.
     "embedding_neardup_pairs",
     "embedding_neardup_lsh",
     "docs_incremental_neardup",
 ]
-
-# The headline rows whose runtime genuinely scales with cores at sf0.1
-# (the r11 c8/c32 evidence above); every OTHER headline row is
-# overhead-bound and its low-core ratio carries no signal — the
-# emitted `scaling_hint` names both sets so a reader knows which
-# ratios to trust.
-SCALING_PARALLEL = (
-    "embedding_neardup_pairs",
-    "embedding_neardup_lsh",
-    "docs_incremental_neardup",
-)
 
 
 REGRESSION_RATIO = 1.5
@@ -171,22 +169,10 @@ CONTROL_QUERIES = ("kpi_sliding_window", "dedup_minhash_lsh", "embedding_kmeans"
 
 def load_baseline(path: str) -> dict[str, float]:
     """Per-query frozen timings from BASELINE_QUERIES.json ({"queries":
-    {name: sec}}) or from BASELINE.md's freeze table (| `name` | sec |)."""
-    if path.endswith(".json"):
-        with open(path) as fh:
-            doc = json.load(fh)
-        return {str(k): float(v) for k, v in doc["queries"].items()}
-    import re
-
-    out: dict[str, float] = {}
+    {name: sec}})."""
     with open(path) as fh:
-        for line in fh:
-            m = re.match(r"\s*\|\s*`([a-z0-9_]+)`\s*\|\s*([0-9.]+)\s*\|\s*$", line)
-            if m:
-                out[m.group(1)] = float(m.group(2))
-    if not out:
-        raise ValueError(f"no per-query baseline rows found in {path}")
-    return out
+        doc = json.load(fh)
+    return {str(k): float(v) for k, v in doc["queries"].items()}
 
 
 def host_drift(timings: dict[str, float], baseline: dict[str, float]) -> float:
@@ -288,30 +274,36 @@ def _subprocess_retry(names: list[str]) -> dict[str, float]:
 
 
 def main() -> None:
-    check_path = None
-    baseline = None
-    if "--check" in sys.argv:
-        i = sys.argv.index("--check")
-        check_path = (
-            sys.argv[i + 1]
-            if len(sys.argv) > i + 1 and not sys.argv[i + 1].startswith("-")
-            else os.path.join(os.path.dirname(os.path.abspath(__file__)), "BASELINE_QUERIES.json")
-        )
-        # load BEFORE the multi-minute run: a typo'd path must fail in
-        # milliseconds, not after the whole benchmark has been measured
-        baseline = load_baseline(check_path)
+    default_baseline = os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "BASELINE_QUERIES.json"
+    )
+    parser = argparse.ArgumentParser(
+        description="Time the workload.QUERIES suite; print one JSON record."
+    )
+    parser.add_argument(
+        "--check", nargs="?", const=default_baseline, metavar="BASELINE_QUERIES.json",
+        help="gate every query against a frozen per-query baseline; exit 1 on regression",
+    )
+    parser.add_argument(
+        "--plans", metavar="DIR",
+        help="after timing, write DIR/<name>.txt with each query's formatted plan",
+    )
+    parser.add_argument("names", nargs="*", help="run only these queries (default: all)")
+    args = parser.parse_args()
+    unknown = [n for n in args.names if n not in workload.QUERIES]
+    if unknown:
+        parser.error(f"unknown queries: {' '.join(unknown)}")
+    # load BEFORE the multi-minute run: a typo'd path must fail in
+    # milliseconds, not after the whole benchmark has been measured
+    baseline = load_baseline(args.check) if args.check else None
     # calibration baseline: even WITHOUT --check, load the default
-    # freeze if present so the emitted artifact carries its own
-    # host-noise calibration (drift + control ratios + loadavg) — the
-    # driver's BENCH_r{N}.json is built from this stdout and must be
-    # adjudicable without a fresh probe
+    # freeze if present so the record carries its own host-noise
+    # calibration (drift + control ratios + loadavg) and can be
+    # adjudicated without a fresh probe
     calib_baseline = baseline
     if calib_baseline is None:
-        default_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BASELINE_QUERIES.json"
-        )
         try:
-            calib_baseline = load_baseline(default_path)
+            calib_baseline = load_baseline(default_baseline)
         except (OSError, ValueError, KeyError):
             calib_baseline = None
     try:
@@ -320,6 +312,8 @@ def main() -> None:
         loadavg_start = None
     names = [n for n in HEADLINE if n in workload.QUERIES]
     names += [n for n in sorted(workload.QUERIES) if n not in names]
+    if args.names:
+        names = [n for n in names if n in args.names]
     spark = _session("cdc-pipeline-spark-bench")
 
     timings: dict[str, float] = {}
@@ -340,14 +334,14 @@ def main() -> None:
     # plan. A genuine plan regression reproduces on a quiet re-measure
     # at the end; a hiccup does not. Keep the better of the two
     # measurements — the same steady-state philosophy as best-of-two.
-    # Gate timings are a SEPARATE view: the durable artifact keeps the
-    # in-suite best-of-2 for every query (a retried query must not get
-    # a tighter frozen baseline than its never-flagged peers — that
-    # would bias future freezes low for exactly the jitteriest
-    # queries), while the gate judges the flake-filtered values. The
-    # drift ratio is pinned from the in-suite pass for the same reason:
-    # retries lowering the median must not move the threshold under a
-    # query that never received its retry.
+    # Gate timings are a SEPARATE view: the record keeps the in-suite
+    # best-of-2 for every query (a retried query must not get a tighter
+    # frozen baseline than its never-flagged peers — that would bias
+    # future freezes low for exactly the jitteriest queries), while the
+    # gate judges the flake-filtered values. The drift ratio is pinned
+    # from the in-suite pass for the same reason: retries lowering the
+    # median must not move the threshold under a query that never
+    # received its retry.
     retried: list[str] = []
     gate_timings = dict(timings)
     drift0: float | None = None
@@ -419,85 +413,22 @@ def main() -> None:
             if name in timings and calib_baseline.get(name)
         }
     doc["calibration"] = calibration
-    print(json.dumps(doc))
-    # Driver-tail-safe summary (VERDICT r10 #6): the full doc above runs
-    # ~10 KB at 172 queries and the driver's stdout capture keeps only a
-    # bounded tail, so BENCH_r09/r10.json recorded "parsed": null. Emit a
-    # compact line LAST — same required keys (metric/value/unit/queries/
-    # sf) but only the headline queries in the map, plus gate totals and
-    # the calibration block — so the tail window always ends with one
-    # complete, parseable JSON record. Full per-query map stays in
-    # BENCH_LOCAL_r{N}.json below.
-    summary = {
-        "metric": doc["metric"],
-        "value": doc["value"],
-        "unit": doc["unit"],
-        "queries": {n: timings[n] for n in HEADLINE if n in timings},
-        "sf": sf,
-        "n_queries": len(timings),
-        "calibration": calibration,
-        # which headline rows actually exercise parallel compute at
-        # sf0.1 — the rest sit at the per-query scheduling floor, so
-        # their low-core/high-core ratios are expected ≈ 1 and carry no
-        # scaling signal (VERDICT r11 #2)
-        "scaling_hint": {
-            "parallel_compute": [n for n in SCALING_PARALLEL if n in timings],
-            "overhead_bound": [
-                n for n in HEADLINE if n in timings and n not in SCALING_PARALLEL
-            ],
-        },
-    }
-    if retried:
-        summary["isolation_retried"] = retried
-    # Durable full-timings artifact: the driver's BENCH_r{N}.json keeps
-    # only a truncated stdout tail (r05 preserved 62 of 153 per-query
-    # rows), so ALSO write the complete map to BENCH_LOCAL_r{N}.json —
-    # same {"queries": ...} shape, so `--check` accepts one as a
-    # baseline file. Round number: $SPARK_GRAFT_ROUND, else one past the
-    # newest committed BENCH_r*.json.
-    repo = os.path.dirname(os.path.abspath(__file__))
-    if SF_DIR.rstrip("/") != "/root/testdata/sf0.1":
-        # only the official per-round scale writes the durable artifact:
-        # a smaller-SF spot-check must not clobber the round's full-SF
-        # timings (the file is what round N+1's judge diffs against)
-        print(f"# BENCH_LOCAL write skipped: non-default SF {SF_DIR}", file=sys.stderr)
-    else:
-        rnd = os.environ.get("SPARK_GRAFT_ROUND")
-        if rnd is not None:
-            try:
-                rnd = f"{int(rnd):02d}"  # normalize '6' -> '06' (r0N convention)
-            except ValueError:
-                pass
-        else:
-            import re
-
-            seen = [
-                int(m.group(1))
-                for f in os.listdir(repo)
-                if (m := re.fullmatch(r"BENCH_r(\d+)\.json", f))
-            ]
-            rnd = f"{(max(seen) + 1 if seen else 1):02d}"
-        try:
-            with open(os.path.join(repo, f"BENCH_LOCAL_r{rnd}.json"), "w") as fh:
-                json.dump(doc, fh)
-                fh.write("\n")
-        except OSError as exc:  # read-only checkout must not fail the bench
-            print(f"# BENCH_LOCAL write skipped: {exc}", file=sys.stderr)
-    spark.stop()
-
-    if baseline is None:
-        print(json.dumps(summary))
-    else:
+    if baseline is not None:
         regressions, new, drift = find_regressions(
             gate_timings, baseline, drift=drift0
         )
-        summary["gate"] = {
+        doc["gate"] = {
             "gated": len(timings) - len(new),
             "new": len(new),
             "regressions": sorted(regressions),
             "drift": round(drift, 3),
         }
-        print(json.dumps(summary))
+    print(json.dumps(doc))
+    if args.plans:
+        _write_plans(spark, names, args.plans)
+    spark.stop()
+
+    if baseline is not None:
         print(f"# host drift vs freeze (median ratio): {drift:.2f}x", file=sys.stderr)
         for cname, c in calibration.get("controls", {}).items():
             print(

@@ -19,6 +19,9 @@ Determinism conventions shared by both sides:
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -2022,24 +2025,36 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+_MIRROR_DIRS: set[str] = set()
+
+
+def _remove_mirror_dir(path: str, pid: int) -> None:
+    # a forked child inherits atexit handlers; only the owner removes
+    if os.getpid() == pid:
+        shutil.rmtree(path, ignore_errors=True)
+
+
 def _format_mirror_path(sf_dir: str, fmt: str, table: str) -> str:
     """Scratch location for a format-mirrored table. Keyed by a hash of
     the ABSOLUTE sf_dir (two checkouts with the same basename must not
     share a mirror) plus the process id: a concurrent run's
     mode='overwrite' would otherwise delete the directory out from
-    under this process's lazily-evaluated read-back scan."""
+    under this process's lazily-evaluated read-back scan. Because the
+    key is per process, the process removes its own directory at exit
+    (registered the first time it makes the path)."""
     import hashlib
-    import os
     import tempfile
 
     dir_key = hashlib.sha256(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    return os.path.join(
+    root = os.path.join(
         tempfile.gettempdir(),
         "cdc-spark-format-mirrors",
         f"{os.path.basename(sf_dir.rstrip('/'))}-{dir_key}-pid{os.getpid()}",
-        fmt,
-        table,
     )
+    if root not in _MIRROR_DIRS:
+        _MIRROR_DIRS.add(root)
+        atexit.register(_remove_mirror_dir, root, os.getpid())
+    return os.path.join(root, fmt, table)
 
 
 _WORDPIECE_WORDS_SQL = r"""words AS (

@@ -361,7 +361,7 @@ def test_perplexity_buckets_keeps_null_group_docs(spark):
 
 # ---------------------------------------------------------------------------
 # bench.py --check: the per-query regression gate against the frozen
-# baseline (round-4 freeze in BASELINE_QUERIES.json / BASELINE.md)
+# baseline (BASELINE_QUERIES.json), and the harness's output contract
 # ---------------------------------------------------------------------------
 
 
@@ -420,18 +420,57 @@ def test_isolation_retry_subprocess_returns_timings(monkeypatch):
     assert got["q1_pricing_summary"] > 0
 
 
-def test_load_baseline_json_and_md_agree():
-    import bench
+def test_bench_prints_one_record_for_named_queries_and_writes_plans(tmp_path):
+    """The harness contract: named queries restrict the suite but keep
+    suite (HEADLINE) order, stdout is exactly one JSON record whose
+    value is the sum of its rows and which carries the ``--check`` gate
+    block, ``--plans`` dumps formatted plans outside the checkout, and
+    the run leaves the checkout untouched."""
+    import json
+    import os
+    import subprocess
+    import sys as _sys
 
-    js = bench.load_baseline("/root/repo/BASELINE_QUERIES.json")
-    md = bench.load_baseline("/root/repo/BASELINE.md")
-    assert js and md
-    # the md freeze table is the human rendering of the same freeze run,
-    # rounded to 2 decimals; every md row must match the json artifact
-    # within that rendering precision
-    shared = set(js) & set(md)
-    assert len(shared) >= 100
-    assert all(abs(js[k] - md[k]) <= 0.005 + 1e-9 for k in shared)
+    import bench
+    from conftest import SF_SMOKE
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+    def porcelain():
+        return subprocess.run(
+            ["git", "status", "--porcelain"], cwd=repo, capture_output=True, text=True,
+            check=True,
+        ).stdout
+
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR=SF_SMOKE, SPARK_GRAFT_CPUS="2")
+    bad = subprocess.run(
+        [_sys.executable, "bench.py", "no_such_query"],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert bad.returncode == 2 and "no_such_query" in bad.stderr
+
+    before = porcelain()
+    plans = tmp_path / "plans"
+    # command-line order is the reverse of suite order on purpose
+    proc = subprocess.run(
+        [_sys.executable, "bench.py", "--check", "--plans", str(plans),
+         "kpi_sliding_window", "q1_pricing_summary"],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=900,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    records = [l for l in proc.stdout.splitlines() if l.startswith("{")]
+    assert len(records) == 1, proc.stdout
+    doc = json.loads(records[0])
+    expected = [n for n in bench.HEADLINE if n in ("q1_pricing_summary", "kpi_sliding_window")]
+    assert list(doc["queries"]) == expected == ["q1_pricing_summary", "kpi_sliding_window"]
+    assert doc["value"] == round(sum(doc["queries"].values()), 3)
+    assert sorted(doc["gate"]) == ["drift", "gated", "new", "regressions"]
+    assert doc["gate"]["gated"] == 2
+    assert "== Physical Plan ==" in (plans / "q1_pricing_summary.txt").read_text()
+    assert sorted(p.name for p in plans.iterdir()) == [
+        "kpi_sliding_window.txt", "q1_pricing_summary.txt",
+    ]
+    assert porcelain() == before
 
 
 @pytest.mark.skipif(

@@ -55,3 +55,36 @@ def test_driver_window_is_exactly_fifty():
     assert len(listed) == len(set(listed)), "duplicate names across window lists"
     assert set(listed) == set(workload.QUERIES)
     assert set(workload.QUERIES) == set(workload.ORACLE_SQL)
+
+
+def test_format_mirrors_are_removed_at_process_exit(tmp_path):
+    """The ORC/XML mirror queries write a per-process copy under
+    $TMPDIR; the process must remove it when it exits, or every driver
+    that runs them leaves its copy behind."""
+    import json
+    import subprocess
+    import sys
+
+    child = f"""
+import json, os
+from cdc_pipeline_spark import workload
+from cdc_pipeline_spark.session import create_spark_session
+spark = create_spark_session(app_name="mirror-exit", master="local[2]", shuffle_partitions=2)
+for name in ("nations_from_xml", "orders_priority_from_orc"):
+    workload.QUERIES[name](spark, {SF_DIR!r}).collect()
+root = os.path.join({str(tmp_path)!r}, "cdc-spark-format-mirrors")
+print(json.dumps({{"pid": os.getpid(), "made": sorted(os.listdir(root))}}))
+spark.stop()
+"""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", child],
+        cwd=repo, env=dict(os.environ, TMPDIR=str(tmp_path)),
+        capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    out = json.loads([l for l in proc.stdout.splitlines() if l.startswith("{")][-1])
+    suffix = f"-pid{out['pid']}"
+    assert [d for d in out["made"] if d.endswith(suffix)], out
+    left = list((tmp_path / "cdc-spark-format-mirrors").glob(f"*{suffix}"))
+    assert not left, left
