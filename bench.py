@@ -27,7 +27,10 @@ additionally compares every query against its frozen per-query baseline
 and exits 1 on regression: measured > 1.5x frozen AND measured above
 the 1-second noise floor (sub-second timings jitter from scheduling
 alone, see BASELINE.md, so they can't gate at a ratio). Queries new
-since the freeze are reported informationally, never failed.
+since the freeze are reported informationally, never failed. The
+freeze's ``sf`` must equal the run's (read from the ``sf<N>`` name of
+$SPARK_GRAFT_SF_DIR); otherwise it exits 2 before the session starts,
+like an unknown query name.
 
 Would-be regressions get one ISOLATION RETRY (best of three, in a FRESH
 JVM at the end of the suite) before the gate fails: multi-second
@@ -167,12 +170,12 @@ NOISE_FLOOR_SEC = 1.0
 CONTROL_QUERIES = ("kpi_sliding_window", "dedup_minhash_lsh", "embedding_kmeans")
 
 
-def load_baseline(path: str) -> dict[str, float]:
-    """Per-query frozen timings from BASELINE_QUERIES.json ({"queries":
-    {name: sec}})."""
+def load_baseline(path: str) -> tuple[float | None, dict[str, float]]:
+    """The freeze's scale factor and per-query timings from
+    BASELINE_QUERIES.json ({"sf": 0.1, "queries": {name: sec}})."""
     with open(path) as fh:
         doc = json.load(fh)
-    return {str(k): float(v) for k, v in doc["queries"].items()}
+    return doc.get("sf"), {str(k): float(v) for k, v in doc["queries"].items()}
 
 
 def host_drift(timings: dict[str, float], baseline: dict[str, float]) -> float:
@@ -293,19 +296,30 @@ def main() -> None:
     unknown = [n for n in args.names if n not in workload.QUERIES]
     if unknown:
         parser.error(f"unknown queries: {' '.join(unknown)}")
-    # load BEFORE the multi-minute run: a typo'd path must fail in
-    # milliseconds, not after the whole benchmark has been measured
-    baseline = load_baseline(args.check) if args.check else None
+    sf = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in SF_DIR else None
+    # load BEFORE the multi-minute run: a typo'd path, or a freeze of
+    # another scale factor (its timings say nothing about this one),
+    # must fail in milliseconds, not after the whole benchmark ran
+    baseline = None
+    if args.check:
+        baseline_sf, baseline = load_baseline(args.check)
+        if baseline_sf != sf:
+            parser.error(f"--check: this run is at sf {sf}, {args.check} froze sf {baseline_sf}")
     # calibration baseline: even WITHOUT --check, load the default
     # freeze if present so the record carries its own host-noise
     # calibration (drift + control ratios + loadavg) and can be
-    # adjudicated without a fresh probe
+    # adjudicated without a fresh probe; at another scale factor its
+    # ratios would read as phantom speedups/slowdowns, so only load
+    # averages are emitted there
     calib_baseline = baseline
     if calib_baseline is None:
         try:
-            calib_baseline = load_baseline(default_baseline)
+            calib_sf, calib_baseline = load_baseline(default_baseline)
         except (OSError, ValueError, KeyError):
             calib_baseline = None
+        else:
+            if calib_sf != sf:
+                calib_baseline = None
     try:
         loadavg_start: tuple[float, ...] | None = os.getloadavg()
     except OSError:
@@ -373,7 +387,6 @@ def main() -> None:
                     file=sys.stderr,
                 )
 
-    sf = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in SF_DIR else None
     doc = {
         "metric": "workload_wall_sec",
         "value": round(total, 3),
@@ -398,10 +411,7 @@ def main() -> None:
         "loadavg_end": list(loadavg_end) if loadavg_end else None,
         "cpus": int(CPUS),
     }
-    # drift/control ratios compare against the sf0.1 freeze — at any
-    # other SF they'd read as phantom speedups/slowdowns, so emit only
-    # load averages there
-    if calib_baseline is not None and SF_DIR.rstrip("/") == "/root/testdata/sf0.1":
+    if calib_baseline is not None:
         calibration["host_drift"] = round(host_drift(timings, calib_baseline), 3)
         calibration["controls"] = {
             name: {

@@ -128,19 +128,16 @@ def tumbling_traffic(
     df: DataFrame,
     time_col: str = "created_at",
     duration: str = "10 seconds",
-    with_label: bool = True,
 ) -> DataFrame:
     """Tumbling-window request count; contract row is
     ``{timestamp: epoch_ms(window.end), value: count, label: hh:mm:ss a}``
     (``traffic_builder.py:27-44``)."""
     agg = df.groupBy(window_col(time_col, duration)).agg(F.count(F.lit(1)).alias("value"))
-    cols = [
+    return agg.select(
         *window_bounds_epoch(),
         F.col("value"),
-    ]
-    if with_label:
-        cols.append(F.date_format(F.col("window.end"), "hh:mm:ss a").alias("label"))
-    return agg.select(*cols)
+        F.date_format(F.col("window.end"), "hh:mm:ss a").alias("label"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -195,13 +192,11 @@ def platform_breakdown(df: DataFrame, platform_col: str = "platform") -> DataFra
 def windowed_geo_header(
     df: DataFrame,
     time_col: str = "created_at",
-    duration: str = "1 minute",
-    slide: str | None = "30 seconds",
     load_scale: float = 0.1,
 ) -> DataFrame:
     """Windowed request count with a formatted "global load" label
     (``concat(format_number(count*scale, 1), ' TB/S')``, geo_header.py:36-40)."""
-    agg = df.groupBy(window_col(time_col, duration, slide)).agg(F.count(F.lit(1)).alias("request_count"))
+    agg = df.groupBy(window_col(time_col, "1 minute", "30 seconds")).agg(F.count(F.lit(1)).alias("request_count"))
     return agg.select(
         *window_bounds_epoch(),
         "request_count",

@@ -48,8 +48,6 @@ _CENTROID_SCHEMA = "cell int, centroid array<double>"
 def build_ivf_index(
     df: DataFrame,
     path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     cell_col: str | None = None,
     n_cells: int = 16,
     max_iters: int = 5,
@@ -83,7 +81,7 @@ def build_ivf_index(
     """
     import shutil
 
-    base = df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
+    base = df.select("vec_id", "embedding")
     if not base.head(1):
         raise ValueError("refusing to build an IVF index over an empty corpus")
     bad = base.filter(
@@ -105,8 +103,8 @@ def build_ivf_index(
 
     if cell_col is not None:
         assigned = df.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("embedding"),
+            "vec_id",
+            "embedding",
             F.col(cell_col).cast("int").alias("cell"),
         )
         if assigned.filter(F.col("cell").isNull()).head(1):

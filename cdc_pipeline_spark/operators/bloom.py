@@ -122,7 +122,6 @@ def bloom_semi_join(
     fact_key: str,
     build_key: str | None = None,
     n_bits: int = DEFAULT_N_BITS,
-    n_hashes: int = DEFAULT_N_HASHES,
 ) -> DataFrame:
     """Semi join with a Bloom runtime pre-filter: scan-side prune of
     guaranteed-non-members, then the EXACT left_semi join (which also
@@ -142,8 +141,8 @@ def bloom_semi_join(
             f"facts.{fact_key} is {fact_type}, build.{build_key} is {build_type} "
             "(cast one side first — xxhash64 membership is type-sensitive)"
         )
-    words = bloom_filter_words(build, build_key, n_bits, n_hashes)
-    pruned = facts.filter(bloom_might_contain(words, F.col(fact_key), n_hashes))
+    words = bloom_filter_words(build, build_key, n_bits, DEFAULT_N_HASHES)
+    pruned = facts.filter(bloom_might_contain(words, F.col(fact_key), DEFAULT_N_HASHES))
     return pruned.join(
         build.select(F.col(build_key).alias(fact_key)).distinct(),
         fact_key,
@@ -157,7 +156,6 @@ def bloom_anti_join(
     fact_key: str,
     build_key: str | None = None,
     n_bits: int = DEFAULT_N_BITS,
-    n_hashes: int = DEFAULT_N_HASHES,
 ) -> DataFrame:
     """``facts LEFT ANTI JOIN build`` with the BUILD side Bloom-pruned —
     the dual of :func:`bloom_semi_join`, and the incremental-ingest-dedup
@@ -192,9 +190,9 @@ def bloom_anti_join(
             f"facts.{fact_key} is {fact_type}, build.{build_key} is {build_type} "
             "(cast one side first — xxhash64 membership is type-sensitive)"
         )
-    words = bloom_filter_words(facts, fact_key, n_bits, n_hashes)
+    words = bloom_filter_words(facts, fact_key, n_bits, DEFAULT_N_HASHES)
     pruned_build = build.filter(
-        bloom_might_contain(words, F.col(build_key), n_hashes)
+        bloom_might_contain(words, F.col(build_key), DEFAULT_N_HASHES)
     )
     return facts.join(
         pruned_build.select(F.col(build_key).alias(fact_key)).distinct(),

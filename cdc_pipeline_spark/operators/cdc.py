@@ -37,14 +37,14 @@ def parse_cdc_timestamp(col: Column) -> Column:
     return F.coalesce(*attempts)
 
 
-def filter_upserts(df: DataFrame, op_col: str = "__op") -> DataFrame:
+def filter_upserts(df: DataFrame) -> DataFrame:
     """Keep create/update/snapshot rows; drop deletes (kafka_sources.py:86)."""
-    return df.filter(F.col(op_col).isin(*CDC_UPSERT_OPS))
+    return df.filter(F.col("__op").isin(*CDC_UPSERT_OPS))
 
 
-def normalize_cdc(df: DataFrame, timestamp_columns: list[str], op_col: str = "__op") -> DataFrame:
+def normalize_cdc(df: DataFrame, timestamp_columns: list[str]) -> DataFrame:
     """Op filter + timestamp normalization — the standard post-decode step."""
-    out = filter_upserts(df, op_col)
+    out = filter_upserts(df)
     for name in timestamp_columns:
         out = out.withColumn(name, parse_cdc_timestamp(F.col(name)))
     return out
@@ -79,9 +79,9 @@ def latest_state(
     )
 
 
-def soft_delete_filter(df: DataFrame, deleted_col: str = "__deleted") -> DataFrame:
+def soft_delete_filter(df: DataFrame) -> DataFrame:
     """Drop rows flagged deleted by the unwrap transform ('true' string)."""
-    return df.filter((F.col(deleted_col).isNull()) | (F.col(deleted_col) != F.lit("true")))
+    return df.filter((F.col("__deleted").isNull()) | (F.col("__deleted") != F.lit("true")))
 
 
 def scd2_history(

@@ -61,13 +61,7 @@ from cdc_pipeline_spark.operators.partitioning import ensure_parallelism as _spr
 from cdc_pipeline_spark.operators.text import tokens
 
 
-def chunk_documents(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    window: int = 64,
-    stride: int = 48,
-) -> DataFrame:
+def chunk_documents(df: DataFrame, window: int = 64, stride: int = 48) -> DataFrame:
     """Split each document into overlapping token-window chunks.
 
     Chunk ``i`` covers tokens ``[i·stride, i·stride + window)``; the
@@ -96,11 +90,11 @@ def chunk_documents(
     # drop the [''] artifact split() yields for empty/whitespace text:
     # an empty document has ZERO chunks (⌈0/stride⌉), not one phantom
     # chunk claiming a token
-    toks = F.filter(tokens(text_col), lambda t: t != F.lit(""))
+    toks = F.filter(tokens("text"), lambda t: t != F.lit(""))
     starts = F.sequence(F.lit(0), F.greatest(F.size("__toks") - 1, F.lit(0)), F.lit(stride))
     return (
         ensure_parallelism(df)
-        .select(F.col(id_col).alias("doc_id"), toks.alias("__toks"))
+        .select("doc_id", toks.alias("__toks"))
         .filter(F.size("__toks") > 0)
         .select("doc_id", "__toks", F.size("__toks").alias("__n"), F.posexplode(starts))
         .select(
@@ -114,12 +108,7 @@ def chunk_documents(
     )
 
 
-def adjacent_pair_counts(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 30,
-) -> DataFrame:
+def adjacent_pair_counts(df: DataFrame, k: int = 30) -> DataFrame:
     """Top-``k`` adjacent token pairs by corpus frequency — the
     candidate-scoring half of a BPE merge step / collocation mining.
 
@@ -134,11 +123,11 @@ def adjacent_pair_counts(
     """
     from cdc_pipeline_spark.operators.text import adjacent_grams
 
-    toks = tokens(text_col)
+    toks = tokens("text")
     pairs = adjacent_grams(F.col("__toks"))
     posting = (
         _spread(df)
-        .select(F.col(id_col).alias("doc_id"), toks.alias("__toks"))
+        .select("doc_id", toks.alias("__toks"))
         .select("doc_id", F.explode_outer(pairs).alias("pair"))
         .filter(F.col("pair").isNotNull())
     )
@@ -186,7 +175,6 @@ def merge_pair_expr(syms, a: str, b: str):
 
 def bpe_train_merges(
     df: DataFrame,
-    text_col: str = "text",
     rounds: int = 8,
     max_word_chars: int | None = None,
 ) -> list[tuple[str, str, int]]:
@@ -236,7 +224,7 @@ def bpe_train_merges(
         return []
     words = (
         _spread(df)
-        .select(F.explode(tokens(text_col)).alias("word"))
+        .select(F.explode(tokens("text")).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
@@ -402,7 +390,6 @@ def bpe_vocab_token_counts(
 
 def bpe_train_merges_local(
     df: DataFrame | None,
-    text_col: str = "text",
     rounds: int = 8,
     max_word_chars: int | None = None,
     max_vocab_rows: int = 5_000_000,
@@ -444,7 +431,7 @@ def bpe_train_merges_local(
     else:
         words_df = (
             _spread(df)
-            .select(F.explode(tokens(text_col)).alias("word"))
+            .select(F.explode(tokens("text")).alias("word"))
             .filter(F.col("word") != "")
             .groupBy("word")
             .agg(F.count(F.lit(1)).alias("freq"))
@@ -538,29 +525,21 @@ def bpe_train_merges_local(
 # ---------------------------------------------------------------------------
 
 
-def word_freq_table(
-    df: DataFrame, text_col: str = "text", max_word_chars: int = 64
-) -> DataFrame:
+def word_freq_table(df: DataFrame, max_word_chars: int = 64) -> DataFrame:
     """Distinct-word frequency table → (word, freq): the shared 100 TB
     entry stage of every tokenizer trainer here (BPE / WordPiece /
     unigram) — one map-side-combined shuffle bounded by the corpus
     VOCABULARY, not its token count."""
     return (
         _spread(df)
-        .select(F.explode(tokens(text_col)).alias("word"))
+        .select(F.explode(tokens("text")).alias("word"))
         .filter((F.col("word") != "") & (F.length("word") <= max_word_chars))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
 
 
-def wordpiece_vocab(
-    df: DataFrame,
-    text_col: str = "text",
-    vocab_size: int = 500,
-    max_piece_len: int = 4,
-    max_word_chars: int = 64,
-) -> DataFrame:
+def wordpiece_vocab(df: DataFrame, vocab_size: int = 500) -> DataFrame:
     """Select the top-``vocab_size`` subword pieces by corpus-weighted
     substring frequency → (piece, weight, rank).
 
@@ -569,12 +548,12 @@ def wordpiece_vocab(
     DISTINCT word table (bounded by vocab, not corpus), one more
     map-side-combined groupBy, and a TakeOrdered top-k. Every piece at
     every start position counts, weighted by word frequency — integer
-    sums, exact under any partitioning. ``max_word_chars`` bounds the
-    per-word substring blowup (a w-char word emits ≤ w·max_piece_len
-    pieces) against megabyte URL/base64 tokens.
+    sums, exact under any partitioning. Words are cut at 64 chars and
+    pieces at 4, which bounds the per-word substring blowup (a w-char
+    word emits ≤ 4w pieces) against megabyte URL/base64 tokens.
     """
-    words = word_freq_table(df, text_col, max_word_chars)
-    return _rank_top_pieces(_substring_piece_weights(words, max_piece_len), vocab_size)
+    words = word_freq_table(df)
+    return _rank_top_pieces(_substring_piece_weights(words, 4), vocab_size)
 
 
 def _substring_piece_weights(words: DataFrame, max_piece_len: int) -> DataFrame:
@@ -644,12 +623,7 @@ def _segment_counts_map(words: DataFrame, word_col: str, payload, segment) -> Da
     return _spread(cleaned).mapInPandas(run, "word string, n_pieces long, n_unk long")
 
 
-def wordpiece_segment_counts(
-    words: DataFrame,
-    vocab_pieces: list[str],
-    word_col: str = "word",
-    max_piece_len: int = 4,
-) -> DataFrame:
+def wordpiece_segment_counts(words: DataFrame, vocab_pieces: list[str]) -> DataFrame:
     """Greedy longest-prefix-match token counts per distinct word →
     (word, n_pieces, n_unk). At each position the longest vocab piece
     matching the prefix is consumed; no match consumes one character as
@@ -682,7 +656,7 @@ def wordpiece_segment_counts(
             pos += step
         return n_pieces, n_unk
 
-    return _segment_counts_map(words, word_col, (by_len, lengths), segment)
+    return _segment_counts_map(words, "word", (by_len, lengths), segment)
 
 
 # ---------------------------------------------------------------------------
@@ -777,7 +751,6 @@ def _viterbi_usage(
 
 def unigram_vocab(
     df: DataFrame | None,
-    text_col: str = "text",
     vocab_size: int = 200,
     seed_size: int = 600,
     max_piece_len: int = 4,
@@ -804,7 +777,7 @@ def unigram_vocab(
     words = (
         words_freq
         if words_freq is not None
-        else word_freq_table(df, text_col, max_word_chars).localCheckpoint(eager=True)
+        else word_freq_table(df, max_word_chars=max_word_chars).localCheckpoint(eager=True)
     )
     seed = {
         r["piece"]: r["weight"]
@@ -818,7 +791,6 @@ def unigram_vocab(
 def unigram_segment_counts(
     words: DataFrame,
     weights: dict[str, int],
-    word_col: str = "word",
     max_piece_len: int = 4,
 ) -> DataFrame:
     """Viterbi token counts per distinct word → (word, n_pieces, n_unk)
@@ -826,7 +798,7 @@ def unigram_segment_counts(
     broadcast + Arrow-batch harness with ``wordpiece_segment_counts``)."""
     return _segment_counts_map(
         words,
-        word_col,
+        "word",
         weights,
         lambda w_, table: unigram_viterbi(w_, table, max_piece_len)[:2],
     )

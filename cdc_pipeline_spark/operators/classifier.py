@@ -55,32 +55,28 @@ def hashed_weight_table(spark: SparkSession, buckets: int = 4096, seed: int = 13
 def linear_classifier_scores(
     df: DataFrame,
     weights: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     carry_cols: tuple[str, ...] = (),
     buckets: int = 4096,
-    scale: float = 4.0,
-    threshold: float = 0.5,
 ) -> DataFrame:
     """Score every document with the linear model in ``weights``
     ((bucket, weight DECIMAL) rows):
 
         logit = round(Σ_g w[bucket(g)] / n_grams, 6)
-        prob  = round(sigmoid(scale · logit), 6)
-        keep  = prob > threshold
+        prob  = round(sigmoid(4 · logit), 6)
+        keep  = prob > 0.5
 
-    Zero-gram documents score logit 0.0 / prob 0.5 and are dropped by
-    any threshold ≥ 0.5 (no evidence ⇒ not positively classified).
+    Zero-gram documents score logit 0.0 / prob 0.5 and are dropped
+    (no evidence ⇒ not positively classified).
 
     Output: (doc_id, *carry_cols, n_grams, logit, prob, keep).
     """
-    posting = hashed_gram_posting(df, id_col, text_col, buckets=buckets)
+    posting = hashed_gram_posting(df, buckets=buckets)
     scored = (
         posting.join(F.broadcast(weights), "bucket")
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_grams"), F.sum("weight").alias("_wsum"))
     )
-    ids = df.select(F.col(id_col).alias("doc_id"), *carry_cols)
+    ids = df.select("doc_id", *carry_cols)
     logit = round_half_up(
         F.coalesce(F.col("_wsum"), F.lit(0)).cast("double")
         / F.greatest(F.coalesce(F.col("n_grams"), F.lit(0)), F.lit(1)),
@@ -92,7 +88,7 @@ def linear_classifier_scores(
         F.coalesce("n_grams", F.lit(0).cast("long")).alias("n_grams"),
         logit.alias("logit"),
     )
-    prob = round_half_up(F.lit(1.0) / (F.lit(1.0) + F.exp(-F.lit(scale) * F.col("logit"))), 6)
+    prob = round_half_up(F.lit(1.0) / (F.lit(1.0) + F.exp(-F.lit(4.0) * F.col("logit"))), 6)
     return out.withColumn("prob", prob).withColumn(
-        "keep", F.col("prob") > F.lit(threshold)
+        "keep", F.col("prob") > F.lit(0.5)
     )

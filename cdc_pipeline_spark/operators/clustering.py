@@ -104,13 +104,7 @@ def _update(
     return sorted((int(r.cluster), list(r.centroid)) for r in updated)
 
 
-def kmeans(
-    corpus: DataFrame,
-    k: int = 8,
-    max_iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def kmeans(corpus: DataFrame, k: int = 8, max_iters: int = 5) -> DataFrame:
     """Lloyd's k-means; returns (id, cluster) assignments."""
     # materialize the (id, vector) frame once: every iteration re-reads
     # the corpus, so without this each of the max_iters+1 assign passes
@@ -120,17 +114,17 @@ def kmeans(
     # dispatch × 2 stages × 6 passes outweighs parallelizing ~0.3 s of
     # interpreted per-row fold work), so the input keeps its scan
     # layout — a 100 TB corpus arrives already parallel.
-    corpus = corpus.select(id_col, vec_col).localCheckpoint(eager=True)
+    corpus = corpus.select("vec_id", "embedding").localCheckpoint(eager=True)
     init = (
-        corpus.orderBy(F.col(id_col).asc())
+        corpus.orderBy(F.col("vec_id").asc())
         .limit(k)
-        .select(F.col(vec_col).cast("array<double>").alias("v"))
+        .select(F.col("embedding").cast("array<double>").alias("v"))
         .collect()
     )
     centroids = [(i, list(r.v)) for i, r in enumerate(init)]
 
     for _ in range(max_iters):
-        assigned = _assign(corpus, centroids, id_col, vec_col)
+        assigned = _assign(corpus, centroids, "vec_id", "embedding")
         # A cluster that received no points (possible when seed vectors
         # collide — duplicate embeddings — and the lower id wins every
         # tie) keeps its previous centroid instead of silently
@@ -138,15 +132,15 @@ def kmeans(
         # The DuckDB oracle replays the same carry-forward (LEFT JOIN
         # new means onto the previous centroid table).
         merged = dict(centroids)
-        merged.update(dict(_update(assigned, vec_col, id_col)))
+        merged.update(dict(_update(assigned, "embedding", "vec_id")))
         new_centroids = sorted(merged.items())
         converged = new_centroids == centroids
         centroids = new_centroids
         if converged:
             break
 
-    final = _assign(corpus, centroids, id_col, vec_col)
-    return final.select(F.col(id_col), F.col("cluster").cast("int").alias("cluster"))
+    final = _assign(corpus, centroids, "vec_id", "embedding")
+    return final.select(F.col("vec_id"), F.col("cluster").cast("int").alias("cluster"))
 
 
 def minibatch_kmeans(
@@ -154,9 +148,6 @@ def minibatch_kmeans(
     k: int = 8,
     max_iters: int = 5,
     batch_fraction: float = 0.25,
-    seed: int = 7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Mini-batch k-means — the 100 TB variant of :func:`kmeans`
     (promised in the module docstring; Sculley 2010, "Web-Scale K-Means
@@ -167,7 +158,7 @@ def minibatch_kmeans(
     that is the difference between 5 full scans and ~1.25.
 
     Determinism (the oracle contract): the iteration-``i`` batch is
-    ``portable_id_bucket(id, seed+i) < fraction·resolution`` — a pure
+    ``portable_id_bucket(id, 7+i) < fraction·resolution`` — a pure
     per-row expression any SQL engine replicates, no RNG state, no
     sampling operator; re-runs and re-materialized partitions see the
     identical batch. Centroid update is the id-ordered fold of
@@ -188,30 +179,30 @@ def minibatch_kmeans(
     cut = int(batch_fraction * resolution)
     # not spread — same measured trade as kmeans above (3.05 → 3.99 s
     # under a defaultParallelism repartition at bench scale)
-    corpus = corpus.select(id_col, vec_col).localCheckpoint(eager=True)
+    corpus = corpus.select("vec_id", "embedding").localCheckpoint(eager=True)
     init = (
-        corpus.orderBy(F.col(id_col).asc())
+        corpus.orderBy(F.col("vec_id").asc())
         .limit(k)
-        .select(F.col(vec_col).cast("array<double>").alias("v"))
+        .select(F.col("embedding").cast("array<double>").alias("v"))
         .collect()
     )
     centroids = [(i, list(r.v)) for i, r in enumerate(init)]
     for it in range(max_iters):
         batch = corpus.filter(
-            portable_id_bucket(F.col(id_col), seed=seed + it, resolution=resolution) < cut
+            portable_id_bucket(F.col("vec_id"), seed=7 + it, resolution=resolution) < cut
         )
         merged = dict(centroids)
-        merged.update(dict(_update(_assign(batch, centroids, id_col, vec_col), vec_col, id_col)))
+        merged.update(dict(_update(_assign(batch, centroids, "vec_id", "embedding"), "embedding", "vec_id")))
         centroids = sorted(merged.items())
-    final = _assign(corpus, centroids, id_col, vec_col)
-    return final.select(F.col(id_col), F.col("cluster").cast("int").alias("cluster"))
+    final = _assign(corpus, centroids, "vec_id", "embedding")
+    return final.select(F.col("vec_id"), F.col("cluster").cast("int").alias("cluster"))
 
 
-def distortion(corpus: DataFrame, assignments: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") -> float:
+def distortion(corpus: DataFrame, assignments: DataFrame) -> float:
     """Total within-cluster squared distance (convergence metric)."""
-    joined = corpus.join(assignments, id_col)
+    joined = corpus.join(assignments, "vec_id")
     centroids = (
-        joined.select("cluster", F.posexplode(F.col(vec_col)).alias("__pos", "__val"))
+        joined.select("cluster", F.posexplode(F.col("embedding")).alias("__pos", "__val"))
         .groupBy("cluster", "__pos")
         .agg(F.avg(F.col("__val").cast("double")).alias("__mean"))
         .groupBy("cluster")
@@ -223,19 +214,14 @@ def distortion(corpus: DataFrame, assignments: DataFrame, id_col: str = "vec_id"
     )
     with_c = joined.join(F.broadcast(centroids), "cluster")
     dist2 = F.aggregate(
-        F.zip_with(F.col(vec_col), F.col("centroid"), lambda a, b: (a.cast("double") - b) * (a.cast("double") - b)),
+        F.zip_with(F.col("embedding"), F.col("centroid"), lambda a, b: (a.cast("double") - b) * (a.cast("double") - b)),
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
     return with_c.agg(F.sum(dist2).alias("d")).collect()[0].d
 
 
-def cluster_medoids(
-    corpus: DataFrame,
-    cell_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cluster_medoids(corpus: DataFrame) -> DataFrame:
     """Per-cluster medoid: the member with the highest mean cosine to
     its cluster peers — the exemplar a semantic-dedup keep-list or a
     labeling queue samples first.
@@ -254,10 +240,8 @@ def cluster_medoids(
     """
     import pandas as pd
 
-    out_schema = (
-        f"cell {dict(corpus.dtypes)[cell_col]}, medoid_id {dict(corpus.dtypes)[id_col]}, "
-        "mean_sim double, n_members long"
-    )
+    types = dict(corpus.dtypes)
+    out_schema = f"cell {types['label']}, medoid_id {types['vec_id']}, mean_sim double, n_members long"
 
     def medoid(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
@@ -265,35 +249,29 @@ def cluster_medoids(
         # pin the group's row order: Arrow delivers rows in partition
         # arrival order, and the gram-row float sums below would
         # otherwise vary in the last ulp across partitionings
-        pdf = pdf.sort_values(id_col, kind="mergesort").reset_index(drop=True)
-        cell = pdf[cell_col].iloc[0]
+        pdf = pdf.sort_values("vec_id", kind="mergesort").reset_index(drop=True)
+        cell = pdf["label"].iloc[0]
         n = len(pdf)
         if n == 1:
             return pd.DataFrame(
-                {"cell": [cell], "medoid_id": [pdf[id_col].iloc[0]], "mean_sim": [0.0], "n_members": [1]}
+                {"cell": [cell], "medoid_id": [pdf["vec_id"].iloc[0]], "mean_sim": [0.0], "n_members": [1]}
             )
-        V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
+        V = np.stack(pdf["embedding"].to_numpy()).astype("float64")
         V = V / np.linalg.norm(V, axis=1, keepdims=True)
         sims = V @ V.T
         mean_sim = (sims.sum(axis=1) - 1.0) / (n - 1)  # exclude self-sim
         rounded = np.floor(mean_sim * 1e6 + 0.5) / 1e6
-        ids = pdf[id_col].to_numpy()
+        ids = pdf["vec_id"].to_numpy()
         order = np.lexsort((ids, -rounded))  # best score, ties → lowest id
         best = order[0]
         return pd.DataFrame(
             {"cell": [cell], "medoid_id": [ids[best]], "mean_sim": [rounded[best]], "n_members": [n]}
         )
 
-    return corpus.select(cell_col, id_col, vec_col).groupBy(cell_col).applyInPandas(medoid, out_schema)
+    return corpus.select("label", "vec_id", "embedding").groupBy("label").applyInPandas(medoid, out_schema)
 
 
-def kcenter_greedy(
-    corpus: DataFrame,
-    k: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed_id: int | None = None,
-) -> DataFrame:
+def kcenter_greedy(corpus: DataFrame, k: int = 8, seed_id: int | None = None) -> DataFrame:
     """k-center greedy (farthest-point) selection — the DIVERSITY leg of
     data selection (DSIR matches a target distribution, the quality
     classifier scores fluency; this picks a maximally-spread coreset,
@@ -330,7 +308,7 @@ def kcenter_greedy(
     re-deriving md from all r centers per round — trades that storage
     for O(r×) recompute every round).
 
-    Output: (``id_col``, selection_rank 1-based, min_dist — null for the
+    Output: (vec_id, selection_rank 1-based, min_dist — null for the
     seed, which has no prior set to be far from). Selection is WITHOUT
     replacement by id and stops early (fewer than k rows) when every
     remaining vector is at rounded distance 0 from the selected set —
@@ -344,20 +322,20 @@ def kcenter_greedy(
     # this checkpoint read neutral-to-slightly-worse at bench scale
     # (same per-round task-dispatch trade as kmeans), and a 100 TB
     # corpus arrives already parallel
-    base = corpus.select(F.col(id_col), F.col(vec_col)).localCheckpoint()
+    base = corpus.select(F.col("vec_id"), F.col("embedding")).localCheckpoint()
     n = base.count()
     # k <= 0 returns an EMPTY selection (the pre-loop seed append would
     # otherwise hand a zero-budget caller one row)
     if n == 0 or k <= 0:
         return spark.createDataFrame(
-            [], f"{id_col} long, selection_rank long, min_dist double"
+            [], "vec_id long, selection_rank long, min_dist double"
         )
     if seed_id is None:
-        seed_row = base.orderBy(F.col(id_col).asc()).limit(1).collect()[0]
+        seed_row = base.orderBy(F.col("vec_id").asc()).limit(1).collect()[0]
     else:
-        seeds = base.filter(F.col(id_col) == seed_id).limit(1).collect()
+        seeds = base.filter(F.col("vec_id") == seed_id).limit(1).collect()
         if not seeds:
-            raise ValueError(f"seed_id {seed_id} not present in {id_col}")
+            raise ValueError(f"seed_id {seed_id} not present in vec_id")
         seed_row = seeds[0]
     selected: list[tuple[int, list[float], float]] = [
         (seed_row[0], [float(x) for x in seed_row[1]], None)
@@ -371,7 +349,7 @@ def kcenter_greedy(
         # constant-size literal (dim + 1 leaves) in the round's plan
         center = F.array(*[F.lit(float(x)) for x in vec])
         return round_half_up(
-            1.0 - dot(F.col(vec_col), center) / (norm(F.col(vec_col)) * F.lit(_norm(vec))),
+            1.0 - dot(F.col("embedding"), center) / (norm(F.col("embedding")) * F.lit(_norm(vec))),
             6,
         )
 
@@ -383,13 +361,13 @@ def kcenter_greedy(
         # running min-dist state: every unselected vector with its
         # rounded distance to the (so far: seed-only) selected set
         state = (
-            base.filter(F.col(id_col) != seed_row[0])
-            .select(F.col(id_col), F.col(vec_col), _dist_to(selected[0][1]).alias("__md"))
+            base.filter(F.col("vec_id") != seed_row[0])
+            .select(F.col("vec_id"), F.col("embedding"), _dist_to(selected[0][1]).alias("__md"))
             .localCheckpoint(eager=True)
         )
     for r in range(rounds):
         picks = (
-            state.orderBy(F.col("__md").desc(), F.col(id_col).asc())
+            state.orderBy(F.col("__md").desc(), F.col("vec_id").asc())
             .limit(1)
             .collect()
         )
@@ -404,12 +382,12 @@ def kcenter_greedy(
             # picked id — selection stays WITHOUT replacement because
             # picked rows leave the state entirely
             state = (
-                state.filter(F.col(id_col) != pick[0])
+                state.filter(F.col("vec_id") != pick[0])
                 .withColumn("__md", F.least(F.col("__md"), _dist_to(selected[-1][1])))
                 .localCheckpoint(eager=True)
             )
 
     return spark.createDataFrame(
         [(int(i), r + 1, md) for r, (i, _, md) in enumerate(selected)],
-        f"{id_col} long, selection_rank long, min_dist double",
+        "vec_id long, selection_rank long, min_dist double",
     )

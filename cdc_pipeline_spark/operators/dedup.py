@@ -58,14 +58,14 @@ def _perm_params(num_perm: int, seed: int = 7) -> list[tuple[int, int]]:
     return params
 
 
-def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def exact_duplicates(df: DataFrame) -> DataFrame:
     """Exact dedup via normalized-fingerprint hash-groupBy. Returns one
     row per distinct content: canonical (min) id + duplicate count."""
     return (
-        df.select(F.col(id_col), fingerprint(text_col).alias("fingerprint"))
+        df.select(F.col("doc_id"), fingerprint("text").alias("fingerprint"))
         .groupBy("fingerprint")
         .agg(
-            F.min(id_col).alias("canonical_id"),
+            F.min("doc_id").alias("canonical_id"),
             F.count(F.lit(1)).alias("copies"),
         )
     )
@@ -165,9 +165,6 @@ def prune_hot_buckets(
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
     threshold: float = 0.3,
     max_df: int | None = None,
 ) -> DataFrame:
@@ -186,7 +183,7 @@ def ngram_jaccard_pairs(
     over-scored. Default ``None`` = exact semantics (the oracle-checked
     path); LSH (``minhash_lsh_pairs``) is the principled scale path.
     """
-    sh = _shingled(df, id_col, text_col, n)
+    sh = _shingled(df, "doc_id", "text", 3)
     # Materialize the posting ONCE: it feeds three plan references (set
     # sizes + both self-join sides), and without this the interpreted
     # shingling expression re-evaluates per reference (~3x tokenize).
@@ -238,14 +235,7 @@ def ngram_jaccard_pairs(
     )
 
 
-def prefix_filter_jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    tau_num: int = 3,
-    tau_den: int = 5,
-) -> DataFrame:
+def prefix_filter_jaccard_pairs(df: DataFrame, tau_num: int = 3, tau_den: int = 5) -> DataFrame:
     """Exact Jaccard self-join with LOSSLESS prefix filtering — the
     high-threshold scale path beside ``ngram_jaccard_pairs``.
 
@@ -276,7 +266,7 @@ def prefix_filter_jaccard_pairs(
     """
     from pyspark.sql import Window
 
-    sh = _shingled(df, id_col, text_col, n)
+    sh = _shingled(df, "doc_id", "text", 3)
     posting = _posting(sh).localCheckpoint()  # 4 downstream refs: rank, sizes, verify ×2
     sizes = posting.groupBy("doc_id").agg(F.count(F.lit(1)).alias("set_size"))
     dfreq = posting.groupBy("shingle").agg(F.count(F.lit(1)).alias("sdf"))
@@ -385,36 +375,30 @@ def prefix_filter_jaccard_pairs(
     )
 
 
-def snm_default_key(text_col: str = "text") -> Column:
+def snm_default_key() -> Column:
     """The default sorted-neighborhood sort key: whitespace-normalized
     lowercase text."""
-    return F.regexp_replace(F.trim(F.lower(F.col(text_col))), r"\s+", " ")
+    return F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
 
 
-def snm_reversed_key(text_col: str = "text") -> Column:
+def snm_reversed_key() -> Column:
     """Rotated SNM key: the REVERSED normalized text. A prefix edit
     (changed first words) moves a doc arbitrarily far in the default
     sort but leaves the reversed strings sharing a long prefix — the
     classic second merge/purge pass."""
-    return F.reverse(snm_default_key(text_col))
+    return F.reverse(snm_default_key())
 
 
-def snm_token_sorted_key(text_col: str = "text") -> Column:
+def snm_token_sorted_key() -> Column:
     """Rotated SNM key: tokens sorted lexicographically. Word-order
     shuffles (a common duplication transform) map to the SAME key, so
     shuffled near-dups become sort-adjacent."""
-    return F.concat_ws(" ", F.array_sort(F.split(snm_default_key(text_col), " ")))
+    return F.concat_ws(" ", F.array_sort(F.split(snm_default_key(), " ")))
 
 
 def sorted_neighborhood_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    block_chars: int = 12,
     window: int = 4,
-    tau_num: int = 1,
-    tau_den: int = 2,
     passes: list[Column] | None = None,
 ) -> DataFrame:
     """Sorted-neighborhood near-dup pairs (Hernández & Stolfo's
@@ -424,10 +408,10 @@ def sorted_neighborhood_pairs(
 
     Docs are keyed by each sort key in ``passes`` (default: one pass on
     the whitespace-normalized lowercase text); per pass, each block
-    (first ``block_chars`` of the key) is sorted and every doc is
+    (first 12 chars of the key) is sorted and every doc is
     compared ONLY to its ``window − 1`` successors. Candidates from all
     passes are unioned (distinct) and verified ONCE with exact
-    word-n-gram Jaccard (``array_intersect`` on the shingle sets —
+    word-3-gram Jaccard ≥ τ = 1/2 (``array_intersect`` on the shingle sets —
     candidate-proportional, ≤ passes·(window−1)·|corpus| pairs by
     construction, never df²). A single pass trades recall for that
     HARD bound: near-dups whose sort keys land far apart (edits in the
@@ -446,13 +430,13 @@ def sorted_neighborhood_pairs(
     from pyspark.sql import Window
 
     if passes is None:
-        passes = [snm_default_key(text_col)]
+        passes = [snm_default_key()]
     if not passes:
         raise ValueError("sorted_neighborhood_pairs needs at least one pass key")
     base = _spread(df).select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         *[p.alias(f"__key{i}") for i, p in enumerate(passes)],
-        word_shingles(text_col, n).alias("sh"),
+        word_shingles("text", 3).alias("sh"),
     )
     if len(passes) > 1:
         # pass sorts + both verify sides all consume the shingled frame:
@@ -464,7 +448,7 @@ def sorted_neighborhood_pairs(
     for i in range(len(passes)):
         keyed = (
             base.select("doc_id", F.col(f"__key{i}").alias("sort_key"))
-            .withColumn("block", F.substring("sort_key", 1, block_chars))
+            .withColumn("block", F.substring("sort_key", 1, 12))
             .withColumn(
                 "rn",
                 F.row_number().over(
@@ -503,7 +487,7 @@ def sorted_neighborhood_pairs(
         )
         .filter(
             (F.col("union_size") > 0)
-            & (F.lit(tau_den) * F.col("intersection") >= F.lit(tau_num) * F.col("union_size"))
+            & (F.lit(2) * F.col("intersection") >= F.lit(1) * F.col("union_size"))
         )
         .withColumn(
             "jaccard", round_half_up(F.col("intersection") / F.col("union_size"), 6)
@@ -511,15 +495,7 @@ def sorted_neighborhood_pairs(
     )
 
 
-def fuzzy_join(
-    left: DataFrame,
-    right: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.3,
-    max_df: int | None = None,
-) -> DataFrame:
+def fuzzy_join(left: DataFrame, right: DataFrame, threshold: float = 0.3) -> DataFrame:
     """Two-TABLE fuzzy equi-join on text similarity (entity resolution /
     record linkage — e.g. scraped documents ↔ license metadata by
     title): word-n-gram Jaccard between every left/right pair sharing a
@@ -528,9 +504,7 @@ def fuzzy_join(
     join is posting(left) ⨝ posting(right), so candidates are
     data-proportional to shared shingles, never |L|×|R|.
 
-    Returns (left_id, right_id, jaccard ≥ threshold). ``max_df`` prunes
-    hot shingles from the candidate join exactly as in the self-join
-    (set sizes stay exact; scores are lower bounds). For asymmetric
+    Returns (left_id, right_id, jaccard ≥ threshold). For asymmetric
     sizes, pass the SMALLER table as ``right`` — its posting list is the
     one a future optimization would broadcast.
     """
@@ -540,28 +514,16 @@ def fuzzy_join(
     # serialized checkpoint jobs + cache write/read cost more than the
     # duplicate tokenize, interleaved A/B at sf0.1: ~1.9s vs ~2.5s) —
     # so no localCheckpoint here, unlike the 3-reference self-join case.
-    lsh = _posting(_shingled(left, id_col, text_col, n)).select(
+    lsh = _posting(_shingled(left, "doc_id", "text", 3)).select(
         F.col("doc_id").alias("left_id"), "shingle"
     )
-    rsh = _posting(_shingled(right, id_col, text_col, n)).select(
+    rsh = _posting(_shingled(right, "doc_id", "text", 3)).select(
         F.col("doc_id").alias("right_id"), "shingle"
     )
-    join_l, join_r = lsh, rsh
-    if max_df is not None:
-        df_counts = (
-            lsh.select(F.col("left_id").alias("id"), "shingle")
-            .unionAll(rsh.select(F.col("right_id").alias("id"), "shingle"))
-            .groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") > max_df)
-            .select("shingle")
-        )
-        join_l = lsh.join(F.broadcast(df_counts), "shingle", "left_anti")
-        join_r = rsh.join(F.broadcast(df_counts), "shingle", "left_anti")
     sizes_l = lsh.groupBy("left_id").agg(F.count(F.lit(1)).alias("size_l"))
     sizes_r = rsh.groupBy("right_id").agg(F.count(F.lit(1)).alias("size_r"))
     inter = (
-        join_l.join(join_r, "shingle")
+        lsh.join(rsh, "shingle")
         .groupBy("left_id", "right_id")
         .agg(F.count(F.lit(1)).alias("intersection"))
     )
@@ -576,18 +538,12 @@ def fuzzy_join(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_perm: int = 64,
-) -> DataFrame:
+def minhash_signatures(df: DataFrame, n: int = 3, num_perm: int = 64) -> DataFrame:
     """MinHash signatures: num_perm column-wise minima of affine-permuted
     shingle hashes. One explode + one groupBy; signature size is fixed per
     doc regardless of document length — the property that makes this the
     scale path for 100 TB dedup."""
-    sh = _shingled(df, id_col, text_col, n)
+    sh = _shingled(df, "doc_id", "text", n)
     posting = _posting(sh)
     # Materialize the base hash ONCE per posting row (xxhash64 → pmod
     # keeps it in the field); referencing it inline in the 64 min-agg
@@ -642,11 +598,6 @@ def _band_t(num_perm: int, bands: int) -> tuple:
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_perm: int = 64,
-    bands: int = 16,
     threshold: float = 0.3,
     verify: bool = True,
     max_bucket: int | None = None,
@@ -663,15 +614,8 @@ def minhash_lsh_pairs(
     :func:`prune_hot_buckets`) to cap per-bucket membership and keep the
     candidate join linear. Default ``None`` = exact enumeration.
     """
-    if num_perm % bands != 0 or num_perm < bands:
-        raise ValueError(
-            f"bands ({bands}) must evenly divide num_perm ({num_perm}); "
-            "otherwise permutations are silently dropped or band hashes degenerate"
-        )
-    sig = minhash_signatures(df, id_col, text_col, n, num_perm)
-    melted = prune_hot_buckets(
-        band_posting(sig, num_perm, bands), ["band", "bucket"], max_bucket
-    )
+    sig = minhash_signatures(df)
+    melted = prune_hot_buckets(band_posting(sig, 64, 16), ["band", "bucket"], max_bucket)
     pairs = (
         melted.alias("l")
         .join(melted.alias("r"), ["band", "bucket"])
@@ -684,7 +628,7 @@ def minhash_lsh_pairs(
     # Verify ONLY the candidates: join their shingle sets back and compute
     # exact Jaccard via array_intersect — O(candidates), never the full
     # posting-list self-join (that's what LSH is here to avoid).
-    sh = _shingled(df, id_col, text_col, n)
+    sh = _shingled(df, "doc_id", "text", 3)
     a_side = sh.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("__sa"))
     b_side = sh.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("__sb"))
     inter = F.size(F.array_intersect(F.col("__sa"), F.col("__sb")))
@@ -701,9 +645,6 @@ def minhash_lsh_pairs(
 def incremental_minhash_neardup(
     df: DataFrame,
     incoming: Column,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
     num_perm: int = 64,
     bands: int = 16,
     threshold: float = 0.5,
@@ -730,8 +671,8 @@ def incremental_minhash_neardup(
     if num_perm % bands:
         raise ValueError(f"bands={bands} must divide num_perm={num_perm}")
     marked = df.withColumn("__incoming", incoming)
-    sig = minhash_signatures(marked, id_col, text_col, n, num_perm)
-    flags = marked.select(F.col(id_col).alias("doc_id"), "__incoming")
+    sig = minhash_signatures(marked, num_perm=num_perm)
+    flags = marked.select("doc_id", "__incoming")
     # Both probe sides filter this frame; localCheckpoint so the 64-hash
     # signature pass runs once, not once per side (bands rows/doc — tiny).
     # The hot-bucket cap counts BOTH sides together: the hazard is a hot
@@ -746,7 +687,7 @@ def incremental_minhash_neardup(
         F.col("doc_id").alias("match_id"), "band", "bucket"
     )
     cand = new_side.join(hist_side, ["band", "bucket"]).select("doc_id", "match_id").distinct()
-    sh = _shingled(marked, id_col, text_col, n)
+    sh = _shingled(marked, "doc_id", "text", 3)
     a_side = sh.select(F.col("doc_id"), F.col("shingles").alias("__sa"))
     b_side = sh.select(F.col("doc_id").alias("match_id"), F.col("shingles").alias("__sb"))
     inter = F.size(F.array_intersect(F.col("__sa"), F.col("__sb")))
@@ -778,20 +719,14 @@ def portable_token_hash(col: Column) -> Column:
     )
 
 
-def simhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 32,
-    token_hash=None,
-) -> DataFrame:
+def simhash_signatures(df: DataFrame, bits: int = 32, token_hash=None) -> DataFrame:
     """SimHash: sign of the per-bit sum of token hash bits (+1/−1),
     packed into a single long. One explode + groupBy with `bits` sums.
     ``token_hash`` (Column → Column) overrides the xxhash64 default —
     pass ``portable_token_hash`` for a DuckDB-replicable signature
     (cap ``bits`` at 31 with it: values are mod 2³¹−1)."""
     posting = _posting(
-        _spread(df).select(F.col(id_col).alias("doc_id"), tokens(text_col).alias("toks")),
+        _spread(df).select("doc_id", tokens("text").alias("toks")),
         array_col="toks",
         out_col="token",
     ).filter(
@@ -840,8 +775,6 @@ SIMHASH_DEFAULT_MAX_BUCKET = 64
 
 def simhash_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     bits: int = 32,
     max_hamming: int = 3,
     bands: int = 4,
@@ -883,10 +816,9 @@ def simhash_pairs(
     scale harness uses it to assert candidate volume (what the banding
     actually exchanges) separately from emitted-pair volume (which may
     legitimately grow superlinearly when near-dup clusters densify)."""
-    sig = simhash_signatures(df, id_col, text_col, bits, token_hash=token_hash)
+    sig = simhash_signatures(df, bits=bits, token_hash=token_hash)
     return hamming_banded_pairs(
         sig,
-        id_col="doc_id",
         sig_col="simhash",
         bits=bits,
         bands=bands,
@@ -899,7 +831,6 @@ def simhash_pairs(
 
 def banded_chunks(
     sig: DataFrame,
-    id_col: str = "doc_id",
     sig_col: str = "simhash",
     bits: int = 32,
     bands: int = 4,
@@ -919,7 +850,7 @@ def banded_chunks(
     mask = (1 << chunk) - 1
     # two projections: the explode must not lateral-reference an alias
     # minted in its own select list
-    base = sig.select(F.col(id_col).alias("doc_id"), F.col(sig_col).alias("__sig"))
+    base = sig.select("doc_id", F.col(sig_col).alias("__sig"))
     return base.select(
         "doc_id",
         "__sig",
@@ -945,7 +876,6 @@ def banded_chunks(
 
 def hamming_banded_pairs(
     sig: DataFrame,
-    id_col: str = "doc_id",
     sig_col: str = "simhash",
     bits: int = 32,
     bands: int = 4,
@@ -964,7 +894,7 @@ def hamming_banded_pairs(
     and its measured scale contract (see simhash_pairs' docstring; the
     cap, recall trade, and WARNING logging apply verbatim here).
     Returns (id_a, id_b, hamming) with id_a < id_b."""
-    banded = banded_chunks(sig, id_col, sig_col, bits, bands)
+    banded = banded_chunks(sig, sig_col, bits, bands)
     banded = prune_hot_buckets(banded, ["band", "chunk"], max_bucket, what=what)
     l, r = banded.alias("l"), banded.alias("r")
     cand = (
@@ -983,8 +913,6 @@ def hamming_banded_pairs(
 
 def tfidf_cosine_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.3,
     max_df_ratio: float = 0.5,
 ) -> DataFrame:
@@ -1010,8 +938,8 @@ def tfidf_cosine_pairs(
     tok = (
         _spread(df)
         .select(
-            F.col(id_col).alias("doc_id"),
-            F.explode_outer(F.split(F.trim(F.lower(F.col(text_col))), r"\s+")).alias("token"),
+            "doc_id",
+            F.explode_outer(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("token"),
         )
         # split('') yields [''] — without the emptiness filter every
         # empty/whitespace-only doc carries one phantom '' token and all
@@ -1079,13 +1007,7 @@ def tfidf_cosine_pairs(
     )
 
 
-def keep_best_canonical(
-    components: DataFrame,
-    quality: DataFrame,
-    id_col: str = "doc_id",
-    component_col: str = "component",
-    quality_col: str = "quality",
-) -> DataFrame:
+def keep_best_canonical(components: DataFrame, quality: DataFrame) -> DataFrame:
     """Canonical-document selection: given a (doc → component) labeling
     (from ``graph.connected_components`` over near-dup pairs) and a
     per-document quality score, keep exactly ONE document per cluster —
@@ -1098,7 +1020,7 @@ def keep_best_canonical(
     dedup aspiration at a pairs-only level; cluster-then-select is the
     form a 100 TB corpus build actually ships.
 
-    One shuffle: the component join is a plain equi-join on ``id_col``
+    One shuffle: the component join is a plain equi-join on ``doc_id``
     (broadcast when quality is a thin projection), and rank + member
     count share one window partitioning on the component label.
 
@@ -1111,31 +1033,26 @@ def keep_best_canonical(
     """
     from pyspark.sql import Window
 
-    j = components.join(quality, id_col, "left")
-    w = Window.partitionBy(component_col)
+    j = components.join(quality, "doc_id", "left")
+    w = Window.partitionBy("component")
     ranked = j.withColumn(
         "__rn",
         F.row_number().over(
-            w.orderBy(F.col(quality_col).desc_nulls_last(), F.col(id_col).asc())
+            w.orderBy(F.col("quality").desc_nulls_last(), F.col("doc_id").asc())
         ),
     ).withColumn("members", F.count(F.lit(1)).over(w))
     return (
         ranked.filter(F.col("__rn") == 1)
         .select(
-            F.col(component_col),
-            F.col(id_col).alias("canonical_id"),
-            F.col(quality_col).alias("best_quality"),
+            F.col("component"),
+            F.col("doc_id").alias("canonical_id"),
+            F.col("quality").alias("best_quality"),
             F.col("members").cast("long").alias("members"),
         )
     )
 
 
-def cross_doc_span_coverage(
-    df: DataFrame,
-    n: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def cross_doc_span_coverage(df: DataFrame, n: int = 8) -> DataFrame:
     """Cross-document span repetition: per document, the fraction of its
     token n-gram windows that also occur in at least one OTHER document.
     This is the signal behind span-level dedup (Lee et al. 2021,
@@ -1158,7 +1075,7 @@ def cross_doc_span_coverage(
 
     Output: (doc_id, n_windows, n_dup_windows, dup_frac).
     """
-    toks = df.select(F.col(id_col).alias("doc_id"), tokens(text_col).alias("__t")).filter(
+    toks = df.select("doc_id", tokens("text").alias("__t")).filter(
         F.size("__t") >= n
     )
     windows = toks.select(
@@ -1181,12 +1098,7 @@ def cross_doc_span_coverage(
     )
 
 
-def max_dup_span(
-    df: DataFrame,
-    n: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def max_dup_span(df: DataFrame, n: int = 8) -> DataFrame:
     """Longest contiguous duplicated span per document — the actionable
     half of span-level dedup (Lee et al. 2021 cut the duplicated
     substring, not the document): where `cross_doc_span_coverage` says
@@ -1215,7 +1127,7 @@ def max_dup_span(
     from pyspark.sql import Window
 
     toks = df.select(
-        F.col(id_col).alias("doc_id"), tokens(text_col).alias("__t")
+        "doc_id", tokens("text").alias("__t")
     ).filter(F.size("__t") >= n)
     windows = toks.select(
         "doc_id",
@@ -1259,12 +1171,7 @@ def max_dup_span(
     )
 
 
-def segment_posting(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    seg_tokens: int = 8,
-) -> DataFrame:
+def segment_posting(df: DataFrame, seg_tokens: int = 8) -> DataFrame:
     """(doc_id, pos, segment) posting of fixed-width token segments —
     the unit of paragraph/line-level dedup. Real corpora segment on a
     structural delimiter (newline / double-newline); for delimiter-free
@@ -1272,8 +1179,8 @@ def segment_posting(
     the downstream keep-first semantics are identical either way.
     Pure JVM expressions (split / transform / slice / posexplode)."""
     toks = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.filter(tokens(text_col), lambda t: t != F.lit("")).alias("__t"),
+        "doc_id",
+        F.filter(tokens("text"), lambda t: t != F.lit("")).alias("__t"),
     )
     n_seg = F.ceil(F.size("__t") / F.lit(seg_tokens)).cast("int")
     segs = F.when(
@@ -1286,12 +1193,7 @@ def segment_posting(
     return toks.select("doc_id", F.posexplode(segs).alias("pos", "segment"))
 
 
-def segment_dedup(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    seg_tokens: int = 8,
-) -> DataFrame:
+def segment_dedup(df: DataFrame, seg_tokens: int = 8) -> DataFrame:
     """Paragraph/line-level dedup with document reconstruction (the
     CCNet line-dedup shape, Wenzek et al. 2020 §3.1: drop every repeated
     paragraph, keep its globally-first occurrence): a segment survives
@@ -1311,7 +1213,7 @@ def segment_dedup(
     Output: (doc_id, n_segments, n_kept, dedup_text) — docs whose every
     segment was seen earlier rebuild to ''.
     """
-    posting = segment_posting(df, id_col, text_col, seg_tokens)
+    posting = segment_posting(df, seg_tokens=seg_tokens)
     # struct comparison is lexicographic field-by-field, so the min IS
     # the globally-first (doc_id, pos) occurrence of each segment.
     kept = (
@@ -1334,7 +1236,7 @@ def segment_dedup(
             ),
         ).alias("dedup_text"),
     )
-    ids = df.select(F.col(id_col).alias("doc_id"))
+    ids = df.select("doc_id")
     return (
         ids.join(totals, "doc_id", "left")
         .join(rebuilt, "doc_id", "left")

@@ -39,13 +39,7 @@ from cdc_pipeline_spark.operators.sampling import portable_id_bucket
 from cdc_pipeline_spark.operators.text import tokens
 
 
-def hashed_gram_posting(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    buckets: int = 4096,
-    bigrams: bool = True,
-) -> DataFrame:
+def hashed_gram_posting(df: DataFrame, buckets: int = 4096) -> DataFrame:
     """(doc_id, bucket) posting of hashed unigram (+ bigram) features —
     the DSIR feature space. Buckets via the portable codepoint-fold hash
     mod ``buckets`` so a SQL oracle can replicate the feature extraction
@@ -56,16 +50,13 @@ def hashed_gram_posting(
     hash is interpreted (higher-order F.aggregate), so a single-file
     parquet input would otherwise run it on one core."""
     from cdc_pipeline_spark.operators.partitioning import ensure_parallelism as _spread
+    from cdc_pipeline_spark.operators.text import adjacent_grams
 
     toks = _spread(df).select(
-        F.col(id_col).alias("doc_id"),
-        F.filter(tokens(text_col), lambda t: t != F.lit("")).alias("toks"),
+        "doc_id",
+        F.filter(tokens("text"), lambda t: t != F.lit("")).alias("toks"),
     )
-    grams: Column = F.col("toks")
-    if bigrams:
-        from cdc_pipeline_spark.operators.text import adjacent_grams
-
-        grams = F.concat(grams, adjacent_grams(F.col("toks")))
+    grams = F.concat(F.col("toks"), adjacent_grams(F.col("toks")))
     posting = toks.select("doc_id", F.explode(grams).alias("gram"))
     return posting.select(
         "doc_id", (portable_token_hash(F.col("gram")) % F.lit(buckets)).alias("bucket")
@@ -79,18 +70,14 @@ def _bucket_counts(posting: DataFrame) -> DataFrame:
 def dsir_log_weights(
     raw: DataFrame,
     target: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     carry_cols: tuple[str, ...] = (),
-    buckets: int = 4096,
-    alpha: float = 1.0,
-    bigrams: bool = True,
 ) -> DataFrame:
     """Per-raw-document DSIR importance log-weight:
 
         log w(x) = Σ_g  [ ln p_target(bucket(g)) − ln q_raw(bucket(g)) ]
 
-    with add-``alpha`` smoothing on both bag-of-grams models. Documents
+    with add-one smoothing on both bag-of-grams models (4096 hashed
+    unigram + bigram buckets). Documents
     with zero grams get log_weight 0.0 (the empty product).
 
     Output: (doc_id, *carry_cols, n_grams, log_weight) — log_weight
@@ -102,15 +89,15 @@ def dsir_log_weights(
     # per-doc scoring join); localCheckpoint it so the interpreted
     # portable hash runs over the corpus once, not twice. The posting is
     # 2 ints/gram — at cluster scale persist(DISK_ONLY) it instead.
-    rp = hashed_gram_posting(raw, id_col, text_col, buckets, bigrams).localCheckpoint()
-    tp = hashed_gram_posting(target, id_col, text_col, buckets, bigrams)
+    rp = hashed_gram_posting(raw).localCheckpoint()
+    tp = hashed_gram_posting(target)
     rc = _bucket_counts(rp).withColumnRenamed("cnt", "rc")
     tc = _bucket_counts(tp).withColumnRenamed("cnt", "tc")
     totals = rc.agg(F.sum("rc").cast("double").alias("rtot")).crossJoin(
         tc.agg(F.sum("tc").cast("double").alias("ttot"))
     )
-    denom_r = F.col("rtot") + F.lit(float(alpha) * buckets)
-    denom_t = F.col("ttot") + F.lit(float(alpha) * buckets)
+    denom_r = F.col("rtot") + F.lit(4096.0)
+    denom_t = F.col("ttot") + F.lit(4096.0)
     # buckets absent from the target model get the pure-smoothing mass;
     # buckets absent from the RAW model cannot occur when scoring raw
     # docs (a doc's bucket is by construction in the raw counts)
@@ -120,8 +107,8 @@ def dsir_log_weights(
         .select(
             "bucket",
             round_half_up(
-                F.log((F.coalesce("tc", F.lit(0)) + F.lit(float(alpha))) / denom_t)
-                - F.log((F.col("rc") + F.lit(float(alpha))) / denom_r),
+                F.log((F.coalesce("tc", F.lit(0)) + F.lit(1.0)) / denom_t)
+                - F.log((F.col("rc") + F.lit(1.0)) / denom_r),
                 6,
             )
             .cast("decimal(18,6)")
@@ -136,7 +123,7 @@ def dsir_log_weights(
             F.sum("logratio").alias("_logw_dec"),
         )
     )
-    ids = raw.select(F.col(id_col).alias("doc_id"), *carry_cols)
+    ids = raw.select("doc_id", *carry_cols)
     return ids.join(scored, "doc_id", "left").select(
         "doc_id",
         *carry_cols,
@@ -148,33 +135,25 @@ def dsir_log_weights(
     )
 
 
-def deterministic_gumbel(id_col: Column, seed: int = 7, resolution: int = 1_000_000) -> Column:
+def deterministic_gumbel(id_col: Column) -> Column:
     """Gumbel(0,1) noise from the portable multiplicative id hash:
-    u = (bucket+1)/(resolution+1) ∈ (0,1), g = −ln(−ln u). Rerun-stable
-    and replicable verbatim in any SQL engine; vary ``seed`` per epoch
-    to redraw."""
-    u = (portable_id_bucket(id_col, seed, resolution) + F.lit(1)) / F.lit(
-        float(resolution + 1)
-    )
+    u = (bucket+1)/(10⁶+1) ∈ (0,1), g = −ln(−ln u). Rerun-stable
+    and replicable verbatim in any SQL engine."""
+    u = (portable_id_bucket(id_col, 7, 1_000_000) + F.lit(1)) / F.lit(1_000_001.0)
     return -F.log(-F.log(u))
 
 
-def dsir_select(
-    weights: DataFrame,
-    k: int,
-    seed: int = 7,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def dsir_select(weights: DataFrame, k: int) -> DataFrame:
     """Gumbel-top-k resampling over DSIR log-weights: key = log w + G_i
     with deterministic per-id Gumbel noise; take the global top ``k``
     (orderBy+limit ⇒ TakeOrdered — no global sort). Ties on the rounded
     key break by doc_id, so the selected set is engine-reproducible."""
     key = round_half_up(
-        F.col("_logw_dec").cast("double") + deterministic_gumbel(F.col(id_col), seed), 6
+        F.col("_logw_dec").cast("double") + deterministic_gumbel(F.col("doc_id")), 6
     )
     return (
         weights.withColumn("sample_key", key)
         .drop("_logw_dec")
-        .orderBy(F.desc("sample_key"), id_col)
+        .orderBy(F.desc("sample_key"), "doc_id")
         .limit(k)
     )

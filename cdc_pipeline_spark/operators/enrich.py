@@ -27,7 +27,6 @@ def broadcast_enrich(
     dim: DataFrame,
     on: list[str] | None = None,
     how: str = "left",
-    condition=None,
     max_broadcast_rows: int | None = None,
 ) -> DataFrame:
     """Left broadcast equi-join of a fact stream/table with a dimension.
@@ -50,18 +49,14 @@ def broadcast_enrich(
                 "omitting the broadcast hint (AQE decides the join strategy)",
                 max_broadcast_rows,
             )
-            return fact.join(dim, on=on if condition is None else condition, how=how)
-    return fact.join(F.broadcast(dim), on=on if condition is None else condition, how=how)
+            return fact.join(dim, on=on, how=how)
+    return fact.join(F.broadcast(dim), on=on, how=how)
 
 
 def two_level_region_lookup(
     fact: DataFrame,
     city_map: DataFrame,
     country_map: DataFrame,
-    country_col: str = "country_code",
-    city_col: str = "city",
-    out_col: str = "region_name",
-    default: str = "Unknown",
 ) -> DataFrame:
     """Two-level region resolution (DESCRIPTION.md:871-893).
 
@@ -95,7 +90,7 @@ def two_level_region_lookup(
     ) if patterns else F.array().cast("array<struct<c:string,p:string,r:string>>")
     matches = F.filter(
         entries,
-        lambda e: (e["c"] == F.col(country_col)) & F.col(city_col).startswith(e["p"]),
+        lambda e: (e["c"] == F.col("country_code")) & F.col("city").startswith(e["p"]),
     )
     # sorted longest-first at build time → element 0 IS the longest match
     city_region = F.when(F.size(matches) > 0, matches[0]["r"])
@@ -106,8 +101,8 @@ def two_level_region_lookup(
     )
     step1 = fact.withColumn("__cm_region", city_region)
     step2 = step1.join(
-        F.broadcast(country_dim), step1[country_col] == F.col("__co_country"), "left"
+        F.broadcast(country_dim), step1["country_code"] == F.col("__co_country"), "left"
     )
     return step2.withColumn(
-        out_col, F.coalesce(F.col("__cm_region"), F.col("__co_region"), F.lit(default))
+        "region_name", F.coalesce(F.col("__cm_region"), F.col("__co_region"), F.lit("Unknown"))
     ).drop("__cm_region", "__co_country", "__co_region")

@@ -248,24 +248,23 @@ def _star_components(
     return nodes.unionAll(centers).groupBy("node").agg(F.min("label").alias("label"))
 
 
-def pagerank_fixed_point(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    n_iter: int = 5,
-    damping_pct: int = 85,
-    scale: int = 1_000_000_000,
-) -> DataFrame:
+# pagerank_fixed_point's fixed-point unit (ranks are integers in units of
+# 1/PAGERANK_SCALE) and its damping factor in percent
+PAGERANK_SCALE = 1_000_000_000
+DAMPING_PCT = 85
+
+
+def pagerank_fixed_point(edges: DataFrame, n_iter: int = 5) -> DataFrame:
     """Damped PageRank over an undirected edge list in EXACT fixed-point
     integer arithmetic — centrality for near-dup graphs (e.g. rank the
     most-connected document of a duplicate blob as its canonical pick).
 
-    Ranks are integers in units of 1/``scale``:
+    Ranks are integers in units of 1/``PAGERANK_SCALE``:
 
-        rank ← base + damping_pct · Σ_{u→v} (rank(u) div outdeg(u)) / 100
+        rank ← base + DAMPING_PCT · Σ_{u→v} (rank(u) div outdeg(u)) / 100
 
     with ``div`` true integer division, so every iteration is
-    order-independent, overflow-safe (mass ≤ scale, × 85 ≪ 2⁶³) and
+    order-independent, overflow-safe (mass ≤ PAGERANK_SCALE, × 85 ≪ 2⁶³) and
     bit-identical on any engine — an unrolled SQL replay reproduces the
     trajectory exactly, floating-point drift impossible. Floor division
     leaks ≤ 1 unit of mass per (node, iteration): deterministic, and
@@ -280,12 +279,12 @@ def pagerank_fixed_point(
     (an undirected graph has no dangling nodes, so no teleport-mass
     correction is needed).
 
-    Output: (node, rank_fp, rank) — rank = rank_fp / scale as double
+    Output: (node, rank_fp, rank) — rank = rank_fp / PAGERANK_SCALE as double
     (exact: rank_fp < 2⁵³).
     """
     # checkpoint BEFORE the symmetrizing union: both branches reference
     # `edges`, and an expensive upstream pair pipeline would run twice
-    base = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint(
+    base = edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v")).localCheckpoint(
         eager=True
     )
     adj = (
@@ -299,8 +298,8 @@ def pagerank_fixed_point(
         return adj.sparkSession.createDataFrame(
             [], "node long, rank_fp long, rank double"
         )
-    init = scale // n
-    base = (scale * (100 - damping_pct)) // 100 // n
+    init = PAGERANK_SCALE // n
+    base = (PAGERANK_SCALE * (100 - DAMPING_PCT)) // 100 // n
     # Right-size per-round parallelism from the (already collected) node
     # count: a near-dup graph is usually tiny next to its corpus, and 32
     # shuffle tasks per round on a 50-node graph is pure scheduling
@@ -329,11 +328,11 @@ def pagerank_fixed_point(
                 "outdeg",
                 # `div` = true integer division (Spark `/` would be double)
                 F.expr(
-                    f"CAST({base} + (({damping_pct} * coalesce(__s, 0)) div 100) AS BIGINT)"
+                    f"CAST({base} + (({DAMPING_PCT} * coalesce(__s, 0)) div 100) AS BIGINT)"
                 ).alias("rank_fp"),
             )
             .localCheckpoint(eager=True)
         )
     return state.select(
-        "node", "rank_fp", (F.col("rank_fp") / F.lit(float(scale))).alias("rank")
+        "node", "rank_fp", (F.col("rank_fp") / F.lit(float(PAGERANK_SCALE))).alias("rank")
     )

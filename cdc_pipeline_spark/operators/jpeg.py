@@ -493,13 +493,12 @@ def _encode_block(
 def encode_jpeg_baseline(
     pixels: "np.ndarray",
     subsample: str = "444",
-    quant: int = 1,
     restart_interval: int = 0,
 ) -> bytes:
     """Minimal baseline JPEG encoder for test fixtures: 8-bit grayscale
     (h, w) / (h, w, 1) or RGB (h, w, 3); ``subsample`` '444' or '420';
-    flat quantization (``quant`` for every coefficient — 1 keeps the
-    only loss at DCT rounding); optional DRI/RST emission so the
+    flat quantization (1 for every coefficient, so the only loss is DCT
+    rounding); optional DRI/RST emission so the
     decoder's restart path is testable."""
     arr = np.asarray(pixels, dtype=np.uint8)
     if arr.ndim == 3 and arr.shape[2] == 1:
@@ -543,7 +542,7 @@ def encode_jpeg_baseline(
         pp[:, pw:] = pp[:, pw - 1:pw]
         padded.append(pp)
 
-    q_z = np.full(64, int(quant), dtype=np.int64)  # flat table, zigzag order
+    q_z = np.full(64, 1, dtype=np.int64)  # flat table, zigzag order
     dc_codes = _encode_codes(_DC_BITS, _DC_VALS)
     ac_codes = _encode_codes(_AC_BITS, _AC_VALS)
 

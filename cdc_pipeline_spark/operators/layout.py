@@ -80,39 +80,22 @@ def zorder_sort(
     return out.drop("__zkey", *[f"__zr_{c}" for c in cols])
 
 
-def compact_small_files(
-    spark,
-    path: str,
-    target_rows_per_file: int,
-    partition_cols: list[str] | None = None,
-) -> int:
-    """Rewrite a parquet directory into ceil(total/target) files (per
-    partition directory when partitioned). Returns the file count
+def compact_small_files(spark, path: str, target_rows_per_file: int) -> int:
+    """Rewrite a parquet directory into ceil(total/target) files.
+    Returns the file count
     written. Read → repartition → overwrite-to-temp → swap would be the
     zero-downtime variant; here the overwrite is in place (the caller
     owns scheduling around readers)."""
     import math
 
     df = spark.read.parquet(path)
-    if partition_cols:
-        # one task per partition VALUE — hash-random tasks would each
-        # write a file into (almost) every directory, MULTIPLYING small
-        # files instead of compacting; maxRecordsPerFile re-splits any
-        # hot partition that exceeds the target
-        compacted = df.repartition(*[F.col(c) for c in partition_cols])
-    else:
-        total = df.count()
-        n_files = max(1, math.ceil(total / target_rows_per_file))
-        compacted = df.repartition(n_files)
+    n_files = max(1, math.ceil(df.count() / target_rows_per_file))
     # write to a sibling temp dir then swap — a failed in-place overwrite
     # would destroy the only copy
     tmp = path.rstrip("/") + ".__compact_tmp"
-    writer = compacted.write.mode("overwrite").option(
+    df.repartition(n_files).write.mode("overwrite").option(
         "maxRecordsPerFile", int(target_rows_per_file)
-    )
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(tmp)
+    ).parquet(tmp)
     import glob
     import shutil
 

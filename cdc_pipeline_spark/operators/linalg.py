@@ -171,11 +171,7 @@ def assemble_centered_gram(sums: DataFrame) -> DataFrame:
     )
 
 
-def quantized_gram(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    scale: int = 1 << 12,
-) -> DataFrame:
+def quantized_gram(df: DataFrame, scale: int = 1 << 12) -> DataFrame:
     """Exact centered Gram matrix of an embedding column.
 
     Returns the upper triangle (i ≤ j) of ``G = n·S − m·mᵀ`` over the
@@ -187,7 +183,7 @@ def quantized_gram(
     One scan + one tiny shuffle (O(batches·d²) partial rows); the
     d(d+1)/2-row result is broadcast-sized for any realistic d.
     """
-    partials = gram_partial_rows(df, vec_col, scale)
+    partials = gram_partial_rows(df, "embedding", scale)
     sums = partials.groupBy("i", "j").agg(F.sum("v").alias("v"))
     return assemble_centered_gram(sums)
 
@@ -239,12 +235,7 @@ def power_iteration_top(
     return v
 
 
-def project_quantized(
-    df: DataFrame,
-    direction: Sequence[int],
-    vec_col: str = "embedding",
-    scale: int = 1 << 20,
-) -> DataFrame:
+def project_quantized(df: DataFrame, direction: Sequence[int], scale: int = 1 << 20) -> DataFrame:
     """Exact integer projection of every vector onto an integer
     direction: ``p = Σ_i dir_i · floor(x_i·scale + 0.5)``.
 
@@ -256,7 +247,7 @@ def project_quantized(
     """
     dir_lit = F.array(*[F.lit(int(c)).cast("long") for c in direction])
     q = F.transform(
-        F.col(vec_col),
+        F.col("embedding"),
         lambda x: F.floor(x.cast("double") * F.lit(float(scale)) + F.lit(0.5)),
     )
     prod = F.zip_with(q, dir_lit, lambda a, b: a * b)
@@ -265,12 +256,7 @@ def project_quantized(
     )
 
 
-def pc_residual(
-    df: DataFrame,
-    direction: Sequence[int],
-    vec_col: str = "embedding",
-    scale: int = 1 << 10,
-) -> DataFrame:
+def pc_residual(df: DataFrame, direction: Sequence[int], scale: int = 1 << 10) -> DataFrame:
     """Exact integer PCA-residual score against an integer direction:
     ``resid = (v·v)·(x·x) − (x·v)²`` over ``x = floor(vec·scale + 0.5)``.
 
@@ -288,7 +274,7 @@ def pc_residual(
     vv = sum(int(c) * int(c) for c in direction)
     dir_lit = F.array(*[F.lit(int(c)).cast("long") for c in direction])
     q = F.transform(
-        F.col(vec_col),
+        F.col("embedding"),
         lambda x: F.floor(x.cast("double") * F.lit(float(scale)) + F.lit(0.5)),
     )
     fold = lambda arr: F.aggregate(  # noqa: E731
@@ -299,9 +285,7 @@ def pc_residual(
     return df.withColumn("resid", F.lit(vv).cast("long") * xx - xv * xv)
 
 
-def dim_moments(
-    df: DataFrame, vec_col: str = "embedding", scale: int = 1 << 12
-) -> tuple[int, list[int], list[int]]:
+def dim_moments(df: DataFrame, scale: int = 1 << 12) -> tuple[int, list[int], list[int]]:
     """Exact per-dimension first/second moments of the half-up integer
     quantization ``x = floor(v·scale + 0.5)``: returns ``(n, m, s)``
     with ``m[i] = Σx_i`` and ``s[i] = Σx_i²`` as Python ints.
@@ -316,7 +300,7 @@ def dim_moments(
     q = df.select(
         F.posexplode(
             F.transform(
-                F.col(vec_col),
+                F.col("embedding"),
                 lambda x: F.floor(x.cast("double") * F.lit(float(scale)) + F.lit(0.5)),
             )
         ).alias("i", "x")
@@ -362,13 +346,7 @@ def dim_moments(
     return n, m, s
 
 
-def zscore_outlier_topk(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    scale: int = 1 << 12,
-    k: int = 50,
-) -> DataFrame:
+def zscore_outlier_topk(df: DataFrame, scale: int = 1 << 12, k: int = 50) -> DataFrame:
     """Top-k embedding outliers by diagonal-covariance Mahalanobis
     distance: per vector, ``Σ_d z_d²`` with
     ``z_d² = (n·x_d − m_d)² / (n·s_d − m_d²)`` over the quantized
@@ -391,9 +369,9 @@ def zscore_outlier_topk(
     sum; ranking orders on the exact decimal sum with an id tie-break.
     Zero-variance dimensions contribute exactly 0 (guarded division).
 
-    Output: (id_col, z2_sum double) — k rows, score descending.
+    Output: (vec_id, z2_sum double) — k rows, score descending.
     """
-    n, m, s = dim_moments(df, vec_col, scale)
+    n, m, s = dim_moments(df, scale=scale)
     nd = float(n)
     md = [float(x) for x in m]
     gd = [float(n * si - mi * mi) for mi, si in zip(m, s)]
@@ -409,7 +387,7 @@ def zscore_outlier_topk(
     from cdc_pipeline_spark.operators.rounding import round_half_up
 
     q = F.transform(
-        F.col(vec_col),
+        F.col("embedding"),
         lambda x: F.floor(x.cast("double") * F.lit(float(scale)) + F.lit(0.5)).cast(
             "double"
         ),
@@ -435,13 +413,13 @@ def zscore_outlier_topk(
         lambda acc, t: (acc + t).cast("decimal(32,8)"),
     )
     ranked = (
-        df.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col), score.alias("s2"))
-        .orderBy(F.desc("s2"), id_col)
+        df.filter(F.col("embedding").isNotNull())
+        .select(F.col("vec_id"), score.alias("s2"))
+        .orderBy(F.desc("s2"), "vec_id")
         .limit(k)
     )
     # no re-round: terms are already 8dp-quantized, so the exact decimal
     # sum casts to the identical double in both engines — re-rounding to
     # fewer places would sit ON the half boundary whenever the sum ends
     # in ...50 (systematic with 1e-8-grid terms) and flip by engine
-    return ranked.select(id_col, F.col("s2").cast("double").alias("z2_sum"))
+    return ranked.select("vec_id", F.col("s2").cast("double").alias("z2_sum"))

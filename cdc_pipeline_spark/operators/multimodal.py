@@ -72,15 +72,14 @@ def decode_stub(payload: bytes, fake: bool = True) -> list[float]:
     return [b / 255.0 for b in digest[:FEATURE_DIM]]
 
 
-def attach_binary_payload(df: DataFrame, text_col: str = "text", payload_col: str = "payload") -> DataFrame:
+def attach_binary_payload(df: DataFrame) -> DataFrame:
     """Testdata adapter: treat the UTF-8 bytes of a text column as the
     opaque media payload (the engine only ever sees `binary`)."""
-    return df.withColumn(payload_col, F.encode(F.col(text_col), "UTF-8"))
+    return df.withColumn("payload", F.encode(F.col("text"), "UTF-8"))
 
 
 def extract_features(
     df: DataFrame,
-    id_col: str = "doc_id",
     payload_col: str = "payload",
     fake_decode: bool = True,
     decoder: str = "stub",
@@ -112,7 +111,7 @@ def extract_features(
     # single-file inputs arrive as one partition → one Python worker;
     # spread so Arrow batches decode on every core (decode is the
     # expensive stage in a real media pipeline)
-    narrow = spread(df.select(F.col(id_col).alias("doc_id"), F.col(payload_col).alias("payload")))
+    narrow = spread(df.select("doc_id", F.col(payload_col).alias("payload")))
 
     if decoder == "image":
         # decode_image_any: pure-stdlib PNG/BMP/baseline-JPEG always;
@@ -256,11 +255,9 @@ FRAME_SCHEMA = StructType(
 )
 
 
-def resize_stub(payload: bytes, width: int, height: int, fake: bool = True) -> bytes:
+def resize_stub(payload: bytes, width: int, height: int) -> bytes:
     """Stand-in for an image resize: deterministically stretch/truncate
     the byte stream to width*height bytes (real: PIL resize)."""
-    if not fake:
-        raise NotImplementedError("image libraries are not available in this container")
     target = width * height
     if not payload:
         return b"\x00" * target
@@ -272,8 +269,6 @@ def resize_images(
     df: DataFrame,
     width: int = 32,
     height: int = 32,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
     real: bool = False,
 ) -> DataFrame:
     """Arrow-batched resize stage, reported as (dims, digest) so tests
@@ -285,7 +280,7 @@ def resize_images(
     the deterministic byte-stream stand-in (non-image payloads)."""
     from cdc_pipeline_spark.operators.partitioning import ensure_parallelism as spread
 
-    narrow = spread(df.select(F.col(id_col).alias("doc_id"), F.col(payload_col).alias("payload")))
+    narrow = spread(df.select("doc_id", "payload"))
 
     if real:
         from cdc_pipeline_spark.operators.imaging import decode_image_any, resize_nearest
@@ -318,13 +313,13 @@ def resize_images(
     return narrow.mapInPandas(run, RESIZED_SCHEMA)
 
 
-def sample_frames(df: DataFrame, n_frames: int = 4, id_col: str = "doc_id", payload_col: str = "payload") -> DataFrame:
+def sample_frames(df: DataFrame, n_frames: int = 4) -> DataFrame:
     """Frame-sampling stage: n equally-spaced 'frames' (byte windows) per
     payload — the video-keyframe access pattern. Emits one row per frame
     (explode happens Python-side inside the same Arrow pass)."""
     from cdc_pipeline_spark.operators.partitioning import ensure_parallelism as spread
 
-    narrow = spread(df.select(F.col(id_col).alias("doc_id"), F.col(payload_col).alias("payload")))
+    narrow = spread(df.select("doc_id", "payload"))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:

@@ -31,9 +31,8 @@ def pack_sequences(
     budget: int,
     partition_cols: Sequence[str],
     order_cols: Sequence[str],
-    pack_col: str = "pack_id",
 ) -> DataFrame:
-    """Adds ``pack_col``: 0-based pack index within each partition group,
+    """Adds ``pack_id``: 0-based pack index within each partition group,
     by start-offset of the document in the group's deterministic layout
     (ordered by ``order_cols``, which must be a total order per group).
     Integer arithmetic throughout — engine-portable (no double division).
@@ -49,7 +48,7 @@ def pack_sequences(
     return (
         df.withColumn("__start", cum - F.col(token_count_col).cast("long"))
         # integer division (SQL DIV): engine-portable, no double rounding
-        .withColumn(pack_col, F.expr(f"__start DIV {int(budget)}"))
+        .withColumn("pack_id", F.expr(f"__start DIV {int(budget)}"))
         .drop("__start")
     )
 
@@ -63,8 +62,6 @@ def length_bucketed_batches(
     tokens_col: str,
     batch_size: int,
     edges: Sequence[int] = DEFAULT_LENGTH_EDGES,
-    n_shards: int = 4,
-    seed: int = 7,
 ) -> DataFrame:
     """Padded-batch formation with length bucketing — the OTHER batch
     layout next to :func:`pack_sequences`: instead of concatenating to a
@@ -75,7 +72,7 @@ def length_bucketed_batches(
     low — the standard inference/finetuning batching trick.
 
     Scale shape: batches form per (bucket, shard) with shard =
-    hash(id) % n_shards — a trainer loads shards independently, so
+    hash(id) % 4 — a trainer loads shards independently, so
     batch formation never needs a global order. One shuffle on
     (bucket, shard); within a shard the layout is a deterministic
     window (n_tokens desc, id), so reruns and engines agree. Returns
@@ -94,8 +91,8 @@ def length_bucketed_batches(
         cap = F.when(n <= F.lit(int(e)), F.lit(int(e))).otherwise(cap)
     bucket = F.coalesce(cap, F.lit(-1)).alias("bucket_cap")  # -1 = overflow
     shard = (
-        F.pmod(F.col(id_col).cast("long") * F.lit(KNUTH) + F.lit(seed), F.lit(2147483647))
-        % F.lit(n_shards)
+        F.pmod(F.col(id_col).cast("long") * F.lit(KNUTH) + F.lit(7), F.lit(2147483647))
+        % F.lit(4)
     ).alias("shard")
     laid = df.select(F.col(id_col), n.alias("__n"), bucket, shard)
     w = Window.partitionBy("bucket_cap", "shard").orderBy(

@@ -5,32 +5,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def spread(df: DataFrame, parallelism: int | None = None) -> DataFrame:
-    """Repartition to the session's default parallelism (or an explicit
-    count) before expensive per-row work — shingling, hashing, all-pairs
-    scoring, Arrow decode.
+def ensure_parallelism(df: DataFrame) -> DataFrame:
+    """Repartition an under-partitioned input to the session's default
+    parallelism before expensive per-row work — shingling, hashing,
+    all-pairs scoring, Arrow decode.
 
     Small single-file parquet inputs arrive as ONE partition and would
     otherwise serialize the whole operator onto one core (measured 10s →
     0.6s for sf0.1 shingling). Uses an explicit numPartitions so AQE does
-    not coalesce it away.
-    """
-    if parallelism is None:
-        parallelism = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(parallelism)
-
-
-def ensure_parallelism(df: DataFrame, parallelism: int | None = None) -> DataFrame:
-    """`spread`, but only when the input is actually under-partitioned.
-
-    `spread` unconditionally repartitions — right for the all-pairs/
-    hashing operators it was built for (their compute dwarfs one
-    shuffle), wrong for narrow scan-speed operators like chunking where
-    an unconditional Exchange on an already-parallel 100 TB input (or
-    on every streaming micro-batch) would dominate the cost. This
-    checks the physical partition count first and passes well-
-    partitioned inputs through untouched, so the tiny-single-file fix
-    keeps working without taxing the scale path.
+    not coalesce it away. The physical partition count is checked first
+    and well-partitioned inputs pass through untouched: an unconditional
+    Exchange on an already-parallel 100 TB input (or on every streaming
+    micro-batch) would dominate the cost of narrow scan-speed operators
+    like chunking.
     """
     if df.isStreaming:
         # a streaming frame has no inspectable partitioning (and .rdd is
@@ -38,8 +25,7 @@ def ensure_parallelism(df: DataFrame, parallelism: int | None = None) -> DataFra
         # which is precisely the "no Exchange per micro-batch" behavior
         # this helper exists to preserve
         return df
-    if parallelism is None:
-        parallelism = df.sparkSession.sparkContext.defaultParallelism
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= parallelism:
         return df
     return df.repartition(parallelism)

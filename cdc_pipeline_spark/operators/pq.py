@@ -80,14 +80,7 @@ def _sqdist(a: Column, b: Column) -> Column:
     )
 
 
-def pq_codebook(
-    emb: DataFrame,
-    m: int = 4,
-    k: int = 16,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_codebook(emb: DataFrame, m: int = 4, k: int = 16, dim: int = 64) -> DataFrame:
     """(subspace, code, centroid) — m·k rows: the j-th subvector of the
     c-th-lowest-id vector seeds code c of subspace j. Deterministic and
     oracle-replayable; swap in per-subspace k-means
@@ -98,28 +91,21 @@ def pq_codebook(
         raise ValueError(f"m ({m}) must divide dim ({dim})")
     d_sub = dim // m
     seed = (
-        emb.orderBy(id_col)
+        emb.orderBy("vec_id")
         .limit(k)
-        .withColumn("code", F.row_number().over(Window.orderBy(id_col)) - 1)
+        .withColumn("code", F.row_number().over(Window.orderBy("vec_id")) - 1)
     )
-    return _subspace_rows(seed, "code", "code", vec_col, m, d_sub).select(
+    return _subspace_rows(seed, "code", "code", "embedding", m, d_sub).select(
         "subspace", "code", F.col("sub").alias("centroid")
     )
 
 
-def pq_encode(
-    emb: DataFrame,
-    codebook: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int = 4,
-    dim: int = 64,
-) -> DataFrame:
+def pq_encode(emb: DataFrame, codebook: DataFrame, m: int = 4, dim: int = 64) -> DataFrame:
     """(vec_id, codes array<int>) — codes[j] = argmin_c ‖subvec_j −
     centroid_{j,c}‖² (rounded 6; ties → lowest code). Broadcast join ×
     m·k candidate rows per vector, partially-aggregated min(struct) —
     one shuffle carrying m rows per vector."""
-    sub_rows = _subspace_rows(emb, "vec_id", id_col, vec_col, m, dim // m)
+    sub_rows = _subspace_rows(emb, "vec_id", "vec_id", "embedding", m, dim // m)
     scored = sub_rows.join(F.broadcast(codebook), "subspace").select(
         "vec_id", "subspace", "code", _sqdist(F.col("sub"), F.col("centroid")).alias("d")
     )
@@ -142,8 +128,6 @@ def pq_adc_topk(
     encoded: DataFrame,
     codebook: DataFrame,
     k: int = 5,
-    id_col: str = "query_id",
-    vec_col: str = "embedding",
     m: int = 4,
     dim: int = 64,
 ) -> DataFrame:
@@ -155,7 +139,7 @@ def pq_adc_topk(
     excluded. One broadcast join + one (query, vector) aggregate + a
     per-query window — at scale, run AFTER IVF routing so the corpus
     side is a few cells, not the full collection."""
-    q_rows = _subspace_rows(queries, "query_id", id_col, vec_col, m, dim // m)
+    q_rows = _subspace_rows(queries, "query_id", "query_id", "embedding", m, dim // m)
     dtable = q_rows.join(F.broadcast(codebook), "subspace").select(
         "query_id",
         "subspace",

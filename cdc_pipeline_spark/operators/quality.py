@@ -32,25 +32,17 @@ from cdc_pipeline_spark.operators.text import tokens
 STOPWORDS = ("the", "a", "of", "and", "is", "to", "in", "that", "it", "for")
 
 
-def quality_rule_columns(
-    text_col: str = "text",
-    min_words: int = 10,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 2.0,
-    max_mean_word_len: float = 12.0,
-    max_symbol_ratio: float = 0.1,
-    min_distinct_stopwords: int = 2,
-) -> list[Column]:
+def quality_rule_columns(text_col: str = "text") -> list[Column]:
     """Gopher/C4-style per-document rule columns + the conjunction
     ``keep``. Every rule is a pure JVM expression over one text column:
 
-      * ``r_word_count``    — token count within [min_words, max_words];
-      * ``r_mean_word_len`` — mean non-space word length within bounds
+      * ``r_word_count``    — token count within [10, 100 000];
+      * ``r_mean_word_len`` — mean non-space word length within [2, 12]
         (screens OCR noise / minified blobs);
-      * ``r_symbol_ratio``  — non-alphanumeric-non-space chars ≤ ratio
+      * ``r_symbol_ratio``  — non-alphanumeric-non-space chars ≤ 0.1
         (screens markup/serialized payloads);
-      * ``r_stopwords``     — ≥ ``min_distinct_stopwords`` distinct
-        common-word hits (screens non-prose token streams);
+      * ``r_stopwords``     — ≥ 2 distinct common-word hits (screens
+        non-prose token streams);
       * ``keep``            — AND of the rules.
     """
     toks = tokens(text_col)
@@ -60,7 +52,7 @@ def quality_rule_columns(
     # Unicode-aware class (\p{L}\p{N}, supported identically by Java
     # regex and DuckDB's RE2): an ASCII-only [A-Za-z0-9] counted every
     # non-Latin letter as a "symbol", so fluent Chinese/Russian/accented
-    # text blew past max_symbol_ratio and the gate dropped whole
+    # text blew past the 0.1 symbol ratio and the gate dropped whole
     # non-English corpora
     n_symbols = F.length(F.regexp_replace(F.col(text_col), r"[\p{L}\p{N}\s]", ""))
     symbol_ratio = n_symbols / F.greatest(F.length(text_col), F.lit(1))
@@ -68,10 +60,10 @@ def quality_rule_columns(
         F.array_intersect(F.array_distinct(toks), F.array(*[F.lit(s) for s in STOPWORDS]))
     )
 
-    r_word_count = (n_words >= min_words) & (n_words <= max_words)
-    r_mean_word_len = (mean_word_len >= min_mean_word_len) & (mean_word_len <= max_mean_word_len)
-    r_symbol_ratio = symbol_ratio <= max_symbol_ratio
-    r_stopwords = distinct_stops >= min_distinct_stopwords
+    r_word_count = (n_words >= 10) & (n_words <= 100_000)
+    r_mean_word_len = (mean_word_len >= 2.0) & (mean_word_len <= 12.0)
+    r_symbol_ratio = symbol_ratio <= 0.1
+    r_stopwords = distinct_stops >= 2
     return [
         n_words.cast("long").alias("n_words"),
         round_half_up(mean_word_len, 4).alias("mean_word_len"),
@@ -85,9 +77,7 @@ def quality_rule_columns(
     ]
 
 
-def repetition_stats(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def repetition_stats(df: DataFrame) -> DataFrame:
     """Within-document repetition profile (the Gopher "repetition"
     filter family): most-frequent-token mass, distinct-token ratio, and
     most-frequent-bigram mass. Catches looped boilerplate that
@@ -97,7 +87,7 @@ def repetition_stats(
     shuffle keyed on the document id, so it scales with corpus size, not
     corpus².
     """
-    toks = df.select(F.col(id_col).alias("doc_id"), tokens(text_col).alias("toks"))
+    toks = df.select("doc_id", tokens("text").alias("toks"))
     unigram = toks.select("doc_id", F.explode_outer("toks").alias("g")).filter(
         F.col("g").isNotNull()
     )
@@ -157,12 +147,7 @@ def pii_redact(
     return redacted, n_emails, n_ips, n_phones
 
 
-def unigram_logprob_score(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    carry_cols: tuple[str, ...] = (),
-) -> DataFrame:
+def unigram_logprob_score(df: DataFrame, carry_cols: tuple[str, ...] = ()) -> DataFrame:
     """Corpus-LM fluency score (the CCNet idea — Wenzek et al. 2020 —
     with the corpus itself as the language model): per-document mean
     negative log probability of its tokens under the corpus unigram
@@ -176,7 +161,7 @@ def unigram_logprob_score(
       3. per-doc mean −ln p (one shuffle on doc).
     """
     toks = df.select(
-        F.col(id_col).alias("doc_id"), *carry_cols, tokens(text_col).alias("toks")
+        "doc_id", *carry_cols, tokens("text").alias("toks")
     )
     posting = toks.select(
         "doc_id", *carry_cols, F.explode_outer("toks").alias("token")
@@ -202,12 +187,7 @@ def unigram_logprob_score(
     )
 
 
-def bigram_logprob_score(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lam: float = 0.75,
-) -> DataFrame:
+def bigram_logprob_score(df: DataFrame, lam: float = 0.75) -> DataFrame:
     """Interpolated bigram corpus-LM fluency score — the next model up
     from :func:`unigram_logprob_score` (Jelinek–Mercer interpolation,
     the classic smoothing the KenLM-style corpus filters build on):
@@ -235,7 +215,7 @@ def bigram_logprob_score(
     # no subplans and the corpus-wide split is the expensive stage
     # (same precedent as perplexity_buckets)
     toks = df.select(
-        F.col(id_col).alias("doc_id"), tokens(text_col).alias("t")
+        "doc_id", tokens("text").alias("t")
     ).localCheckpoint()
     posting = toks.select("doc_id", F.explode_outer("t").alias("token")).filter(
         F.col("token").isNotNull()
@@ -281,11 +261,7 @@ def bigram_logprob_score(
     )
 
 
-def source_unigram_kl(
-    df: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
+def source_unigram_kl(df: DataFrame) -> DataFrame:
     """Per-source KL divergence D(p_source ‖ p_corpus) over the unigram
     token distribution — the mixture diagnostic behind
     importance-resampled data selection (DSIR, Xie et al. 2023) and
@@ -308,7 +284,7 @@ def source_unigram_kl(
     Output: (source, n_tokens, n_terms, kl_nats), one row per source.
     """
     posting = df.select(
-        F.col(group_col).alias("source"), F.explode_outer(tokens(text_col)).alias("token")
+        "source", F.explode_outer(tokens("text")).alias("token")
     ).filter(F.col("token").isNotNull())
     # FOUR consumers read the (source, token) table (global re-agg,
     # per-source totals, the term join, the output join) and Catalyst
@@ -359,13 +335,7 @@ def source_unigram_kl(
     )
 
 
-def perplexity_buckets(
-    df: DataFrame,
-    group_col: str = "lang",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    cuts: tuple[float, float] = (1.0 / 3.0, 2.0 / 3.0),
-) -> DataFrame:
+def perplexity_buckets(df: DataFrame, group_col: str = "lang") -> DataFrame:
     """CCNet-style head/middle/tail split (Wenzek et al. 2020): bucket
     documents by their per-group fluency-score terciles. CCNet trains on
     'head' (most fluent), samples 'middle', drops 'tail' — the standard
@@ -384,10 +354,8 @@ def perplexity_buckets(
     # referenced twice (cutoff aggregation + output join); materialize
     # once instead of re-running the whole corpus-LM scoring chain per
     # reference (Catalyst shares no subplans)
-    scores = unigram_logprob_score(
-        df, id_col, text_col, carry_cols=(group_col,)
-    ).localCheckpoint(eager=True)
-    c1, c2 = cuts
+    scores = unigram_logprob_score(df, carry_cols=(group_col,)).localCheckpoint(eager=True)
+    c1, c2 = 1.0 / 3.0, 2.0 / 3.0  # tercile cuts
     cutoffs = scores.groupBy(group_col).agg(
         F.expr(
             f"percentile_disc({c1!r}) WITHIN GROUP (ORDER BY mean_neg_logprob)"
@@ -416,8 +384,6 @@ def perplexity_buckets(
 def ngram_contamination(
     corpus: DataFrame,
     benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 5,
     flag_threshold: float = 0.05,
 ) -> DataFrame:
@@ -439,8 +405,8 @@ def ngram_contamination(
         # same construction as benchmark_containment_pairs — the shared
         # helper keeps the two contamination passes from drifting
         return df.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode_outer(word_shingles(text_col, n)).alias("shingle"),
+            "doc_id",
+            F.explode_outer(word_shingles("text", n)).alias("shingle"),
         )
 
     bench_shingles = (
@@ -475,15 +441,9 @@ def ngram_contamination(
     )
 
 
-def iqr_outliers(
-    df: DataFrame,
-    value_col: str,
-    group_col: str,
-    id_col: str = "doc_id",
-    k: float = 1.5,
-) -> DataFrame:
+def iqr_outliers(df: DataFrame, value_col: str, group_col: str) -> DataFrame:
     """Tukey-fence outlier flags per group: a row is an outlier when its
-    value falls outside [q1 − k·IQR, q3 + k·IQR] of its group — the
+    value falls outside [q1 − 1.5·IQR, q3 + 1.5·IQR] of its group — the
     standard profiling pass for spotting truncated/concatenated
     documents by length, or any malformed numeric feature, without
     assuming a distribution.
@@ -503,8 +463,8 @@ def iqr_outliers(
     )
     stats = stats.select(
         group_col,
-        round_half_up(F.col("__q1") - k * (F.col("__q3") - F.col("__q1")), 4).alias("__lo"),
-        round_half_up(F.col("__q3") + k * (F.col("__q3") - F.col("__q1")), 4).alias("__hi"),
+        round_half_up(F.col("__q1") - 1.5 * (F.col("__q3") - F.col("__q1")), 4).alias("__lo"),
+        round_half_up(F.col("__q3") + 1.5 * (F.col("__q3") - F.col("__q1")), 4).alias("__hi"),
     )
     # null-SAFE group join: a plain equi-join drops every row whose
     # group is NULL (the grouped stats row for the NULL group exists,
@@ -514,7 +474,7 @@ def iqr_outliers(
     return (
         df.join(F.broadcast(stats), F.col(group_col).eqNullSafe(F.col("__grp")))
         .select(
-            id_col,
+            "doc_id",
             group_col,
             F.col(value_col),
             ((v < F.col("__lo")) | (v > F.col("__hi"))).alias("is_outlier"),
@@ -525,8 +485,6 @@ def iqr_outliers(
 def benchmark_containment_pairs(
     corpus: DataFrame,
     benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 3,
     threshold: float = 0.2,
 ) -> DataFrame:
@@ -557,7 +515,7 @@ def benchmark_containment_pairs(
 
     def posting(df: DataFrame, out_id: str) -> DataFrame:
         return (
-            df.select(F.col(id_col).alias(out_id), word_shingles(text_col, n).alias("__sh"))
+            df.select(F.col("doc_id").alias(out_id), word_shingles("text", n).alias("__sh"))
             .select(out_id, F.explode_outer("__sh").alias("shingle"))
             .filter(F.col("shingle").isNotNull())
         )

@@ -55,26 +55,26 @@ BM25_QUERIES: tuple[tuple[int, tuple[str, ...]], ...] = (
 QUANT = 1_000_000.0  # 6-decimal fixed-point weight quantization
 
 
-def token_tf(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def token_tf(df: DataFrame) -> DataFrame:
     """Per-(doc, token) term frequencies ``(doc_id, token, tf)`` under
     the corpus-wide tokenization convention (lower, split ``\\s+``, drop
     empties — same as ``dedup.tfidf_cosine_pairs``)."""
     tok = (
         df.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode_outer(F.split(F.trim(F.lower(F.col(text_col))), r"\s+")).alias("token"),
+            "doc_id",
+            F.explode_outer(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("token"),
         )
         .filter(F.col("token").isNotNull() & (F.col("token") != ""))
     )
     return tok.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
 
 
-def doc_lengths(df: DataFrame, tf: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def doc_lengths(df: DataFrame, tf: DataFrame) -> DataFrame:
     """``(doc_id, dl)`` for EVERY document — token-less docs carry
     ``dl = 0`` (they score 0 everywhere but still shape N and avgdl)."""
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     return (
-        df.select(F.col(id_col).alias("doc_id"))
+        df.select("doc_id")
         .join(dl, "doc_id", "left")
         .select("doc_id", F.coalesce(F.col("dl"), F.lit(0)).cast("long").alias("dl"))
     )
@@ -97,12 +97,7 @@ def _wq_col(k1: float, b: float):
     return F.floor(idf * tfn * F.lit(QUANT) + F.lit(0.5)).cast("decimal(18,0)")
 
 
-def bm25_term_weights_from_stats(
-    tf: DataFrame,
-    doclens: DataFrame,
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
+def bm25_term_weights_from_stats(tf: DataFrame, doclens: DataFrame) -> DataFrame:
     """Per-(doc, token) quantized BM25 weights: ``(doc_id, token, wq)``
     with ``wq = floor(idf·tfnorm·1e6 + 0.5)`` as ``decimal(18,0)``,
     derived from a ``(doc_id, token, tf)`` table and a ``(doc_id, dl)``
@@ -117,17 +112,11 @@ def bm25_term_weights_from_stats(
         tf.join(doclens, "doc_id")
         .join(dfreq, "token")
         .join(F.broadcast(stats))
-        .select("doc_id", "token", _wq_col(k1, b).alias("wq"))
+        .select("doc_id", "token", _wq_col(1.2, 0.75).alias("wq"))
     )
 
 
-def bm25_term_weights(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
+def bm25_term_weights(df: DataFrame) -> DataFrame:
     """Batch form: tokenize + stats + weights in one plan (see
     ``bm25_term_weights_from_stats`` for the shared weight formula).
 
@@ -137,10 +126,8 @@ def bm25_term_weights(
     deduplicates via ReusedExchange — measured 1.7 s plain vs 2.1 s
     checkpointed at sf0.1 (unlike `tfidf_cosine_pairs`, whose reuse is
     broken by differing pruning filters between consumers)."""
-    tf = token_tf(df, id_col=id_col, text_col=text_col)
-    return bm25_term_weights_from_stats(
-        tf, doc_lengths(df, tf, id_col=id_col), k1=k1, b=b
-    )
+    tf = token_tf(df)
+    return bm25_term_weights_from_stats(tf, doc_lengths(df, tf))
 
 
 def _finish_ranked(ranked: DataFrame) -> DataFrame:
@@ -259,11 +246,7 @@ def bm25_topk_from_weights(
 def bm25_topk(
     df: DataFrame,
     queries: Sequence[tuple[int, tuple[str, ...]]] = BM25_QUERIES,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
     broad_candidates: int | None = None,
     materialize_candidates: bool = True,
 ) -> DataFrame:
@@ -295,10 +278,8 @@ def bm25_topk(
     construction (same `_wq_col` over the same exact integers; stats
     enter the materialized path as collected literals)."""
     if not materialize_candidates:
-        tf = token_tf(df, id_col=id_col, text_col=text_col)
-        w = bm25_term_weights_from_stats(
-            tf, doc_lengths(df, tf, id_col=id_col), k1=k1, b=b
-        )
+        tf = token_tf(df)
+        w = bm25_term_weights_from_stats(tf, doc_lengths(df, tf))
         return bm25_topk_from_weights(
             w, queries, k, broad_candidates=broad_candidates, probe=tf
         )
@@ -306,7 +287,7 @@ def bm25_topk(
     from pyspark.sql import Observation
 
     batch_terms = sorted({t for _, terms in queries for t in terms})
-    t = F.trim(F.lower(F.col(text_col)))
+    t = F.trim(F.lower(F.col("text")))
     # dl = number of non-empty tokens. After trim, split(\s+) yields ''
     # only for the empty string (leading/trailing separators are gone),
     # so the token_tf convention reduces to a codegen CASE + size() —
@@ -314,7 +295,7 @@ def bm25_topk(
     # filter-lambda variant measured ~0.8 s/pass slower at sf0.1).
     arr = F.split(t, r"\s+")
     base = df.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.when(t.isNull() | (t == ""), F.lit(0))
         .otherwise(F.size(arr))
         .cast("long")
@@ -340,19 +321,14 @@ def bm25_topk(
         tf_cand.join(F.broadcast(dfreq), "token")
         .withColumn("n_docs", F.lit(n_docs).cast("long"))
         .withColumn("total_tok", F.lit(total_tok).cast("long"))
-        .select("doc_id", "token", _wq_col(k1, b).alias("wq"))
+        .select("doc_id", "token", _wq_col(1.2, 0.75).alias("wq"))
     )
     return bm25_topk_from_weights(
         w, queries, k, broad_candidates=broad_candidates, probe=tf_cand
     )
 
 
-def top_tfidf_terms(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-) -> DataFrame:
+def top_tfidf_terms(df: DataFrame, k: int = 5) -> DataFrame:
     """Per-document keyword extraction: the top-k tokens by
     ``tf·ln(N/df)`` — ``(doc_id, token, weight, rank)``.
 
@@ -364,7 +340,7 @@ def top_tfidf_terms(
     deterministic, and a useful boilerplate signal. The per-doc window
     partitions on doc_id (high-cardinality → fully parallel; no salted
     phase needed, unlike the per-query ranking above)."""
-    tf = token_tf(df, id_col=id_col, text_col=text_col)
+    tf = token_tf(df)
     dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     n_docs = df.agg(F.count(F.lit(1)).alias("n_docs"))
     wq = F.floor(

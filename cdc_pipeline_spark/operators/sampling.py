@@ -39,6 +39,11 @@ from cdc_pipeline_spark.operators.rounding import round_half_up
 
 # Knuth multiplicative hashing constant (2^32 * golden ratio conjugate).
 KNUTH = 2654435761
+# weighted_priority_sample and its DuckDB twin: u's grid (a power of two,
+# so u is exact in a double), the weight clamp and the key quantization
+U_GRID = 1 << 30
+W_MIN, W_MAX = 0.05, 20.0
+PRIORITY_QUANT = 1_000_000.0
 
 
 def _bucket(id_col: Column, modulus: int = 100) -> Column:
@@ -46,57 +51,39 @@ def _bucket(id_col: Column, modulus: int = 100) -> Column:
     return F.pmod(id_col.cast("long") * F.lit(KNUTH), F.lit(modulus))
 
 
-def bucket_sql(id_expr: str, modulus: int = 100) -> str:
+def bucket_sql(id_expr: str) -> str:
     """The DuckDB-oracle mirror of ``_bucket`` (same 64-bit arithmetic)."""
-    return f"(({id_expr}) * {KNUTH}) % {modulus}"
+    return f"(({id_expr}) * {KNUTH}) % 100"
 
 
-def split_expr(
-    id_col: Column,
-    weights: dict[str, float] | None = None,
-) -> Column:
+def split_expr(id_col: Column) -> Column:
     """The split assignment as a pure COLUMN expression over an id —
     usable anywhere an id appears (e.g. labeling both sides of a
     duplicate-pair frame without joining the assignment table back).
     Boundaries are cumulative percentage buckets of the deterministic
-    hash, so splits are disjoint and exhaustive."""
-    weights = weights or {"train": 0.8, "val": 0.1, "test": 0.1}
+    hash (train 80, val 10, test 10), so splits are disjoint and
+    exhaustive."""
     bucket = _bucket(id_col)
-    expr = None
-    cum = 0.0
-    names = list(weights.items())
-    for name, w in names[:-1]:
-        cum += w * 100.0
-        clause = F.when(bucket < F.lit(int(round(cum))), F.lit(name))
-        expr = clause if expr is None else expr.when(bucket < F.lit(int(round(cum))), F.lit(name))
-    last = names[-1][0]
-    return F.lit(last) if expr is None else expr.otherwise(F.lit(last))
+    return (
+        F.when(bucket < F.lit(80), F.lit("train"))
+        .when(bucket < F.lit(90), F.lit("val"))
+        .otherwise(F.lit("test"))
+    )
 
 
-def hash_split(
-    df: DataFrame,
-    id_col: str,
-    weights: dict[str, float] | None = None,
-) -> DataFrame:
+def hash_split(df: DataFrame, id_col: str) -> DataFrame:
     """Add a ``split`` column assigning each row to exactly one named
     split (see :func:`split_expr` for the assignment rule)."""
-    return df.withColumn("split", split_expr(F.col(id_col), weights))
+    return df.withColumn("split", split_expr(F.col(id_col)))
 
 
-def deterministic_downsample(
-    df: DataFrame,
-    key_col: str,
-    n: int,
-    id_col: str,
-    keep_col: str | None = None,
-) -> DataFrame:
+def deterministic_downsample(df: DataFrame, key_col: str, n: int, id_col: str) -> DataFrame:
     """Keep at most ``n`` rows per key, chosen by hash order of the id
     (stable across runs and partitionings; ties broken by id). One
     shuffle on the key — the same plan shape as any grouped top-k."""
     w = Window.partitionBy(key_col).orderBy(_bucket(F.col(id_col), 1 << 31).asc(), F.col(id_col).asc())
-    rank_col = keep_col or "__ds_rank"
-    out = df.withColumn(rank_col, F.row_number().over(w)).filter(F.col(rank_col) <= n)
-    return out if keep_col else out.drop(rank_col)
+    out = df.withColumn("__ds_rank", F.row_number().over(w)).filter(F.col("__ds_rank") <= n)
+    return out.drop("__ds_rank")
 
 
 def stratified_sample(
@@ -119,15 +106,13 @@ def deterministic_stratified_sample(
     strata_col: str,
     fractions: dict,
     id_col: str,
-    seed: int = 7,
-    resolution: int = 1_000_000,
     bucket_fn=None,
 ) -> DataFrame:
     """Content-hash stratified sample: keep a row iff
-    ``pmod(xxhash64(id, seed), resolution) < fraction(stratum) · resolution``.
+    ``pmod(xxhash64(id, 7), 10⁶) < fraction(stratum) · 10⁶``.
 
     Same single-pass no-shuffle shape as :func:`stratified_sample`, but
-    the keep decision is a pure function of (id, seed) — identical
+    the keep decision is a pure function of the id — identical
     across reruns, task retries, partitionings AND engines (any system
     with the same 64-bit hash reproduces the sample bit-for-bit; the
     DuckDB oracle replicates it via a portable hash variant in the
@@ -139,11 +124,11 @@ def deterministic_stratified_sample(
     mapping = F.create_map(
         *[x for s, fraction in fractions.items() for x in (F.lit(s), F.lit(float(fraction)))]
     )
-    threshold = mapping[F.col(strata_col)] * resolution
+    threshold = mapping[F.col(strata_col)] * 1_000_000
     bucket = (
         bucket_fn(F.col(id_col))
         if bucket_fn is not None
-        else F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(resolution))
+        else F.pmod(F.xxhash64(F.col(id_col), F.lit(7)), F.lit(1_000_000))
     )
     return df.filter(bucket < threshold)
 
@@ -154,7 +139,6 @@ def token_budget_select(
     tokens_col: str,
     budget: int,
     order_by: list[Column],
-    cum_col: str = "cum_tokens",
 ) -> DataFrame:
     """Per-group token-budget selection — the data-mixing step of a
     training-corpus build: within each group (source/domain/language),
@@ -177,8 +161,8 @@ def token_budget_select(
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
-        df.withColumn(cum_col, F.sum(F.col(tokens_col).cast("long")).over(w))
-        .filter(F.col(cum_col) - F.col(tokens_col) < budget)
+        df.withColumn("cum_tokens", F.sum(F.col(tokens_col).cast("long")).over(w))
+        .filter(F.col("cum_tokens") - F.col(tokens_col) < budget)
     )
 
 
@@ -242,10 +226,8 @@ def portable_id_bucket(col, seed: int = 7, resolution: int = 1_000_000):
 
 def epoch_shuffle_order(
     df: DataFrame,
-    id_col: str = "doc_id",
     n_shards: int = 8,
     seed: int = 7,
-    resolution: int = 1_000_000,
     carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Deterministic global training order for an epoch: every record
@@ -267,8 +249,8 @@ def epoch_shuffle_order(
     """
     from pyspark.sql.window import Window as _W
 
-    key = portable_id_bucket(F.col(id_col), seed, resolution)
-    out = df.select(F.col(id_col).alias("doc_id"), *carry_cols).withColumn(
+    key = portable_id_bucket(F.col("doc_id"), seed, 1_000_000)
+    out = df.select("doc_id", *carry_cols).withColumn(
         "__key", key
     ).withColumn("shard", (F.col("__key") % F.lit(n_shards)).cast("long"))
     w = _W.partitionBy("shard").orderBy("__key", "doc_id")
@@ -281,10 +263,6 @@ def weighted_priority_sample(
     weight_col: Column,
     k: int,
     seed: int = 7,
-    resolution: int = 1 << 30,
-    quant: int = 1_000_000,
-    w_min: float = 0.05,
-    w_max: float = 20.0,
     carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Weighted sampling WITHOUT replacement as one global top-k
@@ -302,10 +280,10 @@ def weighted_priority_sample(
 
     Cross-engine determinism (SCALE.md policy, technique 3): u =
     (h+1)/2^30 is exactly representable (power-of-two divisor); the
-    weight is clamped to [w_min, w_max] and 6-dp-quantized BEFORE use so
+    weight is clamped to [W_MIN, W_MAX] and 6-dp-quantized BEFORE use so
     both engines divide identical doubles; the sort key is
-    floor(ln(u)/w_eff · quant) as BIGINT — |ln(u)/w| ≤ 21/w_min ≈ 416,
-    where a double's ulp (~5e-14) is ~10⁷ below the 1/quant grid, so an
+    floor(ln(u)/w_eff · PRIORITY_QUANT) as BIGINT — |ln(u)/w| ≤ 21/W_MIN ≈ 416,
+    where a double's ulp (~5e-14) is ~10⁷ below the 1/PRIORITY_QUANT grid, so an
     engine's ≤1-ulp ln() difference cannot flip a bucket. Ties broken
     by id. (Ordering by ln(u)/w descending is order-isomorphic to
     u^(1/w) descending since w > 0.)
@@ -327,12 +305,12 @@ def weighted_priority_sample(
     # for the documented non-negative id range pmod == %, keeping the
     # sample (and the SQL twin below) unchanged.
     h1 = F.pmod((F.col(id_col).cast("long") + F.lit(seed + 1)) * F.lit(KNUTH + 2 * seed), p)
-    h = ((h1 * F.lit(KNUTH)) % p) % F.lit(resolution)
-    u = (h + F.lit(1)) / F.lit(float(resolution))
+    h = ((h1 * F.lit(KNUTH)) % p) % F.lit(U_GRID)
+    u = (h + F.lit(1)) / F.lit(float(U_GRID))
     w_eff = round_half_up(
-        F.least(F.greatest(weight_col.cast("double"), F.lit(w_min)), F.lit(w_max)), 6
+        F.least(F.greatest(weight_col.cast("double"), F.lit(W_MIN)), F.lit(W_MAX)), 6
     )
-    priority = F.floor(F.log(u) / w_eff * F.lit(float(quant))).cast("long")
+    priority = F.floor(F.log(u) / w_eff * F.lit(PRIORITY_QUANT)).cast("long")
     out = df.select(
         F.col(id_col),
         *carry_cols,
@@ -342,26 +320,19 @@ def weighted_priority_sample(
     return topk.top_k(out, [F.col("priority_q").desc(), F.col(id_col).asc()], k)
 
 
-def weighted_priority_sql(
-    id_expr: str,
-    weight_expr: str,
-    seed: int = 7,
-    resolution: int = 1 << 30,
-    quant: int = 1_000_000,
-    w_min: float = 0.05,
-    w_max: float = 20.0,
-) -> tuple[str, str]:
+def weighted_priority_sql(id_expr: str, weight_expr: str) -> tuple[str, str]:
     """DuckDB mirror of :func:`weighted_priority_sample`'s
-    (sample_weight, priority_q) expressions — same hash, same clamp,
-    same quantized-floor key. round(...) here is rewritten to the floor
-    form at registration like every oracle."""
-    w_eff = f"round(least(greatest(CAST({weight_expr} AS DOUBLE), {w_min}), {w_max}), 6)"
+    (sample_weight, priority_q) expressions at its default seed — same
+    hash, same clamp, same quantized-floor key. round(...) here is
+    rewritten to the floor form at registration like every oracle."""
+    seed = 7
+    w_eff = f"round(least(greatest(CAST({weight_expr} AS DOUBLE), {W_MIN}), {W_MAX}), 6)"
     # ((x % p) + p) % p mirrors Spark's pmod for negative ids
     h1 = (
         f"((((({id_expr}) + {seed + 1}) * {KNUTH + 2 * seed}) % 2147483647"
         f" + 2147483647) % 2147483647)"
     )
-    h = f"((({h1}) * {KNUTH}) % 2147483647) % {resolution}"
-    u = f"(({h}) + 1) / {float(resolution)}"
-    priority = f"CAST(floor(ln({u}) / ({w_eff}) * {float(quant)}) AS BIGINT)"
+    h = f"((({h1}) * {KNUTH}) % 2147483647) % {U_GRID}"
+    u = f"(({h}) + 1) / {float(U_GRID)}"
+    priority = f"CAST(floor(ln({u}) / ({w_eff}) * {PRIORITY_QUANT}) AS BIGINT)"
     return w_eff, priority

@@ -74,30 +74,22 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    parallelism: int | None = None,
-) -> DataFrame:
+def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Exact cosine top-k: broadcast(queries) × corpus → score → grouped
     top-k. Output: (query_id, vec_id, score, rank)."""
-    q = queries.select(F.col(query_id_col), F.col(vec_col).alias("__qvec")).withColumn(
+    q = queries.select(F.col("query_id"), F.col("embedding").alias("__qvec")).withColumn(
         "__qnorm", norm(F.col("__qvec"))
     ).filter(F.col("__qnorm") > 0)
-    c = _spread(corpus, parallelism).withColumn("__cnorm", norm(F.col(vec_col))).filter(F.col("__cnorm") > 0)
-    scored = c.join(F.broadcast(q), F.col(id_col) != F.col(query_id_col)).select(
-        query_id_col,
-        id_col,
-        round_half_up(dot(F.col("__qvec"), F.col(vec_col)) / (F.col("__qnorm") * F.col("__cnorm")), 6).alias("score"),
+    c = _spread(corpus).withColumn("__cnorm", norm(F.col("embedding"))).filter(F.col("__cnorm") > 0)
+    scored = c.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
+        "query_id",
+        "vec_id",
+        round_half_up(dot(F.col("__qvec"), F.col("embedding")) / (F.col("__qnorm") * F.col("__cnorm")), 6).alias("score"),
     )
     return grouped_top_k(
         scored,
-        partition_by=[query_id_col],
-        order_by=[F.col("score").desc(), F.col(id_col).asc()],
+        partition_by=["query_id"],
+        order_by=[F.col("score").desc(), F.col("vec_id").asc()],
         k=k,
     )
 
@@ -107,7 +99,6 @@ def grouped_vector_means(
     group_col: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    out_col: str = "centroid",
 ) -> DataFrame:
     """Per-group mean vector (double precision) with a DETERMINISTIC
     per-dimension mean: an id-ORDERED left fold, not ``F.avg`` —
@@ -170,18 +161,13 @@ def grouped_vector_means(
     # normalizes the sign while leaving every nonzero sum bit-identical
     # (review r12 — the oracle replays the 0.0-seeded shape)
     mean = F.transform(summed, lambda v: (F.lit(0.0) + v) / cnt)
-    return df.groupBy(group_col).agg(mean.alias(out_col))
+    return df.groupBy(group_col).agg(mean.alias("centroid"))
 
 
-def ivf_centroids(
-    corpus: DataFrame,
-    cell_col: str = "label",
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def ivf_centroids(corpus: DataFrame, id_col: str = "vec_id") -> DataFrame:
     """Per-cell mean vector — :func:`grouped_vector_means` keyed by the
     IVF cell label."""
-    return grouped_vector_means(corpus, cell_col, id_col=id_col, vec_col=vec_col)
+    return grouped_vector_means(corpus, "label", id_col=id_col, vec_col="embedding")
 
 
 def ivf_topk(
@@ -189,11 +175,7 @@ def ivf_topk(
     queries: DataFrame,
     k: int = 5,
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    cell_col: str = "label",
     n_probe: int = 1,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """IVF-bucketed ANN: route each query to its n_probe nearest
     centroids, then brute-force only those cells. Output matches
@@ -202,57 +184,51 @@ def ivf_topk(
     # orders NaN LARGEST — an all-zero cell would consume a probe slot
     # for every query (and diverge from the persisted index's
     # driver-side routing, which shares this exclusion contract)
-    centroids = ivf_centroids(corpus, cell_col, vec_col, id_col).filter(
+    centroids = ivf_centroids(corpus, id_col=id_col).filter(
         norm(F.col("centroid")) > 0
     )
-    q = queries.select(F.col(query_id_col), F.col(vec_col).alias("__qvec"))
+    q = queries.select(F.col("query_id"), F.col("embedding").alias("__qvec"))
     routed = grouped_top_k(
         q.crossJoin(F.broadcast(centroids)).select(
-            query_id_col,
+            "query_id",
             "__qvec",
-            cell_col,
+            "label",
             cosine(F.col("__qvec"), F.col("centroid")).alias("__cscore"),
         ),
-        partition_by=[query_id_col],
-        order_by=[F.col("__cscore").desc(), F.col(cell_col).asc()],
+        partition_by=["query_id"],
+        order_by=[F.col("__cscore").desc(), F.col("label").asc()],
         k=n_probe,
         rank_col="__crank",
-    ).select(query_id_col, F.col("__qvec"), norm(F.col("__qvec")).alias("__qnorm"), cell_col).filter(F.col("__qnorm") > 0)
+    ).select("query_id", F.col("__qvec"), norm(F.col("__qvec")).alias("__qnorm"), "label").filter(F.col("__qnorm") > 0)
     scored = (
-        _spread(corpus, parallelism)
-        .withColumn("__cnorm", norm(F.col(vec_col))).filter(F.col("__cnorm") > 0)
-        .join(F.broadcast(routed), [cell_col])
-        .filter(F.col(id_col) != F.col(query_id_col))
+        _spread(corpus)
+        .withColumn("__cnorm", norm(F.col("embedding"))).filter(F.col("__cnorm") > 0)
+        .join(F.broadcast(routed), ["label"])
+        .filter(F.col(id_col) != F.col("query_id"))
         .select(
-            query_id_col,
+            "query_id",
             id_col,
-            round_half_up(dot(F.col("__qvec"), F.col(vec_col)) / (F.col("__qnorm") * F.col("__cnorm")), 6).alias("score"),
+            round_half_up(dot(F.col("__qvec"), F.col("embedding")) / (F.col("__qnorm") * F.col("__cnorm")), 6).alias("score"),
         )
     )
     return grouped_top_k(
         scored,
-        partition_by=[query_id_col],
+        partition_by=["query_id"],
         order_by=[F.col("score").desc(), F.col(id_col).asc()],
         k=k,
     )
 
 
-def cosine_neardup_pairs(
-    corpus: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    parallelism: int | None = None,
-) -> DataFrame:
+def cosine_neardup_pairs(corpus: DataFrame, threshold: float) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, score ≥ τ).
 
     Brute-force all-pairs — correct and fine to ~10⁴ vectors on the
     broadcast side; beyond that, route through ivf_topk buckets or LSH
     (random-hyperplane) banding first."""
-    left = _spread(corpus, parallelism).select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va")
+    left = _spread(corpus).select(
+        F.col("vec_id").alias("id_a"), F.col("embedding").alias("__va")
     ).withColumn("__na", norm(F.col("__va")))
-    right = corpus.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb")).withColumn(
+    right = corpus.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("__vb")).withColumn(
         "__nb", norm(F.col("__vb"))
     )
     return (
@@ -335,21 +311,17 @@ def rp_lsh_topk(
     dim: int,
     k: int = 5,
     n_planes: int = 12,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     probe_bits: int = 1,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """LSH-bucketed cosine top-k: corpus vectors hash once into sign-bit
     buckets; each query probes its bucket plus every bucket within
     ``probe_bits`` bit flips (multi-probe — recall/cost dial). Candidates
     per query ≈ N · (1 + n_planes·probe_bits) / 2^n_planes."""
-    c = _with_bucket(_spread(corpus, parallelism), vec_col, "__bucket", dim, n_planes).withColumn(
-        "__cnorm", norm(F.col(vec_col))
+    c = _with_bucket(_spread(corpus), "embedding", "__bucket", dim, n_planes).withColumn(
+        "__cnorm", norm(F.col("embedding"))
     ).filter(F.col("__cnorm") > 0)
     q = _with_bucket(
-        queries.select(F.col(query_id_col), F.col(vec_col).alias("__qvec")),
+        queries.select(F.col("query_id"), F.col("embedding").alias("__qvec")),
         "__qvec", "__qbucket", dim, n_planes,
     ).withColumn("__qnorm", norm(F.col("__qvec"))).filter(F.col("__qnorm") > 0)
     # every bucket within probe_bits bit flips: XOR masks of Hamming
@@ -366,16 +338,16 @@ def rp_lsh_topk(
             probes.append(F.col("__qbucket").bitwiseXOR(F.lit(mask)))
     q_probed = q.withColumn("__bucket", F.explode(F.array(*probes)))
     scored = c.join(F.broadcast(q_probed), ["__bucket"]).filter(
-        F.col(id_col) != F.col(query_id_col)
+        F.col("vec_id") != F.col("query_id")
     ).select(
-        query_id_col,
-        id_col,
-        round_half_up(dot(F.col("__qvec"), F.col(vec_col)) / (F.col("__qnorm") * F.col("__cnorm")), 6).alias("score"),
+        "query_id",
+        "vec_id",
+        round_half_up(dot(F.col("__qvec"), F.col("embedding")) / (F.col("__qnorm") * F.col("__cnorm")), 6).alias("score"),
     ).distinct()
     return grouped_top_k(
         scored,
-        partition_by=[query_id_col],
-        order_by=[F.col("score").desc(), F.col(id_col).asc()],
+        partition_by=["query_id"],
+        order_by=[F.col("score").desc(), F.col("vec_id").asc()],
         k=k,
     )
 
@@ -386,10 +358,6 @@ def rp_lsh_neardup_pairs(
     threshold: float,
     n_bands: int = 8,
     band_bits: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 11,
-    parallelism: int | None = None,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate PAIRS via banded sign-bit LSH —
@@ -420,8 +388,8 @@ def rp_lsh_neardup_pairs(
     from cdc_pipeline_spark.operators.dedup import prune_hot_buckets
     n_planes = n_bands * band_bits
     mask = (1 << band_bits) - 1
-    sig = _with_bucket(_spread(corpus, parallelism), vec_col, "__sig", dim, n_planes, seed)
-    sig = sig.withColumn("__norm", norm(F.col(vec_col)))
+    sig = _with_bucket(_spread(corpus), "embedding", "__sig", dim, n_planes, 11)
+    sig = sig.withColumn("__norm", norm(F.col("embedding")))
     entries = F.array(
         *[
             F.struct(
@@ -432,15 +400,15 @@ def rp_lsh_neardup_pairs(
         ]
     )
     bands = sig.select(
-        F.col(id_col), F.col(vec_col), F.col("__norm"), F.explode(entries).alias("__e")
-    ).select(id_col, vec_col, "__norm", F.col("__e.band").alias("band"), F.col("__e.bkey").alias("bkey"))
+        F.col("vec_id"), F.col("embedding"), F.col("__norm"), F.explode(entries).alias("__e")
+    ).select("vec_id", "embedding", "__norm", F.col("__e.band").alias("band"), F.col("__e.bkey").alias("bkey"))
     bands = prune_hot_buckets(bands, ["band", "bkey"], max_bucket, what="rp-lsh bucket")
     left = bands.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"),
+        F.col("vec_id").alias("id_a"), F.col("embedding").alias("__va"),
         F.col("__norm").alias("__na"), "band", "bkey",
     )
     right = bands.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"),
+        F.col("vec_id").alias("id_b"), F.col("embedding").alias("__vb"),
         F.col("__norm").alias("__nb"), "band", "bkey",
     )
     return (
@@ -458,16 +426,7 @@ def rp_lsh_neardup_pairs(
     )
 
 
-def hard_negative_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    label_col: str = "label",
-    parallelism: int | None = None,
-) -> DataFrame:
+def hard_negative_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Hard-negative mining for contrastive training: for each query
     vector, the top-k most-similar corpus vectors with a DIFFERENT
     label — the negatives closest to the decision boundary.
@@ -481,37 +440,30 @@ def hard_negative_topk(
     Output: (query_id, vec_id, score, rank).
     """
     q = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("__qvec"),
-        F.col(label_col).alias("__qlabel"),
+        F.col("query_id"),
+        F.col("embedding").alias("__qvec"),
+        F.col("label").alias("__qlabel"),
     ).withColumn("__qnorm", norm(F.col("__qvec"))).filter(F.col("__qnorm") > 0)
-    c = _spread(corpus, parallelism).withColumn("__cnorm", norm(F.col(vec_col))).filter(F.col("__cnorm") > 0)
+    c = _spread(corpus).withColumn("__cnorm", norm(F.col("embedding"))).filter(F.col("__cnorm") > 0)
     scored = c.join(
         F.broadcast(q),
-        (F.col(label_col) != F.col("__qlabel")) & (F.col(id_col) != F.col(query_id_col)),
+        (F.col("label") != F.col("__qlabel")) & (F.col("vec_id") != F.col("query_id")),
     ).select(
-        query_id_col,
-        id_col,
+        "query_id",
+        "vec_id",
         round_half_up(
-            dot(F.col("__qvec"), F.col(vec_col)) / (F.col("__qnorm") * F.col("__cnorm")), 6
+            dot(F.col("__qvec"), F.col("embedding")) / (F.col("__qnorm") * F.col("__cnorm")), 6
         ).alias("score"),
     )
     return grouped_top_k(
         scored,
-        partition_by=[query_id_col],
-        order_by=[F.col("score").desc(), F.col(id_col).asc()],
+        partition_by=["query_id"],
+        order_by=[F.col("score").desc(), F.col("vec_id").asc()],
         k=k,
     )
 
 
-def semantic_dedup(
-    corpus: DataFrame,
-    tau: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "label",
-    parallelism: int | None = None,
-) -> DataFrame:
+def semantic_dedup(corpus: DataFrame, tau: float) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     near-duplicate pruning in embedding space. Vectors are first
     clustered coarsely, then pairwise cosine is computed only WITHIN a
@@ -527,22 +479,22 @@ def semantic_dedup(
 
     Output: one row per input vector — (vec_id, cell, is_kept).
     """
-    centroids = ivf_centroids(corpus, cell_col, vec_col, id_col)
-    v = _spread(corpus.select(id_col, vec_col), parallelism)
+    centroids = ivf_centroids(corpus)
+    v = _spread(corpus.select("vec_id", "embedding"))
     assigned = (
         grouped_top_k(
-            v.crossJoin(F.broadcast(centroids.withColumnRenamed(cell_col, "cell"))).select(
-                id_col,
-                vec_col,
+            v.crossJoin(F.broadcast(centroids.withColumnRenamed("label", "cell"))).select(
+                "vec_id",
+                "embedding",
                 "cell",
-                cosine(F.col(vec_col), F.col("centroid")).alias("__cscore"),
+                cosine(F.col("embedding"), F.col("centroid")).alias("__cscore"),
             ),
-            partition_by=[id_col],
+            partition_by=["vec_id"],
             order_by=[F.col("__cscore").desc(), F.col("cell").asc()],
             k=1,
             rank_col="__crank",
         )
-        .select(id_col, vec_col, "cell", norm(F.col(vec_col)).alias("__norm"))
+        .select("vec_id", "embedding", "cell", norm(F.col("embedding")).alias("__norm"))
         # referenced three times below (pair-left, pair-right, output);
         # Catalyst shares no subplans, so materialize the assignment once
         # instead of re-running centroid scoring per reference (same
@@ -550,11 +502,11 @@ def semantic_dedup(
         .localCheckpoint(eager=True)
     )
     left = assigned.select(
-        F.col(id_col).alias("__ida"), F.col(vec_col).alias("__va"),
+        F.col("vec_id").alias("__ida"), F.col("embedding").alias("__va"),
         F.col("__norm").alias("__na"), "cell",
     )
     right = assigned.select(
-        F.col(id_col).alias("__idb"), F.col(vec_col).alias("__vb"),
+        F.col("vec_id").alias("__idb"), F.col("embedding").alias("__vb"),
         F.col("__norm").alias("__nb"), "cell",
     )
     dropped = (
@@ -566,13 +518,13 @@ def semantic_dedup(
             )
             >= tau
         )
-        .select(F.col("__idb").alias(id_col))
+        .select(F.col("__idb").alias("vec_id"))
         .distinct()
     )
     # dropped can approach corpus size at high duplication — no broadcast
     # hint; AQE picks the strategy from runtime size
-    return assigned.join(dropped.withColumn("__drop", F.lit(True)), id_col, "left").select(
-        id_col,
+    return assigned.join(dropped.withColumn("__drop", F.lit(True)), "vec_id", "left").select(
+        "vec_id",
         "cell",
         F.coalesce(~F.col("__drop"), F.lit(True)).alias("is_kept"),
     )

@@ -246,21 +246,19 @@ def cms_estimate(
     )
 
 
-def cms_sql_ctes(
-    depth: int = 4, width: int = 2048, seed: int = 7, hash_cte: str = "h", hash_col: str = "th"
-) -> tuple[str, str]:
+def cms_sql_ctes(depth: int = 4, width: int = 2048, seed: int = 7) -> tuple[str, str]:
     """DuckDB mirrors: (counters CTE body, per-key coords UNION body).
     The caller embeds them with the same token-hash CTE the SimHash
     oracle uses."""
     params = _cms_row_params(depth, seed)
     counter_rows = "\n        UNION ALL ".join(
-        f"SELECT {j} AS row_idx, (({hash_col} * {a} + {b}) % {_MERSENNE_P}) % {width} AS col"
-        f" FROM {hash_cte}"
+        f"SELECT {j} AS row_idx, ((th * {a} + {b}) % {_MERSENNE_P}) % {width} AS col"
+        " FROM h"
         for j, (a, b) in enumerate(params)
     )
     probe_rows = "\n        UNION ALL ".join(
         f"SELECT token, freq, {j} AS row_idx,"
-        f" (({hash_col} * {a} + {b}) % {_MERSENNE_P}) % {width} AS col FROM exact"
+        f" ((th * {a} + {b}) % {_MERSENNE_P}) % {width} AS col FROM exact"
         for j, (a, b) in enumerate(params)
     )
     return counter_rows, probe_rows

@@ -25,8 +25,8 @@ def tokens(text_col: str = "text") -> Column:
     return F.split(F.trim(F.col(text_col)), r"\s+")
 
 
-def token_count(text_col: str = "text") -> Column:
-    return F.size(tokens(text_col))
+def token_count() -> Column:
+    return F.size(tokens("text"))
 
 
 def word_shingles(text_col: str = "text", n: int = 3) -> Column:
@@ -39,8 +39,8 @@ def word_shingles(text_col: str = "text", n: int = 3) -> Column:
     return F.array_distinct(F.when(F.size(toks) >= n, grams).otherwise(F.array().cast("array<string>")))
 
 
-def stopword_count(tokens_col: str, stopwords: tuple[str, ...] = EN_STOPWORDS) -> Column:
-    quoted = ", ".join(f"'{w}'" for w in stopwords)
+def stopword_count(tokens_col: str) -> Column:
+    quoted = ", ".join(f"'{w}'" for w in EN_STOPWORDS)
     return F.expr(f"size(filter({tokens_col}, x -> x IN ({quoted})))")
 
 
@@ -64,13 +64,13 @@ def quality_score(tokens_col: str, text_col: str = "text") -> Column:
     )
 
 
-def lang_guess(tokens_col: str, threshold: float = 0.03) -> Column:
+def lang_guess(tokens_col: str) -> Column:
     """N-gram-free stopword-ratio language ID: 'en' when the English
-    stopword share clears the threshold, else 'unknown'. (The testdata
+    stopword share reaches 3%, else 'unknown'. (The testdata
     corpus is synthetic word soup; the operator contract — deterministic
     per-doc classification from token statistics — is what matters.)"""
     ratio = stopword_count(tokens_col) / F.greatest(F.size(F.col(tokens_col)), F.lit(1))
-    return F.when(ratio >= threshold, F.lit("en")).otherwise(F.lit("unknown"))
+    return F.when(ratio >= 0.03, F.lit("en")).otherwise(F.lit("unknown"))
 
 
 def fingerprint(text_col: str = "text") -> Column:
@@ -106,7 +106,7 @@ def with_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def lang_guess_charclass(text_col: str = "text", stopword_threshold: float = 0.03) -> Column:
+def lang_guess_charclass(text_col: str = "text") -> Column:
     """Character-class + stopword language ID: script ranges decide
     non-Latin languages outright (CJK → zh, Cyrillic → ru), Latin-script
     text falls through to diacritic classes (es/fr-ish) and finally the
@@ -127,7 +127,7 @@ def lang_guess_charclass(text_col: str = "text", stopword_threshold: float = 0.0
                 f"x -> x IN ({', '.join(repr(w) for w in EN_STOPWORDS)})))"
             )
             / F.greatest(F.size(tokens(text_col)), F.lit(1))
-            >= stopword_threshold,
+            >= 0.03,
             F.lit("en"),
         )
         .otherwise(F.lit("unknown"))
@@ -400,19 +400,11 @@ _ASCII_UPPER = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
 _ASCII_LOWER = "abcdefghijklmnopqrstuvwxyz"
 
 
-def ngram_rank_langid(
-    df: DataFrame,
-    label_col: str = "lang",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    profile_k: int = 20,
-    max_gram: int = 3,
-    head_chars: int = 400,
-) -> DataFrame:
+def ngram_rank_langid(df: DataFrame, profile_k: int = 20) -> DataFrame:
     """Rank-order character-n-gram language ID (Cavnar & Trenkle 1994,
     "N-Gram-Based Text Categorization") — the canonical n-gram
     heuristic: each class keeps its top-``profile_k`` character n-grams
-    (lengths 1..``max_gram``) ranked by frequency; a document is scored
+    (lengths 1..3) ranked by frequency; a document is scored
     against every class by OUT-OF-PLACE distance (sum over the doc's
     own ranked profile of |doc_rank − class_rank|, missing grams paying
     ``profile_k``) and labeled with the argmin. Profiles here are built
@@ -422,9 +414,10 @@ def ngram_rank_langid(
 
     Every decision is an integer with a total tie order — rank by
     (count DESC, gram ASC), predict by (distance ASC, class ASC) — so
-    the DuckDB oracle replays it exactly. Only the first ``head_chars``
+    the DuckDB oracle replays it exactly. Only the first 400
     characters profile a document (the classic cap: per-doc work is
-    O(head·max_gram), independent of document size). Plan: one
+    bounded by 400 chars × 3 gram lengths, independent of document
+    size). Plan: one
     explode + two count shuffles (doc grams; class grams aggregate the
     per-doc counts), a ``profile_k``-row window per doc/class, and a
     classes-sized broadcast cross join — the per-doc side never exceeds
@@ -443,13 +436,13 @@ def ngram_rank_langid(
     # neither), and locale-sensitive folding is the wrong default for a
     # language *detector* anyway
     base = spread(df).select(
-        F.col(id_col).alias("id"),
-        F.col(label_col).alias("label"),
+        F.col("doc_id").alias("id"),
+        F.col("lang").alias("label"),
         F.translate(
-            F.col(text_col).substr(1, head_chars), _ASCII_UPPER, _ASCII_LOWER
+            F.col("text").substr(1, 400), _ASCII_UPPER, _ASCII_LOWER
         ).alias("__s"),
     )
-    gram_arrays = [char_grams(F.col("__s"), n) for n in range(1, max_gram + 1)]
+    gram_arrays = [char_grams(F.col("__s"), n) for n in range(1, 4)]
     grams = base.select(
         "id", "label", F.explode(F.concat(*gram_arrays)).alias("gram")
     )
@@ -460,18 +453,18 @@ def ngram_rank_langid(
     # class list); Catalyst shares no subplans, so without this the
     # corpus explode + count shuffle ran once per consumer (6 parquet
     # scans / 3 gram shuffles in the executed plan). Materialize the
-    # per-doc counts once — they are head-capped (≤ head_chars×max_gram
-    # short rows per doc), so the checkpoint is strictly smaller than
+    # per-doc counts once — they are head-capped (≤ 400×3 short rows
+    # per doc), so the checkpoint is strictly smaller than
     # re-shuffling the gram table twice more at any scale (r11
     # optimization; same pattern as bm25's candidate materialization).
     # Trade (as at every localCheckpoint site): executor loss now fails
-    # the job instead of replaying lineage, and the ~n_docs × head_chars
-    # × max_gram count rows stay pinned in executor storage until the
+    # the job instead of replaying lineage, and the ~n_docs × 400 × 3
+    # count rows stay pinned in executor storage until the
     # frame is GC'd.
     doc_counts = doc_counts.localCheckpoint(eager=True)
     # per-doc top-k WITHOUT a global window (a row_number window would
     # shuffle-and-SORT every (doc, gram) row; this shuffles the same
-    # rows but sorts only within each doc's ~head·max_gram-entry array
+    # rows but sorts only within each doc's ~400·3-entry array
     # — measured 8.4s → ~3s at sf0.1). Struct sort = (cnt DESC, gram
     # ASC), the same total order the oracle's row_number uses.
     top = F.slice(
@@ -636,12 +629,7 @@ def _entropy_stats(elems: Column) -> Column:
 TOKEN_ENTROPY_GATE = 512
 
 
-def entropy_profile(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    token_gate: int = TOKEN_ENTROPY_GATE,
-) -> DataFrame:
+def entropy_profile(df: DataFrame, token_gate: int = TOKEN_ENTROPY_GATE) -> DataFrame:
     """Per-document entropy quality signals (the repetition/diversity
     filters of C4 / Gopher / RefinedWeb-style cleaning, where low
     character- or word-entropy flags boilerplate, keyboard-mash and
@@ -659,10 +647,10 @@ def entropy_profile(
     paths quantize each n·ln(n) term to 9-decimal fixed point and sum
     exact BIGINTs, so the result is identical regardless of path or
     partitioning and replays bit-for-bit in the DuckDB oracle."""
-    chars = F.filter(F.split(F.col(text_col), ""), lambda c: c != F.lit(""))
-    toks = F.filter(tokens(text_col), lambda t: t != F.lit(""))
+    chars = F.filter(F.split(F.col("text"), ""), lambda c: c != F.lit(""))
+    toks = F.filter(tokens("text"), lambda t: t != F.lit(""))
     base = df.select(
-        F.col(id_col).alias("doc_id"), chars.alias("__chars"), toks.alias("__toks")
+        F.col("doc_id").alias("doc_id"), chars.alias("__chars"), toks.alias("__toks")
     ).filter((F.size("__chars") > 0) & (F.size("__toks") > 0))
 
     def finish(d: DataFrame) -> DataFrame:

@@ -43,7 +43,6 @@ def grouped_top_k_salted(
     k: int,
     salt_col: str,
     n_salts: int = 32,
-    rank_col: str = "rank",
 ) -> DataFrame:
     """Two-phase grouped top-k for LOW-cardinality groups: the plain
     window sends EVERY row of a group through one reducer — with 4
@@ -64,4 +63,4 @@ def grouped_top_k_salted(
         .filter(F.col("__r1") <= k)
         .drop("__salt", "__r1")
     )
-    return grouped_top_k(pruned, partition_by, order_by, k, rank_col)
+    return grouped_top_k(pruned, partition_by, order_by, k, "rank")

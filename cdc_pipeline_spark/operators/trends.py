@@ -21,7 +21,6 @@ def period_over_period(
     time_col: str,
     value_cols: list[str],
     period: str = "hour",
-    partition_by: list[str] | None = None,
 ) -> DataFrame:
     """Percent change of each value column vs the previous period.
 
@@ -31,14 +30,13 @@ def period_over_period(
     ``coalesce`` to 0.0 to match).
 
     The unpartitioned ``Window.orderBy`` is safe here because the input is
-    post-aggregation (one row per period[, group]); pass ``partition_by``
-    to keep the window parallel when trending per group.
+    post-aggregation (one row per period).
     """
     bucket = F.date_trunc(period, F.col(time_col)).alias("period_start")
     aggs = [round_half_up(F.sum(c), 2).alias(c) for c in value_cols]
-    grouped = df.groupBy(bucket, *[F.col(c) for c in (partition_by or [])]).agg(*aggs)
+    grouped = df.groupBy(bucket).agg(*aggs)
 
-    w = Window.partitionBy(*(partition_by or [])).orderBy("period_start")
+    w = Window.orderBy("period_start")
     out = grouped
     for c in value_cols:
         prev = F.lag(F.col(c)).over(w)
@@ -52,12 +50,7 @@ def period_over_period(
     return out.withColumn("period_start", F.col("period_start").cast("long"))
 
 
-def count_anomaly_minutes(
-    df: DataFrame,
-    group_col: str = "event_type",
-    ts_col: str = "ts",
-    k_sigma: int = 3,
-) -> DataFrame:
+def count_anomaly_minutes(df: DataFrame, k_sigma: int = 3) -> DataFrame:
     """Per-group event-RATE anomaly minutes: flag each minute whose
     event count deviates from the group's mean by more than ``k_sigma``
     standard deviations — the volume-spike/outage screen a streaming
@@ -87,8 +80,8 @@ def count_anomaly_minutes(
     """
     counts = (
         df.select(
-            F.col(group_col).alias("grp"),
-            F.date_trunc("minute", F.col(ts_col)).alias("minute"),
+            F.col("event_type").alias("grp"),
+            F.date_trunc("minute", F.col("ts")).alias("minute"),
         )
         .groupBy("grp", "minute")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -112,7 +105,7 @@ def count_anomaly_minutes(
     flagged = (
         counts.join(F.broadcast(stats), "grp")
         .select(
-            F.col("grp").alias(group_col),
+            F.col("grp").alias("event_type"),
             F.col("minute").cast("long").alias("minute_epoch"),
             F.col("c").cast("long").alias("n_events"),
             dev2.cast("long").alias("dev2"),
@@ -120,4 +113,4 @@ def count_anomaly_minutes(
         )
         .filter(F.col("dev2") > F.col("bound"))
     )
-    return flagged.orderBy(group_col, "minute_epoch")
+    return flagged.orderBy("event_type", "minute_epoch")

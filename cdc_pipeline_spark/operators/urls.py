@@ -549,15 +549,10 @@ def _surt_pre_normalized(u: Column) -> Column:
     )
 
 
-def domain_cap_sample(
-    df: DataFrame,
-    url_col: str = "url",
-    id_col: str = "doc_id",
-    keep_pct: int = 40,
-) -> DataFrame:
+def domain_cap_sample(df: DataFrame) -> DataFrame:
     """Per-document URL policy columns + a deterministic UNIFORM sample
     decision: adds ``canonical_url``, ``domain`` and ``keep`` (True for
-    the ``keep_pct``% of ids the portable multiplicative hash selects —
+    the 40% of ids the portable multiplicative hash selects —
     rerun-stable, engine-portable, replayed by the SQL oracle via
     ``sampling.bucket_sql``). ``keep`` is a global thinning knob,
     *independent of domain* — every domain is thinned proportionally.
@@ -569,22 +564,16 @@ def domain_cap_sample(
     # leaves a non-cheap alias referenced twice alone), then derive
     # canonical URL and host from the shared column — the inlined form
     # re-evaluated the interpreted percent subtree per reference
-    src = df.withColumn("__url_pct", percent_normalize(url_col))
+    src = df.withColumn("__url_pct", percent_normalize("url"))
     return (
         src.withColumn("canonical_url", _canonicalize_pre_normalized(F.col("__url_pct")))
         .withColumn("domain", registered_domain(_host_pre_normalized(F.col("__url_pct"))))
-        .withColumn("keep", _bucket(F.col(id_col)) < F.lit(int(keep_pct)))
+        .withColumn("keep", _bucket(F.col("doc_id")) < F.lit(40))
         .drop("__url_pct")
     )
 
 
-def domain_cap(
-    df: DataFrame,
-    url_col: str = "url",
-    id_col: str = "doc_id",
-    max_per_domain: int = 1000,
-    psl: bool = False,
-) -> DataFrame:
+def domain_cap(df: DataFrame, max_per_domain: int = 1000, psl: bool = False) -> DataFrame:
     """TRUE per-domain cap: adds ``canonical_url`` + ``domain``, then
     keeps at most ``max_per_domain`` rows per registered domain, chosen
     by the portable hash order of the id (ties by id) — deterministic,
@@ -603,7 +592,7 @@ def domain_cap(
     without it, every ``*.blogspot.com`` author shares one cap slot."""
     from cdc_pipeline_spark.operators.sampling import deterministic_downsample
 
-    src = df.withColumn("__url_pct", percent_normalize(url_col))
+    src = df.withColumn("__url_pct", percent_normalize("url"))
     tagged = src.withColumn(
         "canonical_url", _canonicalize_pre_normalized(F.col("__url_pct"))
     )
@@ -625,5 +614,5 @@ def domain_cap(
             "domain", registered_domain(_host_pre_normalized(F.col("__url_pct")))
         )
     return deterministic_downsample(
-        tagged.drop("__url_pct"), "domain", int(max_per_domain), id_col
+        tagged.drop("__url_pct"), "domain", int(max_per_domain), "doc_id"
     )

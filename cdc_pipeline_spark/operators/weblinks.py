@@ -417,13 +417,13 @@ def frontier_rows(agg):
     )
 
 
-def frontier_partial(events, url_col: str = "url", kind_col: str = "kind"):
+def frontier_partial(events):
     """Per-url partial aggregate of a (url, kind) event frame:
     ``(url, __cap, __n_out, __n_red)``.  max/sum are associative and
     commutative, so partials from separate increments RE-FOLD exactly
     (`streaming/frontier_index.py` relies on this for its
     incremental-equals-batch guarantee)."""
-    u, k = F.col(url_col), F.col(kind_col)
+    u, k = F.col("url"), F.col("kind")
     return events.groupBy(u.alias("url")).agg(
         F.max((k == "captured").cast("int")).alias("__cap"),
         F.sum((k == "outlink").cast("long")).alias("__n_out"),
@@ -431,7 +431,7 @@ def frontier_partial(events, url_col: str = "url", kind_col: str = "kind"):
     )
 
 
-def crawl_frontier(events, url_col: str = "url", kind_col: str = "kind"):
+def crawl_frontier(events):
     """Fold a (url, kind) event frame — kinds ``outlink`` /
     ``redirect`` / ``captured`` — into the next-fetch frontier: one
     row per (url, link_kind) with its discovery count, EXCLUDING any
@@ -441,4 +441,4 @@ def crawl_frontier(events, url_col: str = "url", kind_col: str = "kind"):
     loses the redirect edge).  Plan: a single key-partitioned
     HashAggregate on url, no join operator — the scale shape for
     CDX-history dedup when the captured set rides the same scan."""
-    return frontier_rows(frontier_partial(events, url_col, kind_col))
+    return frontier_rows(frontier_partial(events))

@@ -23,13 +23,13 @@ def window_col(time_col: str, duration: str, slide: str | None = None) -> Column
     return F.window(F.col(time_col), duration)
 
 
-def window_bounds_epoch(window_alias: str = "window") -> list[Column]:
+def window_bounds_epoch() -> list[Column]:
     """Project window struct to epoch-second longs (stable across engines,
     used by every pipeline's output contract; reference emits epoch-ms,
     ``kpi_aggregator.py:201``)."""
     return [
-        F.col(f"{window_alias}.start").cast("long").alias("window_start"),
-        F.col(f"{window_alias}.end").cast("long").alias("window_end"),
+        F.col("window.start").cast("long").alias("window_start"),
+        F.col("window.end").cast("long").alias("window_end"),
     ]
 
 

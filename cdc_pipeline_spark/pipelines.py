@@ -44,13 +44,7 @@ def _gate_and_dedup(
     return gated.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1)
 
 
-def prepare_training_corpus(
-    docs: DataFrame,
-    budget: int = 256,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shard_col: str = "source",
-) -> DataFrame:
+def prepare_training_corpus(docs: DataFrame, budget: int = 256) -> DataFrame:
     """Quality-gate, dedup and pack a raw document table into
     training-sequence layout rows (doc_id, shard, n_tokens, pack_id).
 
@@ -58,17 +52,17 @@ def prepare_training_corpus(
     one window shuffle on the content fingerprint; packing is one window
     shuffle on the shard. Three stages, two shuffles, one plan.
     """
-    canonical = _gate_and_dedup(docs, id_col, shard_col, text_col).select(
-        id_col,
-        shard_col,
-        F.size(tokens(text_col)).cast("long").alias("n_tokens"),
+    canonical = _gate_and_dedup(docs, "doc_id", "source", "text").select(
+        "doc_id",
+        "source",
+        F.size(tokens("text")).cast("long").alias("n_tokens"),
     )
     return pack_sequences(
         canonical,
         "n_tokens",
         budget=budget,
-        partition_cols=[shard_col],
-        order_cols=[id_col],
+        partition_cols=["source"],
+        order_cols=["doc_id"],
     )
 
 
@@ -76,9 +70,6 @@ def prepare_training_corpus_budgeted(
     docs: DataFrame,
     domain_budget: int = 800,
     budget: int = 256,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shard_col: str = "source",
 ) -> DataFrame:
     """`prepare_training_corpus` with a data-mixing stage: after the
     gate and dedup, each shard keeps only its highest-quality documents
@@ -95,30 +86,30 @@ def prepare_training_corpus_budgeted(
     from cdc_pipeline_spark.operators.text import quality_score
 
     canonical = (
-        _gate_and_dedup(docs, id_col, shard_col, text_col)
-        .withColumn("__toks", tokens(text_col))
+        _gate_and_dedup(docs, "doc_id", "source", "text")
+        .withColumn("__toks", tokens("text"))
         # the SHARED text.quality_score formula — a local re-derivation
         # here previously made a third copy that could drift from it
         .select(
-            id_col,
-            shard_col,
+            "doc_id",
+            "source",
             F.size(F.col("__toks")).cast("long").alias("n_tokens"),
-            quality_score("__toks", text_col).alias("__q"),
+            quality_score("__toks", "text").alias("__q"),
         )
     )
     selected = token_budget_select(
         canonical,
-        group_col=shard_col,
+        group_col="source",
         tokens_col="n_tokens",
         budget=domain_budget,
-        order_by=[F.col("__q").desc(), F.col(id_col).asc()],
+        order_by=[F.col("__q").desc(), F.col("doc_id").asc()],
     ).drop("cum_tokens", "__q")
     return pack_sequences(
         selected,
         "n_tokens",
         budget=budget,
-        partition_cols=[shard_col],
-        order_cols=[id_col],
+        partition_cols=["source"],
+        order_cols=["doc_id"],
     )
 
 

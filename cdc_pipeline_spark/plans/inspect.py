@@ -16,11 +16,11 @@ import io
 from pyspark.sql import DataFrame
 
 
-def plan_string(df: DataFrame, mode: str = "formatted") -> str:
+def plan_string(df: DataFrame) -> str:
     """The ``explain`` output as a string."""
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        df.explain(mode)
+        df.explain("formatted")
     return buf.getvalue()
 
 

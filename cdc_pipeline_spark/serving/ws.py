@@ -74,8 +74,8 @@ def encode_frame(opcode: int, payload: bytes, mask: bool = False) -> bytes:
     return head + payload
 
 
-def encode_text_frame(text: str, mask: bool = False) -> bytes:
-    return encode_frame(OP_TEXT, text.encode("utf-8"), mask=mask)
+def encode_text_frame(text: str) -> bytes:
+    return encode_frame(OP_TEXT, text.encode("utf-8"))
 
 
 def _read_exact(sock: socket.socket, n: int) -> bytes:

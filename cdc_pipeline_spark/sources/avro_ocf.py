@@ -104,11 +104,10 @@ def write_ocf_bytes(
     schema_json: str,
     codec: str = "null",
     records_per_block: int = 1000,
-    sync_salt: str = "",
 ) -> bytes:
     """Serialize records into one complete OCF byte string."""
     encode = compile_encoder(schema_json)
-    sync = _sync_marker(schema_json, sync_salt)
+    sync = _sync_marker(schema_json, "")
     out = bytearray(ocf_header_bytes(schema_json, codec, sync))
     batch: list[dict] = []
     for rec in records:

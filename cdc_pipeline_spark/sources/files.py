@@ -57,7 +57,7 @@ def _nanos_ts_cols(path: str, name: str) -> tuple[str, ...]:
     return cols
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str, schema: StructType | None = None) -> DataFrame:
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table (``{sf_dir}/{name}.parquet``) with its declared schema."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     # Runtime-set so the engine also works on sessions it didn't build
@@ -66,12 +66,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, schema: StructType |
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     nanos_cols = _nanos_ts_cols(path, name)
-    declared = schema if schema is not None else schema_registry.TESTDATA.get(name)
+    declared = schema_registry.TESTDATA.get(name)
     if name == "events" and nanos_cols:
         # the nanos file must be READ with long-typed ts (the conversion
-        # below restores TimestampType) — this holds for an explicitly
-        # passed timestamp schema too, which would otherwise crash the
-        # `div` on a TimestampType column
+        # below restores TimestampType)
         declared = schema_registry.EVENTS_NANOS
     reader = spark.read
     if declared is not None:
@@ -83,10 +81,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, schema: StructType |
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None) -> dict[str, DataFrame]:
-    """Load every (or the named subset of) testdata tables as DataFrames."""
-    names = names or schema_registry.TESTDATA_TABLE_NAMES
-    return {name: load_table(spark, sf_dir, name) for name in names}
+def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """Load every testdata table as a DataFrame."""
+    return {name: load_table(spark, sf_dir, name) for name in schema_registry.TESTDATA_TABLE_NAMES}
 
 
 def read_json(spark: SparkSession, path: str, schema: StructType, **options) -> DataFrame:
@@ -207,7 +204,6 @@ def write_avro(
     path: str,
     codec: str = "null",
     mode: str = "error",
-    records_per_block: int = 1000,
     min_files: int | None = None,
 ) -> None:
     """Jar-free Avro OCF writer (``sources.avro_ocf``): each partition
@@ -294,10 +290,10 @@ def write_avro(
                 if fh is None:
                     fh = open(tmp, "wb")
                     fh.write(ocf_header_bytes(schema_json, codec, sync))
-                for lo in range(0, len(recs), records_per_block):
+                for lo in range(0, len(recs), 1000):
                     fh.write(
                         ocf_block_bytes(
-                            recs[lo : lo + records_per_block], encode, codec, sync
+                            recs[lo : lo + 1000], encode, codec, sync
                         )
                     )
                 n += len(recs)
@@ -369,12 +365,7 @@ def _arrow_schema_utc(schema: StructType):
     )
 
 
-def read_avro(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | None = None,
-    max_block_bytes: int | None = None,
-) -> DataFrame:
+def read_avro(spark: SparkSession, path: str, schema: StructType | None = None) -> DataFrame:
     """Jar-free Avro OCF reader: ``binaryFile`` scan (one task per
     container file — parallel across the files ``write_avro`` laid
     down) + Arrow ``mapInPandas`` block decode with the embedded writer
@@ -388,13 +379,8 @@ def read_avro(
     name); corrupt single records cannot exist in a container whose
     sync markers verify."""
     from cdc_pipeline_spark.sources.avro_codec import avro_to_spark_schema
-    from cdc_pipeline_spark.sources.avro_ocf import (
-        DEFAULT_MAX_BLOCK_BYTES,
-        read_ocf_bytes,
-        read_ocf_schema,
-    )
+    from cdc_pipeline_spark.sources.avro_ocf import read_ocf_bytes, read_ocf_schema
 
-    limit = DEFAULT_MAX_BLOCK_BYTES if max_block_bytes is None else int(max_block_bytes)
     blobs = read_binary_files(spark, path, glob="*.avro")
     if schema is None:
         first = blobs.select("content").limit(1).collect()
@@ -427,7 +413,7 @@ def read_avro(
                         f"{sorted(out_cols)} do not match embedded writer "
                         f"schema fields {emb_names}"
                     )
-                recs = list(read_ocf_bytes(raw, max_block_bytes=limit))
+                recs = list(read_ocf_bytes(raw))
                 yield pa.RecordBatch.from_pylist(recs, schema=arrow_schema)
 
     return blobs.select("content").mapInArrow(gen, schema=out_schema)

@@ -81,7 +81,7 @@ def avro_available(spark: SparkSession) -> bool:
         return False
 
 
-def decode_avro(df: DataFrame, avro_schema_json: str, column: str = "value") -> DataFrame:
+def decode_avro(df: DataFrame, avro_schema_json: str) -> DataFrame:
     """S3: PERMISSIVE Avro decode of the header-stripped payload; corrupt
     records decode to NULL and are dropped (kafka_sources.py:66-84).
 
@@ -91,22 +91,22 @@ def decode_avro(df: DataFrame, avro_schema_json: str, column: str = "value") -> 
     from pyspark.sql.avro.functions import from_avro  # requires spark-avro jar at runtime
 
     decoded = df.select(
-        from_avro(strip_confluent_header(column), avro_schema_json, {"mode": "PERMISSIVE"}).alias("data")
+        from_avro(strip_confluent_header("value"), avro_schema_json, {"mode": "PERMISSIVE"}).alias("data")
     )
     return decoded.filter(F.col("data").isNotNull()).select("data.*")
 
 
-def decode_avro_auto(df: DataFrame, avro_schema_json: str, column: str = "value") -> DataFrame:
+def decode_avro_auto(df: DataFrame, avro_schema_json: str) -> DataFrame:
     """S3 with capability dispatch: the JVM ``from_avro`` path when the
     spark-avro jar is present (codegen, strictly faster), else the
     spec-based pure-Python Arrow decoder (``sources.avro_codec``). Both
     share the PERMISSIVE + null-drop contract, so call sites and tests
     are path-agnostic."""
     if avro_available(df.sparkSession):
-        return decode_avro(df, avro_schema_json, column)
+        return decode_avro(df, avro_schema_json)
     from cdc_pipeline_spark.sources.avro_codec import decode_avro_python
 
-    return decode_avro_python(df.select(strip_confluent_header(column).alias(column)), avro_schema_json, column)
+    return decode_avro_python(df.select(strip_confluent_header("value").alias("value")), avro_schema_json)
 
 
 def avro_reader_schema(
@@ -225,7 +225,6 @@ def read_json_stream(
 def parse_json_with_dlq(
     df: DataFrame,
     schema: StructType,
-    json_col: str = "value",
     carry_cols: tuple[str, ...] = (),
 ) -> tuple[DataFrame, DataFrame]:
     """Decode a JSON string column into (good, dead_letter) frames.
@@ -256,9 +255,9 @@ def parse_json_with_dlq(
     )
     parsed = df.select(
         *carry_cols,
-        F.col(json_col).cast("string").alias("__raw"),
+        F.col("value").cast("string").alias("__raw"),
         F.from_json(
-            F.col(json_col).cast("string"),
+            F.col("value").cast("string"),
             schema_with_corrupt,
             {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt"},
         ).alias("__data"),

@@ -461,12 +461,7 @@ def _record_row(path: str, rec: dict, need_payload: bool = True) -> dict:
 # ---------------------------------------------------------------------------
 
 
-def warc_records(
-    df: DataFrame,
-    content_col: str = "content",
-    path_col: str = "path",
-    need_payload: bool = True,
-) -> DataFrame:
+def warc_records(df: DataFrame, need_payload: bool = True) -> DataFrame:
     """Explode binary WARC/WARC.GZ payload rows into typed record rows
     in one Arrow pass — schema ``WARC_RECORDS_SCHEMA``. Input shape is
     ``binaryFile``'s (``files.read_binary_files``) or any (path,
@@ -484,9 +479,7 @@ def warc_records(
     for queries that only read the envelope."""
     from cdc_pipeline_spark.operators.partitioning import ensure_parallelism as spread
 
-    narrow = spread(
-        df.select(F.col(path_col).alias("path"), F.col(content_col).alias("content"))
-    )
+    narrow = spread(df.select("path", "content"))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
@@ -535,18 +528,13 @@ def stream_warc_records(spark, path: str, glob: str | None = None) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def write_warc_files(
-    df: DataFrame,
-    directory: str,
-    per_record_gzip: bool = True,
-    prefix: str = "part",
-) -> DataFrame:
+def write_warc_files(df: DataFrame, directory: str) -> DataFrame:
     """WARC write direction: serialize (warc_type, headers map, block
     binary) rows into one archive shard per partition — re-sharding /
     re-publishing a filtered or deduplicated corpus back into the
     format downstream crawlers and replayers consume. Records stream
     to the shard file one at a time (memory = one record, not one
-    shard), each as its own gzip member by default so the output stays
+    shard), each as its own gzip member so the output stays
     ranged-fetchable and split-safe (ISO 28500 annex D).
 
     Returns a manifest DataFrame — (path, n_records, n_bytes) per
@@ -565,10 +553,7 @@ def write_warc_files(
 
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else 0
-        path = os.path.join(
-            directory,
-            f"{prefix}-{pid:05d}.warc" + (".gz" if per_record_gzip else ""),
-        )
+        path = os.path.join(directory, f"part-{pid:05d}.warc.gz")
         n_records = 0
         n_bytes = 0
         out = None
@@ -577,11 +562,9 @@ def write_warc_files(
                 for warc_type, headers, block in zip(
                     batch["warc_type"], batch["headers"], batch["block"]
                 ):
-                    rec = build_record(
-                        str(warc_type), dict(headers or {}), bytes(block or b"")
+                    rec = gzip_member(
+                        build_record(str(warc_type), dict(headers or {}), bytes(block or b""))
                     )
-                    if per_record_gzip:
-                        rec = gzip_member(rec)
                     if out is None:
                         os.makedirs(directory, exist_ok=True)
                         out = open(path, "wb")
@@ -604,15 +587,10 @@ def write_warc_files(
     return narrow.mapInPandas(run, "path string, n_records long, n_bytes long")
 
 
-def build_record(
-    warc_type: str,
-    headers: dict[str, str],
-    block: bytes,
-    version: str = "WARC/1.1",
-) -> bytes:
+def build_record(warc_type: str, headers: dict[str, str], block: bytes) -> bytes:
     """Serialize one WARC record (spec field order is free; we emit
     WARC-Type first, then caller headers, then Content-Length)."""
-    lines = [version.encode("ascii"), b"WARC-Type: " + warc_type.encode("ascii")]
+    lines = ["WARC/1.1".encode("ascii"), b"WARC-Type: " + warc_type.encode("ascii")]
     for key, value in headers.items():
         lines.append(f"{key}: {value}".encode("latin-1"))
     lines.append(f"Content-Length: {len(block)}".encode("ascii"))

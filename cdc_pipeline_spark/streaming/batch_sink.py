@@ -8,8 +8,10 @@ Scale rules encoded here:
   * partition by low-cardinality time/tenant columns (date, hour) —
     never by high-cardinality keys (one directory per key kills the
     namenode/listing);
-  * size output files via ``target_rows_per_file`` repartition —
-    thousands of KB-sized files are as bad as one 10 GB file;
+  * size output files (repartition on the partition columns, or
+    ``num_output_files`` without them; ``layout.compact_small_files``
+    after the fact) — thousands of KB-sized files are as bad as one
+    10 GB file;
   * writes go through a deterministic column order so schema drift is
     diffable.
 """
@@ -24,8 +26,6 @@ def write_partitioned_parquet(
     df: DataFrame,
     path: str,
     partition_cols: list[str] | None = None,
-    target_rows_per_file: int | None = None,
-    mode: str = "overwrite",
     num_output_files: int | None = None,
 ) -> None:
     """Write a DataFrame as a partitioned parquet table.
@@ -33,26 +33,19 @@ def write_partitioned_parquet(
     With partition columns, rows are pre-shuffled onto their partition
     (``repartition(partition_cols)``) so each task writes one file per
     directory instead of every task writing into every directory (the
-    small-files explosion). ``target_rows_per_file`` bounds file size in
-    BOTH modes via the writer's ``maxRecordsPerFile`` (a skewed
-    partition splits into several files instead of one huge one) — no
-    extra ``count()`` pass over the input.
+    small-files explosion).
 
-    ``maxRecordsPerFile`` only ever SPLITS large tasks — it never merges
-    small ones, so a many-partition input of small batches in the
-    NON-partitioned mode would still write one tiny file per task. Pass
-    ``num_output_files`` there to consolidate via a shuffle-free
-    ``coalesce``; without it, non-partitioned callers are expected to
-    pre-coalesce.
+    A many-partition input of small batches in the NON-partitioned mode
+    would write one tiny file per task. Pass ``num_output_files`` there
+    to consolidate via a shuffle-free ``coalesce``; without it,
+    non-partitioned callers are expected to pre-coalesce.
     """
     out = df
     if partition_cols:
         out = out.repartition(*[F.col(c) for c in partition_cols])
     elif num_output_files:
         out = out.coalesce(num_output_files)
-    writer = out.write.mode(mode)
-    if target_rows_per_file:
-        writer = writer.option("maxRecordsPerFile", int(target_rows_per_file))
+    writer = out.write.mode("overwrite")
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     writer.parquet(path)
@@ -72,7 +65,6 @@ def write_bucketed_table(
     bucket_cols: list[str],
     num_buckets: int = 32,
     sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Persist a managed table bucketed (and optionally sorted) by the
     join/aggregation key — the lake-layout answer to repeated co-located
@@ -80,20 +72,13 @@ def write_bucketed_table(
     bucket count join with NO shuffle on either side (verified by plan
     test). Bucketing metadata requires the session catalog, hence
     saveAsTable rather than path-based parquet."""
-    writer = df.write.mode(mode).bucketBy(num_buckets, *bucket_cols)
+    writer = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_cols)
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table_name)
 
 
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    id_col: str,
-    n_shards: int = 8,
-    split_col: str | None = None,
-    mode: str = "overwrite",
-) -> DataFrame:
+def write_training_shards(df: DataFrame, path: str, id_col: str, n_shards: int = 8) -> DataFrame:
     """Export a prepared corpus as deterministic training shards and
     return the manifest.
 
@@ -101,9 +86,9 @@ def write_training_shards(
     function of the record id, so re-exports, task retries and cluster
     resizes place every record in the SAME shard (a reader can resume
     mid-epoch against a re-written export). Layout:
-    ``path/[split=<s>/]shard=<k>/part-*.parquet``, one task per shard
-    directory (repartition on the shard key — no small-files
-    explosion). The returned manifest (one row per split/shard:
+    ``path/shard=<k>/part-*.parquet``, one task per shard directory
+    (repartition on the shard key — no small-files explosion). The
+    returned manifest (one row per shard:
     row count) is what a data loader checks before an epoch; persist it
     next to the export.
 
@@ -112,13 +97,11 @@ def write_training_shards(
     Spark's partition count.
     """
     shard = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards)).alias("shard")
-    out = df.withColumn("shard", shard)
-    partition_cols = ([split_col] if split_col else []) + ["shard"]
-    out.repartition(*[F.col(c) for c in partition_cols]).write.mode(mode).partitionBy(
-        *partition_cols
+    df.withColumn("shard", shard).repartition(F.col("shard")).write.mode("overwrite").partitionBy(
+        "shard"
     ).parquet(path)
     back = df.sparkSession.read.parquet(path)
-    return back.groupBy(*partition_cols).agg(F.count(F.lit(1)).alias("n_rows"))
+    return back.groupBy("shard").agg(F.count(F.lit(1)).alias("n_rows"))
 
 
 def avro_batch_writer(path: str, codec: str = "null"):

@@ -38,14 +38,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 
-def corpus_ingest_transform(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    window: int = 64,
-    stride: int = 48,
-    n_shards: int = 8,
-) -> DataFrame:
+def corpus_ingest_transform(docs: DataFrame) -> DataFrame:
     """The (stateless) gate → chunk → shard transformation, shared
     verbatim by the streaming job and its batch twin — one definition,
     two execution modes, which is what makes the golden equivalence test
@@ -54,13 +47,10 @@ def corpus_ingest_transform(
     from cdc_pipeline_spark.operators.chunking import chunk_documents
     from cdc_pipeline_spark.operators.quality import quality_rule_columns
 
-    gated = docs.select(
-        id_col, text_col, *quality_rule_columns(text_col)
-    ).filter(F.col("keep"))
-    chunks = chunk_documents(gated, id_col=id_col, text_col=text_col,
-                             window=window, stride=stride)
+    gated = docs.select("doc_id", "text", *quality_rule_columns("text")).filter(F.col("keep"))
+    chunks = chunk_documents(gated, window=64, stride=48)
     return chunks.withColumn(
-        "shard", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_shards))
+        "shard", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(8))
     )
 
 
@@ -70,33 +60,25 @@ def start_corpus_ingest(
     out_path: str,
     checkpoint: str,
     schema: StructType,
-    window: int = 64,
-    stride: int = 48,
-    n_shards: int = 8,
     max_files_per_trigger: int | None = 1,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Start the streaming corpus-ingest job over a file source (the
     Kafka variant swaps the reader; the transform chain is identical).
 
-    ``available_now=True`` drains the current backlog and stops — the
-    catch-up/backfill mode; ``False`` runs continuously. Restart with
-    the same checkpoint to resume exactly-once from the last committed
-    batch."""
+    It drains the current backlog and stops (``availableNow``, the
+    catch-up/backfill mode). Restart with the same checkpoint to resume
+    exactly-once from the last committed batch."""
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     stream = reader.parquet(src_path)
-    out = corpus_ingest_transform(
-        stream, window=window, stride=stride, n_shards=n_shards
-    )
-    writer = (
-        out.writeStream.format("parquet")
+    return (
+        corpus_ingest_transform(stream)
+        .writeStream.format("parquet")
         .option("path", out_path)
         .option("checkpointLocation", checkpoint)
         .partitionBy("shard")
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

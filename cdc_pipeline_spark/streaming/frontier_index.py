@@ -83,13 +83,11 @@ def _refold(partials: DataFrame) -> DataFrame:
     )
 
 
-def compact_frontier_index(
-    spark: SparkSession, path: str, run_id: str = "", lock_timeout: float = 30.0
-) -> int:
+def compact_frontier_index(spark: SparkSession, path: str, run_id: str = "") -> int:
     """Fold all batch partials into one ``batch_id=-1`` partition.
     The fold IS the read-side re-fold (max/sum per url), so
     `read_frontier` results are unchanged by construction; the marker
     written by the compaction makes a replayed already-folded batch
     a no-op under the writer's guard.  Returns the folded row count."""
     table = os.path.join(path, _PARTIALS)
-    return compact(spark, [(table, _refold, _PARTIAL_SCHEMA)], run_id, lock_timeout)[0]
+    return compact(spark, [(table, _refold, _PARTIAL_SCHEMA)], run_id)[0]

@@ -293,7 +293,6 @@ def generate_batches(
     out_base: str,
     rate: float | None = None,
     n_ticks: int = 5,
-    tick_seconds: float = 1.0,
     seed: int = 7,
     preset: str | None = None,
 ) -> dict[str, str]:
@@ -317,7 +316,7 @@ def generate_batches(
 
     mtime0 = _time.time()
     for tick in range(n_ticks):
-        write_tick(spark, gen, dirs, tick, rate, tick_seconds, mtime0 + tick)
+        write_tick(spark, gen, dirs, tick, rate, 1.0, mtime0 + tick)
     return dirs
 
 

@@ -64,7 +64,6 @@ def start_kpi_pipeline(
     fused: DataFrame,
     kv,
     checkpoint: str,
-    time_col: str = "event_time",
     trigger: dict | None = None,
     trend_period_seconds: int = 3600,
 ) -> StreamingQuery:
@@ -81,7 +80,7 @@ def start_kpi_pipeline(
     reference's 3600 for hourly buckets; tests shrink it to get
     multi-period coverage from seconds-apart micro-batches."""
     _route, key, channel, _cap = CONTRACT["metrics"]
-    agg = aggregates.windowed_kpi(fused.withWatermark(time_col, WATERMARK), time_col=time_col)
+    agg = aggregates.windowed_kpi(fused.withWatermark("event_time", WATERMARK))
     trend_cols = [c for c in agg.columns if c not in ("window_start", "window_end")]
     writer = sink_lib.trend_hash_writer(
         kv,
@@ -100,13 +99,12 @@ def start_region_pipeline(
     source: DataFrame,
     kv,
     checkpoint: str,
-    time_col: str = "event_time",
     trigger: dict | None = None,
 ) -> StreamingQuery:
     """A2: per-(window, region) snapshot serialized as one JSON array of
     the latest window's regions (region_aggregator.py:32-47)."""
     _route, key, channel, _cap = CONTRACT["regions"]
-    agg = aggregates.windowed_region(source.withWatermark(time_col, WATERMARK), time_col=time_col)
+    agg = aggregates.windowed_region(source.withWatermark("event_time", WATERMARK))
 
     def latest_window_regions(rows: list[dict]):
         # update mode emits only the (window, region) rows this trigger
@@ -147,14 +145,13 @@ def start_health_pipeline(
     source: DataFrame,
     kv,
     checkpoint: str,
-    time_col: str = "recorded_at",
     trigger: dict | None = None,
     **health_kwargs,
 ) -> StreamingQuery:
     """A4: conditional means + node count → latest-window hash snapshot."""
     _route, key, channel, _cap = CONTRACT["health"]
     agg = aggregates.windowed_health(
-        source.withWatermark(time_col, WATERMARK), time_col=time_col, **health_kwargs
+        source.withWatermark("recorded_at", WATERMARK), **health_kwargs
     )
     writer = sink_lib.latest_row_hash_writer(kv, key, order_cols=["window_end"], channel=channel)
     return _start(agg, writer, checkpoint, "update", trigger)

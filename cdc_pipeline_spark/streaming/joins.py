@@ -84,13 +84,7 @@ def stream_stream_interval_join(
     return joined.select(*out_cols)
 
 
-def stream_static_enrich(
-    stream: DataFrame,
-    dim: DataFrame,
-    on: list[str] | str,
-    how: str = "left",
-    broadcast_dim: bool = True,
-) -> DataFrame:
+def stream_static_enrich(stream: DataFrame, dim: DataFrame, on: list[str] | str) -> DataFrame:
     """Enrich a stream with a STATIC dimension table — the stateless
     streaming join: no watermark, no state store, because the static
     side is fully known at plan time.
@@ -104,12 +98,10 @@ def stream_static_enrich(
     re-read the dim inside a ``foreachBatch`` when file-level refresh is
     required.
 
-    The dim side is broadcast by default: on a cluster every executor
-    holds the dim once and the stream never shuffles — the streaming
-    twin of ``operators.enrich.enrich_with_dim``. Leave
-    ``broadcast_dim=False`` for dims too large to broadcast (the join
-    then shuffles EVERY micro-batch on the key; prefer pre-denormalizing
-    upstream, the reference's fat-event approach, FLOW.md:42-55).
+    The dim side is broadcast: on a cluster every executor holds the dim
+    once and the stream never shuffles — the streaming twin of
+    ``operators.enrich.enrich_with_dim``. A dim too large to broadcast
+    calls for pre-denormalizing upstream instead (the reference's
+    fat-event approach, FLOW.md:42-55).
     """
-    d = F.broadcast(dim) if broadcast_dim else dim
-    return stream.join(d, on, how)
+    return stream.join(F.broadcast(dim), on, "left")

@@ -189,7 +189,7 @@ class NearDupIndexWriter:
             F.col(self.id_col).alias("doc_id"), F.col(self.text_col).alias("text")
         ).localCheckpoint()  # signatures + shingles + probe read it; cut lineage once
 
-        sig = minhash_signatures(docs, "doc_id", "text", self.n, self.num_perm)
+        sig = minhash_signatures(docs, n=self.n, num_perm=self.num_perm)
         # both are probed AND written, and the probe's hot-bucket cap
         # evaluates its input more than once — one O(batch)
         # materialization each, never one of the full history. They
@@ -257,9 +257,7 @@ def read_matches(spark: SparkSession, path: str) -> DataFrame:
     return read_table(spark, os.path.join(path, "matches"), _MATCH_SCHEMA)
 
 
-def compact_neardup_index(
-    spark: SparkSession, path: str, run_id: str = "", lock_timeout: float = 30.0
-) -> tuple[int, int]:
+def compact_neardup_index(spark: SparkSession, path: str, run_id: str = "") -> tuple[int, int]:
     """Fold the PROBED tables — ``postings/`` and ``shingles/`` — into
     one ``batch_id=-1`` partition each; thousands of micro-batches
     otherwise mean every per-batch probe pays a thousands-of-tiny-files
@@ -285,7 +283,6 @@ def compact_neardup_index(
             (os.path.join(path, "shingles"), _latest_shingles, None),
         ],
         run_id,
-        lock_timeout,
     )
     return n_postings, n_shingles
 
@@ -359,9 +356,7 @@ class PhashNearDupIndexWriter:
             .localCheckpoint()  # posted AND probed AND written: cut once
         )
         posting = (
-            banded_chunks(
-                hashes.filter("decoded"), "doc_id", "ahash", self.bits, self.bands
-            )
+            banded_chunks(hashes.filter("decoded"), "ahash", self.bits, self.bands)
             .select("doc_id", "band", "chunk")
             .withColumn("batch_id", F.lit(int(batch_id)))
             .localCheckpoint()
@@ -411,9 +406,7 @@ def read_phash_matches(spark: SparkSession, path: str) -> DataFrame:
     return read_table(spark, os.path.join(path, "matches"), _PHASH_MATCH_SCHEMA)
 
 
-def compact_phash_index(
-    spark: SparkSession, path: str, run_id: str = "", lock_timeout: float = 30.0
-) -> tuple[int, int]:
+def compact_phash_index(spark: SparkSession, path: str, run_id: str = "") -> tuple[int, int]:
     """Fold ``postings/`` (distinct (band, chunk, doc_id)) and
     ``hashes/`` (``_latest_hashes``, the probe's own per-doc pick) into
     batch_id=-1, exactly the :func:`compact_neardup_index` semantics
@@ -427,6 +420,5 @@ def compact_phash_index(
             (os.path.join(path, "hashes"), _latest_hashes, None),
         ],
         run_id,
-        lock_timeout,
     )
     return n_postings, n_hashes

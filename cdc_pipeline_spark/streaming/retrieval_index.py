@@ -85,9 +85,7 @@ class Bm25IndexWriter:
             write_batch(os.path.join(self.path, sub), batch_id, self.run_id, frame)
 
 
-def compact_index(
-    spark: SparkSession, path: str, run_id: str = "", lock_timeout: float = 30.0
-) -> tuple[int, int]:
+def compact_index(spark: SparkSession, path: str, run_id: str = "") -> tuple[int, int]:
     """Fold both index tables' per-batch partitions into one
     ``batch_id=-1`` partition each, dropping the per-batch dirs —
     thousands of micro-batches otherwise mean thousands of tiny
@@ -103,7 +101,7 @@ def compact_index(
     compaction; a never-written table counts 0.
     """
     tf_rows, dl_rows = (
-        compact(spark, [(os.path.join(path, sub), _keep, schema)], run_id, lock_timeout)[0]
+        compact(spark, [(os.path.join(path, sub), _keep, schema)], run_id)[0]
         for sub, schema in (("tf", _TF_SCHEMA), ("doclens", _DL_SCHEMA))
     )
     return tf_rows, dl_rows
@@ -130,8 +128,6 @@ def bm25_topk_over_index(
     path: str,
     queries: Sequence[tuple[int, tuple[str, ...]]] = BM25_QUERIES,
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
     broad_candidates: int | None = None,
 ) -> DataFrame:
     """Rank a term-query batch against the streaming-maintained index —
@@ -144,7 +140,7 @@ def bm25_topk_over_index(
     plan a second time."""
     tf, dls = read_index(spark, path)
     tf = tf.drop("batch_id")
-    w = bm25_term_weights_from_stats(tf, dls.drop("batch_id"), k1=k1, b=b)
+    w = bm25_term_weights_from_stats(tf, dls.drop("batch_id"))
     return bm25_topk_from_weights(
         w, queries, k, broad_candidates=broad_candidates, probe=tf
     )

@@ -26,7 +26,6 @@ files accumulate one dir per batch; fold them periodically with
 
 from __future__ import annotations
 
-import functools
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -203,20 +202,13 @@ def read_histogram_rollup(
     return _fold_bins(read_table(spark, path), tuple(group_cols))
 
 
-def compact_histogram_partials(
-    spark: SparkSession,
-    path: str,
-    group_cols: tuple[str, ...] = (),
-    run_id: str = "",
-    lock_timeout: float = 30.0,
-) -> int:
+def compact_histogram_partials(spark: SparkSession, path: str, run_id: str = "") -> int:
     """Fold histogram per-batch partials into one ``batch_id=-1``
     partition (exact integer merge), with the same replay marker and
     crash-safe rename-aside swap as :func:`compact_partials` — so an
     at-least-once replay of an already-folded batch id is skipped by
     the writer's guard instead of double-counting."""
-    fold = functools.partial(_fold_bins, group_cols=tuple(group_cols))
-    return compact(spark, [(path, fold, None)], run_id, lock_timeout)[0]
+    return compact(spark, [(path, _fold_bins, None)], run_id)[0]
 
 
 class GramRollupWriter:
@@ -277,13 +269,8 @@ def read_gram_rollup(spark: SparkSession, path: str) -> DataFrame:
     return assemble_centered_gram(_fold_gram(read_table(spark, path, _GRAM_SCHEMA)))
 
 
-def compact_gram_partials(
-    spark: SparkSession,
-    path: str,
-    run_id: str = "",
-    lock_timeout: float = 30.0,
-) -> int:
+def compact_gram_partials(spark: SparkSession, path: str, run_id: str = "") -> int:
     """Fold Gram per-batch partials into one ``batch_id=-1`` partition
     (exact decimal merge), with the same replay marker and crash-safe
     rename-aside swap as the other compactors."""
-    return compact(spark, [(path, _fold_gram, _GRAM_SCHEMA)], run_id, lock_timeout)[0]
+    return compact(spark, [(path, _fold_gram, _GRAM_SCHEMA)], run_id)[0]

@@ -169,12 +169,7 @@ class Scd2TableWriter:
         _overwrite_buckets(rebuilt, self.path)
 
 
-def expire_history(
-    spark: SparkSession,
-    path: str,
-    older_than,
-    n_buckets: int | None = None,
-) -> int:
+def expire_history(spark: SparkSession, path: str, older_than) -> int:
     """Retention pass: delete CLOSED interval rows whose validity ended
     before ``older_than`` (current rows are never touched — the table
     keeps serving as-of queries inside the retention horizon). Returns

@@ -94,13 +94,7 @@ def _fold_breaches(
     return count, status, last_window, last_epoch
 
 
-def consecutive_breach_alerts(
-    evaluated: DataFrame,
-    n_breaches: int = 3,
-    rule_col: str = "rule_id",
-    status_col: str = "status",
-    time_col: str = "window_end",
-) -> DataFrame:
+def consecutive_breach_alerts(evaluated: DataFrame, n_breaches: int = 3) -> DataFrame:
     """Normal→Pending→Firing state machine over a per-window rule-status
     stream (output of operators.aggregates.alert_frame applied to
     windowed metrics).
@@ -126,7 +120,7 @@ def consecutive_breach_alerts(
         if chunks:
             count, status, last_window, last_epoch = _fold_breaches(
                 pd.concat(chunks, ignore_index=True),
-                status_col, time_col, count, status, last_window, n_breaches,
+                "status", "window_end", count, status, last_window, n_breaches,
             )
         state.update((count, status, last_window))
         yield pd.DataFrame(
@@ -138,7 +132,7 @@ def consecutive_breach_alerts(
             }
         )
 
-    return evaluated.groupBy(rule_col).applyInPandasWithState(
+    return evaluated.groupBy("rule_id").applyInPandasWithState(
         update,
         outputStructType=ALERT_OUTPUT_SCHEMA,
         stateStructType=ALERT_STATE_SCHEMA,

@@ -2034,6 +2034,21 @@ def _remove_mirror_dir(path: str, pid: int) -> None:
         shutil.rmtree(path, ignore_errors=True)
 
 
+def _remove_dead_mirror_dirs(base: str) -> None:
+    """Remove the mirror directories of processes that are gone: one
+    killed before its exit handler ran leaves its copy behind."""
+    for entry in os.listdir(base) if os.path.isdir(base) else ():
+        pid = entry.rpartition("-pid")[2]
+        if not pid.isdigit():
+            continue
+        try:
+            os.kill(int(pid), 0)
+        except ProcessLookupError:
+            shutil.rmtree(os.path.join(base, entry), ignore_errors=True)
+        except OSError:
+            pass  # alive, owned by another user
+
+
 def _format_mirror_path(sf_dir: str, fmt: str, table: str) -> str:
     """Scratch location for a format-mirrored table. Keyed by a hash of
     the ABSOLUTE sf_dir (two checkouts with the same basename must not
@@ -2041,16 +2056,18 @@ def _format_mirror_path(sf_dir: str, fmt: str, table: str) -> str:
     mode='overwrite' would otherwise delete the directory out from
     under this process's lazily-evaluated read-back scan. Because the
     key is per process, the process removes its own directory at exit
-    (registered the first time it makes the path)."""
+    (registered the first time it makes the path), and the first path
+    it makes also sweeps the directories of processes that died."""
     import hashlib
     import tempfile
 
     dir_key = hashlib.sha256(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
+    base = os.path.join(tempfile.gettempdir(), "cdc-spark-format-mirrors")
     root = os.path.join(
-        tempfile.gettempdir(),
-        "cdc-spark-format-mirrors",
-        f"{os.path.basename(sf_dir.rstrip('/'))}-{dir_key}-pid{os.getpid()}",
+        base, f"{os.path.basename(sf_dir.rstrip('/'))}-{dir_key}-pid{os.getpid()}"
     )
+    if not _MIRROR_DIRS:
+        _remove_dead_mirror_dirs(base)
     if root not in _MIRROR_DIRS:
         _MIRROR_DIRS.add(root)
         atexit.register(_remove_mirror_dir, root, os.getpid())

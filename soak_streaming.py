@@ -492,7 +492,7 @@ def main() -> None:
     nd_corpus = member.select(
         "doc_id", "batch_id", text_expr(F.col("doc_id")).alias("text")
     ).localCheckpoint(eager=True)
-    sig = minhash_signatures(nd_corpus, "doc_id", "text", nd_writer.n, nd_writer.num_perm)
+    sig = minhash_signatures(nd_corpus, n=nd_writer.n, num_perm=nd_writer.num_perm)
     posting = band_posting(sig, nd_writer.num_perm, nd_writer.bands).join(
         member, "doc_id"
     )
@@ -565,9 +565,9 @@ def main() -> None:
             pmember.select("doc_id"), replica_div=PH_REPLICA_DIV
         )
     ).filter("decoded").join(pmember, "doc_id").localCheckpoint(eager=True)
-    ph_banded = banded_chunks(
-        ph_hashes, "doc_id", "ahash", ph_writer.bits, ph_writer.bands
-    ).join(pmember, "doc_id")
+    ph_banded = banded_chunks(ph_hashes, "ahash", ph_writer.bits, ph_writer.bands).join(
+        pmember, "doc_id"
+    )
     ph_cand = (
         ph_banded.select("band", "chunk", "doc_id", "batch_id")
         .join(

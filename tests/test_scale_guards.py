@@ -448,12 +448,24 @@ def test_bench_prints_one_record_for_named_queries_and_writes_plans(tmp_path):
         cwd=repo, env=env, capture_output=True, text=True, timeout=300,
     )
     assert bad.returncode == 2 and "no_such_query" in bad.stderr
+    # the committed freeze is sf0.1: gating a smoke-SF run against it
+    # would judge sf0.001 timings by sf0.1 numbers
+    other_sf = subprocess.run(
+        [_sys.executable, "bench.py", "q1_pricing_summary", "--check"],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert other_sf.returncode == 2
+    assert "sf 0.001" in other_sf.stderr and "sf 0.1" in other_sf.stderr
 
     before = porcelain()
     plans = tmp_path / "plans"
+    freeze = tmp_path / "freeze.json"
+    freeze.write_text(json.dumps(
+        {"sf": 0.001, "queries": {"q1_pricing_summary": 1.0, "kpi_sliding_window": 1.0}}
+    ))
     # command-line order is the reverse of suite order on purpose
     proc = subprocess.run(
-        [_sys.executable, "bench.py", "--check", "--plans", str(plans),
+        [_sys.executable, "bench.py", "--check", str(freeze), "--plans", str(plans),
          "kpi_sliding_window", "q1_pricing_summary"],
         cwd=repo, env=env, capture_output=True, text=True, timeout=900,
     )

@@ -60,10 +60,16 @@ def test_driver_window_is_exactly_fifty():
 def test_format_mirrors_are_removed_at_process_exit(tmp_path):
     """The ORC/XML mirror queries write a per-process copy under
     $TMPDIR; the process must remove it when it exits, or every driver
-    that runs them leaves its copy behind."""
+    that runs them leaves its copy behind. The copy of a process killed
+    before its exit goes when the next process makes its first mirror."""
     import json
     import subprocess
     import sys
+
+    finished = subprocess.Popen(["true"])
+    finished.wait()
+    stale = tmp_path / "cdc-spark-format-mirrors" / f"sf0.001-000000000000-pid{finished.pid}"
+    (stale / "orc").mkdir(parents=True)
 
     child = f"""
 import json, os
@@ -88,3 +94,4 @@ spark.stop()
     assert [d for d in out["made"] if d.endswith(suffix)], out
     left = list((tmp_path / "cdc-spark-format-mirrors").glob(f"*{suffix}"))
     assert not left, left
+    assert not stale.exists()
