@@ -9,9 +9,8 @@ core of the host) and prints ONE JSON line to stdout:
     {"metric": "workload_wall_sec", "value": N, "unit": "sec",
      "queries": {name: sec, ...}, "sf": 0.1, "calibration": {...}}
 
-plus ``isolation_retried`` when a retry ran and ``gate`` under
-``--check``. Progress goes to stderr; nothing is written into the
-checkout.
+plus ``gate`` under ``--check``. Progress goes to stderr; nothing is
+written into the checkout.
 
     python bench.py [--check [BASELINE_QUERIES.json]] [--plans DIR] [name ...]
 
@@ -26,34 +25,24 @@ winnowing) would measure the scan instead of their expressions.
 additionally compares every query against its frozen per-query baseline
 and exits 1 on regression: measured > 1.5x frozen AND measured above
 the 1-second noise floor (sub-second timings jitter from scheduling
-alone, see BASELINE.md, so they can't gate at a ratio). Queries new
-since the freeze are reported informationally, never failed. The
-freeze's ``sf`` must equal the run's (read from the ``sf<N>`` name of
-$SPARK_GRAFT_SF_DIR); otherwise it exits 2 before the session starts,
-like an unknown query name.
-
-Would-be regressions get one ISOLATION RETRY (best of three, in a FRESH
-JVM at the end of the suite) before the gate fails: multi-second
-queries spike from scheduler/GC luck alone — three consecutive
-full-suite runs of identical code flagged three disjoint sets — and a
-long bench session additionally degrades late queries from accumulated
-driver/codegen state, which an in-JVM retry inherits (measured: 4.0s
-retry vs 0.95s fresh, identical code). A genuine plan regression is
-exactly the thing that reproduces in the fresh session too. Retried
-names are recorded in the JSON (``isolation_retried``) so a pass never
-hides that a retry happened.
+alone, see BASELINE.md, so they can't gate at a ratio), both scaled by
+the run's ``host_drift``. Queries new since the freeze are reported
+informationally, never failed. The freeze's ``sf`` and ``cpus`` must
+equal the run's (the ``sf<N>`` name of $SPARK_GRAFT_SF_DIR, and
+$SPARK_GRAFT_CPUS); otherwise it exits 2 before the session starts,
+like an unknown query name: timings at another scale or core count say
+nothing about this one.
 
 The record also carries a ``calibration`` block (host_drift vs the
-committed freeze, three control-query ratios, 1/5/15-min load averages
-around the run) so a reader can adjudicate host noise from the artifact
-alone: controls near 1.0x and load << cpus mean per-query ratios are
-believable; controls at 1.5-3x or load >> cpus mean the run measured
-the neighbors, not the code.
+committed freeze, the core count, 1/5/15-min load averages around the
+run) so a reader can adjudicate host noise from the artifact alone: a
+drift near 1.0x and load << cpus mean per-query ratios are believable;
+load >> cpus means the run measured the neighbors, not the code.
 
 ``--plans DIR`` writes DIR/<name>.txt with each query's
-``explain("formatted")`` text once all timing (and the gate's retry) is
-done, so dumping plans moves no timing. Diffing two such directories
-(after masking expression ids) shows whether a refactor changed a plan.
+``explain("formatted")`` text once all timing is done, so dumping plans
+moves no timing. Diffing two such directories (after masking expression
+ids) shows whether a refactor changed a plan.
 """
 
 from __future__ import annotations
@@ -66,57 +55,36 @@ import time
 
 from cdc_pipeline_spark.session import create_spark_session
 from cdc_pipeline_spark import workload
-from perfbench.common import forced
-
-
-def _warm_python_workers(spark, n_workers: int) -> None:
-    """Spawn the Python/Arrow worker pool BEFORE timing anything.
-
-    A fresh JVM has no Python workers; the first mapInPandas/mapInArrow
-    query pays the daemon start and one worker fork per core. The
-    factory's daemon (``cdc_pipeline_spark.worker_daemon``) moves the
-    pandas/pyarrow import out of the workers, imports PySpark from its
-    installed, bytecode-cached copy rather than Spark's zip, and leaves
-    no zip importer for each task's ``invalidate_caches()`` to re-read.
-    On local[4] (4-core VM, three fresh pools each, alternating in one
-    driver) this warm-up takes 1.16-1.17 s wall cold (3.2 s as the
-    JVM's first job) and 0.21-0.29 s warm with the stock
-    ``pyspark.daemon``, 0.57-0.60 s and 0.14-0.18 s with the factory's;
-    per-worker CPU 0.44-0.50 s → 0.00-0.01 s, daemon CPU 0.62-0.66 s →
-    0.38 s, daemon plus workers 2.47-2.54 s → 0.41-0.42 s. Without this
-    warm-up the cost lands on whichever ARROW query happens to run
-    first — which is how that query "drifted" 1.50 → 2.69 s across
-    rounds as registry reordering moved it around the suite, and why
-    isolation retries of Arrow queries read systematically high. One
-    row per core guarantees every worker in the pool is forked."""
-    df = spark.range(n_workers, numPartitions=n_workers)
-    df.mapInPandas(lambda batches: batches, df.schema).count()
+from perfbench.common import forced, warm_workers
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
 
 
-def _session(app_name: str):
+def _session():
     """A local[CPUS] session warmed before anything is timed: the
     JVM/codegen once on the smallest SF, so per-query numbers measure
     the plan, not first-run JIT, then the Python worker pool, so the
     first Arrow query doesn't absorb the one-time spawn cost."""
     spark = create_spark_session(
-        app_name=app_name,
+        app_name="cdc-pipeline-spark-bench",
         master=f"local[{CPUS}]",
         shuffle_partitions=int(CPUS),
     )
     spark.sparkContext.setLogLevel("ERROR")
     forced(workload.QUERIES["q1_pricing_summary"](spark, "/root/testdata/sf0.001")).collect()
-    _warm_python_workers(spark, int(CPUS))
+    warm_workers(spark)
     return spark
 
 
-def _best_of(spark, name: str, runs: int, sf_dir: str) -> float:
+def _best_of_two(spark, name: str) -> float:
+    """Best of two runs: the first pays plan compilation/codegen, the
+    second measures the steady-state plan, which is what a resident
+    engine re-executing a query shape actually costs."""
     best = None
-    for _ in range(runs):
+    for _ in range(2):
         start = time.perf_counter()
-        forced(workload.QUERIES[name](spark, sf_dir)).collect()
+        forced(workload.QUERIES[name](spark, SF_DIR)).collect()
         elapsed = time.perf_counter() - start
         best = elapsed if best is None else min(best, elapsed)
     return best
@@ -160,22 +128,14 @@ HEADLINE = [
 REGRESSION_RATIO = 1.5
 NOISE_FLOOR_SEC = 1.0
 
-# Control queries for host-noise calibration: multi-second, untouched
-# for several rounds, spanning the engine's three execution families
-# (windowed JVM agg / LSH shuffle join / Arrow mapInPandas). When THESE
-# read well above their freezes, the host is loaded — per-query ratios
-# from that run measure the neighbors, not the code (BENCH_r08 read
-# 1.40x geomean purely from a load-avg-11 neighbor window; adjudicating
-# it required a fresh probe because the artifact carried no calibration).
-CONTROL_QUERIES = ("kpi_sliding_window", "dedup_minhash_lsh", "embedding_kmeans")
 
-
-def load_baseline(path: str) -> tuple[float | None, dict[str, float]]:
-    """The freeze's scale factor and per-query timings from
-    BASELINE_QUERIES.json ({"sf": 0.1, "queries": {name: sec}})."""
+def load_baseline(path: str) -> tuple[float | None, int | None, dict[str, float]]:
+    """The freeze's scale factor, core count and per-query timings from
+    BASELINE_QUERIES.json ({"sf": 0.1, "cpus": 4, "queries": {name: sec}})."""
     with open(path) as fh:
         doc = json.load(fh)
-    return doc.get("sf"), {str(k): float(v) for k, v in doc["queries"].items()}
+    queries = {str(k): float(v) for k, v in doc["queries"].items()}
+    return doc.get("sf"), doc.get("cpus"), queries
 
 
 def host_drift(timings: dict[str, float], baseline: dict[str, float]) -> float:
@@ -207,23 +167,17 @@ def find_regressions(
     baseline: dict[str, float],
     ratio: float = REGRESSION_RATIO,
     noise_floor: float = NOISE_FLOOR_SEC,
-    drift: float | None = None,
 ) -> tuple[dict[str, tuple[float, float]], list[str], float]:
     """(regressions {name: (measured, frozen)}, new-query names, drift).
 
     A query regresses when measured > ratio x drift x frozen AND
     measured exceeds the drift-scaled absolute noise floor — sub-second
-    timings on local[32] jitter ±30% from scheduling alone, so a pure
-    ratio would flag noise, and `host_drift` cancels uniform
-    machine-speed shifts since the freeze (a genuine single-query
-    regression still stands out against the median). Pass ``drift`` to
-    pin a previously computed ratio — the isolation-retry pass must
-    re-evaluate under the SAME drift it selected retries with, or
-    lowering the retried timings would lower the median and flag a
-    query that never got its retry.
+    timings jitter from scheduling alone, so a pure ratio would flag
+    noise, and `host_drift` cancels uniform machine-speed shifts since
+    the freeze (a genuine single-query regression still stands out
+    against the median).
     """
-    if drift is None:
-        drift = host_drift(timings, baseline)
+    drift = host_drift(timings, baseline)
     regressions: dict[str, tuple[float, float]] = {}
     new: list[str] = []
     for name, measured in timings.items():
@@ -233,47 +187,6 @@ def find_regressions(
         elif measured > ratio * drift * frozen and measured > noise_floor * drift:
             regressions[name] = (measured, frozen)
     return regressions, new, drift
-
-
-def _retry(names: list[str], sf_dir: str) -> None:
-    """Isolation-retry body, run by :func:`_subprocess_retry` in a fresh
-    process: prints {name: best_sec} as one JSON line. Best of THREE,
-    not two: the first run pays plan analysis/codegen (measured
-    1.7-2.3s vs 0.8-1.0s steady for HOF-heavy queries), so best-of-2
-    leaves a single steady draw and its jitter false-flags sub-2s rows;
-    two steady draws make the min a real steady-state reading. Cost is
-    one extra run, only for flagged queries."""
-    spark = _session("cdc-pipeline-spark-bench-retry")
-    print(json.dumps({name: _best_of(spark, name, 3, sf_dir) for name in names}))
-
-
-def _subprocess_retry(names: list[str]) -> dict[str, float]:
-    """Best-of-three re-measurement of flagged queries at ``SF_DIR`` in
-    a brand-new Python process (hence a brand-new py4j gateway JVM),
-    warmed the same way the suite is. Returns {} on any failure — the
-    gate then judges the in-suite numbers, never silently passes."""
-    import subprocess
-
-    try:
-        proc = subprocess.run(
-            [sys.executable, "-c", f"import bench; bench._retry({names!r}, {SF_DIR!r})"],
-            capture_output=True,
-            text=True,
-            timeout=1800,
-            cwd=os.path.dirname(os.path.abspath(__file__)),
-        )
-        lines = [l for l in proc.stdout.splitlines() if l.startswith("{")]
-        if proc.returncode != 0 or not lines:
-            print(
-                f"# isolation-retry subprocess failed rc={proc.returncode}: "
-                f"{proc.stderr[-500:]}",
-                file=sys.stderr,
-            )
-            return {}
-        return {k: float(v) for k, v in json.loads(lines[-1]).items()}
-    except (OSError, subprocess.TimeoutExpired, ValueError) as exc:
-        print(f"# isolation-retry subprocess error: {exc}", file=sys.stderr)
-        return {}
 
 
 def main() -> None:
@@ -297,28 +210,33 @@ def main() -> None:
     if unknown:
         parser.error(f"unknown queries: {' '.join(unknown)}")
     sf = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in SF_DIR else None
+    cpus = int(CPUS)
     # load BEFORE the multi-minute run: a typo'd path, or a freeze of
-    # another scale factor (its timings say nothing about this one),
-    # must fail in milliseconds, not after the whole benchmark ran
+    # another scale factor or core count (its timings say nothing about
+    # this run), must fail in milliseconds, not after the whole
+    # benchmark ran
     baseline = None
     if args.check:
-        baseline_sf, baseline = load_baseline(args.check)
+        baseline_sf, baseline_cpus, baseline = load_baseline(args.check)
         if baseline_sf != sf:
             parser.error(f"--check: this run is at sf {sf}, {args.check} froze sf {baseline_sf}")
+        if baseline_cpus != cpus:
+            parser.error(
+                f"--check: this run is on {cpus} cpus, {args.check} froze {baseline_cpus} cpus"
+            )
     # calibration baseline: even WITHOUT --check, load the default
-    # freeze if present so the record carries its own host-noise
-    # calibration (drift + control ratios + loadavg) and can be
-    # adjudicated without a fresh probe; at another scale factor its
-    # ratios would read as phantom speedups/slowdowns, so only load
-    # averages are emitted there
+    # freeze if present so the record carries its own host drift and
+    # can be adjudicated without a fresh probe; at another scale factor
+    # or core count its ratios would read as phantom speedups or
+    # slowdowns, so only load averages are emitted there
     calib_baseline = baseline
     if calib_baseline is None:
         try:
-            calib_sf, calib_baseline = load_baseline(default_baseline)
+            calib_sf, calib_cpus, calib_baseline = load_baseline(default_baseline)
         except (OSError, ValueError, KeyError):
             calib_baseline = None
         else:
-            if calib_sf != sf:
+            if (calib_sf, calib_cpus) != (sf, cpus):
                 calib_baseline = None
     try:
         loadavg_start: tuple[float, ...] | None = os.getloadavg()
@@ -328,64 +246,14 @@ def main() -> None:
     names += [n for n in sorted(workload.QUERIES) if n not in names]
     if args.names:
         names = [n for n in names if n in args.names]
-    spark = _session("cdc-pipeline-spark-bench")
+    spark = _session()
 
     timings: dict[str, float] = {}
     total = 0.0
     for name in names:
-        # best of two runs: the first run pays plan compilation/codegen,
-        # the second measures the steady-state plan — which is what a
-        # resident engine re-executing a query shape actually costs
-        timings[name] = round(_best_of(spark, name, 2, SF_DIR), 3)
+        timings[name] = round(_best_of_two(spark, name), 3)
         total += timings[name]
         print(f"# {name}: {timings[name]:.3f}s", file=sys.stderr)
-
-    # Isolation retry for would-be regressions: single-shot heavy
-    # queries on local[32] vary 2-4x run to run (three consecutive
-    # full-suite runs on IDENTICAL code flagged three DISJOINT sets —
-    # e.g. doc_quality_classifier 0.63s / 0.70s / 3.31s), so a flag
-    # from the in-suite pass alone measures scheduler luck, not the
-    # plan. A genuine plan regression reproduces on a quiet re-measure
-    # at the end; a hiccup does not. Keep the better of the two
-    # measurements — the same steady-state philosophy as best-of-two.
-    # Gate timings are a SEPARATE view: the record keeps the in-suite
-    # best-of-2 for every query (a retried query must not get a tighter
-    # frozen baseline than its never-flagged peers — that would bias
-    # future freezes low for exactly the jitteriest queries), while the
-    # gate judges the flake-filtered values. The drift ratio is pinned
-    # from the in-suite pass for the same reason: retries lowering the
-    # median must not move the threshold under a query that never
-    # received its retry.
-    retried: list[str] = []
-    gate_timings = dict(timings)
-    drift0: float | None = None
-    if baseline is not None:
-        pre, _, drift0 = find_regressions(timings, baseline)
-        if pre:
-            # Retry in a GENUINELY fresh JVM — a subprocess. After ~4k
-            # stages a local-mode session accumulates enough
-            # driver/codegen/GC debris that late queries (and any retry
-            # sharing the JVM) run 2-5x slow regardless of plan —
-            # measured: winnowing 4.0s on an in-JVM retry vs 0.95s in a
-            # fresh session, identical code. The earlier spark.stop() +
-            # new-session retry did NOT deliver this: PySpark's py4j
-            # gateway JVM survives a SparkContext stop, so the "fresh"
-            # retry inherited the aged JVM and re-read the same
-            # degraded numbers (measured r11: winnowing 4.9s in the
-            # same-JVM retry vs 0.71s isolated best-of-5, identical
-            # code, quiet host, two suite runs in a row). A genuine
-            # plan regression reproduces in the subprocess too;
-            # long-session degradation does not.
-            retry_timings = _subprocess_retry(sorted(pre))
-            for name in sorted(pre):
-                fresh_best = retry_timings.get(name)
-                if fresh_best is not None:
-                    gate_timings[name] = min(timings[name], round(fresh_best, 3))
-                retried.append(name)
-                print(
-                    f"# isolation retry {name}: {gate_timings[name]:.3f}s",
-                    file=sys.stderr,
-                )
 
     doc = {
         "metric": "workload_wall_sec",
@@ -394,14 +262,6 @@ def main() -> None:
         "queries": timings,
         "sf": sf,
     }
-    if retried:
-        doc["isolation_retried"] = retried
-    # Self-calibration (VERDICT r8 #3): the artifact carries what a
-    # reader needs to adjudicate host noise without a fresh probe —
-    # median drift vs the committed freeze, the three control-query
-    # ratios, and the 1/5/15-min load averages around the run. Controls
-    # near 1.0x + low load = per-query ratios are believable; controls
-    # at 1.5-3x or load >> cpus = the run measured the neighbors.
     try:
         loadavg_end: tuple[float, ...] | None = os.getloadavg()
     except OSError:
@@ -409,24 +269,13 @@ def main() -> None:
     calibration: dict = {
         "loadavg_start": list(loadavg_start) if loadavg_start else None,
         "loadavg_end": list(loadavg_end) if loadavg_end else None,
-        "cpus": int(CPUS),
+        "cpus": cpus,
     }
     if calib_baseline is not None:
         calibration["host_drift"] = round(host_drift(timings, calib_baseline), 3)
-        calibration["controls"] = {
-            name: {
-                "sec": timings[name],
-                "frozen": calib_baseline[name],
-                "ratio": round(timings[name] / calib_baseline[name], 3),
-            }
-            for name in CONTROL_QUERIES
-            if name in timings and calib_baseline.get(name)
-        }
     doc["calibration"] = calibration
     if baseline is not None:
-        regressions, new, drift = find_regressions(
-            gate_timings, baseline, drift=drift0
-        )
+        regressions, new, drift = find_regressions(timings, baseline)
         doc["gate"] = {
             "gated": len(timings) - len(new),
             "new": len(new),
@@ -440,12 +289,6 @@ def main() -> None:
 
     if baseline is not None:
         print(f"# host drift vs freeze (median ratio): {drift:.2f}x", file=sys.stderr)
-        for cname, c in calibration.get("controls", {}).items():
-            print(
-                f"# control {cname}: {c['sec']:.3f}s vs frozen {c['frozen']:.3f}s "
-                f"({c['ratio']:.2f}x)",
-                file=sys.stderr,
-            )
         if loadavg_start and loadavg_end:
             print(
                 f"# loadavg start {loadavg_start} -> end {loadavg_end} "
@@ -467,7 +310,6 @@ def main() -> None:
             f"{len(new)} new)",
             file=sys.stderr,
         )
-
 
 if __name__ == "__main__":
     main()

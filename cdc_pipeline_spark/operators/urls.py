@@ -534,7 +534,7 @@ def _surt_pre_normalized(u: Column) -> Column:
     """SURT key AFTER percent normalization (the `_pre_normalized`
     shared-projection convention — normalize once per row, derive
     canonical URL / host / urlkey from the same column)."""
-    scheme, host, path, sorted_q = _parts_pre_normalized(F.lower(u))
+    _, host, path, sorted_q = _parts_pre_normalized(F.lower(u))
     hostonly = F.substring_index(host, ":", 1)
     port = F.when(
         host.contains(":"), F.concat(F.lit(":"), F.substring_index(host, ":", -1))

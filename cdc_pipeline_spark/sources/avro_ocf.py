@@ -35,7 +35,7 @@ from __future__ import annotations
 import hashlib
 import json
 import zlib
-from typing import Any, Iterable, Iterator
+from typing import Iterable, Iterator
 
 from cdc_pipeline_spark.sources.avro_codec import (
     _Cursor,

@@ -446,7 +446,7 @@ def main() -> None:
     # --- BM25: index ranking == batch operator over reconstructed corpus
     from cdc_pipeline_spark.operators.retrieval import bm25_topk
 
-    tf, doclens = read_index(spark, bm25_path)
+    _, doclens = read_index(spark, bm25_path)
     ingested = doclens.select("doc_id").distinct().localCheckpoint(eager=True)
     n_docs_bm25 = ingested.count()
     corpus = ingested.select("doc_id", text_expr(F.col("doc_id")).alias("text"))
