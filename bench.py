@@ -9,8 +9,9 @@ core of the host) and prints ONE JSON line to stdout:
     {"metric": "workload_wall_sec", "value": N, "unit": "sec",
      "queries": {name: sec, ...}, "sf": 0.1, "calibration": {...}}
 
-plus ``gate`` under ``--check``. Progress goes to stderr; nothing is
-written into the checkout.
+plus ``isolation_retried`` when a retry ran and ``gate`` under
+``--check``. Progress goes to stderr; nothing is written into the
+checkout.
 
     python bench.py [--check [BASELINE_QUERIES.json]] [--plans DIR] [name ...]
 
@@ -33,6 +34,19 @@ $SPARK_GRAFT_CPUS); otherwise it exits 2 before the session starts,
 like an unknown query name: timings at another scale or core count say
 nothing about this one.
 
+Would-be regressions get one ISOLATION RETRY (best of three, in a FRESH
+JVM at the end of the suite) before the gate fails. Against the 4-core
+freeze, 2 of 6 full ``--check`` runs of unchanged code flagged 6 and 7
+rows, each set one stretch of consecutive suite rows at 1.3-5.3x the
+freeze while ``host_drift`` read 1.07-1.09; the one run sampled had
+7-20% hypervisor steal while its stretch ran (BASELINE.md, "Round-15
+host re-freeze"). A long session also slows late queries from
+accumulated driver/codegen state, which an in-JVM retry would inherit
+(measured: 4.0 s in-JVM retry vs 0.95 s fresh, identical code). A
+genuine plan regression reproduces in the fresh JVM too; a steal window
+does not. Retried names are recorded in the JSON (``isolation_retried``)
+so a pass never hides that a retry happened.
+
 The record also carries a ``calibration`` block (host_drift vs the
 committed freeze, the core count, 1/5/15-min load averages around the
 run) so a reader can adjudicate host noise from the artifact alone: a
@@ -40,9 +54,9 @@ drift near 1.0x and load << cpus mean per-query ratios are believable;
 load >> cpus means the run measured the neighbors, not the code.
 
 ``--plans DIR`` writes DIR/<name>.txt with each query's
-``explain("formatted")`` text once all timing is done, so dumping plans
-moves no timing. Diffing two such directories (after masking expression
-ids) shows whether a refactor changed a plan.
+``explain("formatted")`` text once all timing (and the gate's retry) is
+done, so dumping plans moves no timing. Diffing two such directories
+(after masking expression ids) shows whether a refactor changed a plan.
 """
 
 from __future__ import annotations
@@ -61,13 +75,15 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
 
 
-def _session():
+def _session(app_name: str):
     """A local[CPUS] session warmed before anything is timed: the
     JVM/codegen once on the smallest SF, so per-query numbers measure
     the plan, not first-run JIT, then the Python worker pool, so the
-    first Arrow query doesn't absorb the one-time spawn cost."""
+    first Arrow query doesn't absorb the one-time spawn cost. The pool
+    is warmed to one worker per host core (nproc): with CPUS above
+    nproc, the first Arrow row also pays the remaining worker spawns."""
     spark = create_spark_session(
-        app_name="cdc-pipeline-spark-bench",
+        app_name=app_name,
         master=f"local[{CPUS}]",
         shuffle_partitions=int(CPUS),
     )
@@ -77,14 +93,11 @@ def _session():
     return spark
 
 
-def _best_of_two(spark, name: str) -> float:
-    """Best of two runs: the first pays plan compilation/codegen, the
-    second measures the steady-state plan, which is what a resident
-    engine re-executing a query shape actually costs."""
+def _best_of(spark, name: str, runs: int, sf_dir: str) -> float:
     best = None
-    for _ in range(2):
+    for _ in range(runs):
         start = time.perf_counter()
-        forced(workload.QUERIES[name](spark, SF_DIR)).collect()
+        forced(workload.QUERIES[name](spark, sf_dir)).collect()
         elapsed = time.perf_counter() - start
         best = elapsed if best is None else min(best, elapsed)
     return best
@@ -165,28 +178,72 @@ def host_drift(timings: dict[str, float], baseline: dict[str, float]) -> float:
 def find_regressions(
     timings: dict[str, float],
     baseline: dict[str, float],
-    ratio: float = REGRESSION_RATIO,
-    noise_floor: float = NOISE_FLOOR_SEC,
+    drift: float | None = None,
 ) -> tuple[dict[str, tuple[float, float]], list[str], float]:
     """(regressions {name: (measured, frozen)}, new-query names, drift).
 
-    A query regresses when measured > ratio x drift x frozen AND
-    measured exceeds the drift-scaled absolute noise floor — sub-second
+    A query regresses when measured > REGRESSION_RATIO x drift x frozen
+    AND measured exceeds the drift-scaled NOISE_FLOOR_SEC — sub-second
     timings jitter from scheduling alone, so a pure ratio would flag
     noise, and `host_drift` cancels uniform machine-speed shifts since
     the freeze (a genuine single-query regression still stands out
-    against the median).
+    against the median). Pass ``drift`` to pin a previously computed
+    ratio — the isolation-retry pass must re-evaluate under the SAME
+    drift it selected retries with, or lowering the retried timings
+    would lower the median and flag a query that never got its retry.
     """
-    drift = host_drift(timings, baseline)
+    if drift is None:
+        drift = host_drift(timings, baseline)
     regressions: dict[str, tuple[float, float]] = {}
     new: list[str] = []
     for name, measured in timings.items():
         frozen = baseline.get(name)
         if frozen is None:
             new.append(name)
-        elif measured > ratio * drift * frozen and measured > noise_floor * drift:
+        elif measured > REGRESSION_RATIO * drift * frozen and measured > NOISE_FLOOR_SEC * drift:
             regressions[name] = (measured, frozen)
     return regressions, new, drift
+
+
+def _retry(names: list[str], sf_dir: str) -> None:
+    """Isolation-retry body, run by :func:`_subprocess_retry` in a fresh
+    process: prints {name: best_sec} as one JSON line. Best of THREE,
+    not two: the first run pays plan analysis/codegen (measured
+    1.7-2.3s vs 0.8-1.0s steady for HOF-heavy queries), so best-of-2
+    leaves a single steady draw and its jitter false-flags sub-2s rows;
+    two steady draws make the min a real steady-state reading. Cost is
+    one extra run, only for flagged queries."""
+    spark = _session("cdc-pipeline-spark-bench-retry")
+    print(json.dumps({name: _best_of(spark, name, 3, sf_dir) for name in names}))
+
+
+def _subprocess_retry(names: list[str]) -> dict[str, float]:
+    """Best-of-three re-measurement of flagged queries at ``SF_DIR`` in
+    a brand-new Python process (hence a brand-new py4j gateway JVM),
+    warmed the same way the suite is. Returns {} on any failure — the
+    gate then judges the in-suite numbers, never silently passes."""
+    import subprocess
+
+    try:
+        proc = subprocess.run(
+            [sys.executable, "-c", f"import bench; bench._retry({names!r}, {SF_DIR!r})"],
+            capture_output=True,
+            text=True,
+            timeout=1800,
+            cwd=os.path.dirname(os.path.abspath(__file__)),
+        )
+        lines = [l for l in proc.stdout.splitlines() if l.startswith("{")]
+        if proc.returncode != 0 or not lines:
+            print(
+                f"# isolation-retry subprocess failed rc={proc.returncode}: "
+                f"{proc.stderr[-500:]}",
+                file=sys.stderr,
+            )
+            return {}
+        return {k: float(v) for k, v in json.loads(lines[-1]).items()}
+    except (OSError, subprocess.TimeoutExpired, ValueError) as exc:
+        print(f"# isolation-retry subprocess error: {exc}", file=sys.stderr)
+        return {}
 
 
 def main() -> None:
@@ -246,14 +303,46 @@ def main() -> None:
     names += [n for n in sorted(workload.QUERIES) if n not in names]
     if args.names:
         names = [n for n in names if n in args.names]
-    spark = _session()
+    spark = _session("cdc-pipeline-spark-bench")
 
     timings: dict[str, float] = {}
     total = 0.0
     for name in names:
-        timings[name] = round(_best_of_two(spark, name), 3)
+        # best of two runs: the first run pays plan compilation/codegen,
+        # the second measures the steady-state plan — which is what a
+        # resident engine re-executing a query shape actually costs
+        timings[name] = round(_best_of(spark, name, 2, SF_DIR), 3)
         total += timings[name]
         print(f"# {name}: {timings[name]:.3f}s", file=sys.stderr)
+
+    # Isolation retry for would-be regressions: a flag from the in-suite
+    # pass alone can measure a steal window or an aged JVM, not the
+    # plan, and a genuine plan regression reproduces on a re-measure in
+    # a fresh JVM (a subprocess: PySpark's py4j gateway JVM survives a
+    # SparkContext stop, so an in-process "fresh" session inherits the
+    # aged JVM). Keep the better of the two measurements, the same
+    # steady-state philosophy as best-of-two. Gate timings are a
+    # SEPARATE view: the record keeps the in-suite best-of-2 for every
+    # query, so a retried query never gets a tighter freeze than its
+    # never-flagged peers, and the drift is pinned from the in-suite
+    # pass so retries lowering the median cannot move the threshold
+    # under a query that never got its retry.
+    retried: list[str] = []
+    gate_timings = dict(timings)
+    drift0: float | None = None
+    if baseline is not None:
+        pre, _, drift0 = find_regressions(timings, baseline)
+        if pre:
+            retry_timings = _subprocess_retry(sorted(pre))
+            for name in sorted(pre):
+                fresh_best = retry_timings.get(name)
+                if fresh_best is not None:
+                    gate_timings[name] = min(timings[name], round(fresh_best, 3))
+                retried.append(name)
+                print(
+                    f"# isolation retry {name}: {gate_timings[name]:.3f}s",
+                    file=sys.stderr,
+                )
 
     doc = {
         "metric": "workload_wall_sec",
@@ -262,6 +351,8 @@ def main() -> None:
         "queries": timings,
         "sf": sf,
     }
+    if retried:
+        doc["isolation_retried"] = retried
     try:
         loadavg_end: tuple[float, ...] | None = os.getloadavg()
     except OSError:
@@ -275,7 +366,9 @@ def main() -> None:
         calibration["host_drift"] = round(host_drift(timings, calib_baseline), 3)
     doc["calibration"] = calibration
     if baseline is not None:
-        regressions, new, drift = find_regressions(timings, baseline)
+        regressions, new, drift = find_regressions(
+            gate_timings, baseline, drift=drift0
+        )
         doc["gate"] = {
             "gated": len(timings) - len(new),
             "new": len(new),
@@ -310,6 +403,7 @@ def main() -> None:
             f"{len(new)} new)",
             file=sys.stderr,
         )
+
 
 if __name__ == "__main__":
     main()

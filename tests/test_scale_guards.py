@@ -399,6 +399,9 @@ def test_find_regressions_cancels_uniform_host_drift():
     regressions, _, drift2 = bench.find_regressions(blown, baseline)
     assert set(regressions) == {"q5"}
     assert abs(drift2 - 1.4) < 1e-9  # one outlier doesn't move the median
+    # a pinned drift (the retry pass's) is used as given, not recomputed
+    regressions, _, pinned = bench.find_regressions(blown, baseline, drift=3.0)
+    assert regressions == {} and pinned == 3.0
 
     # a FASTER host must not loosen the gate below the frozen meaning
     faster = {k: v * 0.5 for k, v in baseline.items()}
@@ -406,6 +409,18 @@ def test_find_regressions_cancels_uniform_host_drift():
     regressions, _, drift3 = bench.find_regressions(faster, baseline)
     assert drift3 == 1.0
     assert set(regressions) == {"q5"}
+
+
+def test_isolation_retry_subprocess_returns_timings(monkeypatch):
+    """The fresh-process isolation retry must measure: a broken retry
+    returns {} and the gate would silently judge only in-suite numbers."""
+    import bench
+    from conftest import SF_SMOKE
+
+    monkeypatch.setattr(bench, "SF_DIR", SF_SMOKE)
+    got = bench._subprocess_retry(["q1_pricing_summary"])
+    assert list(got) == ["q1_pricing_summary"]
+    assert got["q1_pricing_summary"] > 0
 
 
 def test_bench_prints_one_record_for_named_queries_and_writes_plans(tmp_path):
