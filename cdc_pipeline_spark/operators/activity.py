@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cdc_pipeline_spark.operators.templates import template
+
 
 def enrich_activity(
     df: DataFrame,
@@ -35,19 +37,25 @@ def enrich_activity(
             "login": "login",
             "add_to_cart": "cart",
         }
-    action = None
-    for event_value, action_value in action_map.items():
-        clause = (F.when(F.col(event_type_col) == event_value, F.lit(action_value))
-                  if action is None
-                  else action.when(F.col(event_type_col) == event_value, F.lit(action_value)))
-        action = clause
-    action = F.lit(default_action) if action is None else action.otherwise(F.lit(default_action))
+    return df.select(*_projection(
+        id_col, event_type_col, user_col, amount_col, time_col, city_col, country_col,
+        tuple(action_map.items()), purchase_event, default_action,
+    ))
 
-    return df.select(
+
+@template
+def _projection(id_col, event_type_col, user_col, amount_col, time_col, city_col, country_col, actions,
+                purchase_event, default_action):
+    event_type = F.col(event_type_col)
+    action = None
+    for event_value, action_value in actions:
+        action = (F if action is None else action).when(event_type == event_value, F.lit(action_value))
+    action = F.lit(default_action) if action is None else action.otherwise(F.lit(default_action))
+    return (
         F.concat(F.lit("evt_"), F.col(id_col).cast("string")).alias("id"),
         F.coalesce(F.col(user_col).cast("string"), F.lit("Guest")).alias("user"),
         action.alias("action"),
-        F.when(F.col(event_type_col) == purchase_event, F.col(amount_col)).alias("amount"),
+        F.when(event_type == purchase_event, F.col(amount_col)).alias("amount"),
         F.date_format(F.col(time_col), "yyyy-MM-dd'T'HH:mm:ss").alias("timestamp"),
         F.concat_ws(", ", F.col(city_col), F.col(country_col)).alias("location"),
     )

@@ -20,11 +20,11 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cdc_pipeline_spark.operators.rounding import round_half_up
-
+from cdc_pipeline_spark.operators.templates import template
 from cdc_pipeline_spark.operators.windows import window_bounds_epoch, window_col
 
 
@@ -62,6 +62,15 @@ def windowed_kpi(
     (``DESCRIPTION.md:1133``) — this builder implements the distinct-count
     semantics (``session_col``), fixing the documented gap (SURVEY §2.5).
     """
+    group, aggs, out = _kpi_columns(
+        time_col, duration, slide, session_col, revenue_col, order_col, error_col, request_col, latency_col, exact
+    )
+    return df.groupBy(group).agg(*aggs).select(*out)
+
+
+@template
+def _kpi_columns(time_col, duration, slide, session_col, revenue_col, order_col, error_col, request_col,
+                 latency_col, exact):
     if exact:
         latency_p50 = F.percentile(F.col(latency_col), F.lit(0.5))
     else:
@@ -72,8 +81,7 @@ def windowed_kpi(
             F.count_distinct(F.col(session_col)) if exact else F.approx_count_distinct(session_col)
         )
         user_aggs.append(active_users.alias("active_users"))
-
-    agg = df.groupBy(window_col(time_col, duration, slide)).agg(
+    aggs = (
         *user_aggs,
         round_half_up(F.sum(revenue_col), 2).alias("revenue"),
         F.sum(order_col).alias("orders"),
@@ -88,7 +96,7 @@ def windowed_kpi(
         "error_rate",
         "latency_p50",
     ]
-    return agg.select(*window_bounds_epoch(), *out_cols)
+    return window_col(time_col, duration, slide), aggs, (*window_bounds_epoch(), *map(F.col, out_cols))
 
 
 # ---------------------------------------------------------------------------
@@ -98,9 +106,6 @@ def windowed_kpi(
 def windowed_region(
     df: DataFrame,
     time_col: str = "event_time",
-    region_col: str = "region_name",
-    sales_col: str = "sales",
-    request_col: str = "request_count",
     duration: str = "30 seconds",
     slide: str | None = "15 seconds",
 ) -> DataFrame:
@@ -108,16 +113,20 @@ def windowed_region(
     ``least(request_count * 5.0, 100.0)`` (``region_aggregator.py:129``)
     and Unknown-region rows come from ``coalesce`` defaults upstream
     (``region_aggregator.py:104,110``)."""
-    agg = (
-        df.withColumn(region_col, F.coalesce(F.col(region_col), F.lit("Unknown")))
-        .groupBy(window_col(time_col, duration, slide), F.col(region_col).alias("region_name"))
-        .agg(
-            round_half_up(F.sum(sales_col), 2).alias("sales"),
-            F.sum(request_col).alias("request_count"),
-        )
-        .withColumn("intensity", F.least(F.col("request_count") * 5.0, F.lit(100.0)))
+    region, key, aggs, intensity, out = _region_columns(time_col, duration, slide)
+    agg = df.withColumn("region_name", region).groupBy(*key).agg(*aggs).withColumn("intensity", intensity)
+    return agg.select(*out)
+
+
+@template
+def _region_columns(time_col, duration, slide):
+    return (
+        F.coalesce(F.col("region_name"), F.lit("Unknown")),
+        (window_col(time_col, duration, slide), F.col("region_name").alias("region_name")),
+        (round_half_up(F.sum("sales"), 2).alias("sales"), F.sum("request_count").alias("request_count")),
+        F.least(F.col("request_count") * 5.0, F.lit(100.0)),
+        (*window_bounds_epoch(), *map(F.col, ("region_name", "sales", "request_count", "intensity"))),
     )
-    return agg.select(*window_bounds_epoch(), "region_name", "sales", "request_count", "intensity")
 
 
 # ---------------------------------------------------------------------------
@@ -132,12 +141,18 @@ def tumbling_traffic(
     """Tumbling-window request count; contract row is
     ``{timestamp: epoch_ms(window.end), value: count, label: hh:mm:ss a}``
     (``traffic_builder.py:27-44``)."""
-    agg = df.groupBy(window_col(time_col, duration)).agg(F.count(F.lit(1)).alias("value"))
-    return agg.select(
+    group, count, out = _traffic_columns(time_col, duration)
+    return df.groupBy(group).agg(count).select(*out)
+
+
+@template
+def _traffic_columns(time_col, duration):
+    out = (
         *window_bounds_epoch(),
         F.col("value"),
         F.date_format(F.col("window.end"), "hh:mm:ss a").alias("label"),
     )
+    return window_col(time_col, duration), F.count(F.lit(1)).alias("value"), out
 
 
 # ---------------------------------------------------------------------------
@@ -192,7 +207,6 @@ def platform_breakdown(df: DataFrame, platform_col: str = "platform") -> DataFra
 def windowed_geo_header(
     df: DataFrame,
     time_col: str = "created_at",
-    load_scale: float = 0.1,
 ) -> DataFrame:
     """Windowed request count with a formatted "global load" label
     (``concat(format_number(count*scale, 1), ' TB/S')``, geo_header.py:36-40)."""
@@ -201,7 +215,7 @@ def windowed_geo_header(
         *window_bounds_epoch(),
         "request_count",
         F.concat(
-            round_half_up(F.col("request_count") * load_scale, 1).cast("string"),
+            round_half_up(F.col("request_count") * 0.1, 1).cast("string"),
             F.lit(" TB/S"),
         ).alias("global_load"),
     )
@@ -247,13 +261,13 @@ def alert_frame(df: DataFrame, rules: list[dict], id_cols: list[str] | None = No
     return fuse_streams(frames)
 
 
-def derive_flows(region_df: DataFrame, k: int = 5) -> DataFrame:
+def derive_flows(region_df: DataFrame) -> DataFrame:
     """Region flow derivation (reference computes it driver-side in
-    Python: sorted by intensity, hub = rank-1 region, flows = next-k
+    Python: sorted by intensity, hub = rank-1 region, flows = next five
     regions → hub with value = source intensity,
     region_aggregator.py:53-65,79-96). Distributed form: latest window →
     rank by intensity (deterministic name tiebreak) → broadcast the hub
-    row back over ranks 2..k+1.
+    row back over ranks 2..6.
 
     Input: windowed_region output (window_end, region_name, intensity).
     Output: (source, target, value) rows.
@@ -274,7 +288,7 @@ def derive_flows(region_df: DataFrame, k: int = 5) -> DataFrame:
     )
     hub = ranked.filter(F.col("__rank") == 1).select(F.col("region_name").alias("target"))
     return (
-        ranked.filter((F.col("__rank") >= 2) & (F.col("__rank") <= k + 1))
+        ranked.filter((F.col("__rank") >= 2) & (F.col("__rank") <= 6))
         .crossJoin(F.broadcast(hub))
         .select(
             F.col("region_name").alias("source"),

@@ -56,7 +56,6 @@ def linear_classifier_scores(
     df: DataFrame,
     weights: DataFrame,
     carry_cols: tuple[str, ...] = (),
-    buckets: int = 4096,
 ) -> DataFrame:
     """Score every document with the linear model in ``weights``
     ((bucket, weight DECIMAL) rows):
@@ -70,7 +69,7 @@ def linear_classifier_scores(
 
     Output: (doc_id, *carry_cols, n_grams, logit, prob, keep).
     """
-    posting = hashed_gram_posting(df, buckets=buckets)
+    posting = hashed_gram_posting(df)
     scored = (
         posting.join(F.broadcast(weights), "bucket")
         .groupBy("doc_id")

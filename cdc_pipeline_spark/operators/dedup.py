@@ -1171,8 +1171,8 @@ def max_dup_span(df: DataFrame, n: int = 8) -> DataFrame:
     )
 
 
-def segment_posting(df: DataFrame, seg_tokens: int = 8) -> DataFrame:
-    """(doc_id, pos, segment) posting of fixed-width token segments —
+def segment_posting(df: DataFrame) -> DataFrame:
+    """(doc_id, pos, segment) posting of 8-token segments —
     the unit of paragraph/line-level dedup. Real corpora segment on a
     structural delimiter (newline / double-newline); for delimiter-free
     text this fixed-width chunking is the deterministic fallback, and
@@ -1182,18 +1182,18 @@ def segment_posting(df: DataFrame, seg_tokens: int = 8) -> DataFrame:
         "doc_id",
         F.filter(tokens("text"), lambda t: t != F.lit("")).alias("__t"),
     )
-    n_seg = F.ceil(F.size("__t") / F.lit(seg_tokens)).cast("int")
+    n_seg = F.ceil(F.size("__t") / F.lit(8)).cast("int")
     segs = F.when(
         F.size("__t") > 0,
         F.transform(
             F.sequence(F.lit(0), n_seg - 1),
-            lambda i: F.concat_ws(" ", F.slice(F.col("__t"), i * seg_tokens + 1, seg_tokens)),
+            lambda i: F.concat_ws(" ", F.slice(F.col("__t"), i * 8 + 1, 8)),
         ),
     ).otherwise(F.array().cast("array<string>"))
     return toks.select("doc_id", F.posexplode(segs).alias("pos", "segment"))
 
 
-def segment_dedup(df: DataFrame, seg_tokens: int = 8) -> DataFrame:
+def segment_dedup(df: DataFrame) -> DataFrame:
     """Paragraph/line-level dedup with document reconstruction (the
     CCNet line-dedup shape, Wenzek et al. 2020 §3.1: drop every repeated
     paragraph, keep its globally-first occurrence): a segment survives
@@ -1213,7 +1213,7 @@ def segment_dedup(df: DataFrame, seg_tokens: int = 8) -> DataFrame:
     Output: (doc_id, n_segments, n_kept, dedup_text) — docs whose every
     segment was seen earlier rebuild to ''.
     """
-    posting = segment_posting(df, seg_tokens=seg_tokens)
+    posting = segment_posting(df)
     # struct comparison is lexicographic field-by-field, so the min IS
     # the globally-first (doc_id, pos) occurrence of each segment.
     kept = (

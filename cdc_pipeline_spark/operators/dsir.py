@@ -39,10 +39,10 @@ from cdc_pipeline_spark.operators.sampling import portable_id_bucket
 from cdc_pipeline_spark.operators.text import tokens
 
 
-def hashed_gram_posting(df: DataFrame, buckets: int = 4096) -> DataFrame:
+def hashed_gram_posting(df: DataFrame) -> DataFrame:
     """(doc_id, bucket) posting of hashed unigram (+ bigram) features —
     the DSIR feature space. Buckets via the portable codepoint-fold hash
-    mod ``buckets`` so a SQL oracle can replicate the feature extraction
+    mod 4096 so a SQL oracle can replicate the feature extraction
     bit-for-bit. Empty tokens (from empty/whitespace text) are dropped
     before gram formation in both engines.
 
@@ -59,7 +59,7 @@ def hashed_gram_posting(df: DataFrame, buckets: int = 4096) -> DataFrame:
     grams = F.concat(F.col("toks"), adjacent_grams(F.col("toks")))
     posting = toks.select("doc_id", F.explode(grams).alias("gram"))
     return posting.select(
-        "doc_id", (portable_token_hash(F.col("gram")) % F.lit(buckets)).alias("bucket")
+        "doc_id", (portable_token_hash(F.col("gram")) % F.lit(4096)).alias("bucket")
     )
 
 

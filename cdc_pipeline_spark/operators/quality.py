@@ -187,12 +187,12 @@ def unigram_logprob_score(df: DataFrame, carry_cols: tuple[str, ...] = ()) -> Da
     )
 
 
-def bigram_logprob_score(df: DataFrame, lam: float = 0.75) -> DataFrame:
+def bigram_logprob_score(df: DataFrame) -> DataFrame:
     """Interpolated bigram corpus-LM fluency score — the next model up
     from :func:`unigram_logprob_score` (Jelinek–Mercer interpolation,
     the classic smoothing the KenLM-style corpus filters build on):
     per document, mean −ln P(w_i | w_{i−1}) with
-    ``P = λ·c(w1,w2)/c(w1·) + (1−λ)·c(w2)/N`` — the unigram backoff
+    ``P = λ·c(w1,w2)/c(w1·) + (1−λ)·c(w2)/N`` with λ = 0.75 — the unigram backoff
     term keeps every observed bigram finite without add-α vocabulary
     sweeps. Junk word ORDER now scores high even when the vocabulary
     is in-distribution (a shuffled fluent doc fools the unigram score,
@@ -243,8 +243,8 @@ def bigram_logprob_score(df: DataFrame, lam: float = 0.75) -> DataFrame:
             "w2",
             round_half_up(
                 -F.log(
-                    F.lit(lam) * F.col("c12") / F.col("c1")
-                    + F.lit(1.0 - lam) * F.col("tf2") / F.col("n")
+                    F.lit(0.75) * F.col("c12") / F.col("c1")
+                    + F.lit(0.25) * F.col("tf2") / F.col("n")
                 ),
                 6,
             )
@@ -335,7 +335,7 @@ def source_unigram_kl(df: DataFrame) -> DataFrame:
     )
 
 
-def perplexity_buckets(df: DataFrame, group_col: str = "lang") -> DataFrame:
+def perplexity_buckets(df: DataFrame) -> DataFrame:
     """CCNet-style head/middle/tail split (Wenzek et al. 2020): bucket
     documents by their per-group fluency-score terciles. CCNet trains on
     'head' (most fluent), samples 'middle', drops 'tail' — the standard
@@ -349,14 +349,14 @@ def perplexity_buckets(df: DataFrame, group_col: str = "lang") -> DataFrame:
     for ``percentile_approx`` (mergeable sketch state) — the cutoff
     contract is unchanged.
 
-    Output: (doc_id, group, mean_neg_logprob, ppl_bucket).
+    Output: (doc_id, lang, mean_neg_logprob, ppl_bucket).
     """
     # referenced twice (cutoff aggregation + output join); materialize
     # once instead of re-running the whole corpus-LM scoring chain per
     # reference (Catalyst shares no subplans)
-    scores = unigram_logprob_score(df, carry_cols=(group_col,)).localCheckpoint(eager=True)
+    scores = unigram_logprob_score(df, carry_cols=("lang",)).localCheckpoint(eager=True)
     c1, c2 = 1.0 / 3.0, 2.0 / 3.0  # tercile cuts
-    cutoffs = scores.groupBy(group_col).agg(
+    cutoffs = scores.groupBy("lang").agg(
         F.expr(
             f"percentile_disc({c1!r}) WITHIN GROUP (ORDER BY mean_neg_logprob)"
         ).alias("__c1"),
@@ -367,12 +367,12 @@ def perplexity_buckets(df: DataFrame, group_col: str = "lang") -> DataFrame:
     # eqNullSafe: a NULL group (unknown lang) gets its own cutoff row,
     # and a null-rejecting equi-join would silently drop every such doc
     # from the output (same fix iqr_outliers carries)
-    cutoffs = cutoffs.withColumnRenamed(group_col, "__grp")
+    cutoffs = cutoffs.withColumnRenamed("lang", "__grp")
     return scores.join(
-        F.broadcast(cutoffs), F.col(group_col).eqNullSafe(F.col("__grp"))
+        F.broadcast(cutoffs), F.col("lang").eqNullSafe(F.col("__grp"))
     ).select(
         "doc_id",
-        group_col,
+        "lang",
         "mean_neg_logprob",
         F.when(F.col("mean_neg_logprob") <= F.col("__c1"), F.lit("head"))
         .when(F.col("mean_neg_logprob") <= F.col("__c2"), F.lit("middle"))
@@ -385,7 +385,6 @@ def ngram_contamination(
     corpus: DataFrame,
     benchmark: DataFrame,
     n: int = 5,
-    flag_threshold: float = 0.05,
 ) -> DataFrame:
     """Benchmark decontamination: flag corpus documents sharing word
     ``n``-grams with an evaluation set (the standard train/test overlap
@@ -395,7 +394,7 @@ def ngram_contamination(
     tiny next to a 100 TB corpus), so the corpus side is one scan +
     explode + broadcast-hash semi-join + per-doc count: no corpus
     shuffle at all. Output: per-doc total n-grams, contaminated n-gram
-    count, fraction, and the ≥ ``flag_threshold`` flag.
+    count, fraction, and the ≥ 0.05 flag.
     """
 
     from cdc_pipeline_spark.operators.partitioning import ensure_parallelism as spread
@@ -437,7 +436,7 @@ def ngram_contamination(
         ).alias("contaminated_frac"),
     )
     return out.withColumn(
-        "flagged", F.col("contaminated_frac") >= F.lit(flag_threshold)
+        "flagged", F.col("contaminated_frac") >= F.lit(0.05)
     )
 
 

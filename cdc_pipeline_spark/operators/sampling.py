@@ -170,10 +170,10 @@ def temperature_mix_weights(
     df: DataFrame,
     group_col: str,
     tokens_col: str,
-    temperature: float = 0.7,
 ) -> DataFrame:
     """Temperature-scaled domain sampling weights (the multilingual-
-    corpus mixing rule, e.g. mC4/XLM-R style: p_i ∝ share_i^T). T=1
+    corpus mixing rule, e.g. mC4/XLM-R style: p_i ∝ share_i^T), at
+    T = 0.7. T=1
     keeps natural proportions; T→0 flattens toward uniform — the knob
     that keeps a dominant domain from swamping the mix.
 
@@ -191,7 +191,7 @@ def temperature_mix_weights(
     )
     w = _W.partitionBy()
     share = (F.col("__tok") / F.sum("__tok").over(w)).alias("token_share")
-    powered = F.pow(F.col("__tok") / F.sum("__tok").over(w), F.lit(float(temperature)))
+    powered = F.pow(F.col("__tok") / F.sum("__tok").over(w), F.lit(0.7))
     weight = powered / F.sum(powered).over(w)
     return counts.select(
         group_col,

@@ -167,22 +167,24 @@ def histogram_percentiles_sql(
 
 _MERSENNE_P = 2147483647
 _CMS_A0 = 2654435761  # Knuth multiplicative constant; per-row odd variants below
+# Sketch shape and hash family shared by the Spark build, the Spark probe
+# and the DuckDB mirror.
+_CMS_DEPTH, _CMS_WIDTH, _CMS_SEED = 4, 2048, 7
 
 
-def _cms_row_params(depth: int, seed: int) -> list[tuple[int, int]]:
+def _cms_row_params(depth: int) -> list[tuple[int, int]]:
     """(a_j, b_j) per sketch row for the universal hash
     ((a·h + b) mod 2³¹−1) mod width — odd multipliers (A0 is odd, the
-    offset is even), distinct across the rows of ONE sketch; different
-    seeds shift the whole family rather than guaranteeing cross-seed
-    distinctness. Products stay < 2⁶³ for h < 2³¹."""
-    return [(_CMS_A0 + 2 * (seed + j), 11 + 7 * j) for j in range(depth)]
+    offset is even), distinct across the rows of ONE sketch.
+    Products stay < 2⁶³ for h < 2³¹."""
+    return [(_CMS_A0 + 2 * (_CMS_SEED + j), 11 + 7 * j) for j in range(depth)]
 
 
-def _cms_coords(hash_col: Column, depth: int, width: int, seed: int) -> Column:
+def _cms_coords(hash_col: Column, depth: int, width: int) -> Column:
     """The (row_idx, col) cell array for one key — the single invariant
     that must match between sketch build and sketch probe, so both call
     this helper."""
-    params = _cms_row_params(depth, seed)
+    params = _cms_row_params(depth)
     return F.array(
         *[
             F.struct(
@@ -199,9 +201,8 @@ def _cms_coords(hash_col: Column, depth: int, width: int, seed: int) -> Column:
 def count_min_counters(
     df: DataFrame,
     hash_col: Column,
-    depth: int = 4,
-    width: int = 2048,
-    seed: int = 7,
+    depth: int = _CMS_DEPTH,
+    width: int = _CMS_WIDTH,
 ) -> DataFrame:
     """Count-min sketch state (Cormode & Muthukrishnan 2005) over a
     pre-hashed key column: (row_idx, col, n) counters, depth·width cells
@@ -211,7 +212,7 @@ def count_min_counters(
     exactly, and every hash is engine-portable (feed
     ``dedup.portable_token_hash`` for string keys so a DuckDB oracle
     replays the cells bit-for-bit)."""
-    coords = _cms_coords(hash_col, depth, width, seed)
+    coords = _cms_coords(hash_col, depth, width)
     return (
         df.select(F.explode(coords).alias("c"))
         .groupBy(F.col("c.row_idx").alias("row_idx"), F.col("c.col").alias("col"))
@@ -223,9 +224,8 @@ def cms_estimate(
     counters: DataFrame,
     keys: DataFrame,
     hash_col: Column,
-    depth: int = 4,
-    width: int = 2048,
-    seed: int = 7,
+    depth: int = _CMS_DEPTH,
+    width: int = _CMS_WIDTH,
 ) -> DataFrame:
     """Point-query the sketch: each key reads its ``depth`` cells and
     takes the min — an upper bound on the key's true count (collisions
@@ -235,7 +235,7 @@ def cms_estimate(
     join here would silently drop such keys, or worse, min() over only
     its colliding cells. The counters side is ≤ depth·width rows, so
     the join broadcasts however large the corpus that built it."""
-    coords = _cms_coords(hash_col, depth, width, seed)
+    coords = _cms_coords(hash_col, depth, width)
     probed = keys.withColumn("__c", F.explode(coords)).select(
         *keys.columns, F.col("__c.row_idx").alias("row_idx"), F.col("__c.col").alias("col")
     )
@@ -246,11 +246,12 @@ def cms_estimate(
     )
 
 
-def cms_sql_ctes(depth: int = 4, width: int = 2048, seed: int = 7) -> tuple[str, str]:
-    """DuckDB mirrors: (counters CTE body, per-key coords UNION body).
-    The caller embeds them with the same token-hash CTE the SimHash
-    oracle uses."""
-    params = _cms_row_params(depth, seed)
+def cms_sql_ctes() -> tuple[str, str]:
+    """DuckDB mirrors of the default-shape sketch: (counters CTE body,
+    per-key coords UNION body). The caller embeds them with the same
+    token-hash CTE the SimHash oracle uses."""
+    params = _cms_row_params(_CMS_DEPTH)
+    width = _CMS_WIDTH
     counter_rows = "\n        UNION ALL ".join(
         f"SELECT {j} AS row_idx, ((th * {a} + {b}) % {_MERSENNE_P}) % {width} AS col"
         " FROM h"

@@ -9,6 +9,16 @@ no data, no session state. Decorating the builder with :func:`template`
 makes repeat builds — across queries and across streaming
 micro-batches — a dictionary lookup, the prepared-statement move.
 
+The dashboard builders use it too, for what each query start pays:
+``windows.window_col`` and ``window_bounds_epoch``, the aggregate and
+projection lists of ``aggregates.windowed_kpi``, ``windowed_region``
+and ``tumbling_traffic``, ``activity.enrich_activity``'s projection and
+``generator.kpi_components_from_cdc``'s filter and projections. Their
+trees are small, but each ``F.*`` call is a py4j round trip, and a
+dashboard restart on a warm JVM sent 699 of them before these builders
+were templates and 288 after (``tests/test_dashboard_start.py`` holds
+the start under 300).
+
 The policy lives here and nowhere else:
 
 * **Bound.** The 256 most recently used templates, over all builders

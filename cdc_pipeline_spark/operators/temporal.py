@@ -101,11 +101,9 @@ def range_join(
     left_time: str,
     right_time: str,
     max_gap_seconds: int,
-    strict_after: bool = True,
 ) -> DataFrame:
     """Bounded-gap pair join: (l, r) with same key and
-    ``l.time < r.time <= l.time + max_gap`` (or ``<=`` both sides when
-    ``strict_after=False``).
+    ``l.time < r.time <= l.time + max_gap``.
 
     Blocking: both sides get ``bucket = floor(epoch/max_gap)``; the left
     probes its own bucket and the next one — any qualifying pair falls
@@ -125,7 +123,7 @@ def range_join(
     )
     probes = l.withColumn("__probe", F.explode(F.array(F.col("__bucket"), F.col("__bucket") + 1)))
     key_eq = [F.col(k) == F.col(f"__rk_{k}") for k in key_cols]
-    lower = F.col("__re") > F.col("__le") if strict_after else F.col("__re") >= F.col("__le")
+    lower = F.col("__re") > F.col("__le")
     joined = probes.join(
         r, key_eq + [F.col("__probe") == F.col("__rbucket")]
     ).filter(lower & (F.col("__re") <= F.col("__le") + max_gap_seconds))

@@ -81,39 +81,39 @@ def fingerprint(text_col: str = "text") -> Column:
     return F.md5(normalized)
 
 
-def token_count_bpe(text_col: str = "text") -> Column:
-    """BPE-ish token estimate: word-piece split on non-alphanumerics plus
-    a length/4 correction for long words (a cheap, deterministic stand-in
-    for a real tokenizer's subword count)."""
-    words = F.split(F.trim(F.col(text_col)), r"[^a-zA-Z0-9]+")
+def token_count_bpe() -> Column:
+    """BPE-ish token estimate of ``text``: word-piece split on
+    non-alphanumerics plus a length/4 correction for long words (a cheap,
+    deterministic stand-in for a real tokenizer's subword count)."""
+    words = F.split(F.trim(F.col("text")), r"[^a-zA-Z0-9]+")
     long_extra = F.expr(
-        f"aggregate(split(trim({text_col}), '[^a-zA-Z0-9]+'), 0L, (acc, w) -> acc + CAST(greatest(int(ceil(length(w) / 4.0)) - 1, 0) AS LONG))"
+        "aggregate(split(trim(text), '[^a-zA-Z0-9]+'), 0L, (acc, w) -> acc + CAST(greatest(int(ceil(length(w) / 4.0)) - 1, 0) AS LONG))"
     )
     return F.size(words) + long_extra
 
 
-def with_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full feature set (tokens column is transient)."""
-    out = df.withColumn("__toks", tokens(text_col))
+def with_text_features(df: DataFrame) -> DataFrame:
+    """Attach the full feature set of ``text`` (tokens column is transient)."""
+    out = df.withColumn("__toks", tokens("text"))
     return (
         out.withColumn("token_count", F.size(F.col("__toks")))
         .withColumn("distinct_ratio", round_half_up(distinct_token_ratio("__toks"), 4))
-        .withColumn("punct_ratio", round_half_up(punct_ratio(text_col), 4))
-        .withColumn("quality", quality_score("__toks", text_col))
+        .withColumn("punct_ratio", round_half_up(punct_ratio("text"), 4))
+        .withColumn("quality", quality_score("__toks", "text"))
         .withColumn("lang_guess", lang_guess("__toks"))
-        .withColumn("fingerprint", fingerprint(text_col))
+        .withColumn("fingerprint", fingerprint("text"))
         .drop("__toks")
     )
 
 
-def lang_guess_charclass(text_col: str = "text") -> Column:
-    """Character-class + stopword language ID: script ranges decide
+def lang_guess_charclass() -> Column:
+    """Character-class + stopword language ID of ``text``: script ranges decide
     non-Latin languages outright (CJK → zh, Cyrillic → ru), Latin-script
     text falls through to diacritic classes (es/fr-ish) and finally the
     English stopword ratio. Deterministic, mirrorable in SQL via regexp
     counts; a real deployment swaps in trained n-gram profiles — the
     operator contract (pure column expression, no UDF) is the point."""
-    has = lambda pattern: F.col(text_col).rlike(pattern)
+    has = lambda pattern: F.col("text").rlike(pattern)
     return (
         F.when(has("[一-鿿]"), F.lit("zh"))
         .when(has("[Ѐ-ӿ]"), F.lit("ru"))
@@ -123,10 +123,10 @@ def lang_guess_charclass(text_col: str = "text") -> Column:
                 # IN-list derived from EN_STOPWORDS (review r10: the set
                 # was triplicated; stopword_count already derives its
                 # list the same way)
-                f"size(filter(split(trim({text_col}), '\\\\s+'), "
+                "size(filter(split(trim(text), '\\\\s+'), "
                 f"x -> x IN ({', '.join(repr(w) for w in EN_STOPWORDS)})))"
             )
-            / F.greatest(F.size(tokens(text_col)), F.lit(1))
+            / F.greatest(F.size(tokens("text")), F.lit(1))
             >= 0.03,
             F.lit("en"),
         )

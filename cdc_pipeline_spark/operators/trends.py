@@ -20,9 +20,8 @@ def period_over_period(
     df: DataFrame,
     time_col: str,
     value_cols: list[str],
-    period: str = "hour",
 ) -> DataFrame:
-    """Percent change of each value column vs the previous period.
+    """Percent change of each value column vs the previous hour.
 
     ``trend = round((cur - prev) / prev * 100, 2)`` with NULL when there is
     no previous period or prev == 0 (the reference returns 0.0 trend when
@@ -32,7 +31,7 @@ def period_over_period(
     The unpartitioned ``Window.orderBy`` is safe here because the input is
     post-aggregation (one row per period).
     """
-    bucket = F.date_trunc(period, F.col(time_col)).alias("period_start")
+    bucket = F.date_trunc("hour", F.col(time_col)).alias("period_start")
     aggs = [round_half_up(F.sum(c), 2).alias(c) for c in value_cols]
     grouped = df.groupBy(bucket).agg(*aggs)
 

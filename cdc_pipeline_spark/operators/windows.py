@@ -15,9 +15,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cdc_pipeline_spark.operators.templates import template
+
 
 def window_col(time_col: str, duration: str, slide: str | None = None) -> Column:
     """``F.window`` with optional slide; windows are epoch-aligned."""
+    return _window(time_col, duration, slide)
+
+
+@template
+def _window(time_col, duration, slide):
     if slide:
         return F.window(F.col(time_col), duration, slide)
     return F.window(F.col(time_col), duration)
@@ -27,10 +34,15 @@ def window_bounds_epoch() -> list[Column]:
     """Project window struct to epoch-second longs (stable across engines,
     used by every pipeline's output contract; reference emits epoch-ms,
     ``kpi_aggregator.py:201``)."""
-    return [
+    return list(_bounds())
+
+
+@template
+def _bounds():
+    return (
         F.col("window.start").cast("long").alias("window_start"),
         F.col("window.end").cast("long").alias("window_end"),
-    ]
+    )
 
 
 def epoch_ms(col: Column) -> Column:

@@ -44,9 +44,10 @@ def _gate_and_dedup(
     return gated.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1)
 
 
-def prepare_training_corpus(docs: DataFrame, budget: int = 256) -> DataFrame:
+def prepare_training_corpus(docs: DataFrame) -> DataFrame:
     """Quality-gate, dedup and pack a raw document table into
-    training-sequence layout rows (doc_id, shard, n_tokens, pack_id).
+    training-sequence layout rows (doc_id, shard, n_tokens, pack_id) of
+    at most 256 tokens per pack.
 
     Shuffle budget: the gate is scan-parallel (zero shuffle); dedup is
     one window shuffle on the content fingerprint; packing is one window
@@ -60,7 +61,7 @@ def prepare_training_corpus(docs: DataFrame, budget: int = 256) -> DataFrame:
     return pack_sequences(
         canonical,
         "n_tokens",
-        budget=budget,
+        budget=256,
         partition_cols=["source"],
         order_cols=["doc_id"],
     )
@@ -68,13 +69,10 @@ def prepare_training_corpus(docs: DataFrame, budget: int = 256) -> DataFrame:
 
 def prepare_training_corpus_budgeted(
     docs: DataFrame,
-    domain_budget: int = 800,
-    budget: int = 256,
 ) -> DataFrame:
     """`prepare_training_corpus` with a data-mixing stage: after the
     gate and dedup, each shard keeps only its highest-quality documents
-    up to ``domain_budget`` tokens (greedy prefix by quality), then
-    packs. This is how a production mix pins per-domain token shares
+    up to 800 tokens (greedy prefix by quality), then packs. This is how a production mix pins per-domain token shares
     instead of letting the biggest domain dominate.
 
     Four stages, three shuffles (fingerprint window, budget window on
@@ -101,13 +99,13 @@ def prepare_training_corpus_budgeted(
         canonical,
         group_col="source",
         tokens_col="n_tokens",
-        budget=domain_budget,
+        budget=800,
         order_by=[F.col("__q").desc(), F.col("doc_id").asc()],
     ).drop("cum_tokens", "__q")
     return pack_sequences(
         selected,
         "n_tokens",
-        budget=budget,
+        budget=256,
         partition_cols=["source"],
         order_cols=["doc_id"],
     )

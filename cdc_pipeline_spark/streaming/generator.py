@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cdc_pipeline_spark import schemas
+from cdc_pipeline_spark.operators.templates import template
 
 # Reference preset ladder (generate_test_data.py:386-392): cycles/second
 # offered and the error rate each preset injects.
@@ -386,7 +387,14 @@ def kpi_components_from_cdc(
     ``jobs.start_kpi_pipeline`` / ``start_transaction_job``."""
     from cdc_pipeline_spark.operators.aggregates import fuse_streams
 
-    o = orders.filter((F.col("__op") == "u") & (F.col("status") == "completed")).select(
+    completed, o, e, r = _kpi_component_columns()
+    return fuse_streams([orders.filter(completed).select(*o), events.select(*e), requests.select(*r)])
+
+
+@template
+def _kpi_component_columns():
+    completed = (F.col("__op") == "u") & (F.col("status") == "completed")
+    o = (
         F.col("updated_at").alias("event_time"),
         F.concat(F.lit("order-"), F.col("user_id").cast("string")).alias("session_id"),
         F.col("total_amount").alias("revenue_amount"),
@@ -395,7 +403,7 @@ def kpi_components_from_cdc(
         F.lit(0).alias("request_count"),
         F.lit(None).cast("double").alias("latency_ms"),
     )
-    e = events.select(
+    e = (
         F.col("created_at").alias("event_time"),
         F.col("session_id"),
         F.lit(0.0).alias("revenue_amount"),
@@ -404,7 +412,7 @@ def kpi_components_from_cdc(
         F.lit(0).alias("request_count"),
         F.lit(None).cast("double").alias("latency_ms"),
     )
-    r = requests.select(
+    r = (
         F.col("created_at").alias("event_time"),
         F.col("session_id"),
         F.lit(0.0).alias("revenue_amount"),
@@ -413,4 +421,4 @@ def kpi_components_from_cdc(
         F.lit(1).alias("request_count"),
         F.col("latency_ms").cast("double").alias("latency_ms"),
     )
-    return fuse_streams([o, e, r])
+    return completed, o, e, r

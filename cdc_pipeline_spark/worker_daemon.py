@@ -2,10 +2,15 @@
 
 Runs ``pyspark.daemon.manager()`` after importing what every
 pandas/Arrow worker loads on its first task, so forked workers inherit
-those modules instead of importing them again. ``gc.freeze()`` moves
-the inherited objects out of the collector's reach: the ``gc.collect()``
-a reused worker runs after each task neither walks them nor touches
-their pages (which would copy them on write).
+those modules instead of importing them again. The collector is off
+while those imports run: they only allocate objects that live as long
+as the daemon, so the generational passes they would trigger find
+nothing to free. One ``gc.collect()`` then clears what the imports left
+behind, and ``gc.freeze()`` moves the inherited objects out of the
+collector's reach: the ``gc.collect()`` a reused worker runs after each
+task neither walks them nor touches their pages (which would copy them
+on write). The collector is back on before the first fork, so workers
+collect as usual.
 
 Before importing anything from PySpark it drops from ``sys.path`` the
 archives Spark puts on every worker's ``PYTHONPATH``: the
@@ -94,6 +99,7 @@ def main() -> None:
         if any(key == d or key.startswith(d + os.sep) for d in dropped):
             del sys.path_importer_cache[key]
 
+    gc.disable()
     import pandas  # noqa: F401
     import pyarrow  # noqa: F401
     import pyspark.sql.pandas.serializers  # noqa: F401
@@ -102,6 +108,7 @@ def main() -> None:
 
     gc.collect()
     gc.freeze()
+    gc.enable()
     daemon.manager()
 
 

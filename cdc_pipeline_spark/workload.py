@@ -440,7 +440,7 @@ def platform_breakdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 def geo_header_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6 geo header (geo_header.py:30-45): 1m/30s windowed count with the
     formatted global-load label."""
-    return aggregates.windowed_geo_header(_t(spark, sf_dir, "events"), time_col="ts", load_scale=0.1)
+    return aggregates.windowed_geo_header(_t(spark, sf_dir, "events"), time_col="ts")
 
 
 @register(
@@ -598,7 +598,7 @@ def cdc_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 def hourly_value_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8 KPI trend (kpi_aggregator.py:28-51,74-95) as its relational form:
     ``lag(value) over (order by period)`` on post-aggregation rows."""
-    return trends.period_over_period(_t(spark, sf_dir, "events"), time_col="ts", value_cols=["value"], period="hour")
+    return trends.period_over_period(_t(spark, sf_dir, "events"), time_col="ts", value_cols=["value"])
 
 
 @register(
@@ -680,10 +680,7 @@ def region_windowed_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("event_type") == "purchase", F.col("value")).otherwise(F.lit(0.0)).alias("sales"),
         F.lit(1).alias("request_count"),
     )
-    return aggregates.windowed_region(
-        shaped, time_col="ts", region_col="region_name", sales_col="sales",
-        request_col="request_count", duration="30 seconds", slide="15 seconds",
-    )
+    return aggregates.windowed_region(shaped, time_col="ts", duration="30 seconds", slide="15 seconds")
 
 
 # ---------------------------------------------------------------------------
@@ -721,7 +718,7 @@ def doc_text_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cdc_pipeline_spark.operators.text import with_text_features
 
     docs = _t(spark, sf_dir, "documents")
-    feats = with_text_features(docs, text_col="text")
+    feats = with_text_features(docs)
     return feats.select(
         "doc_id",
         F.col("token_count").cast("long").alias("token_count"),
@@ -908,7 +905,7 @@ def dedup_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(docs, threshold=0.3).select("id_a", "id_b")
     comps = connected_components(pairs, vertices=docs, id_col="doc_id")
-    quality = with_text_features(docs, text_col="text").select("doc_id", "quality")
+    quality = with_text_features(docs).select("doc_id", "quality")
     return keep_best_canonical(comps, quality)
 
 
@@ -1672,7 +1669,7 @@ def doc_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cdc_pipeline_spark.operators.text import token_count_bpe
 
     return _t(spark, sf_dir, "documents").select(
-        "doc_id", token_count_bpe("text").cast("long").alias("bpe_tokens")
+        "doc_id", token_count_bpe().cast("long").alias("bpe_tokens")
     )
 
 
@@ -1766,11 +1763,8 @@ def region_flows_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
     shaped = enriched.select(
         "ts", "region_name", F.lit(0.0).alias("sales"), F.lit(1).alias("request_count")
     )
-    regions = aggregates.windowed_region(
-        shaped, time_col="ts", region_col="region_name", sales_col="sales",
-        request_col="request_count", duration="1 hour", slide="30 minutes",
-    )
-    return aggregates.derive_flows(regions, k=5)
+    regions = aggregates.windowed_region(shaped, time_col="ts", duration="1 hour", slide="30 minutes")
+    return aggregates.derive_flows(regions)
 
 
 # ---------------------------------------------------------------------------
@@ -1853,7 +1847,6 @@ def range_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         left_time="ts",
         right_time="ts",
         max_gap_seconds=600,
-        strict_after=True,
     )
     return pairs.groupBy("user_id").agg(F.count(F.lit(1)).alias("pair_count"))
 
@@ -2615,7 +2608,7 @@ def doc_lang_charclass(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cdc_pipeline_spark.operators.text import lang_guess_charclass
 
     return _t(spark, sf_dir, "documents").select(
-        "doc_id", lang_guess_charclass("text").alias("lang_pred")
+        "doc_id", lang_guess_charclass().alias("lang_pred")
     )
 
 
@@ -3375,7 +3368,7 @@ def corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean so the cross-engine sum is fold-order-independent."""
     from cdc_pipeline_spark.operators.text import with_text_features
 
-    feats = with_text_features(_t(spark, sf_dir, "documents"), text_col="text")
+    feats = with_text_features(_t(spark, sf_dir, "documents"))
     return feats.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.count_distinct("source").alias("n_sources"),
@@ -3590,7 +3583,7 @@ def corpus_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select(
         "source", F.size(tokens("text")).alias("n_tokens")
     )
-    return temperature_mix_weights(docs, "source", "n_tokens", temperature=0.7)
+    return temperature_mix_weights(docs, "source", "n_tokens")
 
 
 @register(
@@ -3946,7 +3939,7 @@ def doc_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-to-decimal-before-sum determinism as the unigram twin."""
     from cdc_pipeline_spark.operators.quality import bigram_logprob_score
 
-    return bigram_logprob_score(_t(spark, sf_dir, "documents"), lam=0.75)
+    return bigram_logprob_score(_t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -3988,7 +3981,7 @@ def doc_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     samples, 'tail' drops — the standard LM-filtered corpus recipe."""
     from cdc_pipeline_spark.operators.quality import perplexity_buckets
 
-    return perplexity_buckets(_t(spark, sf_dir, "documents"), group_col="lang")
+    return perplexity_buckets(_t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -4155,7 +4148,6 @@ def doc_benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.filter(F.col("doc_id") >= 20),
         docs.filter(F.col("doc_id") < 20),
         n=3,
-        flag_threshold=0.05,
     )
 
 
@@ -4255,7 +4247,7 @@ def training_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     not just each stage alone."""
     from cdc_pipeline_spark.pipelines import prepare_training_corpus
 
-    return prepare_training_corpus(_t(spark, sf_dir, "documents"), budget=256)
+    return prepare_training_corpus(_t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -4319,9 +4311,7 @@ def training_corpus_budgeted(spark: SparkSession, sf_dir: str) -> DataFrame:
     three shuffles. Oracle replays all four stages."""
     from cdc_pipeline_spark.pipelines import prepare_training_corpus_budgeted
 
-    return prepare_training_corpus_budgeted(
-        _t(spark, sf_dir, "documents"), domain_budget=800, budget=256
-    )
+    return prepare_training_corpus_budgeted(_t(spark, sf_dir, "documents"))
 
 
 

@@ -111,7 +111,7 @@ def lineitem_exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _cms_oracle() -> str:
     from cdc_pipeline_spark.operators.sketches import cms_sql_ctes
 
-    counters, probes = cms_sql_ctes(depth=4, width=2048, seed=7)
+    counters, probes = cms_sql_ctes()
     return rf"""
     WITH tok AS (
         SELECT unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS token
@@ -166,16 +166,14 @@ def corpus_token_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("token")
     )
     hashed = toks.withColumn("th", portable_token_hash(F.col("token")))
-    counters = count_min_counters(hashed, F.col("th"), depth=4, width=2048, seed=7)
+    counters = count_min_counters(hashed, F.col("th"))
     exact = (
         hashed.groupBy("token")
         .agg(F.count(F.lit(1)).alias("freq"), F.min("th").alias("th"))
         .orderBy(F.desc("freq"), "token")
         .limit(40)
     )
-    est = cms_estimate(
-        counters, exact.select("token", "freq", "th"), F.col("th"), depth=4, width=2048, seed=7
-    )
+    est = cms_estimate(counters, exact.select("token", "freq", "th"), F.col("th"))
     return est.select(
         "token",
         F.col("freq").cast("long").alias("n_exact"),

@@ -149,7 +149,7 @@ def doc_segment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/dedup.py::segment_dedup)."""
     from cdc_pipeline_spark.operators.dedup import segment_dedup
 
-    return segment_dedup(_t(spark, sf_dir, "documents"), seg_tokens=8)
+    return segment_dedup(_t(spark, sf_dir, "documents"))
 
 
 _EPOCH_ORDER_ORACLE = """
@@ -217,7 +217,7 @@ def doc_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     weights = hashed_weight_table(spark, buckets=4096, seed=13)
-    return linear_classifier_scores(docs, weights, carry_cols=("source",), buckets=4096)
+    return linear_classifier_scores(docs, weights, carry_cols=("source",))
 
 
 _INCR_NEARDUP_ORACLE = r"""

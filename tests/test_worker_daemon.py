@@ -26,7 +26,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def _probe(spark):
     """Rows 0..7 over four tasks, each tagged with its worker's pid,
-    frozen-object count, whether pyarrow was loaded when the task's
+    frozen-object count, whether its garbage collector is on, whether
+    pyarrow was loaded when the task's
     function was entered, the file ``pyspark`` was imported from, how
     many loaded modules came out of a zip, and (as JSON lists) the keys
     of its cached ``zipimporter``s and its ``sys.path``. (Nested, so
@@ -40,7 +41,7 @@ def _probe(spark):
         import pandas as pd
         import pyspark
 
-        freeze, pyarrow = gc.get_freeze_count(), "pyarrow" in sys.modules
+        freeze, gc_on, pyarrow = gc.get_freeze_count(), gc.isenabled(), "pyarrow" in sys.modules
         zipped = sum(".zip" + os.sep in (getattr(m, "__file__", None) or "") for m in list(sys.modules.values()))
         importers = [k for k, v in sys.path_importer_cache.items() if isinstance(v, zipimport.zipimporter)]
         for pdf in batches:
@@ -48,6 +49,7 @@ def _probe(spark):
                 {
                     "id": pdf["id"],
                     "freeze": freeze,
+                    "gc_on": gc_on,
                     "pyarrow": pyarrow,
                     "pid": os.getpid(),
                     "pyspark_file": pyspark.__file__,
@@ -59,7 +61,7 @@ def _probe(spark):
 
     df = spark.range(8, numPartitions=4)
     schema = (
-        "id long, freeze long, pyarrow boolean, pid long, pyspark_file string, zipped long,"
+        "id long, freeze long, gc_on boolean, pyarrow boolean, pid long, pyspark_file string, zipped long,"
         " zipimporters string, path string"
     )
     rows = df.mapInPandas(probe, schema).collect()
@@ -68,7 +70,9 @@ def _probe(spark):
 
 
 def test_workers_fork_from_frozen_preloaded_heap(spark):
-    """Workers inherit the daemon's frozen Arrow stack, and its PySpark:
+    """Workers inherit the daemon's frozen Arrow stack with the collector
+    back on (the daemon turns it off only while it imports), and its
+    PySpark:
     Spark puts ``pyspark.zip``, the py4j zip and its spark-core jar on
     their path, but the daemon drops them for the driver's same-version
     installed copy, so no module is compiled out of a zip, and forgets
@@ -78,6 +82,7 @@ def test_workers_fork_from_frozen_preloaded_heap(spark):
     home = os.path.realpath(os.environ["SPARK_HOME"])
     rows = _probe(spark)
     assert all(r.freeze > 0 for r in rows), rows
+    assert all(r.gc_on for r in rows), rows
     assert all(r.pyarrow for r in rows), rows
     assert {r.pyspark_file for r in rows} == {pyspark.__file__}, rows
     assert all(r.zipped == 0 for r in rows), rows
