@@ -35,11 +35,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cdc_pipeline_spark.operators.dsir import hashed_gram_posting
+from cdc_pipeline_spark.operators.dsir import BUCKETS, hashed_gram_posting
 from cdc_pipeline_spark.operators.rounding import round_half_up
 
 
-def hashed_weight_table(spark: SparkSession, buckets: int = 4096, seed: int = 13) -> DataFrame:
+def hashed_weight_table(spark: SparkSession, buckets: int = BUCKETS, seed: int = 13) -> DataFrame:
     """Deterministic stand-in for a trained weight vector: weight[b] =
     ((b·2654435761 + seed) mod 2³¹−1 mod 2001 − 1000) / 1000 ∈ [−1, 1],
     cast to DECIMAL(9,3). Swap this for ``spark.read.parquet(model_path)``

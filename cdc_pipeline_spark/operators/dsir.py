@@ -38,11 +38,13 @@ from cdc_pipeline_spark.operators.rounding import round_half_up
 from cdc_pipeline_spark.operators.sampling import portable_id_bucket
 from cdc_pipeline_spark.operators.text import tokens
 
+BUCKETS = 4096  # hashed feature width, shared with classifier.hashed_weight_table
+
 
 def hashed_gram_posting(df: DataFrame) -> DataFrame:
     """(doc_id, bucket) posting of hashed unigram (+ bigram) features —
     the DSIR feature space. Buckets via the portable codepoint-fold hash
-    mod 4096 so a SQL oracle can replicate the feature extraction
+    mod ``BUCKETS`` so a SQL oracle can replicate the feature extraction
     bit-for-bit. Empty tokens (from empty/whitespace text) are dropped
     before gram formation in both engines.
 
@@ -59,7 +61,7 @@ def hashed_gram_posting(df: DataFrame) -> DataFrame:
     grams = F.concat(F.col("toks"), adjacent_grams(F.col("toks")))
     posting = toks.select("doc_id", F.explode(grams).alias("gram"))
     return posting.select(
-        "doc_id", (portable_token_hash(F.col("gram")) % F.lit(4096)).alias("bucket")
+        "doc_id", (portable_token_hash(F.col("gram")) % F.lit(BUCKETS)).alias("bucket")
     )
 
 
@@ -76,7 +78,7 @@ def dsir_log_weights(
 
         log w(x) = Σ_g  [ ln p_target(bucket(g)) − ln q_raw(bucket(g)) ]
 
-    with add-one smoothing on both bag-of-grams models (4096 hashed
+    with add-one smoothing on both bag-of-grams models (``BUCKETS`` hashed
     unigram + bigram buckets). Documents
     with zero grams get log_weight 0.0 (the empty product).
 
@@ -96,8 +98,8 @@ def dsir_log_weights(
     totals = rc.agg(F.sum("rc").cast("double").alias("rtot")).crossJoin(
         tc.agg(F.sum("tc").cast("double").alias("ttot"))
     )
-    denom_r = F.col("rtot") + F.lit(4096.0)
-    denom_t = F.col("ttot") + F.lit(4096.0)
+    denom_r = F.col("rtot") + F.lit(float(BUCKETS))
+    denom_t = F.col("ttot") + F.lit(float(BUCKETS))
     # buckets absent from the target model get the pure-smoothing mass;
     # buckets absent from the RAW model cannot occur when scoring raw
     # docs (a doc's bucket is by construction in the raw counts)

@@ -16,7 +16,7 @@ and ``tumbling_traffic``, ``activity.enrich_activity``'s projection and
 ``generator.kpi_components_from_cdc``'s filter and projections. Their
 trees are small, but each ``F.*`` call is a py4j round trip, and a
 dashboard restart on a warm JVM sent 699 of them before these builders
-were templates and 288 after (``tests/test_dashboard_start.py`` holds
+were templates and 244 after (``tests/test_dashboard_start.py`` holds
 the start under 300).
 
 The policy lives here and nowhere else:

@@ -30,17 +30,6 @@ commands with it and 715 without. Plans are unchanged; what is lost is
 the Python call-site fragment in ``AnalysisException`` messages.
 PySpark reads the flag once per driver process, from the first active
 session that asks.
-
-Factory sessions leave ``spark.sql.streaming.checkpointFileManagerClass``
-unset, so every streaming query gets Spark's default checkpoint manager
-unless it picks another itself. The dashboard pipelines do
-(``streaming.jobs``): a query on a ``file:`` checkpoint root gets the
-FileSystem-based manager, which renames without the process Hadoop's
-``FileContext`` starts per rename on a local disk without libhadoop;
-HDFS and object-store roots keep the default, which they need for
-atomic renames. The choice is per query, on the session each query
-clones, because a session-wide setting would also reach any query that
-starts on a remote root in the same session.
 """
 
 from __future__ import annotations

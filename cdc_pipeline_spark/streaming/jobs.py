@@ -16,84 +16,27 @@ Kafka (production), files (tests), or rate sources. Each pipeline
 writes the kv key, channel and list cap of its panel in the serving
 contract (``serving.service.CONTRACT``), so writer and reader cannot
 drift apart.
-
-Every pipeline starts through ``_start``, which picks the checkpoint
-manager per query. A query whose checkpoint root resolves to ``file:``
-writes its offset log, commit log and state store through Spark's
-``FileSystemBasedCheckpointFileManager``. Spark's default manager
-renames through Hadoop's ``FileContext``, which on a local file system
-without libhadoop starts a process to stat every rename target; that
-made each dashboard micro-batch spawn hundreds of processes. A local
-rename is atomic either way. Any other root (HDFS, object stores,
-``viewfs:``) keeps Spark's default, which those file systems need for
-atomic renames. The choice never touches a session conf that another
-query or writer reads: a listener registered around ``start()`` sets it
-on the session each query clones for itself, on the query's own thread,
-before the query opens any log. Only a new checkpoint's ``metadata``
-file keeps the default manager: Spark writes it while it constructs the
-query, before any listener runs.
 """
 
 from __future__ import annotations
 
-from pyspark import SparkContext
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from cdc_pipeline_spark.operators import aggregates
 from cdc_pipeline_spark.operators.activity import enrich_activity
-from cdc_pipeline_spark.operators.templates import template
 from cdc_pipeline_spark.serving.service import CONTRACT
 from cdc_pipeline_spark.streaming import sinks as sink_lib
 
 WATERMARK = "10 minutes"
-MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
-LOCAL_MANAGER = "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
-
-
-class _LocalCheckpointManager:
-    """Query listener (py4j callback) that gives a query starting on a
-    ``file:`` root the FileSystem-based manager. Spark posts the start
-    event on the query's thread before the query opens a log, and only
-    that query reads the session it cloned for itself."""
-
-    def __init__(self, streams):
-        self.streams = streams
-
-    def onQueryStarted(self, event):
-        query = self.streams.get(event.id()).streamingQuery()
-        if query.resolvedCheckpointRoot().startswith("file:"):
-            query.sparkSessionForStream().conf().set(MANAGER_CONF, LOCAL_MANAGER)
-
-    def onQueryProgress(self, event):
-        pass
-
-    def onQueryIdle(self, event):
-        pass
-
-    def onQueryTerminated(self, event):
-        pass
-
-    class Java:
-        implements = ["org.apache.spark.sql.streaming.PythonStreamingQueryListener"]
-
-
-@template
-def _listener_wrapper():
-    return SparkContext._gateway.jvm.org.apache.spark.sql.streaming.PythonStreamingQueryListenerWrapper
 
 
 def _start(df: DataFrame, writer, checkpoint: str, mode: str, trigger: dict | None) -> StreamingQuery:
     ws = df.writeStream.outputMode(mode).option("checkpointLocation", checkpoint).foreachBatch(writer)
     if trigger:
         ws = ws.trigger(**trigger)
-    streams = df.sparkSession._jsparkSession.streams()
-    listener = _listener_wrapper()(_LocalCheckpointManager(streams))
-    streams.addListener(listener)
-    try:
-        return ws.start()
-    finally:
-        streams.removeListener(listener)
+    return ws.start()
 
 
 def start_traffic_pipeline(

@@ -356,7 +356,7 @@ def kpi_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").alias("latency_ms"),
     )
     return aggregates.windowed_kpi(
-        ev, time_col="ts", duration="30 seconds", slide="10 seconds", session_col="user_id", exact=True
+        ev, time_col="ts", session_col="user_id", exact=True
     )
 
 
@@ -376,7 +376,7 @@ def kpi_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 def traffic_tumbling_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 traffic builder (traffic_builder.py:35-44): 10s tumbling count
     with the 12-hour clock label contract."""
-    return aggregates.tumbling_traffic(_t(spark, sf_dir, "events"), time_col="ts", duration="10 seconds")
+    return aggregates.tumbling_traffic(_t(spark, sf_dir, "events"), time_col="ts")
 
 
 @register(
@@ -507,7 +507,6 @@ def activity_feed_top15(spark: SparkSession, sf_dir: str) -> DataFrame:
     return enrich_activity(
         newest,
         id_col="event_id",
-        event_type_col="event_type",
         user_col="user_id",
         amount_col="value",
         time_col="ts",
@@ -680,7 +679,7 @@ def region_windowed_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("event_type") == "purchase", F.col("value")).otherwise(F.lit(0.0)).alias("sales"),
         F.lit(1).alias("request_count"),
     )
-    return aggregates.windowed_region(shaped, time_col="ts", duration="30 seconds", slide="15 seconds")
+    return aggregates.windowed_region(shaped, time_col="ts")
 
 
 # ---------------------------------------------------------------------------
@@ -778,7 +777,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no cross join; join key = shingle)."""
     from cdc_pipeline_spark.operators.dedup import ngram_jaccard_pairs
 
-    return ngram_jaccard_pairs(_t(spark, sf_dir, "documents"), threshold=0.3)
+    return ngram_jaccard_pairs(_t(spark, sf_dir, "documents"))
 
 
 _CLUSTER_CTES = r"""
@@ -867,8 +866,8 @@ def dedup_duplicate_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cdc_pipeline_spark.operators.graph import connected_components
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(docs, threshold=0.3).select("id_a", "id_b")
-    return connected_components(pairs, vertices=docs, id_col="doc_id")
+    pairs = ngram_jaccard_pairs(docs).select("id_a", "id_b")
+    return connected_components(pairs, vertices=docs)
 
 
 @register("dedup_clusters_star", _CLUSTER_ORACLE)
@@ -883,8 +882,8 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cdc_pipeline_spark.operators.graph import connected_components
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(docs, threshold=0.3).select("id_a", "id_b")
-    return connected_components(pairs, vertices=docs, id_col="doc_id", algorithm="star")
+    pairs = ngram_jaccard_pairs(docs).select("id_a", "id_b")
+    return connected_components(pairs, vertices=docs, algorithm="star")
 
 
 @register("dedup_canonical_docs", _CANONICAL_ORACLE)
@@ -903,8 +902,8 @@ def dedup_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cdc_pipeline_spark.operators.text import with_text_features
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(docs, threshold=0.3).select("id_a", "id_b")
-    comps = connected_components(pairs, vertices=docs, id_col="doc_id")
+    pairs = ngram_jaccard_pairs(docs).select("id_a", "id_b")
+    comps = connected_components(pairs, vertices=docs)
     quality = with_text_features(docs).select("doc_id", "quality")
     return keep_best_canonical(comps, quality)
 
@@ -955,7 +954,7 @@ def doc_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     62.5k pair-rows on sf0.1)."""
     from cdc_pipeline_spark.operators.dedup import tfidf_cosine_pairs
 
-    return tfidf_cosine_pairs(_t(spark, sf_dir, "documents"), threshold=0.3, max_df_ratio=0.5)
+    return tfidf_cosine_pairs(_t(spark, sf_dir, "documents"))
 
 
 @register("dedup_minhash_lsh", _JACCARD_ORACLE.format(tau=0.5))
@@ -1125,7 +1124,7 @@ def _rp_lsh_neardup_oracle_sql(
     covers banding recall AND verified precision end-to-end."""
     from cdc_pipeline_spark.operators.similarity import _hyperplanes
 
-    planes = _hyperplanes(dim, n_bands * band_bits, seed=11)
+    planes = _hyperplanes(dim, n_bands * band_bits)
     bucket_terms = " + ".join(
         f"(CASE WHEN list_inner_product(e, [{', '.join(repr(x) for x in row)}]) >= 0 "
         f"THEN CAST({1 << j} AS BIGINT) ELSE 0 END)"
@@ -1169,7 +1168,7 @@ def embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cdc_pipeline_spark.operators.similarity import rp_lsh_neardup_pairs
 
     return rp_lsh_neardup_pairs(
-        _t(spark, sf_dir, "embeddings"), dim=64, threshold=0.4, n_bands=8, band_bits=4
+        _t(spark, sf_dir, "embeddings"), dim=64, threshold=0.4
     )
 
 
@@ -1252,7 +1251,7 @@ def ann_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), "embedding", "label"
     )
-    out = hard_negative_topk(emb, queries, k=5)
+    out = hard_negative_topk(emb, queries)
     return out.select("query_id", "vec_id", "score", F.col("rank").cast("long").alias("rank"))
 
 
@@ -1333,7 +1332,7 @@ def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    out = brute_force_topk(emb, queries, k=5)
+    out = brute_force_topk(emb, queries)
     return out.select("query_id", "vec_id", "score", F.col("rank").cast("long").alias("rank"))
 
 
@@ -1392,7 +1391,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), "embedding", "label"
     )
-    out = ivf_topk(emb.select("vec_id", "embedding", "label"), queries.drop("label"), k=5, n_probe=2)
+    out = ivf_topk(emb.select("vec_id", "embedding", "label"), queries.drop("label"), n_probe=2)
     return out.select("query_id", "vec_id", "score", F.col("rank").cast("long").alias("rank"))
 
 
@@ -2005,7 +2004,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").withColumn(
         "payload", F.encode(F.hex(F.encode(F.col("text"), "UTF-8")), "UTF-8")
     )
-    return sample_frames(docs, n_frames=4)
+    return sample_frames(docs)
 
 
 # ---------------------------------------------------------------------------
@@ -2546,7 +2545,7 @@ def _rp_lsh_oracle_sql(dim: int = 64, n_planes: int = 8, k: int = 5) -> str:
     xor(bucket_c, bucket_q) ∈ {0, 1, 2, …, 2^(n_planes−1)}."""
     from cdc_pipeline_spark.operators.similarity import _hyperplanes
 
-    planes = _hyperplanes(dim, n_planes, seed=11)
+    planes = _hyperplanes(dim, n_planes)
     bucket_terms = " + ".join(
         f"(CASE WHEN list_inner_product(e, [{', '.join(repr(x) for x in row)}]) >= 0 "
         f"THEN {1 << j} ELSE 0 END)"
@@ -2584,7 +2583,7 @@ def ann_rp_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10).select(F.col("vec_id").alias("query_id"), "embedding")
-    out = rp_lsh_topk(emb, queries, dim=64, k=5, n_planes=8, probe_bits=1)
+    out = rp_lsh_topk(emb, queries, dim=64, n_planes=8)
     return out.select("query_id", "vec_id", "score", F.col("rank").cast("long").alias("rank"))
 
 
@@ -2827,7 +2826,7 @@ def embedding_minibatch_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cdc_pipeline_spark.operators.clustering import minibatch_kmeans
 
     emb = _t(spark, sf_dir, "embeddings")
-    return minibatch_kmeans(emb, k=8, max_iters=5, batch_fraction=0.25)
+    return minibatch_kmeans(emb)
 
 
 @register("embedding_kmeans", _kmeans_oracle_sql())
@@ -2841,7 +2840,7 @@ def embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cdc_pipeline_spark.operators.clustering import kmeans
 
     emb = _t(spark, sf_dir, "embeddings")
-    return kmeans(emb, k=8, max_iters=5)
+    return kmeans(emb)
 
 
 # ---------------------------------------------------------------------------
@@ -4012,7 +4011,7 @@ def doc_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     span-level-dedup signal that whole-document near-dup scores miss."""
     from cdc_pipeline_spark.operators.dedup import cross_doc_span_coverage
 
-    out = cross_doc_span_coverage(_t(spark, sf_dir, "documents"), n=8)
+    out = cross_doc_span_coverage(_t(spark, sf_dir, "documents"))
     return out.select(
         "doc_id",
         F.col("n_windows").cast("long").alias("n_windows"),
@@ -4064,7 +4063,7 @@ def doc_max_dup_span(spark: SparkSession, sf_dir: str) -> DataFrame:
     the operator docstring). Integer counts end-to-end."""
     from cdc_pipeline_spark.operators.dedup import max_dup_span
 
-    return max_dup_span(_t(spark, sf_dir, "documents"), n=8)
+    return max_dup_span(_t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -4193,7 +4192,6 @@ def fuzzy_source_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fuzzy_join(
         docs.filter(F.col("doc_id") % 2 == 0),
         docs.filter(F.col("doc_id") % 2 == 1),
-        threshold=0.3,
     )
 
 
@@ -4343,7 +4341,7 @@ def doc_rag_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     any corpus size."""
     from cdc_pipeline_spark.operators.chunking import chunk_documents
 
-    return chunk_documents(_t(spark, sf_dir, "documents"), window=64, stride=48)
+    return chunk_documents(_t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -4375,7 +4373,7 @@ def corpus_pair_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k is a TakeOrdered, no global sort."""
     from cdc_pipeline_spark.operators.chunking import adjacent_pair_counts
 
-    return adjacent_pair_counts(_t(spark, sf_dir, "documents"), k=30)
+    return adjacent_pair_counts(_t(spark, sf_dir, "documents"))
 
 
 def _bpe_train_oracle_sql(rounds: int = 8, with_final_tok: bool = False) -> str:
@@ -4497,7 +4495,7 @@ def doc_bpe_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pdw = _per_doc_word_counts(_t(spark, sf_dir, "documents"))
     merges = bpe_train_merges_local(
-        None, rounds=8, words_freq=pdw.groupBy("word").agg(F.sum("n_occ").alias("freq"))
+        None, words_freq=pdw.groupBy("word").agg(F.sum("n_occ").alias("freq"))
     )
     return _bpe_segmentation_counts(pdw, merges)
 
@@ -4546,7 +4544,7 @@ def doc_bpe_segmentation_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pdw = _per_doc_word_counts(_t(spark, sf_dir, "documents"))
     merges = bpe_train_merges_local(
-        None, rounds=8, words_freq=pdw.groupBy("word").agg(F.sum("n_occ").alias("freq"))
+        None, words_freq=pdw.groupBy("word").agg(F.sum("n_occ").alias("freq"))
     )
     return _bpe_segmentation_counts(pdw, merges, fold_max_merges=0)
 
@@ -4564,7 +4562,7 @@ def corpus_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-breaks, AND the greedy merge application — in DuckDB."""
     from cdc_pipeline_spark.operators.chunking import bpe_train_merges
 
-    merges = bpe_train_merges(_t(spark, sf_dir, "documents"), rounds=8)
+    merges = bpe_train_merges(_t(spark, sf_dir, "documents"))
     return spark.createDataFrame(
         [(t, a, b, a + b, int(c)) for t, (a, b, c) in enumerate(merges)],
         schema="merge_rank int, lhs string, rhs string, merged string, score long",
@@ -4584,7 +4582,7 @@ def corpus_bpe_train_local(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_bpe_scale.py)."""
     from cdc_pipeline_spark.operators.chunking import bpe_train_merges_local
 
-    merges = bpe_train_merges_local(_t(spark, sf_dir, "documents"), rounds=8)
+    merges = bpe_train_merges_local(_t(spark, sf_dir, "documents"))
     return spark.createDataFrame(
         [(t, a, b, a + b, int(c)) for t, (a, b, c) in enumerate(merges)],
         schema="merge_rank int, lhs string, rhs string, merged string, score long",
@@ -4631,8 +4629,6 @@ def doc_eval_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return benchmark_containment_pairs(
         docs.filter(F.col("doc_id") >= 20),
         docs.filter(F.col("doc_id") < 20),
-        n=3,
-        threshold=0.2,
     )
 
 
@@ -4691,7 +4687,7 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cdc_pipeline_spark.operators.dedup import ngram_jaccard_pairs
     from cdc_pipeline_spark.operators.sampling import split_expr
 
-    pairs = ngram_jaccard_pairs(_t(spark, sf_dir, "documents"), threshold=0.3)
+    pairs = ngram_jaccard_pairs(_t(spark, sf_dir, "documents"))
     labeled = pairs.select(
         split_expr(F.col("id_a")).alias("split_a"),
         split_expr(F.col("id_b")).alias("split_b"),
@@ -4764,8 +4760,8 @@ def dedup_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cdc_pipeline_spark.operators.dedup import ngram_jaccard_pairs
     from cdc_pipeline_spark.operators.graph import pagerank_fixed_point
 
-    pairs = ngram_jaccard_pairs(_t(spark, sf_dir, "documents"), threshold=0.3)
-    return pagerank_fixed_point(pairs.select("id_a", "id_b"), n_iter=5)
+    pairs = ngram_jaccard_pairs(_t(spark, sf_dir, "documents"))
+    return pagerank_fixed_point(pairs.select("id_a", "id_b"))
 
 
 @register(
@@ -4903,7 +4899,7 @@ def embedding_kcenter_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered(1); driver traffic is one row per round."""
     from cdc_pipeline_spark.operators.clustering import kcenter_greedy
 
-    return kcenter_greedy(_t(spark, sf_dir, "embeddings"), k=8)
+    return kcenter_greedy(_t(spark, sf_dir, "embeddings"))
 
 
 @register(
@@ -5287,7 +5283,7 @@ def embedding_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cdc_pipeline_spark.operators.linalg import zscore_outlier_topk
 
     return zscore_outlier_topk(
-        _emb(spark, sf_dir), scale=_ZSCORE_SCALE, k=50
+        _emb(spark, sf_dir), scale=_ZSCORE_SCALE
     )
 
 
@@ -5765,7 +5761,7 @@ def doc_top_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     window partitions on doc_id (high-cardinality, fully parallel)."""
     from cdc_pipeline_spark.operators.retrieval import top_tfidf_terms
 
-    return top_tfidf_terms(_t(spark, sf_dir, "documents"), k=5)
+    return top_tfidf_terms(_t(spark, sf_dir, "documents"))
 
 
 _PREFIX_JACCARD_ORACLE = r"""
@@ -7325,7 +7321,7 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     pairs = hamming_banded_pairs(
-        hashed, sig_col="ahash", bits=64, bands=4, max_hamming=3, max_bucket=None
+        hashed, sig_col="ahash", bits=64, max_bucket=None
     )
     a = hashed.select(F.col("doc_id").alias("id_a"), F.col("dhash").alias("__dh_a"))
     b = hashed.select(F.col("doc_id").alias("id_b"), F.col("dhash").alias("__dh_b"))

@@ -585,4 +585,4 @@ def events_anomaly_minutes(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized and re-aggregated for the moments)."""
     from cdc_pipeline_spark.operators.trends import count_anomaly_minutes
 
-    return count_anomaly_minutes(_t(spark, sf_dir, "events"), k_sigma=3)
+    return count_anomaly_minutes(_t(spark, sf_dir, "events"))

@@ -216,7 +216,7 @@ def doc_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    weights = hashed_weight_table(spark, buckets=4096, seed=13)
+    weights = hashed_weight_table(spark)
     return linear_classifier_scores(docs, weights, carry_cols=("source",))
 
 
@@ -265,7 +265,7 @@ def docs_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     return incremental_minhash_neardup(
-        docs, incoming=F.col("source").isin("src0", "src1", "src2"), threshold=0.5
+        docs, incoming=F.col("source").isin("src0", "src1", "src2")
     )
 
 
@@ -329,12 +329,12 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cdc_pipeline_spark.operators.pq import pq_adc_topk, pq_codebook, pq_encode
 
     emb = _t(spark, sf_dir, "embeddings")
-    cb = pq_codebook(emb, m=4, k=16, dim=64)
-    encoded = pq_encode(emb, cb, m=4, dim=64)
+    cb = pq_codebook(emb)
+    encoded = pq_encode(emb, cb)
     queries = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return pq_adc_topk(queries, encoded, cb, k=5, m=4, dim=64)
+    return pq_adc_topk(queries, encoded, cb)
 
 
 @register("training_epoch_order", _EPOCH_ORDER_ORACLE)
@@ -347,5 +347,5 @@ def training_epoch_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cdc_pipeline_spark.operators.sampling import epoch_shuffle_order
 
     return epoch_shuffle_order(
-        _t(spark, sf_dir, "documents"), n_shards=8, seed=11, carry_cols=("source",)
+        _t(spark, sf_dir, "documents"), seed=11, carry_cols=("source",)
     )

@@ -1,12 +1,6 @@
-"""What a dashboard query pays to start, and the checkpoint manager it
-starts with (``streaming/jobs.py::_start``).
-
-A query on a ``file:`` checkpoint root writes its offset and commit logs
-through Spark's FileSystem-based checkpoint manager; any other root keeps
-Spark's default. These tests pin that choice per query (also for two
-queries starting at once), pin exactly-once output when a query dies
-between its offset-log write and its commit, and bound the py4j commands
-a warm second start of the four dashboard pipelines sends.
+"""What a dashboard query pays to start: the py4j commands a warm
+second start of the four dashboard pipelines sends, and what those
+queries serve.
 """
 
 from __future__ import annotations
@@ -15,110 +9,8 @@ import json
 import os
 import subprocess
 import sys
-import threading
-
-from cdc_pipeline_spark.sources.files import stream_parquet
-from cdc_pipeline_spark.streaming import generator, jobs
-from cdc_pipeline_spark.streaming.sinks import InMemoryKV
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def _manager(query) -> str:
-    logs = query._jsq.streamingQuery().checkpointMetadata()
-    names = {log.fileManager().getClass().getSimpleName() for log in (logs.offsetLog(), logs.commitLog())}
-    assert len(names) == 1, names
-    return names.pop()
-
-
-def _source(spark, src, table):
-    return stream_parquet(spark, os.path.join(src, table), generator.TABLE_SCHEMAS[table])
-
-
-def test_each_query_gets_the_manager_of_its_own_root(spark, tmp_path):
-    """Two queries start at once, one on a local path and one on a
-    ``viewfs:`` root mounted over a local directory: the local one gets
-    the FileSystem-based manager, the other keeps Spark's default, and
-    neither session's conf is touched."""
-    src = str(tmp_path / "src")
-    generator.generate_batches(spark, src, n_ticks=2)
-    mount = tmp_path / "mount"
-    mount.mkdir()
-    other = spark.newSession()
-    other.conf.set("fs.viewfs.mounttable.ckpt.link./mnt", mount.as_uri())
-    roots = {"local": (spark, str(tmp_path / "ckpt")), "viewfs": (other, "viewfs://ckpt/mnt/ckpt")}
-    queries, errors = {}, []
-
-    def start(name):
-        session, root = roots[name]
-        try:
-            q = jobs.start_traffic_pipeline(
-                _source(session, src, "request_log"), InMemoryKV(), root, trigger={"availableNow": True}
-            )
-            q.awaitTermination(180)
-            queries[name] = q
-        except Exception as exc:  # surfaced by the assert below
-            errors.append(exc)
-
-    threads = [threading.Thread(target=start, args=(name,)) for name in roots]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join(300)
-    assert not errors, errors
-    assert _manager(queries["local"]) == "FileSystemBasedCheckpointFileManager"
-    assert _manager(queries["viewfs"]) == "FileContextBasedCheckpointFileManager"
-    assert (mount / "ckpt" / "commits").is_dir()
-    for session in (spark, other):
-        assert session.conf.get(jobs.MANAGER_CONF, None) is None
-
-
-def _run_kpi(spark, src, kv, checkpoint):
-    def source(table):
-        return stream_parquet(spark, os.path.join(src, table), generator.TABLE_SCHEMAS[table], max_files_per_trigger=1)
-
-    fused = generator.kpi_components_from_cdc(source("orders"), source("user_events"), source("request_log"))
-    q = jobs.start_kpi_pipeline(fused, kv, checkpoint, trigger={"availableNow": True})
-    q.awaitTermination(300)
-    assert q.exception() is None
-    return q
-
-
-def _kv_state(kv):
-    return kv.hashes, kv.strings, kv.lists
-
-
-def test_crash_between_wal_and_commit_replays_the_batch_once(spark, tmp_path):
-    """The KPI pipeline runs three micro-batches of data on a local
-    checkpoint. Removing the last data batch's ``commits/<n>``, and the
-    no-data batch logged after it, leaves what a crash after that
-    batch's offset-log write and before its commit leaves: the restarted
-    query runs batch ``n`` once more with the same input, and the kv
-    store ends equal to an uninterrupted run's."""
-    src = str(tmp_path / "src")
-    generator.generate_batches(spark, src, n_ticks=3)
-    golden = InMemoryKV()
-    _run_kpi(spark, src, golden, str(tmp_path / "golden"))
-
-    kv, ckpt = InMemoryKV(), str(tmp_path / "ckpt")
-    first = _run_kpi(spark, src, kv, ckpt)
-    assert _manager(first) == "FileSystemBasedCheckpointFileManager"
-    rows = {p.batchId: p.numInputRows for p in first.recentProgress if p.numInputRows}
-    assert sorted(rows) == [0, 1, 2]
-    assert _kv_state(kv) == _kv_state(golden)
-    last = max(rows)
-    for log in ("offsets", "commits"):
-        for name in os.listdir(os.path.join(ckpt, log)):
-            batch = name.removeprefix(".").removesuffix(".crc")
-            if batch.isdigit() and int(batch) >= last + (log == "offsets"):
-                os.remove(os.path.join(ckpt, log, name))
-    assert os.path.exists(os.path.join(ckpt, "offsets", str(last)))
-
-    again = _run_kpi(spark, src, kv, ckpt)
-    assert _manager(again) == "FileSystemBasedCheckpointFileManager"
-    assert {p.batchId: p.numInputRows for p in again.recentProgress if p.numInputRows} == {last: rows[last]}
-    assert os.path.exists(os.path.join(ckpt, "commits", str(last)))
-    assert _kv_state(kv) == _kv_state(golden)
 
 
 _SECOND_START = r"""
