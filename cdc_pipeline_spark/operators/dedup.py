@@ -389,13 +389,6 @@ def snm_reversed_key() -> Column:
     return F.reverse(snm_default_key())
 
 
-def snm_token_sorted_key() -> Column:
-    """Rotated SNM key: tokens sorted lexicographically. Word-order
-    shuffles (a common duplication transform) map to the SAME key, so
-    shuffled near-dups become sort-adjacent."""
-    return F.concat_ws(" ", F.array_sort(F.split(snm_default_key(), " ")))
-
-
 def sorted_neighborhood_pairs(
     df: DataFrame,
     window: int = 4,
@@ -416,8 +409,8 @@ def sorted_neighborhood_pairs(
     construction, never df²). A single pass trades recall for that
     HARD bound: near-dups whose sort keys land far apart (edits in the
     first words) are missed — production merge/purge runs MULTIPLE
-    passes with rotated keys (`snm_reversed_key` catches prefix edits,
-    `snm_token_sorted_key` catches word-order shuffles); LSH remains
+    passes with rotated keys (`snm_reversed_key` catches prefix edits; a
+    token-sorted key would catch word-order shuffles); LSH remains
     the recall-safe path. τ is an exact rational and every sort is
     totally ordered (key, doc_id), so the candidate set replays
     identically in the oracle.

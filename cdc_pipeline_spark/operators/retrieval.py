@@ -116,20 +116,6 @@ def bm25_term_weights_from_stats(tf: DataFrame, doclens: DataFrame) -> DataFrame
     )
 
 
-def bm25_term_weights(df: DataFrame) -> DataFrame:
-    """Batch form: tokenize + stats + weights in one plan (see
-    ``bm25_term_weights_from_stats`` for the shared weight formula).
-
-    ``tf`` feeds four consumers (df agg, dl agg, the N/Σdl stats row
-    and the weight join) but needs NO localCheckpoint: every consumer
-    sits above the same groupBy(doc, token) shuffle, which Spark
-    deduplicates via ReusedExchange — measured 1.7 s plain vs 2.1 s
-    checkpointed at sf0.1 (unlike `tfidf_cosine_pairs`, whose reuse is
-    broken by differing pruning filters between consumers)."""
-    tf = token_tf(df)
-    return bm25_term_weights_from_stats(tf, doc_lengths(df, tf))
-
-
 def _finish_ranked(ranked: DataFrame) -> DataFrame:
     return ranked.select(
         "query_id",
@@ -271,7 +257,7 @@ def bm25_topk(
     corpus per broad branch).
 
     ``materialize_candidates=False`` keeps the previous single lazy
-    plan (`bm25_term_weights` → `bm25_topk_from_weights`, probe on the
+    plan (`bm25_term_weights_from_stats` → `bm25_topk_from_weights`, probe on the
     bare tf table) — retained for the equivalence pin
     (`test_bm25_materialized_shape_equivalent`) and A/B measurement.
     Both shapes are OUTPUT-IDENTICAL: weights are bit-identical by

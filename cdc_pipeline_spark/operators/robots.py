@@ -21,8 +21,8 @@ replay it rule for rule):
   the crawler's product token; the most specific (longest) value wins,
   ties by first occurrence; no match ⇒ the ``*`` groups. ALL groups
   carrying the selected value are merged (RFC 9309: "groups MUST be
-  combined"). :func:`parse_robots_rules` is the agent-less form —
-  it evaluates the merged ``*`` groups.
+  combined"). ``agent=None`` is the agent-less form — it evaluates
+  the merged ``*`` groups.
 * ``Crawl-delay`` (non-standard but ubiquitous) is surfaced as a typed
   double from the selected groups (first parseable value in document
   order); ``Sitemap`` lines are document-global (RFC 9309 allows them
@@ -293,15 +293,6 @@ def _group_from_keyed(keyed: Column, agent: str | None = None) -> Column:
     (allow-all). Input capped at ``ROBOTS_MAX_LINES`` so adversarial
     files stay bounded."""
     return _group_struct(keyed, _winner_starts(keyed, _selected_value(keyed, agent)))
-
-
-def parse_robots_rules(robots_col: Column | str) -> Column:
-    """Prefix rules of the merged ``User-agent: *`` groups:
-    ``array<struct<allow boolean, prefix string>>`` in file order —
-    the agent-less form of :func:`parse_robots_group` (a crawler with
-    a dedicated token passes it there instead). Null/empty text parses
-    to an empty array (allow-all)."""
-    return parse_robots_group(robots_col)["rules"]
 
 
 def robots_allowed(path_col: Column | str, rules_col: Column | str) -> Column:

@@ -51,11 +51,6 @@ def _bucket(id_col: Column, modulus: int = 100) -> Column:
     return F.pmod(id_col.cast("long") * F.lit(KNUTH), F.lit(modulus))
 
 
-def bucket_sql(id_expr: str) -> str:
-    """The DuckDB-oracle mirror of ``_bucket`` (same 64-bit arithmetic)."""
-    return f"(({id_expr}) * {KNUTH}) % 100"
-
-
 def split_expr(id_col: Column) -> Column:
     """The split assignment as a pure COLUMN expression over an id —
     usable anywhere an id appears (e.g. labeling both sides of a

@@ -553,8 +553,8 @@ def domain_cap_sample(df: DataFrame) -> DataFrame:
     """Per-document URL policy columns + a deterministic UNIFORM sample
     decision: adds ``canonical_url``, ``domain`` and ``keep`` (True for
     the 40% of ids the portable multiplicative hash selects —
-    rerun-stable, engine-portable, replayed by the SQL oracle via
-    ``sampling.bucket_sql``). ``keep`` is a global thinning knob,
+    rerun-stable, engine-portable, replayed by the SQL oracle as
+    ``(id * 2654435761) % 100``). ``keep`` is a global thinning knob,
     *independent of domain* — every domain is thinned proportionally.
     For an actual per-domain cap (bound the rows any single domain may
     contribute), use :func:`domain_cap`, which keeps at most N rows per

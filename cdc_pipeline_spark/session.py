@@ -21,6 +21,30 @@ so the daemon module resolves whatever the driver's working directory is.
 Sessions built elsewhere (e.g. a bare ``SparkSession.builder``) keep the
 stock daemon; plans are identical either way.
 
+That daemon starts again for every SparkContext, so on a ``local``
+master the factory also starts, the first time it runs in a driver
+process, one fork server for the driver's life: a child process that
+preloads the same heap once, on the first daemon's request, and forks
+each later context's manager from it (see ``worker_daemon``). Each
+context's daemon is then a shim that hands its standard streams to the
+server, costing a bare interpreter start instead of the Arrow stack's
+imports. A driver that builds one context moves its one preload from
+the daemon into the server and pays one more interpreter start and
+fork; starting the server only at a driver's second context would make
+that context preload again, in the server. The socket path reaches the
+daemons as ``spark.executorEnv.CDC_WORKER_FORK_SERVER``, which the
+factory assigns (or removes, off ``local`` or without a server); it is
+not a user option. The server refuses a daemon whose interpreter (with
+the settings CPython reads at start, such as ``PYTHONUNBUFFERED``),
+worker module, environment (beyond the per-context secret and local
+dirs) or module resolution differs from the preload's, and that daemon
+preloads in its own process as before, as it does when no server runs:
+when the socket cannot be bound (say a temporary directory path too
+long for ``AF_UNIX``) or the server has died. Cluster executors always
+do. The server, its managers and their workers stay in the driver's
+process tree; an ``atexit`` hook closes the server's stdin and waits
+for it.
+
 Factory sessions also turn off PySpark's DataFrame call-site capture
 (``spark.python.sql.dataFrameDebugging.enabled``) unless ``extra_conf``
 sets it. With it on, every ``Column`` method and ``F.col`` walks the
@@ -34,16 +58,29 @@ session that asks.
 
 from __future__ import annotations
 
+import atexit
 import os
+import re
+import shutil
+import socket
+import subprocess
+import sys
+import tempfile
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+from cdc_pipeline_spark.worker_daemon import SERVER_ENV
 
 # On a real cluster master/shuffle come from spark-submit / cluster conf
 # and these are only fallbacks.
 DEFAULT_MASTER = os.environ.get("SPARK_MASTER_URL", f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]")
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_SQL_SHUFFLE_PARTITIONS", "32")
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_LOCAL_MASTER = re.compile(r"local(\[[^\]]*\])?")
+# This driver's fork server and its socket path, once started; False
+# when it could not start.
+_fork_server: tuple[subprocess.Popen, str] | bool | None = None
 
 
 def _default_driver_memory() -> str:
@@ -62,6 +99,61 @@ def _default_driver_memory() -> str:
     except OSError:
         pass
     return "2g"
+
+
+def _start_fork_server() -> tuple[subprocess.Popen, str] | bool:
+    """Bind the fork server's socket in a private temporary directory and
+    start the server on it; False when either fails."""
+    if not hasattr(os, "pidfd_open") or not hasattr(socket, "SO_PEERCRED"):
+        return False
+    directory = tempfile.mkdtemp(prefix="cdcfs-")
+    path = os.path.join(directory, "s")
+    try:
+        with socket.socket(socket.AF_UNIX, socket.SOCK_SEQPACKET) as listener:
+            listener.bind(path)
+            listener.listen()
+            env = {
+                **os.environ,
+                "PYTHONPATH": _PACKAGE_PARENT,
+                # what Spark and PySpark give each daemon's interpreter at
+                # start: the executors' string hash seed, and unbuffered
+                # standard streams
+                "PYTHONHASHSEED": os.environ.get("PYTHONHASHSEED", "0"),
+                "PYTHONUNBUFFERED": "YES",
+            }
+            proc = subprocess.Popen(
+                [sys.executable, "-m", "cdc_pipeline_spark.worker_daemon", "--serve", str(listener.fileno())],
+                stdin=subprocess.PIPE,
+                stdout=subprocess.DEVNULL,
+                pass_fds=[listener.fileno()],
+                env=env,
+            )
+    except OSError:
+        shutil.rmtree(directory, ignore_errors=True)
+        return False
+    atexit.register(_stop_fork_server, proc, directory)
+    return proc, path
+
+
+def _stop_fork_server(proc: subprocess.Popen, directory: str) -> None:
+    proc.stdin.close()
+    try:
+        proc.wait(timeout=30)
+    except subprocess.TimeoutExpired:
+        proc.kill()
+        proc.wait()
+    shutil.rmtree(directory, ignore_errors=True)
+
+
+def _fork_server_path() -> str | None:
+    """This driver's fork server socket, starting the server on first use;
+    None when it is not running."""
+    global _fork_server
+    if _fork_server is None:
+        _fork_server = _start_fork_server()
+    if not _fork_server or _fork_server[0].poll() is not None:
+        return None
+    return _fork_server[1]
 
 
 def create_spark_session(
@@ -115,6 +207,10 @@ def create_spark_session(
     conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
         p for p in (_PACKAGE_PARENT, conf.get("spark.executorEnv.PYTHONPATH")) if p
     )
+    server = _fork_server_path() if _LOCAL_MASTER.fullmatch(master or DEFAULT_MASTER) else None
+    conf.pop(f"spark.executorEnv.{SERVER_ENV}", None)
+    if server:
+        conf[f"spark.executorEnv.{SERVER_ENV}"] = server
     for key, value in conf.items():
         builder = builder.config(key, value)
     return builder.getOrCreate()

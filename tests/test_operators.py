@@ -3052,7 +3052,7 @@ def test_robots_group_selection_rfc9309(spark):
         "https://e.com/sitemap.xml",
         "https://e.com/sitemap2.xml",
     ]
-    # agent=None is the '*' form (parse_robots_rules contract)
+    # agent=None is the agent-less '*' form
     g = grp(None)
     assert [(r.allow, r.prefix) for r in g.rules] == [(False, "/")]
 
