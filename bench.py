@@ -2,18 +2,33 @@
 """Benchmark harness for the ``workload.QUERIES`` suite.
 
 Runs every registered query (or only the ones named on the command
-line, still in suite order) at $SPARK_GRAFT_SF_DIR (default: the sf0.1
-test data, see ``SF_DIR``) on local[$SPARK_GRAFT_CPUS] (default: every
-core of the host) and prints ONE JSON line to stdout:
-
-    {"metric": "workload_wall_sec", "value": N, "unit": "sec",
-     "queries": {name: sec, ...}, "sf": 0.1, "calibration": {...}}
-
-plus ``isolation_retried`` when a retry ran and ``gate`` under
-``--check``. Progress goes to stderr; nothing is written into the
-checkout.
+line, still in suite order) twice at $SPARK_GRAFT_SF_DIR (default: the
+sf0.1 test data, see ``SF_DIR``) on local[$SPARK_GRAFT_CPUS] (default:
+every core of the host) and prints ONE JSON line to stdout. Progress
+goes to stderr; nothing is written into the checkout.
 
     python bench.py [--check [BASELINE_QUERIES.json]] [--plans DIR] [name ...]
+
+The record's keys are stable; each is always present unless noted:
+
+- ``metric``: ``"workload_wall_sec"``; ``unit``: ``"sec"``.
+- ``value``: the sum of ``queries``, in seconds.
+- ``queries``: {name: wall seconds}, the faster of the row's two runs.
+- ``cpu``: {name: CPU seconds}, the smaller of the row's two runs' CPU
+  time: this process and its descendants (the JVM, the Python worker
+  daemons), without the JVM's JIT compiler threads
+  (``perfbench.common.CpuMeter``).
+- ``sf``: the scale factor, the ``sf<N>`` suffix of
+  $SPARK_GRAFT_SF_DIR; null when the path has none.
+- ``calibration``: ``cpus`` (the core count); ``loadavg_start`` and
+  ``loadavg_end`` (1/5/15-min load averages, null where the OS has
+  none); ``steal_s`` (CPU seconds the hypervisor gave other guests
+  from session start to the last row, summed over the host's cores,
+  ``perfbench.common.steal_s``); and ``host_drift``, only when the
+  run's ``sf`` and ``cpus`` match the default freeze and it has ``cpu``.
+- ``gate``, under ``--check`` only: ``gated`` and ``new`` (counts of
+  rows with and without a frozen CPU time), ``regressions`` (names)
+  and ``drift`` (the ``host_drift`` the gate applied).
 
 Each query is forced with ``perfbench.common.forced``, i.e.
 ``agg(bit_xor(xxhash64(struct(*))))`` — a one-row collect that still
@@ -23,40 +38,28 @@ unreferenced projections, so projection-heavy queries (text features,
 winnowing) would measure the scan instead of their expressions.
 
 ``--check [PATH]`` (default BASELINE_QUERIES.json next to this file)
-additionally compares every query against its frozen per-query baseline
-and exits 1 on regression: measured > 1.5x frozen AND measured above
-the 1-second noise floor (sub-second timings jitter from scheduling
-alone, see BASELINE.md, so they can't gate at a ratio), both scaled by
-the run's ``host_drift``. Queries new since the freeze are reported
-informationally, never failed. The freeze's ``sf`` and ``cpus`` must
-equal the run's (the ``sf<N>`` name of $SPARK_GRAFT_SF_DIR, and
-$SPARK_GRAFT_CPUS); otherwise it exits 2 before the session starts,
-like an unknown query name: timings at another scale or core count say
-nothing about this one.
+additionally compares every row's CPU time with the freeze's ``cpu``
+map and exits 1 on regression: measured > ``REGRESSION_RATIO`` x frozen
+AND measured above ``NOISE_FLOOR_SEC`` (short rows jitter from
+scheduling alone, see BASELINE.md, so they can't gate at a ratio),
+both scaled by the run's ``host_drift``. Queries new since the freeze
+are reported, never failed. The freeze must have ``cpu``, and its
+``sf`` and ``cpus`` must equal the run's; otherwise it exits 2 before
+the session starts, like an unknown query name: timings at another
+scale or core count say nothing about this one.
 
-Would-be regressions get one ISOLATION RETRY (best of three, in a FRESH
-JVM at the end of the suite) before the gate fails. Against the 4-core
-freeze, 2 of 6 full ``--check`` runs of unchanged code flagged 6 and 7
-rows, each set one stretch of consecutive suite rows at 1.3-5.3x the
-freeze while ``host_drift`` read 1.07-1.09; the one run sampled had
-7-20% hypervisor steal while its stretch ran (BASELINE.md, "Round-15
-host re-freeze"). A long session also slows late queries from
-accumulated driver/codegen state, which an in-JVM retry would inherit
-(measured: 4.0 s in-JVM retry vs 0.95 s fresh, identical code). A
-genuine plan regression reproduces in the fresh JVM too; a steal window
-does not. Retried names are recorded in the JSON (``isolation_retried``)
-so a pass never hides that a retry happened.
-
-The record also carries a ``calibration`` block (host_drift vs the
-committed freeze, the core count, 1/5/15-min load averages around the
-run) so a reader can adjudicate host noise from the artifact alone: a
-drift near 1.0x and load << cpus mean per-query ratios are believable;
-load >> cpus means the run measured the neighbors, not the code.
+The gate reads CPU time, not wall time. The kernel charges time the
+hypervisor steals to no process, so a window of steal stretches the
+wall time of the rows it overlaps (1.3-5.3x the freeze in two of six
+4-core gate runs, BASELINE.md "Round-15 host re-freeze") but not
+their CPU, while a plan regression costs CPU wherever it runs.
+``steal_s`` says how contended the host was; BASELINE.md "Round-20
+CPU freeze" has the spread the ratio and floor are set from.
 
 ``--plans DIR`` writes DIR/<name>.txt with each query's
-``explain("formatted")`` text once all timing (and the gate's retry) is
-done, so dumping plans moves no timing. Diffing two such directories
-(after masking expression ids) shows whether a refactor changed a plan.
+``explain("formatted")`` text once all timing is done, so dumping
+plans moves no timing. Diffing two such directories (after masking
+expression ids) shows whether a refactor changed a plan.
 """
 
 from __future__ import annotations
@@ -69,13 +72,13 @@ import time
 
 from cdc_pipeline_spark.session import create_spark_session
 from cdc_pipeline_spark import workload
-from perfbench.common import forced, warm_workers
+from perfbench.common import CpuMeter, forced, steal_s, warm_workers
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
 
 
-def _session(app_name: str):
+def _session():
     """A local[CPUS] session warmed before anything is timed: the
     JVM/codegen once on the smallest SF, so per-query numbers measure
     the plan, not first-run JIT, then the Python worker pool, so the
@@ -83,7 +86,7 @@ def _session(app_name: str):
     is warmed to one worker per host core (nproc): with CPUS above
     nproc, the first Arrow row also pays the remaining worker spawns."""
     spark = create_spark_session(
-        app_name=app_name,
+        app_name="cdc-pipeline-spark-bench",
         master=f"local[{CPUS}]",
         shuffle_partitions=int(CPUS),
     )
@@ -93,14 +96,19 @@ def _session(app_name: str):
     return spark
 
 
-def _best_of(spark, name: str, runs: int, sf_dir: str) -> float:
-    best = None
-    for _ in range(runs):
+def _best_of_two(spark, name: str, meter: CpuMeter) -> tuple[float, float]:
+    """(wall s, CPU s), each the smaller of two runs: the first run pays
+    plan compilation/codegen, the second measures the steady-state plan,
+    which is what a resident engine re-executing a query shape costs.
+    The meter's /proc walk stays outside the wall timer."""
+    walls, cpus = [], []
+    for _ in range(2):
+        cpu0 = meter()
         start = time.perf_counter()
-        forced(workload.QUERIES[name](spark, sf_dir)).collect()
-        elapsed = time.perf_counter() - start
-        best = elapsed if best is None else min(best, elapsed)
-    return best
+        forced(workload.QUERIES[name](spark, SF_DIR)).collect()
+        walls.append(time.perf_counter() - start)
+        cpus.append(meter() - cpu0)
+    return min(walls), min(cpus)
 
 
 def _write_plans(spark, names: list[str], out_dir: str) -> None:
@@ -138,22 +146,25 @@ HEADLINE = [
 ]
 
 
-REGRESSION_RATIO = 1.5
-NOISE_FLOOR_SEC = 1.0
+REGRESSION_RATIO = 2.0
+NOISE_FLOOR_SEC = 2.0
 
 
-def load_baseline(path: str) -> tuple[float | None, int | None, dict[str, float]]:
-    """The freeze's scale factor, core count and per-query timings from
-    BASELINE_QUERIES.json ({"sf": 0.1, "cpus": 4, "queries": {name: sec}})."""
+def load_baseline(path: str) -> tuple[float | None, int | None, dict[str, float] | None]:
+    """The freeze's scale factor, core count and per-query CPU seconds
+    (None when it has no ``cpu`` map) from BASELINE_QUERIES.json
+    ({"sf": 0.1, "cpus": 4, "cpu": {name: sec}, ...})."""
     with open(path) as fh:
         doc = json.load(fh)
-    queries = {str(k): float(v) for k, v in doc["queries"].items()}
-    return doc.get("sf"), doc.get("cpus"), queries
+    cpu = doc.get("cpu")
+    if cpu is not None:
+        cpu = {str(k): float(v) for k, v in cpu.items()}
+    return doc.get("sf"), doc.get("cpus"), cpu
 
 
 def host_drift(timings: dict[str, float], baseline: dict[str, float]) -> float:
     """Calibration factor for UNIFORM host-speed drift: the median
-    measured/frozen ratio over every comparable query, floored at 1.0.
+    measured/frozen CPU ratio over every comparable query, floored at 1.0.
 
     The freeze ran on a particular machine at a particular load; a
     shared host that is globally 1.3× slower months later would flag
@@ -176,24 +187,19 @@ def host_drift(timings: dict[str, float], baseline: dict[str, float]) -> float:
 
 
 def find_regressions(
-    timings: dict[str, float],
-    baseline: dict[str, float],
-    drift: float | None = None,
+    timings: dict[str, float], baseline: dict[str, float]
 ) -> tuple[dict[str, tuple[float, float]], list[str], float]:
-    """(regressions {name: (measured, frozen)}, new-query names, drift).
+    """(regressions {name: (measured, frozen)}, new-query names, drift),
+    over CPU seconds.
 
     A query regresses when measured > REGRESSION_RATIO x drift x frozen
-    AND measured exceeds the drift-scaled NOISE_FLOOR_SEC — sub-second
-    timings jitter from scheduling alone, so a pure ratio would flag
-    noise, and `host_drift` cancels uniform machine-speed shifts since
-    the freeze (a genuine single-query regression still stands out
-    against the median). Pass ``drift`` to pin a previously computed
-    ratio — the isolation-retry pass must re-evaluate under the SAME
-    drift it selected retries with, or lowering the retried timings
-    would lower the median and flag a query that never got its retry.
+    AND measured exceeds the drift-scaled NOISE_FLOOR_SEC — short rows
+    jitter from scheduling alone, so a pure ratio would flag noise, and
+    `host_drift` cancels uniform machine-speed shifts since the freeze
+    (a genuine single-query regression still stands out against the
+    median).
     """
-    if drift is None:
-        drift = host_drift(timings, baseline)
+    drift = host_drift(timings, baseline)
     regressions: dict[str, tuple[float, float]] = {}
     new: list[str] = []
     for name, measured in timings.items():
@@ -203,47 +209,6 @@ def find_regressions(
         elif measured > REGRESSION_RATIO * drift * frozen and measured > NOISE_FLOOR_SEC * drift:
             regressions[name] = (measured, frozen)
     return regressions, new, drift
-
-
-def _retry(names: list[str], sf_dir: str) -> None:
-    """Isolation-retry body, run by :func:`_subprocess_retry` in a fresh
-    process: prints {name: best_sec} as one JSON line. Best of THREE,
-    not two: the first run pays plan analysis/codegen (measured
-    1.7-2.3s vs 0.8-1.0s steady for HOF-heavy queries), so best-of-2
-    leaves a single steady draw and its jitter false-flags sub-2s rows;
-    two steady draws make the min a real steady-state reading. Cost is
-    one extra run, only for flagged queries."""
-    spark = _session("cdc-pipeline-spark-bench-retry")
-    print(json.dumps({name: _best_of(spark, name, 3, sf_dir) for name in names}))
-
-
-def _subprocess_retry(names: list[str]) -> dict[str, float]:
-    """Best-of-three re-measurement of flagged queries at ``SF_DIR`` in
-    a brand-new Python process (hence a brand-new py4j gateway JVM),
-    warmed the same way the suite is. Returns {} on any failure — the
-    gate then judges the in-suite numbers, never silently passes."""
-    import subprocess
-
-    try:
-        proc = subprocess.run(
-            [sys.executable, "-c", f"import bench; bench._retry({names!r}, {SF_DIR!r})"],
-            capture_output=True,
-            text=True,
-            timeout=1800,
-            cwd=os.path.dirname(os.path.abspath(__file__)),
-        )
-        lines = [l for l in proc.stdout.splitlines() if l.startswith("{")]
-        if proc.returncode != 0 or not lines:
-            print(
-                f"# isolation-retry subprocess failed rc={proc.returncode}: "
-                f"{proc.stderr[-500:]}",
-                file=sys.stderr,
-            )
-            return {}
-        return {k: float(v) for k, v in json.loads(lines[-1]).items()}
-    except (OSError, subprocess.TimeoutExpired, ValueError) as exc:
-        print(f"# isolation-retry subprocess error: {exc}", file=sys.stderr)
-        return {}
 
 
 def main() -> None:
@@ -281,16 +246,18 @@ def main() -> None:
             parser.error(
                 f"--check: this run is on {cpus} cpus, {args.check} froze {baseline_cpus} cpus"
             )
+        if baseline is None:
+            parser.error(f"--check: {args.check} has no per-query \"cpu\" map to gate on")
     # calibration baseline: even WITHOUT --check, load the default
     # freeze if present so the record carries its own host drift and
     # can be adjudicated without a fresh probe; at another scale factor
     # or core count its ratios would read as phantom speedups or
-    # slowdowns, so only load averages are emitted there
+    # slowdowns, so only load averages and steal are emitted there
     calib_baseline = baseline
     if calib_baseline is None:
         try:
             calib_sf, calib_cpus, calib_baseline = load_baseline(default_baseline)
-        except (OSError, ValueError, KeyError):
+        except (OSError, ValueError):
             calib_baseline = None
         else:
             if (calib_sf, calib_cpus) != (sf, cpus):
@@ -303,56 +270,26 @@ def main() -> None:
     names += [n for n in sorted(workload.QUERIES) if n not in names]
     if args.names:
         names = [n for n in names if n in args.names]
-    spark = _session("cdc-pipeline-spark-bench")
+    steal0 = steal_s()
+    spark = _session()
 
+    meter = CpuMeter(set())
     timings: dict[str, float] = {}
-    total = 0.0
+    cpu: dict[str, float] = {}
     for name in names:
-        # best of two runs: the first run pays plan compilation/codegen,
-        # the second measures the steady-state plan — which is what a
-        # resident engine re-executing a query shape actually costs
-        timings[name] = round(_best_of(spark, name, 2, SF_DIR), 3)
-        total += timings[name]
-        print(f"# {name}: {timings[name]:.3f}s", file=sys.stderr)
-
-    # Isolation retry for would-be regressions: a flag from the in-suite
-    # pass alone can measure a steal window or an aged JVM, not the
-    # plan, and a genuine plan regression reproduces on a re-measure in
-    # a fresh JVM (a subprocess: PySpark's py4j gateway JVM survives a
-    # SparkContext stop, so an in-process "fresh" session inherits the
-    # aged JVM). Keep the better of the two measurements, the same
-    # steady-state philosophy as best-of-two. Gate timings are a
-    # SEPARATE view: the record keeps the in-suite best-of-2 for every
-    # query, so a retried query never gets a tighter freeze than its
-    # never-flagged peers, and the drift is pinned from the in-suite
-    # pass so retries lowering the median cannot move the threshold
-    # under a query that never got its retry.
-    retried: list[str] = []
-    gate_timings = dict(timings)
-    drift0: float | None = None
-    if baseline is not None:
-        pre, _, drift0 = find_regressions(timings, baseline)
-        if pre:
-            retry_timings = _subprocess_retry(sorted(pre))
-            for name in sorted(pre):
-                fresh_best = retry_timings.get(name)
-                if fresh_best is not None:
-                    gate_timings[name] = min(timings[name], round(fresh_best, 3))
-                retried.append(name)
-                print(
-                    f"# isolation retry {name}: {gate_timings[name]:.3f}s",
-                    file=sys.stderr,
-                )
+        wall, used = _best_of_two(spark, name, meter)
+        timings[name], cpu[name] = round(wall, 3), round(used, 3)
+        print(f"# {name}: {wall:.3f}s wall, {used:.3f}s cpu", file=sys.stderr)
+    steal = round(steal_s() - steal0, 2)
 
     doc = {
         "metric": "workload_wall_sec",
-        "value": round(total, 3),
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
+        "cpu": cpu,
         "sf": sf,
     }
-    if retried:
-        doc["isolation_retried"] = retried
     try:
         loadavg_end: tuple[float, ...] | None = os.getloadavg()
     except OSError:
@@ -361,16 +298,15 @@ def main() -> None:
         "loadavg_start": list(loadavg_start) if loadavg_start else None,
         "loadavg_end": list(loadavg_end) if loadavg_end else None,
         "cpus": cpus,
+        "steal_s": steal,
     }
     if calib_baseline is not None:
-        calibration["host_drift"] = round(host_drift(timings, calib_baseline), 3)
+        calibration["host_drift"] = round(host_drift(cpu, calib_baseline), 3)
     doc["calibration"] = calibration
     if baseline is not None:
-        regressions, new, drift = find_regressions(
-            gate_timings, baseline, drift=drift0
-        )
+        regressions, new, drift = find_regressions(cpu, baseline)
         doc["gate"] = {
-            "gated": len(timings) - len(new),
+            "gated": len(cpu) - len(new),
             "new": len(new),
             "regressions": sorted(regressions),
             "drift": round(drift, 3),
@@ -381,18 +317,17 @@ def main() -> None:
     spark.stop()
 
     if baseline is not None:
-        print(f"# host drift vs freeze (median ratio): {drift:.2f}x", file=sys.stderr)
-        if loadavg_start and loadavg_end:
-            print(
-                f"# loadavg start {loadavg_start} -> end {loadavg_end} "
-                f"on {CPUS} cpus",
-                file=sys.stderr,
-            )
+        print(
+            f"# host drift vs freeze (median CPU ratio): {drift:.2f}x; "
+            f"steal {steal:.1f}s; loadavg start {loadavg_start} -> end {loadavg_end} "
+            f"on {CPUS} cpus",
+            file=sys.stderr,
+        )
         for name in new:
             print(f"# new since freeze (not gated): {name}", file=sys.stderr)
         for name, (measured, frozen) in sorted(regressions.items()):
             print(
-                f"REGRESSION {name}: {measured:.3f}s vs frozen {frozen:.3f}s "
+                f"REGRESSION {name}: {measured:.3f}s cpu vs frozen {frozen:.3f}s "
                 f"({measured / frozen:.2f}x > {REGRESSION_RATIO}x·{drift:.2f}x drift)",
                 file=sys.stderr,
             )

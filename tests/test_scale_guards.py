@@ -368,16 +368,18 @@ def test_perplexity_buckets_keeps_null_group_docs(spark):
 def test_find_regressions_ratio_and_noise_floor():
     import bench
 
-    baseline = {"fast": 0.2, "slow": 2.0, "mid": 1.0, "s1": 1.0, "s2": 1.0, "s3": 1.0, "s4": 1.0}
+    ratio, floor = bench.REGRESSION_RATIO, bench.NOISE_FLOOR_SEC
+    baseline = {"fast": floor / 10, "slow": 2 * floor, "mid": floor}
+    baseline.update({f"s{i}": floor for i in range(4)})
     timings = {
-        "fast": 0.9,   # 4.5x frozen but under the 1 s noise floor -> exempt
-        "slow": 3.5,   # 1.75x and >1 s -> regression
-        "mid": 1.4,    # 1.4x < 1.5x -> fine
-        "s1": 1.0, "s2": 1.0, "s3": 1.0, "s4": 1.0,  # steady majority → drift 1.0
-        "brand_new": 9.9,  # not frozen -> informational, never failed
+        "fast": 0.9 * floor,  # 9x frozen but under the noise floor -> exempt
+        "slow": 2 * floor * (ratio + 0.25),  # over the ratio and the floor -> regression
+        "mid": floor * (ratio - 0.1),  # under the ratio -> fine
+        **{f"s{i}": floor for i in range(4)},  # steady majority → drift 1.0
+        "brand_new": 9.9 * floor,  # not frozen -> informational, never failed
     }
     regressions, new, drift = bench.find_regressions(timings, baseline)
-    assert regressions == {"slow": (3.5, 2.0)}
+    assert regressions == {"slow": (timings["slow"], baseline["slow"])}
     assert new == ["brand_new"]
     assert drift == 1.0  # the steady majority pins the median
 
@@ -399,36 +401,23 @@ def test_find_regressions_cancels_uniform_host_drift():
     regressions, _, drift2 = bench.find_regressions(blown, baseline)
     assert set(regressions) == {"q5"}
     assert abs(drift2 - 1.4) < 1e-9  # one outlier doesn't move the median
-    # a pinned drift (the retry pass's) is used as given, not recomputed
-    regressions, _, pinned = bench.find_regressions(blown, baseline, drift=3.0)
-    assert regressions == {} and pinned == 3.0
 
     # a FASTER host must not loosen the gate below the frozen meaning
     faster = {k: v * 0.5 for k, v in baseline.items()}
-    faster["q5"] = baseline["q5"] * 1.9  # 1.9x frozen, > noise floor
+    faster["q5"] = baseline["q5"] * (bench.REGRESSION_RATIO + 0.4)  # > noise floor
+    assert faster["q5"] > bench.NOISE_FLOOR_SEC
     regressions, _, drift3 = bench.find_regressions(faster, baseline)
     assert drift3 == 1.0
     assert set(regressions) == {"q5"}
 
 
-def test_isolation_retry_subprocess_returns_timings(monkeypatch):
-    """The fresh-process isolation retry must measure: a broken retry
-    returns {} and the gate would silently judge only in-suite numbers."""
-    import bench
-    from conftest import SF_SMOKE
-
-    monkeypatch.setattr(bench, "SF_DIR", SF_SMOKE)
-    got = bench._subprocess_retry(["q1_pricing_summary"])
-    assert list(got) == ["q1_pricing_summary"]
-    assert got["q1_pricing_summary"] > 0
-
-
 def test_bench_prints_one_record_for_named_queries_and_writes_plans(tmp_path):
     """The harness contract: named queries restrict the suite but keep
     suite (HEADLINE) order, stdout is exactly one JSON record whose
-    value is the sum of its rows and which carries the ``--check`` gate
-    block, ``--plans`` dumps formatted plans outside the checkout, and
-    the run leaves the checkout untouched."""
+    value is the sum of its rows, with a CPU time per row, the run's
+    steal and the ``--check`` gate block, ``--check`` refuses a freeze
+    without CPU times, ``--plans`` dumps formatted plans outside the
+    checkout, and the run leaves the checkout untouched."""
     import json
     import os
     import subprocess
@@ -473,7 +462,14 @@ def test_bench_prints_one_record_for_named_queries_and_writes_plans(tmp_path):
     )
     assert other_cpus.returncode == 2
     assert "2 cpus" in other_cpus.stderr and "32 cpus" in other_cpus.stderr
+    # a wall-only freeze (no "cpu" map) has nothing the gate can read
     freeze.write_text(json.dumps({"sf": 0.001, "cpus": 2, "queries": queries}))
+    wall_only = subprocess.run(
+        [_sys.executable, "bench.py", "q1_pricing_summary", "--check", str(freeze)],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert wall_only.returncode == 2 and '"cpu"' in wall_only.stderr
+    freeze.write_text(json.dumps({"sf": 0.001, "cpus": 2, "queries": queries, "cpu": queries}))
     # command-line order is the reverse of suite order on purpose
     proc = subprocess.run(
         [_sys.executable, "bench.py", "--check", str(freeze), "--plans", str(plans),
@@ -487,6 +483,10 @@ def test_bench_prints_one_record_for_named_queries_and_writes_plans(tmp_path):
     expected = [n for n in bench.HEADLINE if n in ("q1_pricing_summary", "kpi_sliding_window")]
     assert list(doc["queries"]) == expected == ["q1_pricing_summary", "kpi_sliding_window"]
     assert doc["value"] == round(sum(doc["queries"].values()), 3)
+    assert list(doc["cpu"]) == expected and all(v > 0 for v in doc["cpu"].values())
+    assert doc["calibration"]["steal_s"] >= 0
+    # the stable schema: no key beyond these (a retry list among them)
+    assert sorted(doc) == ["calibration", "cpu", "gate", "metric", "queries", "sf", "unit", "value"]
     assert sorted(doc["gate"]) == ["drift", "gated", "new", "regressions"]
     assert doc["gate"]["gated"] == 2
     assert "== Physical Plan ==" in (plans / "q1_pricing_summary.txt").read_text()
@@ -502,7 +502,10 @@ def test_bench_prints_one_record_for_named_queries_and_writes_plans(tmp_path):
 )
 def test_bench_regression_gate_full_run():
     """Opt-in end-to-end gate: run the whole bench at $SPARK_GRAFT_SF_DIR
-    and fail on any >1.5x per-query regression vs the frozen baseline."""
+    and fail on any per-query CPU regression vs the frozen baseline. The
+    failure message carries the run's steal and gate block, so a failed
+    run tells a contended host from a regression without a rerun."""
+    import json
     import os
     import subprocess
     import sys as _sys
@@ -515,7 +518,12 @@ def test_bench_regression_gate_full_run():
         cwd=repo,
         timeout=3600,
     )
-    assert proc.returncode == 0, proc.stderr[-4000:]
+    records = [json.loads(l) for l in proc.stdout.splitlines() if l.startswith("{")]
+    summary = (
+        {"steal_s": records[-1]["calibration"]["steal_s"], "gate": records[-1]["gate"]}
+        if records else "no record"
+    )
+    assert proc.returncode == 0, f"{summary}\n{proc.stderr[-4000:]}"
 
 
 def test_domain_cap_psl_keys_on_registrable_suffix(spark):
